@@ -27,42 +27,33 @@ emulation (which pins DataFusion 44's VIEW labeling). psql users type
 classifies registered sources as BASE TABLEs, so 'r' is the
 reference-faithful answer on this surface.
 
-Scale note: every view is a few-hundred-row driver-built DataFrame of
-table/column metadata — introspection is a cold path by construction;
-nothing in the data plane reads these.
+Cost note: every view is a small Arrow-built LocalRelation of
+table/column metadata, rebuilt only when the catalog snapshot shared
+with information_schema (``csvb_spark.sql.catalog_snapshot``) changes.
+A steady-state psql ``\\d`` burst pays three ``SHOW`` commands per
+query for the snapshot key and then plans over ``LocalTableScan``s —
+no catalog listing, no RDD, no Python worker.
 """
 
 from __future__ import annotations
 
 import re
-import threading
 import zlib
-from collections import namedtuple
 
 from pyspark.sql import SparkSession
 
-# char-aware column snapshot (name, dataType string, nullable) — same
-# attribute names the catalog Column API exposed, so the fingerprint
-# and pg_attribute builds read it unchanged
-_ColInfo = namedtuple("_ColInfo", ["name", "dataType", "nullable"])
+from csvb_spark.sql import (
+    BUILTIN_FUNCTIONS_CONF,
+    catalog_snapshot,
+    local_view,
+    locked_catalog_refresh,
+)
 
-__all__ = ["refresh_pg_catalog", "rewrite_pg_catalog_sql"]
-
-#: SET csvb.pg_catalog.builtin_functions=true surfaces Spark's ~550
-#: builtin functions in pg_proc (namespace pg_catalog), so psql's
-#: ``\df abs`` answers. Off by default: postgres itself hides
-#: pg_catalog's functions from a bare ``\df``, and the builtin burst
-#: would drown a user's own UDFs in every unpatterned listing.
-BUILTIN_FUNCTIONS_CONF = "csvb.pg_catalog.builtin_functions"
-
-#: serializes catalog snapshots/rebuilds: N clients cold-starting
-#: concurrently would otherwise rebuild the same ~25 views N times,
-#: and concurrent catalog RPC storms from pgwire handler threads have
-#: been observed to trip Spark-internal races (PARSE_EMPTY_STATEMENT
-#: out of listTables under simultaneous DDL + refresh + query
-#: traffic). With the lock, one connection builds and the rest hit
-#: the snapshot cache.
-_REFRESH_LOCK = threading.Lock()
+__all__ = [
+    "BUILTIN_FUNCTIONS_CONF",
+    "refresh_pg_catalog",
+    "rewrite_pg_catalog_sql",
+]
 
 
 def _oid(key: str) -> int:
@@ -114,166 +105,33 @@ _PG_TYPE_ROWS = [
 
 
 def refresh_pg_catalog(spark: SparkSession) -> None:
-    """(Re)build the ``pg_catalog_pg_*`` temp views from the live
+    """Bring the ``pg_catalog_pg_*`` temp views up to date with the
     session catalog — driver-side metadata only, called lazily when a
-    query actually references pg_catalog. One psql ``\\d`` issues
-    6-10 catalog follow-up queries back-to-back, so rebuilds are
-    CACHED on a snapshot key of (tables, types, databases, UDFs) and
-    SERIALIZED behind a lock: only a catalog change triggers the
-    per-table listColumns round trips and view rebuilds, and
-    concurrent cold connections share one build. A catalog mutated
-    mid-snapshot (DDL racing the listTables) gets ONE retry — the
-    second pass sees a settled catalog — but ONLY for the known
-    transient race signatures; a deterministic failure (a schema bug
-    in one mk() call) re-raises immediately instead of running the
-    whole ~25-view rebuild twice and surfacing the second traceback.
-    The snapshot is TWO-STAGE (see the cheap-key comment in the
-    builder): list-level key + DDL epoch on the fast path, per-table
-    column fingerprints only when the epoch or lists move — so CREATE
-    OR REPLACE TEMP VIEW under the SAME name with a different column
-    set refreshes on the next introspection (the round-11 staleness
-    corner) while a steady-state \\d burst pays zero listColumns
-    round trips."""
-    with _REFRESH_LOCK:
-        try:
-            _refresh_pg_catalog_locked(spark)
-        except Exception as ex:  # noqa: BLE001 — see transient list below
-            if not _is_transient_catalog_race(ex):
-                raise
-            _refresh_pg_catalog_locked(spark)
-
-
-def _is_transient_catalog_race(ex: Exception) -> bool:
-    """The two failure shapes observed when session DDL races the
-    snapshot: Spark's listTables/listColumns machinery surfacing
-    PARSE_EMPTY_STATEMENT, and a table listed by listTables being
-    dropped before its listColumns lands. Anything else is a real bug
-    and must surface on the FIRST traceback."""
-    text = f"{type(ex).__name__}: {ex}"
-    return any(
-        marker in text
-        for marker in (
-            "PARSE_EMPTY_STATEMENT",
-            "TABLE_OR_VIEW_NOT_FOUND",
-            "PARSE_SYNTAX_ERROR",  # empty-identifier variant of the same race
-        )
-    )
+    query actually references pg_catalog. One psql ``\\d`` issues 6-10
+    catalog follow-up queries back-to-back, so the views are rebuilt
+    only when the catalog snapshot shared with information_schema
+    changes (see ``csvb_spark.sql.catalog_snapshot``: a cheap SHOW key
+    plus the DDL epoch, so CREATE OR REPLACE under the SAME name with a
+    different column set refreshes on the next introspection while a
+    steady-state burst pays zero catalog listings). Runs under the
+    shared refresh lock with one retry for the known transient
+    DDL-race signatures; a deterministic failure re-raises on its first
+    traceback."""
+    locked_catalog_refresh(lambda: _refresh_pg_catalog_locked(spark))
 
 
 def _refresh_pg_catalog_locked(spark: SparkSession) -> None:
     from csvb_spark.server.pgwire import _ELEM_ARRAY, _oid_for
 
+    snap = catalog_snapshot(spark)
+    if getattr(spark, "_csvb_pg_catalog_snap", None) is snap:
+        return
+
     def mk(rows: list, schema: str, name: str) -> None:
-        spark.createDataFrame(rows, schema).createOrReplaceTempView(
-            f"pg_catalog_{name}"
-        )
+        local_view(spark, rows, schema, f"pg_catalog_{name}")
 
-    dbs = [d.name for d in spark.catalog.listDatabases()]
-    cat_tables = [
-        t
-        for t in spark.catalog.listTables()
-        if not t.name.startswith(("pg_catalog_", "information_schema_"))
-    ]
-    # \df source: the session's REGISTERED UDFs — Spark marks all ~550
-    # builtins isTemporary too, so the discriminator is the className
-    # (UDFRegistration lambdas vs catalyst expression classes); the
-    # builtins stay hidden exactly like postgres hides pg_catalog's,
-    # unless SET csvb.pg_catalog.builtin_functions=true opts into
-    # surfacing them (namespace pg_catalog, like postgres's own).
-    # Part of the snapshot key so a UDF registered mid-session shows
-    # up in \df without waiting for an unrelated table DDL.
-    show_builtins = (
-        str(spark.conf.get(BUILTIN_FUNCTIONS_CONF, "false")).lower() == "true"
-    )
-    all_fns = spark.catalog.listFunctions()
-    fn_names = sorted(
-        f.name
-        for f in all_fns
-        if f.isTemporary
-        and not f.name.startswith("pg_")
-        and "UDFRegistration" in (f.className or "")
-    )
-    builtin_names = (
-        sorted(
-            {f.name for f in all_fns if not f.name.startswith("pg_")}
-            - set(fn_names)
-        )
-        if show_builtins
-        else []
-    )
-    # TWO-STAGE snapshot (round 12, after review): the cheap key is
-    # table/function LISTS plus the DDL epoch sql.execute_sql bumps on
-    # every CREATE/DROP/ALTER it runs. A psql \d burst (6-10 catalog
-    # queries back-to-back) hits the cheap key and pays ZERO per-table
-    # listColumns round trips; only an epoch bump or a list change
-    # triggers the column-fingerprint pass below, which catches the
-    # round-11 staleness corner (CREATE OR REPLACE TEMP VIEW under the
-    # SAME name with a different column set — no list change, but the
-    # epoch moved). Narrowed known corner: a same-name swap issued
-    # through the raw Python API (never execute_sql) skips the epoch
-    # and stays stale until the next DDL — the serve path, where \d
-    # lives, always goes through execute_sql.
-    cheap = (
-        tuple(sorted(dbs)),
-        tuple(
-            sorted(
-                (
-                    t.name,
-                    t.namespace[0] if t.namespace else "default",
-                    t.tableType or "",
-                )
-                for t in cat_tables
-            )
-        ),
-        tuple(fn_names),
-        show_builtins,
-        getattr(spark, "_csvb_catalog_epoch", 0),
-    )
-    if getattr(spark, "_csvb_pg_catalog_cheap", None) == cheap:
-        return
-    # schema fields, not catalog.listColumns: the Column API erases
-    # char/varchar to 'string', while the field METADATA keeps the
-    # bounded type — which is what lets \d render 'character
-    # varying(12)' like postgres (round 13; same fix as
-    # sql.refresh_information_schema). Collected into plain tuples so
-    # the fingerprint and row builds below stay shape-stable.
-    def _cols(name: str) -> list:
-        return [
-            _ColInfo(
-                f.name,
-                f.metadata.get("__CHAR_VARCHAR_TYPE_STRING")
-                or f.dataType.simpleString(),
-                f.nullable,
-            )
-            for f in spark.table(name).schema.fields
-        ]
-
-    table_cols = {t.name: _cols(t.name) for t in cat_tables}
-    snap = (
-        tuple(sorted(dbs)),
-        tuple(
-            sorted(
-                (
-                    t.name,
-                    t.namespace[0] if t.namespace else "default",
-                    t.tableType or "",
-                    # schema fingerprint: names + types + nullability
-                    tuple(
-                        (c.name, c.dataType, c.nullable)
-                        for c in table_cols[t.name]
-                    ),
-                )
-                for t in cat_tables
-            )
-        ),
-        tuple(fn_names),
-        show_builtins,
-    )
-    if getattr(spark, "_csvb_pg_catalog_snap", None) == snap:
-        # epoch moved but nothing actually changed (e.g. a CTAS that
-        # re-created an identical schema) — revalidate the cheap key
-        spark._csvb_pg_catalog_cheap = cheap  # noqa: SLF001
-        return
+    dbs = [name for _, name in snap.databases]
+    cat_tables = sorted(snap.tables, key=lambda t: t.name)
 
     # pseudo-oids are 28-bit crc32s — a collision between two catalog
     # objects would silently merge their pg_attribute rows (\d on one
@@ -299,7 +157,7 @@ def _refresh_pg_catalog_locked(spark: SparkSession) -> None:
     schemas = (
         set(dbs)
         | {"information_schema", "default"}
-        | {t.namespace[0] if t.namespace else "default" for t in cat_tables}
+        | {t.schema for t in cat_tables}
     )
     ns_oids = {n: fresh_oid("ns:" + n) for n in sorted(schemas)}
     ns_rows = [(ns_oids[n], n, 10, None) for n in sorted(schemas)]
@@ -311,17 +169,16 @@ def _refresh_pg_catalog_locked(spark: SparkSession) -> None:
     )
 
     classes, attrs = [], []
-    for t in sorted(cat_tables, key=lambda t: t.name):
-        schema = t.namespace[0] if t.namespace else "default"
-        rel_oid = fresh_oid(f"rel:{schema}.{t.name}")
+    for t in cat_tables:
+        rel_oid = fresh_oid(f"rel:{t.schema}.{t.name}")
         # registered scans are the engine's TABLES (see module note);
         # only a persistent logical VIEW reports 'v'
-        relkind = "v" if t.tableType == "VIEW" else "r"
+        relkind = "v" if t.table_type == "VIEW" else "r"
         classes.append(
             (
                 rel_oid,
                 t.name,
-                ns_oids[schema],
+                ns_oids[t.schema],
                 relkind,
                 10,          # relowner
                 2,           # relam (heap)
@@ -331,7 +188,7 @@ def _refresh_pg_catalog_locked(spark: SparkSession) -> None:
                 False,       # relispartition
                 0,           # reltablespace
                 0,           # reloftype
-                "t" if t.tableType == "TEMPORARY" else "p",  # persistence
+                "t" if t.table_type == "TEMPORARY" else "p",  # persistence
                 "d",         # relreplident
                 0,           # reltoastrelid (psql \d TOAST probe)
                 0.0,         # reltuples (unknown: -1 in pg; 0 is safer)
@@ -339,13 +196,13 @@ def _refresh_pg_catalog_locked(spark: SparkSession) -> None:
                 None,        # relacl (\dp / \z)
             )
         )
-        for i, c in enumerate(table_cols[t.name], start=1):
-            type_oid, type_len = _oid_for(c.dataType)
+        for i, c in enumerate(t.columns, start=1):
+            type_oid, type_len = _oid_for(c.data_type)
             # char(n)/varchar(n): postgres stores n + VARHDRSZ(4) in
             # atttypmod; format_type renders it back as '(n)'
             typmod = -1
             if type_oid in (1042, 1043):
-                m = re.search(r"\((\d+)\)", c.dataType)
+                m = re.search(r"\((\d+)\)", c.data_type)
                 if m:
                     typmod = int(m.group(1)) + 4
             attrs.append(
@@ -408,11 +265,10 @@ def _refresh_pg_catalog_locked(spark: SparkSession) -> None:
         "pg_type",
     )
 
-    cat = spark.catalog.currentCatalog() or "spark_catalog"
     mk(
         [
-            (1, cat, 10, 6, "c", False, True, "C", "C", None, None, None,
-             1663, -1)
+            (1, snap.current_catalog, 10, 6, "c", False, True, "C", "C",
+             None, None, None, 1663, -1)
         ],
         "oid bigint, datname string, datdba bigint, encoding int, "
         "datlocprovider string, datistemplate boolean, "
@@ -439,14 +295,14 @@ def _refresh_pg_catalog_locked(spark: SparkSession) -> None:
         "pg_roles",
     )
     mk(
-        [(fresh_oid("fn:" + n), n, ns_oids["default"], "f") for n in fn_names]
+        [(fresh_oid("fn:" + n), n, ns_oids["default"], "f") for n in snap.udfs]
         # builtins (flag-gated) live in pg_catalog (namespace oid 11)
         # like postgres's own: psql's unpatterned \df appends
         # "n.nspname <> 'pg_catalog'" (describe.c), so a bare \df
         # still lists only the user's UDFs, while a patterned
         # \df abs skips that exclusion and finds the builtin —
         # exactly the real-postgres experience.
-        + [(fresh_oid("builtin:" + n), n, 11, "f") for n in builtin_names],
+        + [(fresh_oid("builtin:" + n), n, 11, "f") for n in snap.builtins],
         "oid bigint, proname string, pronamespace bigint, prokind string",
         "pg_proc",
     )
@@ -517,9 +373,7 @@ def _refresh_pg_catalog_locked(spark: SparkSession) -> None:
         ),
     }
     for name, schema in empties.items():
-        spark.createDataFrame([], schema).createOrReplaceTempView(
-            f"pg_catalog_{name}"
-        )
+        mk([], schema, name)
 
     # array oids render postgres-style 'elem[]' (real[], bigint[]) —
     # the map is a plain local dict so the UDF closure pickles by
@@ -544,8 +398,7 @@ def _refresh_pg_catalog_locked(spark: SparkSession) -> None:
         return name
 
     spark.udf.register("pg_format_type", _format_type, "string")
-    spark._csvb_pg_catalog_snap = snap  # noqa: SLF001 — session-scoped cache
-    spark._csvb_pg_catalog_cheap = cheap  # noqa: SLF001 — fast-path key
+    spark._csvb_pg_catalog_snap = snap  # noqa: SLF001 — what the views show
 
 
 # ---- textual rewrites ------------------------------------------------

@@ -8,7 +8,12 @@ the subset that real clients use):
 
 - startup: SSLRequest → 'N'; StartupMessage → AuthenticationOk,
   ParameterStatus, BackendKeyData, ReadyForQuery
-- simple query ('Q'): RowDescription / DataRow* / CommandComplete
+- simple query ('Q'): RowDescription / DataRow* / CommandComplete.
+  Every row loop (simple query, portal, COPY TO) fetches through
+  ``_fetch_rows``: one ``collect()`` job for a result whose plan
+  estimate is within ``_COLLECT_BUDGET_BYTES``, otherwise
+  ``toLocalIterator`` streaming. Each statement logs one INFO line
+  (duration, rows, fetch mode).
 - COPY (query|table) TO STDOUT [WITH (FORMAT TEXT|CSV, HEADER,
   DELIMITER 'c')]: CopyOutResponse / CopyData* / CopyDone / COPY n
   (postgres text-format escaping or RFC-4180 CSV)
@@ -82,8 +87,11 @@ import socketserver
 import struct
 import tempfile
 import threading
+import time
 import uuid
+from collections.abc import Iterator
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Row as _PgRow
 from pyspark.sql import SparkSession
 
@@ -892,6 +900,50 @@ def _finish_array_elem(chars: list[str], quoted: bool) -> str | None:
     return s
 
 
+#: a result whose optimized-plan size estimate is at most this many
+#: bytes is fetched with ONE ``collect()`` — one Spark job, partitions
+#: in parallel — instead of ``toLocalIterator``'s one job per
+#: partition, run one after another. The Python Row list is several
+#: times Spark's estimate, so the budget bounds the driver at a few
+#: tens of MB per statement.
+_COLLECT_BUDGET_BYTES = 8 << 20
+
+# a Generate node (explode, posexplode, inline, ...) anywhere in the
+# optimized plan's tree string: its size estimate does not count the
+# exploded rows, so such a result always streams
+_GENERATE_NODE_RE = _re.compile(r"^[\s:|+\-]*Generate\b", _re.M)
+
+
+def _fetch_rows(df) -> tuple[Iterator, str]:
+    """``(row iterator, mode)`` for a result, shared by the simple
+    query, portal and COPY TO loops. Small results (see
+    :data:`_COLLECT_BUDGET_BYTES`) are ``"collected"`` in one job;
+    anything over the budget, without an estimate, or exploding rows
+    is ``"streamed"`` through ``toLocalIterator`` so the driver holds
+    one partition at a time."""
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan()  # noqa: SLF001
+        small = int(plan.stats().sizeInBytes()) <= _COLLECT_BUDGET_BYTES
+        small = small and not _GENERATE_NODE_RE.search(plan.toString())
+    except Py4JError:  # no estimate: stream, and let the fetch report
+        small = False
+    if small:
+        return iter(df.collect()), "collected"
+    return iter(df.toLocalIterator()), "streamed"
+
+
+def _log_statement(kind: str, t0: float, rows: int, mode: str, sql: str) -> None:
+    """The per-statement INFO line: duration, rows, fetch mode."""
+    log.info(
+        "%s %.1f ms, %d rows, %s: %s",
+        kind,
+        (time.perf_counter() - t0) * 1e3,
+        rows,
+        mode,
+        " ".join(sql.split())[:200],
+    )
+
+
 class _Cancelled(Exception):
     """Raised inside a row loop when a CancelRequest flagged this
     connection; reported to the client as SQLSTATE 57014."""
@@ -1215,9 +1267,10 @@ class _Conn:
         if self.cancelled:
             raise _Cancelled()
 
-    def _run_sql(self, sql: str, max_rows: int | None = None) -> None:
+    def _run_sql(self, sql: str) -> None:
         from csvb_spark.sql import execute_sql
 
+        t0 = time.perf_counter()
         sql = sql.strip().rstrip(";").strip()
         if not sql:
             self._send(_msg(b"I"))  # EmptyQueryResponse
@@ -1238,7 +1291,7 @@ class _Conn:
             # pushdown-OFF wire path is exactly this loop)
             out = bytearray(self._row_description(df))
             n = 0
-            it = df.toLocalIterator()
+            it, mode = _fetch_rows(df)
             for row in it:
                 self._check_cancel()
                 vals = b""
@@ -1253,10 +1306,9 @@ class _Conn:
                 if len(out) > 1 << 20:
                     self._send(out)
                     out = bytearray()
-                if max_rows and n >= max_rows:
-                    break
             out += _msg(b"C", _cstr(f"SELECT {n}"))
             self._send(out)
+            _log_statement("query", t0, n, mode, sql)
         except _Cancelled:
             self._send_error("57014", "canceling statement due to user request")
         except Exception as e:  # noqa: BLE001 — every engine error → client
@@ -1270,9 +1322,10 @@ class _Conn:
         self, m: "_re.Match[str] | None", sql: str, extended: bool = False
     ) -> None:
         """COPY ... TO STDOUT: CopyOutResponse, CopyData rows (text,
-        CSV, or BINARY format), CopyDone, ``COPY n``. Rows stream
-        through ``toLocalIterator`` — the driver holds one partition at
-        a time, same as the SELECT path. With ``extended=True`` (COPY
+        CSV, or BINARY format), CopyDone, ``COPY n``. Rows come from
+        :func:`_fetch_rows`, same as the SELECT path: one collect for a
+        result within the byte budget, otherwise streamed so the driver
+        holds one partition at a time. With ``extended=True`` (COPY
         arrived through Parse/Bind/Execute — psycopg3's default path)
         no ReadyForQuery is sent (only Sync answers 'Z') and errors put
         the flow in discard-until-Sync state."""
@@ -1296,6 +1349,7 @@ class _Conn:
             if not extended:
                 self._send(self._ready())
             return
+        t0 = time.perf_counter()
         self.cancelled = False
         self.running = True
         try:
@@ -1350,7 +1404,8 @@ class _Conn:
                     + b"\n",
                 )
             n = 0
-            for row in df.toLocalIterator():
+            it, mode = _fetch_rows(df)
+            for row in it:
                 self._check_cancel()
                 if fmt == "binary":
                     body = struct.pack("!h", len(cols))
@@ -1377,6 +1432,7 @@ class _Conn:
                 out += _msg(b"d", struct.pack("!h", -1))  # trailer
             out += _msg(b"c") + _msg(b"C", _cstr(f"COPY {n}"))
             self._send(out)
+            _log_statement("copy", t0, n, mode, sql)
         except _Cancelled:
             _err("57014", "canceling statement due to user request")
         except ValueError as e:
@@ -1962,7 +2018,9 @@ class _Conn:
                         f"{', '.join(bad)}",
                     )
                     continue
-                portals[portal] = {"df": df, "it": None, "sent": 0, "fmts": fmts}
+                portals[portal] = {
+                    "df": df, "it": None, "sent": 0, "fmts": fmts, "sql": sql
+                }
                 self._send(_msg(b"2"))  # BindComplete
             elif tag == b"D":  # Describe: 'S'+name or 'P'+name
                 kind, name = body[:1], body[1:].split(b"\x00", 1)[0].decode()
@@ -2057,11 +2115,14 @@ class _Conn:
         if df is None:  # empty statement
             self._send(_msg(b"I"))
             return
+        t0 = time.perf_counter()
         self.cancelled = False
         self.running = True
         try:
             if st["it"] is None:
-                st["it"] = iter(df.toLocalIterator()) if df.columns else iter(())
+                st["it"], st["mode"] = (
+                    _fetch_rows(df) if df.columns else (iter(()), "none")
+                )
             ncols = len(df.columns)
             fmts = st.get("fmts") or [0] * ncols
             encs = [
@@ -2087,9 +2148,13 @@ class _Conn:
                     out = bytearray()
                 if max_rows and sent_this_call >= max_rows:
                     self._send(out + _msg(b"s"))  # PortalSuspended
+                    _log_statement(
+                        "portal (suspended)", t0, sent_this_call, st["mode"], st["sql"]
+                    )
                     return
             self._send(out + _msg(b"C", _cstr(f"SELECT {st['sent']}")))
             st["it"] = iter(())  # exhausted: a re-Execute completes with 0 rows
+            _log_statement("portal", t0, sent_this_call, st["mode"], st["sql"])
         except _Cancelled:
             self._ext_error("57014", "canceling statement due to user request")
         except Exception as e:  # noqa: BLE001

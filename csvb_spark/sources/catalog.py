@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from csvb_spark.sql import bump_catalog_epoch
+
 TABLES = (
     "region",
     "nation",
@@ -116,6 +118,7 @@ def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> dict[str,
     dfs = load_tables(spark, sf_dir, tables)
     for name, df in dfs.items():
         df.createOrReplaceTempView(name)
+    bump_catalog_epoch(spark)
     if len(_REGISTERED) >= _MEMO_CAP:  # bound the DataFrame refs we hold
         _REGISTERED.pop(next(iter(_REGISTERED)))
     _REGISTERED[key] = dfs

@@ -29,6 +29,8 @@ import urllib.request
 
 from pyspark.sql import DataFrame, SparkSession
 
+from csvb_spark.sql import bump_catalog_epoch
+
 _CSV_OPTIONS = {
     # DataFusion 44 CsvFormat::default(): header expected, comma
     # delimiter, RFC-4180 quoting incl. newlines inside quoted fields
@@ -135,4 +137,6 @@ def add_direct_table(
     else:
         raise ValueError(f"unsupported table format {fmt!r}")
     df.createOrReplaceTempView(name)
+    # a same-name re-registration may change the columns
+    bump_catalog_epoch(spark)
     return df

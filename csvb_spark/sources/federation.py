@@ -35,6 +35,8 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 
+from csvb_spark.sql import bump_catalog_epoch
+
 
 @dataclass
 class VirtualTable:
@@ -609,6 +611,7 @@ def add_federated_tables(
         df = union_shards(vt.name, shards)
         df.createOrReplaceTempView(vt.name)
         out[vt.name] = df
+    bump_catalog_epoch(spark)
     return out
 
 

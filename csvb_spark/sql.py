@@ -18,9 +18,17 @@ views, so we emulate the two the reference surface reaches:
 
 Dotted names can't be temp-view names, so the translator rewrites
 ``information_schema.tables`` → ``information_schema_tables`` and this
-module refreshes those views from the live catalog just before a query
-that mentions them runs — introspection data is tiny (one row per
-table/column), so rebuilding per query is free and never stale.
+module refreshes those views just before a query that mentions them
+runs. Reading the catalog is not free (``listFunctions`` alone
+materializes ~550 builtins over py4j, and every table's schema is one
+more round trip — 0.3-1.5 s a pass), so both introspection emulations
+(this one and ``server/pg_catalog.py``) share ONE cached
+:func:`catalog_snapshot`, re-read only when a cheap key moves — the
+``SHOW DATABASES`` / ``SHOW TABLES`` / ``SHOW USER FUNCTIONS`` lists,
+the session flags, and a DDL epoch that :func:`bump_catalog_epoch`
+advances whenever a product path (re)registers a table. Views are
+Arrow-built LocalRelations (:func:`local_view`): a query over them
+plans to ``LocalTableScan`` and starts no Python workers.
 
 Every front-end (CLI exec, pgwire server) funnels through
 ``execute_sql``.
@@ -28,8 +36,13 @@ Every front-end (CLI exec, pgwire server) funnels through
 
 from __future__ import annotations
 
+import functools
+import itertools
 import re
+import threading
+from typing import Callable, NamedTuple
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 _INFO_SCHEMA_RE = re.compile(
@@ -128,54 +141,297 @@ def _arrow_type_name(dt: str) -> str:
     return dt  # maps/structs/intervals: keep the Spark rendering
 
 
-def refresh_information_schema(spark: SparkSession) -> None:
-    """(Re)build information_schema_{tables,columns} temp views from
-    the live session catalog. With ``csvb.information_schema.
-    arrow_types=true`` (session SET), data_type renders Arrow names
-    (Int64, Utf8) for byte-parity with DataFusion's introspection."""
-    arrow_types = (
-        str(spark.conf.get(ARROW_TYPES_CONF, "false")).lower() == "true"
+#: SET csvb.pg_catalog.builtin_functions=true surfaces Spark's ~550
+#: builtin functions in pg_proc (namespace pg_catalog; see
+#: server/pg_catalog.py), so psql's ``\df abs`` answers. Off by
+#: default: postgres itself hides pg_catalog's functions from a bare
+#: ``\df``, and the builtin burst would drown a user's own UDFs in
+#: every unpatterned listing.
+BUILTIN_FUNCTIONS_CONF = "csvb.pg_catalog.builtin_functions"
+
+#: the engine's own backing temp views — machinery, not user tables
+_ENGINE_VIEW_PREFIXES = ("pg_catalog_", "information_schema_")
+
+#: serializes catalog snapshots and view rebuilds for both emulations:
+#: N clients cold-starting concurrently would otherwise rebuild the
+#: same views N times, and concurrent catalog RPC storms from pgwire
+#: handler threads have been observed to trip Spark-internal races
+#: (PARSE_EMPTY_STATEMENT out of listTables under simultaneous DDL +
+#: refresh + query traffic). With the lock, one connection builds and
+#: the rest hit the snapshot.
+_REFRESH_LOCK = threading.Lock()
+
+# epoch values: next() on a count is atomic, so concurrent bumps never
+# hand out the same value twice
+_EPOCHS = itertools.count(1)
+
+
+def bump_catalog_epoch(spark: SparkSession) -> None:
+    """Mark the session catalog dirty. The snapshot key sees table
+    NAMES only, so a same-name re-registration with different columns
+    (CREATE OR REPLACE, ``add_direct_table`` over new files) must bump
+    this for the next introspection to re-read schemas. A counter bump
+    only — no Spark call — so per-round re-registration stays free."""
+    spark._csvb_catalog_epoch = next(_EPOCHS)  # noqa: SLF001 — session-scoped
+
+
+def _flag(spark: SparkSession, conf: str) -> bool:
+    return str(spark.conf.get(conf, "false")).lower() == "true"
+
+
+class ColumnInfo(NamedTuple):
+    name: str
+    data_type: str  # char-aware: varchar(12), not string
+    nullable: bool
+
+
+class TableInfo(NamedTuple):
+    catalog: str
+    schema: str
+    name: str
+    table_type: str  # listTables' tableType: TEMPORARY, VIEW, MANAGED, ...
+    columns: tuple[ColumnInfo, ...]
+
+
+class CatalogSnapshot(NamedTuple):
+    """One read of the session catalog, shared by information_schema
+    and pg_catalog. Equal content compares equal, so a pass that finds
+    nothing changed keeps the previous object and no view rebuilds."""
+
+    current_catalog: str
+    databases: tuple[tuple[str, str], ...]  # (catalog, name)
+    tables: tuple[TableInfo, ...]  # listTables order
+    udfs: tuple[str, ...]  # session-registered UDF names, sorted
+    builtins: tuple[str, ...]  # builtin names when the flag is on
+    arrow_types: bool
+
+
+def _catalog_key(spark: SparkSession) -> tuple:
+    """The cheap rebuild key: three SHOW commands (~25-45 ms each,
+    executed locally, no per-table or per-function round trips)
+    ignoring the engine's own views and ``pg_*`` helper UDFs, plus the
+    DDL epoch and the two session flags."""
+    tables = (
+        (r[0], r[1], bool(r[2]))
+        for r in spark.sql("SHOW TABLES").collect()
+        if not r[1].startswith(_ENGINE_VIEW_PREFIXES)
     )
-    tables = []
-    columns = []
+    fns = (
+        r[0]
+        for r in spark.sql("SHOW USER FUNCTIONS").collect()
+        if not r[0].startswith("pg_")
+    )
+    return (
+        tuple(sorted(r[0] for r in spark.sql("SHOW DATABASES").collect())),
+        tuple(sorted(tables)),
+        tuple(sorted(fns)),
+        getattr(spark, "_csvb_catalog_epoch", 0),
+        _flag(spark, ARROW_TYPES_CONF),
+        _flag(spark, BUILTIN_FUNCTIONS_CONF),
+    )
+
+
+def _read_catalog(
+    spark: SparkSession, arrow_types: bool, show_builtins: bool
+) -> tuple[CatalogSnapshot, bool]:
+    """The expensive pass: databases, tables with their schemas, and
+    the function registry. Also returns whether the catalog held still:
+    a table listed by listTables but dropped before its schema read is
+    left out, and the pass reports False so the caller does not cache
+    it under a key that still names the table."""
+    tables, settled = [], True
     for t in spark.catalog.listTables():
-        if t.name.startswith(("pg_catalog_", "information_schema_")):
-            # both emulations' own backing temp views are machinery,
-            # not user tables — a \dt that refreshed pg_catalog must
-            # not make ~25 phantom rows appear here afterwards
+        if t.name.startswith(_ENGINE_VIEW_PREFIXES):
             continue
-        schema = t.namespace[0] if t.namespace else "default"
-        kind = "VIEW" if t.tableType in ("TEMPORARY", "VIEW") else "BASE TABLE"
+        try:
+            fields = spark.table(t.name).schema.fields
+        except AnalysisException as ex:
+            if "TABLE_OR_VIEW_NOT_FOUND" not in str(ex):
+                raise
+            settled = False
+            continue
+        # schema fields, not catalog.listColumns: the Column API erases
+        # char/varchar to 'string', while the field METADATA keeps the
+        # bounded type Spark actually enforces — which is what fills
+        # character_maximum_length and lets \d render 'character
+        # varying(12)' like postgres (round 13)
+        cols = tuple(
+            ColumnInfo(
+                f.name,
+                f.metadata.get("__CHAR_VARCHAR_TYPE_STRING")
+                or f.dataType.simpleString(),
+                f.nullable,
+            )
+            for f in fields
+        )
+        tables.append(
+            TableInfo(
+                t.catalog or "spark_catalog",
+                t.namespace[0] if t.namespace else "default",
+                t.name,
+                t.tableType or "",
+                cols,
+            )
+        )
+    # \df source: the session's REGISTERED UDFs — Spark marks all ~550
+    # builtins isTemporary too, so the discriminator is the className
+    # (UDFRegistration lambdas vs catalyst expression classes)
+    all_fns = spark.catalog.listFunctions()
+    udfs = sorted(
+        f.name
+        for f in all_fns
+        if f.isTemporary
+        and not f.name.startswith("pg_")
+        and "UDFRegistration" in (f.className or "")
+    )
+    builtins = (
+        sorted({f.name for f in all_fns if not f.name.startswith("pg_")} - set(udfs))
+        if show_builtins
+        else []
+    )
+    snap = CatalogSnapshot(
+        spark.catalog.currentCatalog() or "spark_catalog",
+        tuple(
+            sorted(
+                (d.catalog or "spark_catalog", d.name)
+                for d in spark.catalog.listDatabases()
+            )
+        ),
+        tuple(tables),
+        tuple(udfs),
+        tuple(builtins),
+        arrow_types,
+    )
+    return snap, settled
+
+
+def catalog_snapshot(spark: SparkSession) -> CatalogSnapshot:
+    """The session's catalog snapshot, re-read only when the cheap key
+    moves. Call under :data:`_REFRESH_LOCK` (via
+    :func:`locked_catalog_refresh`). Same-name swaps made through the
+    raw Python API without :func:`bump_catalog_epoch` stay invisible
+    until the next key change; every product path bumps it."""
+    key = _catalog_key(spark)
+    cached = getattr(spark, "_csvb_catalog_snap", None)
+    if cached is not None and getattr(spark, "_csvb_catalog_key", None) == key:
+        return cached
+    snap, settled = _read_catalog(spark, arrow_types=key[-2], show_builtins=key[-1])
+    if snap == cached:
+        snap = cached  # epoch moved, content did not: keep the views
+    spark._csvb_catalog_snap = snap  # noqa: SLF001 — session-scoped cache
+    spark._csvb_catalog_key = key if settled else None  # noqa: SLF001
+    return snap
+
+
+def _is_transient_catalog_race(ex: Exception) -> bool:
+    """The failure shapes observed when session DDL races a snapshot:
+    Spark's listTables machinery surfacing PARSE_EMPTY_STATEMENT, and a
+    table listed by listTables being dropped before its schema read
+    lands. Anything else is a real bug and must surface on the FIRST
+    traceback."""
+    text = f"{type(ex).__name__}: {ex}"
+    return any(
+        marker in text
+        for marker in (
+            "PARSE_EMPTY_STATEMENT",
+            "TABLE_OR_VIEW_NOT_FOUND",
+            "PARSE_SYNTAX_ERROR",  # empty-identifier variant of the same race
+        )
+    )
+
+
+def locked_catalog_refresh(build: Callable[[], None]) -> None:
+    """Run one emulation's ``build`` under :data:`_REFRESH_LOCK`. A
+    catalog mutated mid-snapshot (DDL racing the listTables) gets ONE
+    retry — the second pass sees a settled catalog — but only for the
+    known transient race signatures."""
+    with _REFRESH_LOCK:
+        try:
+            build()
+        except Exception as ex:  # noqa: BLE001 — see the transient list
+            if not _is_transient_catalog_race(ex):
+                raise
+            build()
+
+
+@functools.lru_cache(maxsize=None)
+def _ddl_schemas(ddl: str):
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(ddl)
+    return struct, to_arrow_schema(struct)
+
+
+def local_view(spark: SparkSession, rows: list, ddl: str, name: str) -> None:
+    """Register ``rows`` (tuples in ``ddl`` column order) as temp view
+    ``name`` over an Arrow-built LocalRelation: queries over it plan to
+    ``LocalTableScan`` — no RDD, no Python worker — and an empty
+    ``rows`` is simply an empty table."""
+    import pyarrow as pa
+
+    struct, schema = _ddl_schemas(ddl)
+    cols = list(zip(*rows)) if rows else [()] * len(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, schema)],
+        schema=schema,
+    )
+    spark.createDataFrame(table, struct).createOrReplaceTempView(name)
+
+
+def refresh_information_schema(
+    spark: SparkSession, df_settings: bool = True
+) -> None:
+    """Bring the information_schema_* views up to date with the
+    session catalog: the catalog views are rebuilt only when the shared
+    snapshot changed, under the refresh lock; ``df_settings`` re-reads
+    ``SET`` on every call that asks for it. With
+    ``csvb.information_schema.arrow_types=true`` (session SET),
+    data_type renders Arrow names (Int64, Utf8) for byte-parity with
+    DataFusion's introspection."""
+    locked_catalog_refresh(lambda: _refresh_information_schema_locked(spark))
+    if df_settings:
+        # DataFusion's df_settings analogue: the session's explicit
+        # config (Spark's `SET` output, renamed to DataFusion's columns)
+        local_view(
+            spark,
+            [tuple(r) for r in spark.sql("SET").collect()],
+            "name string, value string",
+            "information_schema_df_settings",
+        )
+
+
+def _refresh_information_schema_locked(spark: SparkSession) -> None:
+    snap = catalog_snapshot(spark)
+    if getattr(spark, "_csvb_info_schema_snap", None) is snap:
+        return
+    tables, columns = [], []
+    for t in snap.tables:
+        kind = "VIEW" if t.table_type in ("TEMPORARY", "VIEW") else "BASE TABLE"
         # NOTE: the reference's federated table provider panics
         # (todo!()) when asked for its table type
         # (reference csvb_engine/src/union_table_provider.rs:79-82);
         # here every registered table answers.
-        tables.append((t.catalog or "spark_catalog", schema, t.name, kind))
-        # schema fields, not catalog.listColumns: the Column API erases
-        # char/varchar to 'string', while the field METADATA keeps the
-        # bounded type Spark actually enforces — which is what fills
-        # character_maximum_length/octet_length (round 13)
-        for i, fld in enumerate(spark.table(t.name).schema.fields, start=1):
-            dt = (
-                fld.metadata.get("__CHAR_VARCHAR_TYPE_STRING")
-                or fld.dataType.simpleString()
-            )
+        tables.append((t.catalog, t.schema, t.name, kind))
+        for i, c in enumerate(t.columns, start=1):
+            char_max, *numeric = _type_metadata(c.data_type)
             columns.append(
                 (
-                    t.catalog or "spark_catalog",
-                    schema,
-                    t.name,
-                    fld.name,
-                    i,
-                    _arrow_type_name(dt) if arrow_types else dt,
-                    "YES" if fld.nullable else "NO",
-                    *_type_metadata(dt),
+                    t.catalog, t.schema, t.name, c.name, i,
+                    None,  # column_default
+                    "YES" if c.nullable else "NO",
+                    _arrow_type_name(c.data_type) if snap.arrow_types else c.data_type,
+                    char_max,
+                    None if char_max is None else char_max * 4,
+                    *numeric,
                 )
             )
-    spark.createDataFrame(
-        tables or [("spark_catalog", "default", "", "VIEW")],
+    local_view(
+        spark,
+        tables,
         "table_catalog string, table_schema string, table_name string, table_type string",
-    ).filter("table_name <> ''").createOrReplaceTempView("information_schema_tables")
+        "information_schema_tables",
+    )
     # Column layout pinned to DataFusion 44's information_schema.columns
     # (the reference enables it via csvb_engine/src/lib.rs:22): the full
     # 15-column SQL-standard shape, names and order. The type-DERIVED
@@ -191,66 +447,41 @@ def refresh_information_schema(spark: SparkSession) -> None:
     # registrable table here carries a default (temp views over
     # files), and engines that do fill it (DuckDB, postgres) also
     # render absent defaults as NULL.
-    spark.createDataFrame(
-        columns
-        or [
-            (
-                "spark_catalog", "default", "", "", 0, "", "YES",
-                None, None, None, None, None, None,
-            )
-        ],
+    local_view(
+        spark,
+        columns,
         "table_catalog string, table_schema string, table_name string, "
-        "column_name string, ordinal_position int, data_type string, "
-        "is_nullable string, character_maximum_length bigint, "
+        "column_name string, ordinal_position int, column_default string, "
+        "is_nullable string, data_type string, "
+        "character_maximum_length bigint, character_octet_length bigint, "
         "numeric_precision bigint, numeric_precision_radix bigint, "
         "numeric_scale bigint, datetime_precision bigint, "
         "interval_type string",
-    ).filter("table_name <> ''").selectExpr(
-        "table_catalog",
-        "table_schema",
-        "table_name",
-        "column_name",
-        "ordinal_position",
-        "CAST(NULL AS STRING) AS column_default",
-        "is_nullable",
-        "data_type",
-        "character_maximum_length",
-        "character_maximum_length * 4L AS character_octet_length",
-        "numeric_precision",
-        "numeric_precision_radix",
-        "numeric_scale",
-        "datetime_precision",
-        "interval_type",
-    ).createOrReplaceTempView("information_schema_columns")
-    views = [t for t in tables if t[3] == "VIEW"]
-    spark.createDataFrame(
-        [(c, s, n, None) for c, s, n, _ in views] or [("", "", "", None)],
+        "information_schema_columns",
+    )
+    local_view(
+        spark,
+        [(c, s, n, None) for c, s, n, kind in tables if kind == "VIEW"],
         "table_catalog string, table_schema string, table_name string, "
         "definition string",
-    ).filter("table_name <> ''").createOrReplaceTempView("information_schema_views")
+        "information_schema_views",
+    )
     # schemata likewise pinned to DataFusion 44's 7-column layout; the
     # owner/charset/sql_path columns are NULL there too (DataFusion
     # fills them with NULL for every schema)
-    spark.createDataFrame(
-        [(d.catalog or "spark_catalog", d.name) for d in spark.catalog.listDatabases()]
-        or [("spark_catalog", "default")],
-        "catalog_name string, schema_name string",
-    ).selectExpr(
-        "catalog_name",
-        "schema_name",
-        "CAST(NULL AS STRING) AS schema_owner",
-        "CAST(NULL AS STRING) AS default_character_set_catalog",
-        "CAST(NULL AS STRING) AS default_character_set_schema",
-        "CAST(NULL AS STRING) AS default_character_set_name",
-        "CAST(NULL AS STRING) AS sql_path",
-    ).createOrReplaceTempView("information_schema_schemata")
-    # DataFusion's df_settings analogue: the session's explicit config
-    # (Spark's `SET` command output, renamed to DataFusion's columns)
-    spark.sql("SET").selectExpr("key AS name", "value").createOrReplaceTempView(
-        "information_schema_df_settings"
+    local_view(
+        spark,
+        [
+            (c, n, None, None, None, None, None)
+            for c, n in snap.databases or (("spark_catalog", "default"),)
+        ],
+        "catalog_name string, schema_name string, schema_owner string, "
+        "default_character_set_catalog string, "
+        "default_character_set_schema string, "
+        "default_character_set_name string, sql_path string",
+        "information_schema_schemata",
     )
-
-
+    spark._csvb_info_schema_snap = snap  # noqa: SLF001 — what the views show
 
 
 # SELECT * REPLACE (expr AS col, ...) — the wildcard-option sqlparser-rs
@@ -492,8 +723,9 @@ def execute_sql(spark: SparkSession, sql: str) -> DataFrame:
     information_schema on demand."""
     from csvb_spark.functions.translate import translate_sql
 
-    if _INFO_SCHEMA_RE.search(sql):
-        refresh_information_schema(spark)
+    views = {m.group(1).lower() for m in _INFO_SCHEMA_RE.finditer(sql)}
+    if views:
+        refresh_information_schema(spark, df_settings="df_settings" in views)
         sql = _INFO_SCHEMA_RE.sub(lambda m: f"information_schema_{m.group(1).lower()}", sql)
     if "pg_catalog" in sql and _references_pg_catalog(sql):
         # psql meta-commands (\dt, \d tbl, \l, \dn): refresh the
@@ -526,16 +758,12 @@ def execute_sql(spark: SparkSession, sql: str) -> DataFrame:
     sql = _restore_literals(masked, lits)
     df = spark.sql(translate_sql(sql))
     if _DDL_RE.match(sql):
-        # catalog epoch for pg_catalog's two-stage snapshot (see
-        # server/pg_catalog.py): DDL through this surface — including
-        # CREATE OR REPLACE under the SAME name, which changes no
-        # table list — marks the catalog dirty so the next
-        # introspection re-fingerprints column schemas. Spark executes
-        # DDL eagerly inside spark.sql(), so the bump lands after the
-        # change is live.
-        spark._csvb_catalog_epoch = (  # noqa: SLF001 — session-scoped
-            getattr(spark, "_csvb_catalog_epoch", 0) + 1
-        )
+        # DDL through this surface — including CREATE OR REPLACE under
+        # the SAME name, which changes no table list — marks the
+        # catalog dirty so the next introspection re-reads column
+        # schemas. Spark executes DDL eagerly inside spark.sql(), so
+        # the bump lands after the change is live.
+        bump_catalog_epoch(spark)
     return df
 
 

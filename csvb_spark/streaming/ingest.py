@@ -402,15 +402,13 @@ def _sink_batch(
     # the (doc_id, sig, band_id, band_key) table once (bounded by
     # batch size × bands — fixed-width rows); the probe consumes it
     # via dedup_incremental(new_bands=...) and the index write reuses
-    # the surviving rows via write_band_index_from_bands. persist(),
-    # not localCheckpoint: checkpoint blocks are only freed when the
-    # localCheckpoint, NOT persist: an A/B this round measured
-    # persist() +30 s on the 8-batch decontam-gated stream — without
-    # lineage truncation every bands consumer re-plans (and on a cache
-    # miss re-executes) the whole gate chain. The round-15 ADVICE leak
-    # (checkpoint blocks freed only by driver GC) is fixed instead by
-    # releasing the checkpointed RDD's blocks explicitly in the
-    # finally below, once both consumers have run.
+    # the surviving rows via write_band_index_from_bands.
+    # localCheckpoint, NOT persist: an A/B measured persist() +30 s on
+    # the 8-batch decontam-gated stream — without lineage truncation
+    # every bands consumer re-plans (and on a cache miss re-executes)
+    # the whole gate chain. Checkpoint blocks would otherwise be freed
+    # only by driver GC, so the finally below releases the
+    # checkpointed RDD's blocks explicitly once both consumers ran.
     # spread_input=False + explicit repartition: a micro-batch is one
     # source file, so the signing input ALWAYS needs the core-count
     # repartition — but letting spread() discover that costs a full

@@ -3165,3 +3165,309 @@ def test_real_psql_describe_bounded_char_table(pg_server):
         assert "text" in out, out
     finally:
         run("DROP TABLE IF EXISTS _wire_char_probe")
+
+
+# --- shared catalog snapshot ------------------------------------------------
+
+
+def test_information_schema_concurrent_introspection_with_ddl(pg_server, spark):
+    """information_schema twin of the pg_catalog race test: three
+    clients read information_schema.tables while the main thread
+    creates and drops temp views. The rebuild runs under the shared
+    refresh lock with the transient-race retry, so a refresh racing
+    dropTempView never leaks TABLE_OR_VIEW_NOT_FOUND to a client."""
+    import threading
+    import time
+
+    errors: list = []
+
+    def client(worker: int) -> None:
+        try:
+            s = socket.create_connection(
+                ("127.0.0.1", pg_server.port), timeout=120
+            )
+            b = bytearray()
+            _startup(s)
+            _read_until_ready(s, b)
+            for _ in range(4):
+                msgs = _simple_query(
+                    s, b,
+                    "SELECT table_schema, table_name, table_type "
+                    "FROM information_schema.tables",
+                )
+                errs = [p for t, p in msgs if t == b"E"]
+                if errs:
+                    errors.append((worker, errs[0]))
+                    return
+                names = {r[1] for r in _data_rows(msgs)}
+                if b"documents" not in names:
+                    errors.append((worker, f"missing documents: {names}"))
+                    return
+            s.close()
+        except Exception as ex:  # noqa: BLE001
+            errors.append((worker, repr(ex)))
+
+    threads = [threading.Thread(target=client, args=(w,)) for w in range(3)]
+    for t in threads:
+        t.start()
+    for i in range(6):
+        spark.range(3).createOrReplaceTempView(f"infoschema_race_{i % 2}")
+        time.sleep(0.15)
+        spark.catalog.dropTempView(f"infoschema_race_{i % 2}")
+    for t in threads:
+        t.join(timeout=180)
+    assert not errors, errors
+
+
+def test_catalog_snapshot_sees_every_catalog_change(spark, sf_dir, tmp_path):
+    """The shared snapshot reflects, on the very next introspection
+    query: a table created through the raw createOrReplaceTempView, a
+    same-name add_direct_table with different columns, a UDF
+    registered mid-session, and SET csvb.information_schema.arrow_types."""
+    from csvb_spark.sources.catalog import register_views
+    from csvb_spark.sources.csv_source import add_direct_table
+    from csvb_spark.sql import ARROW_TYPES_CONF, execute_sql
+
+    def info_tables() -> set:
+        return {
+            r.table_name
+            for r in execute_sql(
+                spark, "SELECT table_name FROM information_schema.tables"
+            ).collect()
+        }
+
+    def info_columns(table: str) -> list:
+        return [
+            (r.column_name, r.data_type)
+            for r in execute_sql(
+                spark,
+                "SELECT column_name, data_type FROM information_schema.columns "
+                f"WHERE table_name = '{table}' ORDER BY ordinal_position",
+            ).collect()
+        ]
+
+    def pg_classes() -> set:
+        return {r[1] for r in execute_sql(spark, _PSQL_DT_SQL).collect()}
+
+    def pg_columns(table: str) -> list:
+        return [
+            r.attname
+            for r in execute_sql(
+                spark,
+                "SELECT a.attname FROM pg_catalog.pg_attribute a "
+                "JOIN pg_catalog.pg_class c ON c.oid = a.attrelid "
+                f"WHERE c.relname = '{table}' ORDER BY a.attnum",
+            ).collect()
+        ]
+
+    def pg_procs() -> set:
+        return {
+            r.proname
+            for r in execute_sql(
+                spark, "SELECT proname FROM pg_catalog.pg_proc"
+            ).collect()
+        }
+
+    register_views(spark, sf_dir)
+    info_tables(), pg_classes()  # settle the snapshot
+    spark.range(2).createOrReplaceTempView("snap_raw_new")
+    try:
+        assert "snap_raw_new" in info_tables()
+        assert "snap_raw_new" in pg_classes()
+    finally:
+        spark.catalog.dropTempView("snap_raw_new")
+
+    first, second = tmp_path / "a.csv", tmp_path / "b.csv"
+    first.write_text("a,b\n1,x\n")
+    second.write_text("c1,c2,c3\n1.5,y,2\n")
+    add_direct_table(spark, "snap_csv", [str(first)])
+    try:
+        assert [c for c, _ in info_columns("snap_csv")] == ["a", "b"]
+        assert pg_columns("snap_csv") == ["a", "b"]
+        add_direct_table(spark, "snap_csv", [str(second)])
+        assert [c for c, _ in info_columns("snap_csv")] == ["c1", "c2", "c3"]
+        assert pg_columns("snap_csv") == ["c1", "c2", "c3"]
+
+        spark.udf.register("snap_probe_fn", lambda: 1, "int")
+        assert "snap_probe_fn" in pg_procs()
+
+        assert info_columns("snap_csv")[0] == ("c1", "double")
+        spark.conf.set(ARROW_TYPES_CONF, "true")
+        try:
+            assert info_columns("snap_csv")[0] == ("c1", "Float64")
+        finally:
+            spark.conf.set(ARROW_TYPES_CONF, "false")
+        assert info_columns("snap_csv")[0] == ("c1", "double")
+    finally:
+        spark.catalog.dropTempView("snap_csv")
+
+
+def test_catalog_snapshot_burst_lists_nothing(spark, sf_dir, monkeypatch):
+    """A steady-state burst of introspection queries (both emulations)
+    answers from the snapshot: zero listFunctions and zero per-table
+    schema reads."""
+    from csvb_spark.sources.catalog import register_views
+    from csvb_spark.sql import execute_sql
+
+    burst = [
+        "SELECT table_name FROM information_schema.tables",
+        _PSQL_DT_SQL,
+        "SELECT column_name FROM information_schema.columns",
+        "SELECT proname FROM pg_catalog.pg_proc",
+        _PSQL_DT_SQL,
+    ]
+    register_views(spark, sf_dir)
+    for q in burst:  # settle both emulations
+        execute_sql(spark, q).collect()
+
+    calls = {"listFunctions": 0, "table": 0}
+    real_fns, real_table = spark.catalog.listFunctions, spark.table
+
+    def counting_fns(*a, **kw):
+        calls["listFunctions"] += 1
+        return real_fns(*a, **kw)
+
+    def counting_table(*a, **kw):
+        calls["table"] += 1
+        return real_table(*a, **kw)
+
+    monkeypatch.setattr(spark.catalog, "listFunctions", counting_fns)
+    monkeypatch.setattr(spark, "table", counting_table)
+    for q in burst:
+        execute_sql(spark, q).collect()
+    assert calls == {"listFunctions": 0, "table": 0}, calls
+
+
+def test_introspection_views_are_local_relations(spark, sf_dir):
+    """Both emulations' views are Arrow-built LocalRelations: the
+    physical plan is a LocalTableScan, never an RDD scan that starts
+    Python workers."""
+    from csvb_spark.sources.catalog import register_views
+    from csvb_spark.sql import execute_sql
+
+    register_views(spark, sf_dir)
+    for q in (
+        "SELECT * FROM information_schema.columns",
+        "SELECT * FROM information_schema.tables",
+        "SELECT * FROM information_schema.df_settings",
+        "SELECT * FROM pg_catalog.pg_attribute",
+        "SELECT * FROM pg_catalog.pg_constraint",
+    ):
+        plan = (
+            execute_sql(spark, q)._jdf.queryExecution().executedPlan().toString()
+        )
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, (q, plan)
+
+
+# --- result fetch helper ----------------------------------------------------
+
+
+_MIXED_VIEW_SQL = (
+    "SELECT id, "
+    "CASE WHEN id % 3 = 0 THEN NULL ELSE CAST(id AS DECIMAL(10, 2)) / 7 END AS d, "
+    "CASE WHEN id % 4 = 0 THEN NULL ELSE date_add(DATE'2024-02-27', CAST(id AS INT)) END AS dt, "
+    "TIMESTAMP'2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, id * 1.5) AS ts, "
+    "CASE WHEN id % 5 = 0 THEN NULL ELSE array(id, NULL, id * 2) END AS arr, "
+    "named_struct('a', id, 'b', CAST(id AS STRING)) AS st, "
+    "CASE WHEN id % 2 = 0 THEN NULL ELSE concat('v\\t', CAST(id AS STRING), ',\"q\"') END AS s "
+    "FROM range(0, 40, 1, 4)"
+)
+
+
+def _wire_transcript(port: int) -> list:
+    """Every message of: a simple query, an extended-protocol portal
+    suspended by max_rows, and COPY TO in text and CSV."""
+    sock = socket.create_connection(("127.0.0.1", port), timeout=120)
+    buf = bytearray()
+    _startup(sock)
+    _read_until_ready(sock, buf)
+    out = [_simple_query(sock, buf, "SELECT * FROM fetch_mixed")]
+    q = b"SELECT * FROM fetch_mixed"
+    _send(sock, b"P", b"\x00" + q + b"\x00" + struct.pack("!h", 0))
+    _send(sock, b"B", b"\x00\x00" + struct.pack("!hhh", 0, 0, 0))
+    for _ in range(6):  # 5 suspend after 7 rows each, the 6th completes
+        _send(sock, b"E", b"\x00" + struct.pack("!I", 7))
+    _send(sock, b"S", b"")
+    out.append(_read_until_ready(sock, buf))
+    out.append(_simple_query(sock, buf, "COPY fetch_mixed TO STDOUT"))
+    out.append(
+        _simple_query(
+            sock, buf, "COPY fetch_mixed TO STDOUT WITH (FORMAT CSV, HEADER)"
+        )
+    )
+    sock.close()
+    return out
+
+
+def test_fetch_helper_wire_bytes_identical_collect_vs_stream(
+    pg_server, spark, monkeypatch, caplog
+):
+    """The collect and stream fetch paths put identical bytes on the
+    wire for a mixed-type result (nulls, decimal, date, timestamp,
+    array, struct) over a simple query, a max_rows-suspended portal
+    and COPY TO text/CSV; each statement logs its fetch mode."""
+    import logging
+
+    import csvb_spark.server.pgwire as pgwire
+
+    spark.sql(_MIXED_VIEW_SQL).createOrReplaceTempView("fetch_mixed")
+    caplog.set_level(logging.INFO, logger="csvb.pgwire")
+    try:
+        transcripts = {}
+        for mode, budget in (("collected", 1 << 62), ("streamed", -1)):
+            monkeypatch.setattr(pgwire, "_COLLECT_BUDGET_BYTES", budget)
+            caplog.clear()
+            transcripts[mode] = _wire_transcript(pg_server.port)
+            lines = [
+                r.getMessage() for r in caplog.records if r.name == "csvb.pgwire"
+            ]
+            # query + 5 suspended Executes + the completing one + 2 COPYs
+            assert len(lines) == 9, lines
+            assert all(f", {mode}: " in ln for ln in lines), lines
+            assert lines[0].startswith("query ") and " 40 rows, " in lines[0]
+    finally:
+        spark.catalog.dropTempView("fetch_mixed")
+    simple, portal, copy_text, copy_csv = transcripts["collected"]
+    assert len(_data_rows(simple)) == 40
+    assert [t for t, _ in portal].count(b"s") == 5
+    assert (b"C", b"SELECT 40\x00") in portal
+    assert len([t for t, _ in copy_text if t == b"d"]) == 40
+    assert len([t for t, _ in copy_csv if t == b"d"]) == 41  # + header
+    assert transcripts["collected"] == transcripts["streamed"]
+
+
+def test_fetch_helper_one_job_under_budget(spark, monkeypatch):
+    """StatusTracker: an under-budget multi-partition SELECT runs as
+    ONE Spark job; over the budget (or with exploded rows, whose
+    estimate is unreliable) it streams, one job per partition."""
+    import csvb_spark.server.pgwire as pgwire
+    from csvb_spark.sql import execute_sql
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    spark.range(0, 1000, 1, 4).createOrReplaceTempView("fetch_parts")
+
+    def fetch(sql: str, group: str) -> tuple[int, str, int]:
+        sc.setJobGroup(group, group)
+        try:
+            it, mode = pgwire._fetch_rows(execute_sql(spark, sql))
+            rows = len(list(it))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(tracker.getJobIdsForGroup(group)), mode, rows
+
+    try:
+        assert fetch("SELECT * FROM fetch_parts", "fetch-under") == (
+            1, "collected", 1000
+        )
+        monkeypatch.setattr(pgwire, "_COLLECT_BUDGET_BYTES", 1024)
+        assert fetch("SELECT * FROM fetch_parts", "fetch-over") == (
+            4, "streamed", 1000
+        )
+        monkeypatch.undo()
+        _, mode, rows = fetch(
+            "SELECT explode(sequence(1, 10)) AS x FROM fetch_parts", "fetch-gen"
+        )
+        assert (mode, rows) == ("streamed", 10000)
+    finally:
+        spark.catalog.dropTempView("fetch_parts")
