@@ -193,13 +193,24 @@ def _section_boundary(spark, cpus: str, fresh: bool = False):
                 gateway_alive = True
             except Exception:  # noqa: BLE001
                 gateway_alive = False
+        # Relies on pyspark 4.1.x private internals: the class-level
+        # SparkContext._lock/_gateway/_jvm/_active_spark_context and
+        # SparkSession._instantiatedSession/_activeSession. Re-check
+        # them when upgrading pyspark.
         if not gateway_alive:
-            # the JVM itself is gone; drop the cached gateway so the
-            # builder below launches a fresh one
+            # the JVM itself is gone; close the dead gateway's py4j
+            # client (its thread and socket would leak otherwise) and
+            # drop it so the builder below launches a fresh one
             with SparkContext._lock:
-                SparkContext._active_spark_context = None
-                SparkContext._gateway = None
-                SparkContext._jvm = None
+                try:
+                    if SparkContext._gateway is not None:
+                        SparkContext._gateway.shutdown()
+                except Exception:  # noqa: BLE001 — already half gone
+                    pass
+                finally:
+                    SparkContext._active_spark_context = None
+                    SparkContext._gateway = None
+                    SparkContext._jvm = None
         SparkSession._instantiatedSession = None
         SparkSession._activeSession = None
         from csvb_spark.session import get_session

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
 from csvb_spark.operators.text import char_shingles, tokens
 
@@ -852,6 +853,46 @@ def ngram_novelty(
     )
 
 
+#: the most id bytes (edges × the width of both ids) that
+#: :func:`dedup_clusters` collects to the driver for its union-find;
+#: 1M bigint edges (16 MB) fit, as under the row bound alone
+_DRIVER_EDGE_BUDGET_BYTES = 32 << 20
+
+
+def _driver_clusters(pairs: DataFrame, left_col: str, edges: list) -> DataFrame:
+    """:func:`dedup_clusters` over a collected edge list: union-find on
+    the driver, one ``(doc_id, cluster_id)`` row per node with the
+    smallest id of its component."""
+    parent: dict = {}
+
+    def find(x):
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:  # path compression
+            parent[x], x = r, parent[x]
+        return r
+
+    for row in edges:
+        a, b = row[0], row[1]
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[ra] = rb
+    roots: dict = {}
+    for n in parent:
+        r = find(n)
+        m = roots.get(r)
+        if m is None or n < m:
+            roots[r] = n
+    dt = pairs.schema[left_col].dataType
+    schema = StructType([StructField("doc_id", dt), StructField("cluster_id", dt)])
+    return pairs.sparkSession.createDataFrame(
+        [(n, roots[find(n)]) for n in parent], schema
+    )
+
+
 def dedup_clusters(
     pairs: DataFrame,
     left_col: str = "doc_id_a",
@@ -884,53 +925,35 @@ def dedup_clusters(
     real dedup — yet each propagation round costs two fixed driver
     jobs and shuffles, so at small pair counts the loop is pure
     scheduling overhead (~90 % of the curate capstone's split stage
-    at sf0.1). When the edge list fits under ``driver_max_edges`` the
-    components are computed with a driver-side union-find instead
-    (same bounded-probe contract as the IVF cell collect: ONE
-    ``limit(n+1)`` collect decides, so the driver never holds an
-    unbounded table). Identical output by construction: min-label per
-    component, and Python's string ordering (code points) agrees with
-    Spark's UTF8 binary ordering. Above the bound, the distributed
-    loop below is unchanged — that path's per-round cost is then
-    amortized by real work.
+    at sf0.1). When the edge list is small the components are computed
+    with a driver-side union-find instead. The bound is in bytes as
+    well as rows, so the driver never holds an unbounded table: one
+    aggregate job counts the edges first (and, for string/binary ids,
+    measures the widest id), and the edges are collected only when
+    the count is within ``driver_max_edges`` and count × the two ids'
+    width (the schema's fixed width, else the widest id seen) fits
+    :data:`_DRIVER_EDGE_BUDGET_BYTES`. Identical output by
+    construction: min-label per component, and Python's string
+    ordering (code points) agrees with Spark's UTF8 binary ordering.
+    Above the bound, the distributed loop below is unchanged — that
+    path's per-round cost is then amortized by real work.
     """
     edges = pairs.select(
         F.col(left_col).alias("a"), F.col(right_col).alias("b")
     )
-    probe = edges.limit(driver_max_edges + 1).collect()
-    if len(probe) <= driver_max_edges:
-        from pyspark.sql.types import StructField, StructType
-
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:  # path compression
-                parent[x], x = r, parent[x]
-            return r
-
-        for row in probe:
-            a, b = row[0], row[1]
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[ra] = rb
-        roots: dict = {}
-        for n in parent:
-            r = find(n)
-            m = roots.get(r)
-            if m is None or n < m:
-                roots[r] = n
-        dt = pairs.schema[left_col].dataType
-        schema = StructType(
-            [StructField("doc_id", dt), StructField("cluster_id", dt)]
-        )
-        return pairs.sparkSession.createDataFrame(
-            [(n, roots[find(n)]) for n in parent], schema
-        )
+    fixed, variable = 0, []
+    for c in ("a", "b"):
+        if isinstance(edges.schema[c].dataType, (StringType, BinaryType)):
+            variable.append(F.max(F.octet_length(c)))
+        else:  # Catalyst's own width of the type (8 for bigint)
+            fixed += edges._jdf.schema().apply(c).dataType().defaultSize()
+    n_edges, *widths = edges.agg(F.count("*"), *variable).first()
+    id_bytes = fixed + sum(w or 0 for w in widths)
+    if (
+        n_edges <= driver_max_edges
+        and n_edges * id_bytes <= _DRIVER_EDGE_BUDGET_BYTES
+    ):
+        return _driver_clusters(pairs, left_col, edges.collect())
     bidir = (
         edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()

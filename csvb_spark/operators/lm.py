@@ -1734,9 +1734,11 @@ def doremi_domain_weights(
     pass scores both models (:func:`_addk_scores_pair`, per-model
     expression trees identical to ``perplexity_score``'s); and the
     per-document join against ``domain`` runs once instead of twice.
-    An over-``broadcast_max_rows`` model falls back to the two
-    independent scoring passes (each with its own skew-salted
-    shuffle join) while keeping the fused single-pass training.
+    When the two models together exceed ``broadcast_max_rows`` (the
+    fused pass broadcasts both at once), scoring falls back to the
+    two independent passes — each broadcasts its own model while it
+    fits the bound alone, else takes its own skew-salted shuffle
+    join — while keeping the fused single-pass training.
     Values are bit-identical to the generic path by construction —
     pinned by the x142 DuckDB oracle and the pred-vs-DataFrame
     equivalence test.
@@ -1795,13 +1797,11 @@ def doremi_domain_weights(
         )
         stats_b = _addk_model_stats(base_lm)
         stats_r = _addk_model_stats(ref_lm)
-        # the base model's row count bounds the target model's too
-        if _resolve_broadcast(
-            "doremi_domain_weights",
-            int(stats_b["n"]),
-            None,
-            broadcast_max_rows,
-        ):
+        # the fused pass broadcasts BOTH models in one stage, so the
+        # bound applies to their combined rows; over it, each model
+        # is gated (and warned about) alone by its own
+        # perplexity_score pass below
+        if int(stats_b["n"]) + int(stats_r["n"]) <= broadcast_max_rows:
             scored = _addk_scores_pair(
                 docs,
                 model,

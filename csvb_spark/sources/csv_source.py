@@ -13,6 +13,25 @@
   semantic anyway: inference scans one file, the full read is
   schema-pinned and single-pass.
 
+Repeat registrations are cheap. Each session keeps one registry entry
+per table name: the format and resolved paths, the files' identity
+(``st_ino``, ``st_size``, ``st_mtime_ns`` per path) and the DataFrame,
+which carries the inferred schema. Registering the same name over the same unchanged files
+again skips inference and returns the same relation, now persisted at
+Spark's default DataFrame level (``MEMORY_AND_DISK``), so later
+statements scan a columnar copy instead of re-parsing the files. A
+first registration stays a plain scan (a one-shot ``csvb exec`` never
+pays for caching), and a registration over changed files or another
+path set unpersists the name's old relation and infers again.
+
+Spark matches cached data by plan, and its file index compares only
+root paths, so a cached copy would outlive an in-place rewrite of its
+files — for its own name and for any other name registered over the
+same paths. :func:`drop_changed_caches`, which ``sql.execute_sql``
+calls before planning every statement, re-stats the files of every
+persisted relation and unpersists the ones whose identity moved: a
+changed file is re-read on the next statement.
+
 Known divergence from arrow's CSV reader: CRLF sequences INSIDE a
 quoted field are normalized to LF by Spark's parser (line-ending
 normalization is tied to its multiline handling and not separately
@@ -24,9 +43,12 @@ from __future__ import annotations
 
 import os
 import tempfile
+import threading
 import urllib.parse
 import urllib.request
+from typing import NamedTuple
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
 from csvb_spark.sql import bump_catalog_epoch
@@ -105,6 +127,60 @@ def resolve_sources(
     return paths
 
 
+class _Registration(NamedTuple):
+    fmt: str
+    paths: tuple[str, ...]  # resolved: files, never directories or URLs
+    identity: tuple | None  # per path (st_ino, st_size, st_mtime_ns)
+    df: DataFrame
+
+
+#: guards the session registries and the cached sets; pgwire handler
+#: threads run :func:`drop_changed_caches` concurrently
+_LOCK = threading.Lock()
+
+
+def _cached(sc: SparkContext) -> dict[int, _Registration]:
+    """The persisted registrations of every session on ``sc``, by
+    ``id()``. Spark's CacheManager is shared by all sessions of one
+    SparkContext, so the per-statement check must see all of them,
+    not only the caller's."""
+    return sc.__dict__.setdefault("_csvb_cached_registrations", {})
+
+
+def _identity(paths: tuple[str, ...]) -> tuple | None:
+    """Per-path ``(st_ino, st_size, st_mtime_ns)``; None when a path
+    cannot be stat-ed locally (missing, or a non-local URI), which
+    never matches, so such a registration is never reused."""
+    out = []
+    for p in paths:
+        try:
+            st = os.stat(p)
+        except OSError:
+            return None
+        out.append((st.st_ino, st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
+def _uncache(cached: dict[int, _Registration], reg: _Registration) -> None:
+    """Unpersist ``reg`` if it is cached. Call under :data:`_LOCK`."""
+    if cached.pop(id(reg), None) is not None:
+        reg.df.unpersist()
+
+
+def drop_changed_caches(spark: SparkSession) -> None:
+    """Unpersist every registered relation whose files changed since
+    it was registered, so no statement reads a cached copy of a file
+    that was rewritten. ``sql.execute_sql`` calls this before planning;
+    with nothing persisted it returns without taking the lock."""
+    cached = _cached(spark.sparkContext)
+    if not cached:
+        return
+    with _LOCK:
+        for reg in list(cached.values()):
+            if _identity(reg.paths) != reg.identity:
+                _uncache(cached, reg)
+
+
 def add_direct_table(
     spark: SparkSession,
     name: str,
@@ -114,29 +190,63 @@ def add_direct_table(
 ) -> DataFrame:
     """Register ``sources`` as one ``fmt``-backed temp view ``name``.
 
-    Returns the DataFrame (lazy scan). ``fmt`` is ``csv`` (reference
-    parity), ``parquet``, or ``json`` (JSON Lines) — the latter two
-    are bonus formats the reference never wired (SURVEY.md §2.B.1:
-    only CsvFormat, lib.rs:42). For the schema-on-read formats (csv,
-    json) inference reads only ``sources[0]`` — the reference
-    semantic (lib.rs:73-75) — and the inferred schema is applied
-    explicitly to the multi-path read, so the bulk scan is
-    single-pass; parquet carries its own schema.
+    Returns the DataFrame. ``fmt`` is ``csv`` (reference parity),
+    ``parquet``, or ``json`` (JSON Lines) — the latter two are bonus
+    formats the reference never wired (SURVEY.md §2.B.1: only
+    CsvFormat, lib.rs:42). For the schema-on-read formats (csv, json)
+    inference reads only ``sources[0]`` — the reference semantic
+    (lib.rs:73-75) — and the inferred schema is applied explicitly to
+    the multi-path read, so the bulk scan is single-pass; parquet
+    carries its own schema.
+
+    The first registration of ``name`` returns a lazy scan. Registering
+    ``name`` again over the same resolved paths, with every file
+    unchanged (same inode, size and mtime), reuses the schema with no
+    inference and returns the same relation persisted at
+    ``MEMORY_AND_DISK``, so later statements scan the cached columnar
+    copy. Other paths, or a changed file, unpersist the old relation
+    and infer again. A file that changes while cached is re-read on
+    the next statement (:func:`drop_changed_caches`).
     """
-    paths = resolve_sources(sources, cache_dir, ext=f".{fmt}")
+    paths = tuple(resolve_sources(sources, cache_dir, ext=f".{fmt}"))
+    identity = _identity(paths)
+    cached = _cached(spark.sparkContext)
+    with _LOCK:
+        # one registry per session, like its temp views
+        registry = spark.__dict__.setdefault("_csvb_registrations", {})
+        reg = registry.get(name)
+        reuse = (
+            reg is not None
+            and identity is not None
+            and (reg.fmt, reg.paths, reg.identity) == (fmt, paths, identity)
+        )
+        if reuse and id(reg) not in cached:
+            reg.df.cache()  # Spark's default level, MEMORY_AND_DISK
+            cached[id(reg)] = reg
+    if not reuse:
+        # infer outside the lock: it runs a Spark job, and every
+        # statement's identity check would wait on it
+        reg = _Registration(fmt, paths, identity, _scan(spark, fmt, list(paths)))
+        with _LOCK:
+            old = registry.get(name)
+            if old is not None:
+                _uncache(cached, old)
+            registry[name] = reg
+    reg.df.createOrReplaceTempView(name)
+    # a same-name re-registration may change the columns
+    bump_catalog_epoch(spark)
+    return reg.df
+
+
+def _scan(spark: SparkSession, fmt: str, paths: list[str]) -> DataFrame:
     if fmt == "csv":
         schema = (
             spark.read.options(**_CSV_OPTIONS, inferSchema="true").csv(paths[0]).schema
         )
-        df = spark.read.options(**_CSV_OPTIONS).schema(schema).csv(paths)
-    elif fmt == "parquet":
-        df = spark.read.parquet(*paths)
-    elif fmt == "json":
+        return spark.read.options(**_CSV_OPTIONS).schema(schema).csv(paths)
+    if fmt == "parquet":
+        return spark.read.parquet(*paths)
+    if fmt == "json":
         schema = spark.read.json(paths[0]).schema
-        df = spark.read.schema(schema).json(paths)
-    else:
-        raise ValueError(f"unsupported table format {fmt!r}")
-    df.createOrReplaceTempView(name)
-    # a same-name re-registration may change the columns
-    bump_catalog_epoch(spark)
-    return df
+        return spark.read.schema(schema).json(paths)
+    raise ValueError(f"unsupported table format {fmt!r}")

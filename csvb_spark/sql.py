@@ -31,7 +31,12 @@ Arrow-built LocalRelations (:func:`local_view`): a query over them
 plans to ``LocalTableScan`` and starts no Python workers.
 
 Every front-end (CLI exec, pgwire server) funnels through
-``execute_sql``.
+``execute_sql``. Before planning, it runs the per-statement identity
+check of ``sources/csv_source.py`` (``drop_changed_caches``): a
+re-registered CSV table may be cached, and Spark matches cached data
+by plan, not by file content, so every persisted relation whose files
+changed (inode, size or mtime) is unpersisted first and the statement
+re-reads them.
 """
 
 from __future__ import annotations
@@ -722,6 +727,11 @@ def execute_sql(spark: SparkSession, sql: str) -> DataFrame:
     """Translate reference-dialect SQL and run it, emulating
     information_schema on demand."""
     from csvb_spark.functions.translate import translate_sql
+    from csvb_spark.sources.csv_source import drop_changed_caches
+
+    # before planning: Spark would otherwise substitute a cached copy
+    # of a CSV table whose files were rewritten since it was cached
+    drop_changed_caches(spark)
 
     views = {m.group(1).lower() for m in _INFO_SCHEMA_RE.finditer(sql)}
     if views:

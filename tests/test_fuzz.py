@@ -177,10 +177,15 @@ def test_csv_nasty_cells_round_trip(spark, tmp_path) -> None:
             w.writerow([i, cell])
 
     df = add_direct_table(spark, "t_nasty", [str(path)])
-    got = {r["id"]: r["cell"] for r in df.collect()}
+    rows = sorted(df.collect())
+    got = {r["id"]: r["cell"] for r in rows}
     for i, cell in enumerate(nasty):
         want = cell.replace("\r\n", "\n") if cell else None  # see docstring
         assert got[i] == want, f"row {i}: {got[i]!r}"
+    # the same file through a second registration, now a cached copy
+    cached = add_direct_table(spark, "t_nasty", [str(path)])
+    assert cached.storageLevel.useMemory
+    assert sorted(cached.collect()) == rows
 
 
 # --- round 6: pg array text parsing / rendering round trip -------------------

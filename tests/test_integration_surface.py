@@ -464,6 +464,161 @@ def test_csv_empty_dir_raises(spark, tmp_path):
         add_direct_table(spark, "csv_t3", [str(empty)])
 
 
+def _jobs_in_group(spark, group: str, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_csv_repeat_registration_caches_without_inference(spark, tmp_path):
+    """The first registration is a plain scan; the same name over the
+    same unchanged file again starts no inference job and returns the
+    same relation, persisted at the JVM's default MEMORY_AND_DISK
+    (deserialized — pyspark calls that level MEMORY_AND_DISK_DESER)."""
+    from pyspark import StorageLevel
+
+    from csvb_spark.sources.csv_source import add_direct_table
+
+    f = tmp_path / "rep.csv"
+    f.write_text("id,val\n1,10\n2,20\n")
+    out = {}
+    first = _jobs_in_group(
+        spark, "csv-first",
+        lambda: out.update(df=add_direct_table(spark, "csv_rep", [str(f)])),
+    )
+    df = out["df"]
+    assert first > 0  # inference ran, and the counting sees it
+    assert df.storageLevel == StorageLevel.NONE
+    repeat = _jobs_in_group(
+        spark, "csv-repeat",
+        lambda: out.update(df=add_direct_table(spark, "csv_rep", [str(f)])),
+    )
+    assert repeat == 0
+    assert out["df"] is df
+    assert df.storageLevel == StorageLevel.MEMORY_AND_DISK_DESER
+    assert spark.sql("SELECT sum(val) AS s FROM csv_rep").collect()[0].s == 30
+    spark.catalog.dropTempView("csv_rep")
+
+
+def test_csv_repointed_name_unpersists_old_relation(spark, tmp_path):
+    from pyspark import StorageLevel
+
+    from csvb_spark.sources.csv_source import add_direct_table
+
+    f1, f2 = tmp_path / "a.csv", tmp_path / "b.csv"
+    f1.write_text("id,val\n1,10\n")
+    f2.write_text("id,val\n2,20\n3,30\n")
+    add_direct_table(spark, "csv_move", [str(f1)])
+    old = add_direct_table(spark, "csv_move", [str(f1)])
+    assert old.storageLevel != StorageLevel.NONE
+    new = add_direct_table(spark, "csv_move", [str(f2)])
+    assert old.storageLevel == StorageLevel.NONE
+    assert new.storageLevel == StorageLevel.NONE  # a first registration
+    assert spark.sql("SELECT sum(val) AS s FROM csv_move").collect()[0].s == 50
+    spark.catalog.dropTempView("csv_move")
+
+
+def test_csv_concurrent_registrations_leave_no_orphaned_cache(spark, tmp_path):
+    """Threads re-register one name over two files and run the
+    per-statement check. Once the name is re-pointed at the second
+    file, no copy of the first may stay cached: a lost update would
+    leave an orphaned cached relation behind. (Spark reports storage
+    by plan, so every relation over the first file answers alike.)"""
+    import sys
+    import threading
+
+    from pyspark import StorageLevel
+
+    from csvb_spark.sources import csv_source
+
+    f1, f2 = tmp_path / "a.csv", tmp_path / "b.csv"
+    f1.write_text("id,val\n1,10\n")
+    f2.write_text("id,val\n2,20\n")
+    returned, errors = [], []
+
+    def register(order):
+        try:
+            for f in order:
+                df = csv_source.add_direct_table(spark, "csv_race", [str(f)])
+                returned.append((f, df))
+                csv_source.drop_changed_caches(spark)
+        except Exception as e:  # noqa: BLE001 — reported by the assert below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        orders = ([f1, f1, f2, f2], [f2, f2, f1, f1])
+        threads = [
+            threading.Thread(target=register, args=(orders[i % 2],))
+            for i in range(6)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors
+    csv_source.add_direct_table(spark, "csv_race", [str(f2)])
+    assert all(df.storageLevel == StorageLevel.NONE for f, df in returned if f == f1)
+    spark.catalog.dropTempView("csv_race")
+
+
+def _cached_csv(spark, name: str, path) -> None:
+    """Register ``path`` twice under ``name`` (so it is persisted) and
+    materialize the cached copy."""
+    from csvb_spark.sources.csv_source import add_direct_table
+    from csvb_spark.sql import execute_sql
+
+    path.write_text("id,val\n1,10\n2,20\n")
+    add_direct_table(spark, name, [str(path)])
+    add_direct_table(spark, name, [str(path)])
+    assert execute_sql(spark, f"SELECT sum(val) AS s FROM {name}").collect() == [(30,)]
+
+
+def _rewrite(path) -> None:
+    """Rewrite in place (same inode) with other rows of another size."""
+    with open(path, "w") as f:
+        f.write("id,val\n7,700\n8,800\n9,900\n")
+
+
+def test_csv_cached_name_sees_rewritten_file(spark, tmp_path):
+    """A cached registration never serves rows of a file that changed:
+    the next statement re-reads it."""
+    from csvb_spark.sql import execute_sql
+
+    f = tmp_path / "stale.csv"
+    _cached_csv(spark, "csv_stale", f)
+    _rewrite(f)
+    got = execute_sql(spark, "SELECT count(*) AS n, sum(val) AS s FROM csv_stale")
+    assert got.collect() == [(3, 2400)]
+    spark.catalog.dropTempView("csv_stale")
+
+
+def test_csv_second_name_over_cached_path_sees_rewritten_file(spark, tmp_path):
+    """Spark substitutes the first name's cached copy into any plan over
+    the same paths; after a rewrite, the second name reads new rows."""
+    from csvb_spark.sources.csv_source import add_direct_table
+    from csvb_spark.sql import execute_sql
+
+    f = tmp_path / "shared.csv"
+    _cached_csv(spark, "csv_shared1", f)
+    add_direct_table(spark, "csv_shared2", [str(f)])
+    plan = execute_sql(spark, "SELECT * FROM csv_shared2")._jdf.queryExecution()
+    assert "InMemoryRelation" in plan.withCachedData().toString()
+    _rewrite(f)
+    got = execute_sql(spark, "SELECT count(*) AS n, sum(val) AS s FROM csv_shared2")
+    assert got.collect() == [(3, 2400)]
+    for name in ("csv_shared1", "csv_shared2"):
+        spark.catalog.dropTempView(name)
+
+
 @pytest.fixture()
 def http_csv_server(tmp_path):
     """stdlib HTTP server hosting CSVs — exercises the reference's

@@ -1091,6 +1091,59 @@ def test_doremi_target_pred_matches_target_df(spark):
         )
 
 
+def test_doremi_fused_broadcast_gates_on_both_models(spark, monkeypatch):
+    """The fused target_pred branch broadcasts the base AND the target
+    model in one stage, so its gate counts both. A bound the base
+    model alone fits under, but the pair does not, takes the generic
+    one-model-per-pass scoring, with identical weights."""
+    import warnings
+
+    import csvb_spark.operators.lm as lm
+
+    docs = spark.createDataFrame(
+        [
+            (0, "the quick brown fox jumps over the lazy dog", "news"),
+            (1, "the quick brown fox sleeps", "news"),
+            (2, "zxq wvv qqj kpf mmz jjx vvq", "spam"),
+            (3, "zxq wvv mmz", "spam"),
+            (4, "quick brown quick brown", "news"),
+        ],
+        "doc_id bigint, text string, source string",
+    )
+    sizes, fused = [], []
+    stats, pair = lm._addk_model_stats, lm._addk_scores_pair
+
+    def spy_stats(model):
+        row = stats(model)
+        sizes.append(row["n"])
+        return row
+
+    def spy_pair(*args):
+        fused.append(1)
+        return pair(*args)
+
+    monkeypatch.setattr(lm, "_addk_model_stats", spy_stats)
+    monkeypatch.setattr(lm, "_addk_scores_pair", spy_pair)
+
+    def weights(bound: int) -> list[tuple]:
+        sizes.clear()
+        fused.clear()
+        out = lm.doremi_domain_weights(
+            docs, target_pred="doc_id % 2 = 0", broadcast_max_rows=bound
+        ).collect()
+        return sorted(tuple(r) for r in out)
+
+    want = weights(8_000_000)
+    assert fused
+    n_base, n_target = sizes[:2]
+    assert 0 < n_target <= n_base
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")  # each model alone still broadcasts
+        got = weights(n_base)  # the old gate: base rows <= bound
+    assert not fused
+    assert got == want
+
+
 def test_doremi_iterated_trajectory_semantics(spark, sf_dir):
     """Iterated DoReMi structural invariants: one row per
     (round, domain); per-round shares normalize to ~1; avg_share is

@@ -76,3 +76,42 @@ def test_corpus_build_end_to_end(spark, sf_dir, tmp_path):
     # quality stats compose over the scrubbed text too
     stats = repetition_stats(kept)
     assert stats.count() == n_kept
+
+
+def test_dedup_clusters_wide_ids_over_byte_budget_go_distributed(spark, monkeypatch):
+    """The driver-side union-find is bounded in bytes, not only rows:
+    string ids too wide for the budget take the distributed label
+    propagation, with identical clusters; the same edge count with
+    narrow ids still collects."""
+    import csvb_spark.operators.dedup as dedup
+
+    collected = []
+    driver = dedup._driver_clusters
+
+    def spy(*args):
+        collected.append(1)
+        return driver(*args)
+
+    monkeypatch.setattr(dedup, "_driver_clusters", spy)
+    # 3 components: chains 0-1-...-9, 10-...-19, and star 20-{21..29}
+    edges = [(i, i + 1) for i in range(9)] + [(i, i + 1) for i in range(10, 19)]
+    edges += [(20, j) for j in range(21, 30)]
+
+    def clusters(pad: str) -> list[tuple]:
+        collected.clear()
+        pairs = spark.createDataFrame(
+            [(f"{a:04d}{pad}", f"{b:04d}{pad}") for a, b in edges],
+            "doc_id_a string, doc_id_b string",
+        )
+        return sorted(tuple(r) for r in dedup.dedup_clusters(pairs).collect())
+
+    wide = "w" * 500
+    fast = clusters(wide)
+    assert collected and len(fast) == 30
+    assert {c for _, c in fast} == {f"{i:04d}{wide}" for i in (0, 10, 20)}
+    # 27 edges x 2 x 504 bytes ≈ 27 KB over a 16 KiB budget
+    monkeypatch.setattr(dedup, "_DRIVER_EDGE_BUDGET_BYTES", 16 << 10)
+    assert clusters(wide) == fast
+    assert not collected
+    clusters("")  # 27 x 8 bytes fits: still collected
+    assert collected
