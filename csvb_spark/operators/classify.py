@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from csvb_spark.operators.lm import _flag, _split_counts
 from csvb_spark.operators.text import tokens
 
 
@@ -400,22 +401,22 @@ def _dsir_feats(
     id_col: str | None,
     n_buckets: int,
     seed: int,
-    flag: Column | None = None,
+    flag: Column | str | None = None,
 ) -> DataFrame:
     """Explode a corpus into hashed feature buckets (optionally
-    carrying the doc id, or a boolean ``flag`` evaluated per document
-    before the explode — the fused weight build's target marker) — the
-    shared front half of DSIR's weight build and scoring passes. The
-    md5 bucket hash is interpreted per-feature work, so the explode
-    must not inherit a single-file scan's one-partition layout
-    (``dedup.spread`` — a planning-only no-op at real scale, where the
-    scan already has more partitions than cores; measured 6 s → 1.4 s
-    on the sf0.1 count pass)."""
+    carrying the doc id, or the ``_in_t`` flag of a target predicate
+    evaluated per document before the explode — the fused weight
+    build's target marker) — the shared front half of DSIR's weight
+    build and scoring passes. The md5 bucket hash is interpreted
+    per-feature work, so the explode must not inherit a single-file
+    scan's one-partition layout (``dedup.spread`` — a planning-only
+    no-op at real scale, where the scan already has more partitions
+    than cores; measured 6 s → 1.4 s on the sf0.1 count pass)."""
     from csvb_spark.operators.dedup import spread
 
     cols = [F.col(id_col).alias("_id")] if id_col else []
     if flag is not None:
-        cols.append(flag.cast("boolean").alias("_in_t"))
+        cols.append(_flag(flag, "_in_t"))
     keep = (["_id"] if id_col else []) + (["_in_t"] if flag is not None else [])
     exploded = spread(df).select(
         *cols, F.explode(hashed_features(text_col)).alias("_f")
@@ -423,6 +424,71 @@ def _dsir_feats(
     return exploded.select(
         *keep,
         feature_bucket(F.col("_f"), n_buckets, seed).alias("bucket"),
+    )
+
+
+def _dsir_log_weights(
+    raw_feats: DataFrame, target_feats: DataFrame | None, n_buckets: int
+) -> DataFrame:
+    """``(bucket, log_weight)`` for every bucket present in either
+    corpus — the DSIR weight math, shared by the weight build and the
+    fused ``target_pred`` scorer. ``target_feats=None`` means the
+    target is the ``_in_t``-flagged subset of ``raw_feats``: BOTH count
+    tables come out of ONE groupBy (predicate-split counting); else
+    each corpus is counted on its own and the count tables full-outer
+    join. Count tables localCheckpoint once; the add-``n_buckets``
+    totals ride a 1-row broadcast cross join over them (data, not
+    driver literals: int64 sum + int literal cast to double is the
+    same IEEE value as a Python ``float(total + n_buckets)``).
+
+    ONE ln over one IEEE division of two IEEE products —
+    ``log((ct+1)·(Tr+B) / ((cr+1)·(Tt+B)))`` — not a sum of four lns
+    (mul/div are bit-exact cross-engine; each extra ln is an extra
+    ulp risk at the round-to-6 boundary). The products run in DOUBLE
+    because at 100 TB the int64 product overflows."""
+
+    def tot(c, alias):
+        return (F.coalesce(F.sum(c), F.lit(0)) + F.lit(n_buckets)).cast("double").alias(alias)
+
+    if target_feats is None:
+        joined = _split_counts(
+            raw_feats, ["bucket"], "_cr", _ct="_in_t"
+        ).localCheckpoint(eager=True)
+        totals = joined.agg(tot("_cr", "_r_tot"), tot("_ct", "_t_tot"))
+    else:
+        r = _split_counts(raw_feats, ["bucket"], "_cr").localCheckpoint(eager=True)
+        t = _split_counts(target_feats, ["bucket"], "_ct").localCheckpoint(eager=True)
+        joined = r.join(t, "bucket", "full")
+        totals = r.agg(tot("_cr", "_r_tot")).crossJoin(t.agg(tot("_ct", "_t_tot")))
+    ct = F.coalesce(F.col("_ct"), F.lit(0))
+    cr = F.coalesce(F.col("_cr"), F.lit(0))
+    return joined.crossJoin(F.broadcast(totals)).select(
+        F.col("bucket").cast("bigint").alias("bucket"),
+        F.round(
+            F.log(
+                ((ct + F.lit(1)).cast("double") * F.col("_r_tot"))
+                / ((cr + F.lit(1)).cast("double") * F.col("_t_tot"))
+            ),
+            6,
+        )
+        .cast("decimal(18,6)")
+        .alias("log_weight"),
+    )
+
+
+def _dsir_rollup(joined: DataFrame, id_col: str, *fallbacks: Column) -> DataFrame:
+    """Per-document DSIR rollup: feature count and the exact decimal
+    sum of each feature's weight (``fallbacks`` fill a missed join,
+    ending at a 0-valued DECIMAL); ONE final cast ships a double
+    (house convention — see queries/common.py dsum)."""
+    lw = F.coalesce(F.col("log_weight"), *fallbacks, F.lit(0).cast("decimal(18,6)"))
+    return (
+        joined.groupBy("_id")
+        .agg(
+            F.count("*").alias("n_features"),
+            F.sum(lw).cast("double").alias("log_importance"),
+        )
+        .select(F.col("_id").alias(id_col), "n_features", "log_importance")
     )
 
 
@@ -454,12 +520,8 @@ def dsir_bucket_weights(
     ``log p_target(bucket) − log p_raw(bucket)`` over hashed
     bag-of-n-gram buckets (Xie et al. 2023, arXiv:2302.03169).
 
-    Determinism: ONE ln over one IEEE division of two IEEE products —
-    ``log((ct+1)·(Tr+B) / ((cr+1)·(Tt+B)))`` — not a sum of four lns
-    (mul/div are bit-exact cross-engine; each extra ln is an extra
-    ulp risk at the round-to-6 boundary). The products run in DOUBLE
-    because at 100 TB the int64 product overflows (Tr ~ 1e13 features
-    × counts ~ 1e13); double rounding is IEEE-identical everywhere.
+    Determinism: ONE ln over one IEEE division of two IEEE products
+    (:func:`_dsir_log_weights`) — bit-exact cross-engine.
 
     Output: ``(bucket, log_weight DECIMAL(18,6), n_buckets, seed)`` —
     one row per bucket present in EITHER corpus (full outer join of
@@ -508,95 +570,26 @@ def dsir_bucket_weights(
             "the target subset of raw)"
         )
     if target_pred is not None:
-        pred = (
-            F.expr(target_pred)
-            if isinstance(target_pred, str)
-            else target_pred
-        )
-        counts = (
-            _dsir_feats(raw, text_col, None, n_buckets, seed, flag=pred)
-            .groupBy("bucket")
-            .agg(
-                F.count("*").alias("_cr"),
-                F.count(F.when(F.col("_in_t"), 1)).alias("_ct"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        joined = counts
-    else:
-        t_counts = (
-            _dsir_feats(target, text_col, None, n_buckets, seed)
-            .groupBy("bucket")
-            .agg(F.count("*").alias("_ct"))
-            .localCheckpoint(eager=True)
-        )
-        r_counts = (
-            _dsir_feats(raw, text_col, None, n_buckets, seed)
-            .groupBy("bucket")
-            .agg(F.count("*").alias("_cr"))
-            .localCheckpoint(eager=True)
-        )
-        counts = None
-        joined = r_counts.join(t_counts, "bucket", "full")
-    # totals as DATA, not literals: Σ counts + n_buckets, computed over
-    # the checkpointed count tables inside the same plan (1-row
-    # broadcast). int64 sum + int literal cast to double is the same
-    # IEEE value as the old Python float(total + n_buckets) literal.
-    if counts is not None:
-        totals = counts.agg(
-            (F.coalesce(F.sum("_cr"), F.lit(0)) + F.lit(n_buckets))
-            .cast("double")
-            .alias("_r_tot"),
-            (F.coalesce(F.sum("_ct"), F.lit(0)) + F.lit(n_buckets))
-            .cast("double")
-            .alias("_t_tot"),
+        w = _dsir_log_weights(
+            _dsir_feats(raw, text_col, None, n_buckets, seed, flag=target_pred),
+            None,
+            n_buckets,
         )
     else:
-        totals = r_counts.agg(
-            (F.coalesce(F.sum("_cr"), F.lit(0)) + F.lit(n_buckets))
-            .cast("double")
-            .alias("_r_tot")
-        ).crossJoin(
-            t_counts.agg(
-                (F.coalesce(F.sum("_ct"), F.lit(0)) + F.lit(n_buckets))
-                .cast("double")
-                .alias("_t_tot")
-            )
+        w = _dsir_log_weights(
+            _dsir_feats(raw, text_col, None, n_buckets, seed),
+            _dsir_feats(target, text_col, None, n_buckets, seed),
+            n_buckets,
         )
-
-    def log_ratio(ct, cr):
-        return (
-            F.round(
-                F.log(
-                    ((ct + F.lit(1)).cast("double") * F.col("_r_tot"))
-                    / ((cr + F.lit(1)).cast("double") * F.col("_t_tot"))
-                ),
-                6,
-            )
-            .cast("decimal(18,6)")
-        )
-
-    spark = raw.sparkSession
-    default_row = spark.range(1).select(
+    default_row = raw.sparkSession.range(1).select(
         F.lit(DSIR_DEFAULT_BUCKET).cast("bigint").alias("bucket"),
         F.lit(0).cast("decimal(18,6)").alias("log_weight"),
     )
-    return (
-        joined.crossJoin(F.broadcast(totals))
-        .select(
-            F.col("bucket").cast("bigint").alias("bucket"),
-            log_ratio(
-                F.coalesce(F.col("_ct"), F.lit(0)),
-                F.coalesce(F.col("_cr"), F.lit(0)),
-            ).alias("log_weight"),
-        )
-        .unionByName(default_row)
-        .select(
-            "bucket",
-            "log_weight",
-            F.lit(n_buckets).alias("n_buckets"),
-            F.lit(seed).alias("seed"),
-        )
+    return w.unionByName(default_row).select(
+        "bucket",
+        "log_weight",
+        F.lit(n_buckets).alias("n_buckets"),
+        F.lit(seed).alias("seed"),
     )
 
 
@@ -672,27 +665,12 @@ def dsir_score_with_weights(
         F.col("bucket") == DSIR_DEFAULT_BUCKET
     ).agg(F.max("log_weight").alias("_default_lw"))
     feats = _dsir_feats(docs, text_col, id_col, n_buckets, seed)
-    return (
-        feats.join(F.broadcast(real), "bucket", "left")
-        .join(F.broadcast(default))  # 1-row cross join: the fallback
-        .groupBy("_id")
-        .agg(
-            F.count("*").alias("n_features"),
-            # exact decimal sum inside; ONE final cast ships a double
-            # (house convention — see queries/common.py dsum)
-            F.sum(
-                F.coalesce(
-                    F.col("log_weight"),
-                    F.col("_default_lw"),
-                    F.lit(0).cast("decimal(18,6)"),
-                )
-            )
-            .cast("double")
-            .alias("log_importance"),
-        )
-        .select(
-            F.col("_id").alias(id_col), "n_features", "log_importance"
-        )
+    return _dsir_rollup(
+        feats.join(F.broadcast(real), "bucket", "left").join(
+            F.broadcast(default)  # 1-row cross join: the fallback
+        ),
+        id_col,
+        F.col("_default_lw"),
     )
 
 
@@ -751,8 +729,8 @@ def dsir_score(
     per-feature md5 a second time; rebuilt from parquet on every
     execution, a within-query materialization, not a cache) and feed
     the bucket counts, the totals, and the per-document scoring join.
-    Weight math is inherited verbatim from
-    :func:`dsir_bucket_weights`; the scorer's DEFAULT-row machinery
+    Weight math is :func:`dsir_bucket_weights`' own
+    (:func:`_dsir_log_weights`); the scorer's DEFAULT-row machinery
     drops out because every scored bucket is by construction present
     in a weight table built from the same feature rows (the left
     join cannot miss, and the coalesce fallback is the same
@@ -768,73 +746,17 @@ def dsir_score(
                 "corpus) or target_pred (a predicate selecting the "
                 "target subset of raw)"
             )
-        pred = (
-            F.expr(target_pred)
-            if isinstance(target_pred, str)
-            else target_pred
-        )
         feats = _dsir_feats(
-            raw, text_col, id_col, n_buckets, seed, flag=pred
+            raw, text_col, id_col, n_buckets, seed, flag=target_pred
         ).localCheckpoint(eager=True)
-        counts = (
-            feats.groupBy("bucket")
-            .agg(
-                F.count("*").alias("_cr"),
-                F.count(F.when(F.col("_in_t"), 1)).alias("_ct"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        totals = counts.agg(
-            (F.coalesce(F.sum("_cr"), F.lit(0)) + F.lit(n_buckets))
-            .cast("double")
-            .alias("_r_tot"),
-            (F.coalesce(F.sum("_ct"), F.lit(0)) + F.lit(n_buckets))
-            .cast("double")
-            .alias("_t_tot"),
-        )
-        # same single-ln log-ratio expression as dsir_bucket_weights
-        w = counts.crossJoin(F.broadcast(totals)).select(
-            F.col("bucket").cast("bigint").alias("bucket"),
-            F.round(
-                F.log(
-                    (
-                        (F.coalesce(F.col("_ct"), F.lit(0)) + F.lit(1)).cast("double")
-                        * F.col("_r_tot")
-                    )
-                    / (
-                        (F.coalesce(F.col("_cr"), F.lit(0)) + F.lit(1)).cast("double")
-                        * F.col("_t_tot")
-                    )
-                ),
-                6,
-            )
-            .cast("decimal(18,6)")
-            .alias("log_weight"),
-        )
-        return (
-            feats.join(F.broadcast(w), "bucket", "left")
-            .groupBy("_id")
-            .agg(
-                F.count("*").alias("n_features"),
-                F.sum(
-                    F.coalesce(
-                        F.col("log_weight"), F.lit(0).cast("decimal(18,6)")
-                    )
-                )
-                .cast("double")
-                .alias("log_importance"),
-            )
-            .select(
-                F.col("_id").alias(id_col), "n_features", "log_importance"
-            )
-        )
+        w = _dsir_log_weights(feats, None, n_buckets)
+        return _dsir_rollup(feats.join(F.broadcast(w), "bucket", "left"), id_col)
     w = dsir_bucket_weights(
         raw,
         target,
         text_col=text_col,
         n_buckets=n_buckets,
         seed=seed,
-        target_pred=target_pred,
     )
     return dsir_score_with_weights(
         docs=raw,

@@ -6,8 +6,7 @@ descendants rank crawl documents by the perplexity of a small n-gram
 LM — low perplexity ≈ fluent in-domain prose, high ≈ boilerplate or
 garbage. The production shape is exactly this module's: TRAIN a
 bounded count model (here: unigram + bigram counts over a corpus —
-one groupBy), then SCORE every document map-side against it with
-add-alpha smoothing.
+one groupBy), then SCORE every document map-side against it.
 
 Determinism contract (repo-wide cross-engine rules):
 
@@ -25,206 +24,176 @@ Determinism contract (repo-wide cross-engine rules):
   see queries/common.py) — and ``exp``, rounded to 6 because its ulp
   is implementation-defined.
 
-Plan shape: tokenize + explode bigrams map-side; the score join
-BROADCASTS the count model by default (the model row count is known
-from the same bounded aggregation that derives V, and broadcasting
-happens automatically while it fits ``broadcast_max_rows``), making
-scoring map-only. At 100 TB the LM is trained on a bounded sample
-(as CCNet does — a few GB of target-domain text), so the broadcast
-path is the normal one; an over-bound model falls back to a shuffle
-join on the bigram key WITH a warning (that key is Zipf-skewed — a
-hot-key exchange at scale). Reference scope: beyond-reference (the
-reference has no text operators — SURVEY.md §2).
+One scoring core serves every smoothing (add-alpha, Kneser-Ney,
+stupid backoff, Jelinek-Mercer, and DoReMi's two-model pass):
+
+- :func:`_gram_rows` tokenizes and explodes the corpus into n-gram
+  rows (n = 2 or 3) from parsed SQL strings — plus one NULL-sentinel
+  row per document when scoring, every lower order when training;
+- :func:`_join_models` left-joins those rows against a list of
+  ``(model table, key columns)`` and makes the broadcast / shuffle /
+  salted-shuffle decision ONCE for all of them;
+- :func:`_rollup` turns one or more ``ln(p)`` SQL strings into the
+  per-document ``n_*`` / ``avg_neg_*`` / ``*ppl`` columns.
+
+Each smoothing is left with only its model tables, its stats
+aggregate (:func:`lm_model_stats`) and its probability SQL.
+Predicate-split counting — ``count(*)`` plus one ``count_if`` per
+predicate in ONE groupBy — is :func:`_split_counts`, shared with the
+DSIR family in ``classify.py``.
+
+Plan shape: the score joins BROADCAST the model tables by default
+(the model row count comes out of the same bounded stats aggregate
+the smoothing needs anyway, and broadcasting happens automatically
+while it fits ``broadcast_max_rows``), making scoring map-only. At
+100 TB the LM is trained on a bounded sample (as CCNet does — a few GB
+of target-domain text), so the broadcast path is the normal one; an
+over-bound model falls back to a shuffle join on the n-gram key WITH a
+warning (that key is Zipf-skewed — a hot-key exchange at scale), and
+a concentrated key distribution additionally salts the joins.
+Reference scope: beyond-reference (the reference has no text
+operators — SURVEY.md §2).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import warnings
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _toks(text_col: str):
-    # classifier-compatible tokenization (classify.hashed_features):
-    # lowercase, whitespace split, NULL reads as one '' token
-    return F.split(F.trim(F.lower(F.coalesce(F.col(text_col), F.lit("")))), r"\s+")
+#: salts a skew-guarded shuffle fallback spreads each hot key over
+_N_SALTS = 16
+#: normalized key entropy below which the shuffle fallback salts
+_SALT_THRESHOLD = 0.5
 
 
 def _toks_sql(text_col: str) -> str:
-    """SQL text of ``_toks`` — same expression tree through the
-    parser (split/trim/lower/coalesce; '\\\\s+' unescapes to the \\s+
-    regex F.split receives)."""
+    """Classifier-compatible tokenization (``classify.hashed_features``)
+    as SQL text: lowercase, whitespace split, NULL reads as one ''
+    token ('\\\\s+' unescapes to the \\s+ regex)."""
     return f"split(trim(lower(coalesce(`{text_col}`, ''))), '\\\\s+')"
 
 
-_BG_T = "array<struct<w1:string,w2:string>>"
-_TG_T = "array<struct<w1:string,w2:string,w3:string>>"
-
-
-def _pair_rows(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """``(_id, w1, w2)`` bigram rows plus one NULL-sentinel row per
-    document — the shared corpus-side front half of the addk/KN/JM
-    scorers, built from TWO parsed selectExpr strings instead of
-    ~370 fine-grained py4j Column calls (round 16: plan construction
-    was ~30-50% of a scorer's per-run wall at bench scale, and the
-    streaming gate pays it per micro-batch — the p09 round-4
-    F.expr-batching pattern, guide §4.3/§5). The SQL is the same
-    expression tree as the Column form (``_toks``/``_bigrams``): the
-    CAST on arrays_zip only renames the struct fields, exactly like
-    the ``.alias`` calls it replaces; values are pinned bit-identical
-    by the x84/x89/x110 DuckDB oracles."""
-    bg = (
-        "CASE WHEN size(_t) >= 2 THEN CAST(arrays_zip("
-        "slice(_t, 1, size(_t) - 1), slice(_t, 2, size(_t) - 1)"
-        f") AS {_BG_T}) ELSE CAST(array() AS {_BG_T}) END"
-    )
-    sent = (
-        "array(named_struct("
-        "'w1', CAST(NULL AS string), 'w2', CAST(NULL AS string)))"
-    )
-    return (
-        docs.selectExpr(
-            f"`{id_col}` AS _id", f"{_toks_sql(text_col)} AS _t"
-        )
-        .selectExpr("_id", f"explode(concat({bg}, {sent})) AS b")
-        .select("_id", "b.w1", "b.w2")
+def _zip_sql(n: int, k: int) -> str:
+    """SQL for the consecutive ``k``-gram array of the token array
+    ``_t`` as ``n``-wide structs (fields ``w1..wn``; the ``n - k``
+    trailing fields NULL). ``slice`` + ``arrays_zip`` copies the
+    materialized array and zips — no lambda, so the tokenizer is never
+    re-evaluated per element (the ``transform(sequence(...))`` form
+    re-split the document once per gram: quadratic, measured 35x
+    slower on the sf0.1 train pass). The CAST only names the struct
+    fields."""
+    typ = "array<struct<" + ",".join(f"w{i}:string" for i in range(1, n + 1)) + ">>"
+    m = "size(_t)" if k == 1 else f"size(_t) - {k - 1}"
+    cols = ["_t"] if k == 1 else [f"slice(_t, {i}, {m})" for i in range(1, k + 1)]
+    cols += [f"array_repeat(CAST(NULL AS string), {m})"] * (n - k)
+    z = f"CAST(arrays_zip({', '.join(cols)}) AS {typ})"
+    return z if k == 1 else (
+        f"CASE WHEN size(_t) >= {k} THEN {z} ELSE CAST(array() AS {typ}) END"
     )
 
 
-def _triple_rows(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """``(_id, w1, w2, w3)`` trigram rows plus one NULL-sentinel row
-    per document — the stupid-backoff sibling of ``_pair_rows``, same
-    construction economics and the same value pin (x93 oracle)."""
-    tg = (
-        "CASE WHEN size(_t) >= 3 THEN CAST(arrays_zip("
-        "slice(_t, 1, size(_t) - 2), slice(_t, 2, size(_t) - 2), "
-        f"slice(_t, 3, size(_t) - 2)) AS {_TG_T}) "
-        f"ELSE CAST(array() AS {_TG_T}) END"
-    )
-    sent = (
-        "array(named_struct('w1', CAST(NULL AS string), "
-        "'w2', CAST(NULL AS string), 'w3', CAST(NULL AS string)))"
-    )
-    return (
-        docs.selectExpr(
-            f"`{id_col}` AS _id", f"{_toks_sql(text_col)} AS _t"
-        )
-        .selectExpr("_id", f"explode(concat({tg}, {sent})) AS b")
-        .select("_id", "b.w1", "b.w2", "b.w3")
-    )
+def _flag(pred: Column | str, name: str) -> Column:
+    """A row predicate (SQL text or Column) as a named boolean flag."""
+    return (F.expr(pred) if isinstance(pred, str) else pred).cast("boolean").alias(name)
 
 
-def bigram_shared_train_inputs(
+def _gram_rows(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    train_pred: Column | str | None = None,
-    bigram_only: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """ONE corpus explode feeding BOTH a bigram-LM train and a scorer
-    (round 16, §2.4 — the train-on-self x84/x95/x110 and
-    train-on-half x89 bench shapes each scanned+tokenized+exploded
-    the corpus twice, once for the model aggregation and once for the
-    scoring pairs). Returns ``(lm, pairs)``:
+    n: int,
+    text_col: str,
+    id_col: str | None = None,
+    train: bool = False,
+    flags: dict[str, Column | str] | None = None,
+) -> DataFrame:
+    """The one n-gram row builder (n = 2 or 3), from parsed SQL
+    strings rather than fine-grained py4j Column calls (plan
+    construction was ~30-50% of a scorer's wall at bench scale, and
+    the streaming gate pays it per micro-batch).
 
-    - ``lm`` — exactly ``bigram_lm_train(docs.filter(train_pred))``'s
-      row multiset (all docs when ``train_pred`` is None), or only
-      its bigram rows when ``bigram_only=True`` (Kneser-Ney consumes
-      nothing else — the unigram half of the train explode/agg/
-      checkpoint is waste there). Left unmaterialized: the scorer's
-      own model checkpoint aggregates it straight off the gram base.
-    - ``pairs`` — exactly ``_pair_rows(docs)``'s rows (bigram pairs
-      plus one NULL-sentinel per document), for the scorers'
-      ``pairs=`` injection.
+    Rows are ``(_id?, <flags>, w1..wn)``:
 
-    Both derive from one eagerly checkpointed ``(_id, w1, w2)`` gram
-    table, so the corpus is scanned and tokenized ONCE. The same
-    trade as x131's fused feats table: corpus-token-bounded
-    executor-local storage (≈ the token stream re-serialized, 2n+1
-    rows/doc with unigrams, n+1 without) against a second full
-    parquet decode + regex tokenize + zip/explode; rebuilt from the
-    inputs on every execution — a within-query materialization, not
-    a cache. Values are pinned by the composed queries' DuckDB
-    oracles and the refactor-pin unit test (identical multisets by
-    construction: the base rows are a relabeling of exactly the rows
-    the two separate explodes produced; sentinel rows are excluded
-    from the train by ``w1 IS NOT NULL``, unigram rows from the
-    pairs by ``w2 IS NOT NULL OR w1 IS NULL`` — tokens themselves
-    are never NULL, the tokenizer yields '' for missing text).
-    """
-    bg = (
-        "CASE WHEN size(_t) >= 2 THEN CAST(arrays_zip("
-        "slice(_t, 1, size(_t) - 1), slice(_t, 2, size(_t) - 1)"
-        f") AS {_BG_T}) ELSE CAST(array() AS {_BG_T}) END"
-    )
-    sent = (
+    - scoring (``train=False``): every n-gram plus ONE NULL-sentinel
+      row per document, so short documents survive the explode and the
+      corpus is scanned once (the sentinel's ``w1 IS NULL`` marks it);
+    - training (``train=True``): every k-gram for k = 1..n, lower
+      orders NULL-padded — one explode feeding one groupBy.
+
+    ``flags`` maps a column name to a per-document predicate evaluated
+    before the explode (the predicate-split counting input)."""
+    flags = flags or {}
+    ws = [f"w{i}" for i in range(1, n + 1)]
+    parts = [_zip_sql(n, k) for k in range(1, n + 1)] if train else [
+        _zip_sql(n, n),
         "array(named_struct("
-        "'w1', CAST(NULL AS string), 'w2', CAST(NULL AS string)))"
+        + ", ".join(f"'{w}', CAST(NULL AS string)" for w in ws)
+        + "))",
+    ]
+    cols = ([f"`{id_col}` AS _id"] if id_col else []) + [f"{_toks_sql(text_col)} AS _t"]
+    keep = (["_id"] if id_col else []) + list(flags)
+    return (
+        docs.select(*map(F.expr, cols), *(_flag(p, f) for f, p in flags.items()))
+        .selectExpr(*keep, f"explode(concat({', '.join(parts)})) AS g")
+        .select(*keep, *(f"g.{w}" for w in ws))
     )
-    parts = [bg, sent]
-    if not bigram_only:
-        uni = (
-            "CAST(arrays_zip(_t, array_repeat(CAST(NULL AS string),"
-            f" size(_t))) AS {_BG_T})"
-        )
-        parts.insert(0, uni)
-    keep = ["_id"]
-    if train_pred is not None:
-        pred = (
-            F.expr(train_pred) if isinstance(train_pred, str) else train_pred
-        )
-        tok = docs.select(
-            F.col(id_col).alias("_id"),
-            pred.cast("boolean").alias("_tr"),
-            F.expr(_toks_sql(text_col)).alias("_t"),
-        )
-        keep.append("_tr")
-    else:
-        tok = docs.selectExpr(
-            f"`{id_col}` AS _id", f"{_toks_sql(text_col)} AS _t"
-        )
-    base = (
-        tok.selectExpr(*keep, f"explode(concat({', '.join(parts)})) AS b")
-        .select(*keep, "b.w1", "b.w2")
-        .localCheckpoint(eager=True)
-    )
-    train_filter = "w1 IS NOT NULL" + (" AND _tr" if train_pred is not None else "")
-    lm = (
-        base.filter(train_filter)
-        .groupBy("w1", "w2")
-        .agg(F.count("*").alias("cnt"))
-    )
-    if bigram_only:
-        pairs = base.select("_id", "w1", "w2")
-    else:
-        pairs = base.filter("w2 IS NOT NULL OR w1 IS NULL").select(
-            "_id", "w1", "w2"
-        )
-    return lm, pairs
 
 
-def _bigrams(t):
-    """Consecutive-token pair array for a token-array column — ONE
-    definition shared by train and score, so the bigram shape can
-    never drift between them (and break x84 parity).
+def _split_counts(
+    df: DataFrame, keys: list[str], total: str | None = None, **flags: str
+) -> DataFrame:
+    """Predicate-split counting: ONE groupBy(``keys``) emitting
+    ``count(*) AS total`` (omitted when None) plus one
+    ``count_if(flag) AS name`` per ``name=flag`` — so a corpus and
+    any number of predicate-selected subsets of it are counted in one
+    scan and one exchange. A NULL flag counts like ``filter()`` does:
+    not at all. Counts are exact int64."""
+    aggs = [F.count("*").alias(total)] if total else []
+    aggs += [F.count(F.when(F.col(f), 1)).alias(name) for name, f in flags.items()]
+    return df.groupBy(*keys).agg(*aggs)
 
-    Shape matters 35x here: the earlier ``transform(sequence(...),
-    i -> struct(element_at(t, i), element_at(t, i+1)))`` form
-    re-evaluated the token expression PER ELEMENT inside the lambda —
-    when ``t`` is the tokenizer (a regex split), that meant one
-    re-split of the document per bigram, turning a linear explode
-    into a quadratic one (measured 5.6 s → 0.16 s on the sf0.1 train
-    pass). ``slice`` + ``arrays_zip`` copies the materialized array
-    twice and zips — no lambda, no re-evaluation. Callers ALSO
-    project the tokenizer into a real column first (CollapseProject
-    keeps multi-referenced non-trivial expressions un-inlined, so the
-    split stays evaluated once per row)."""
-    z = F.arrays_zip(
-        F.slice(t, 1, F.size(t) - 1).alias("w1"),
-        F.slice(t, 2, F.size(t) - 1).alias("w2"),
+
+def _lm_train(
+    docs: DataFrame, n: int, text_col: str, target_pred: Column | str | None = None
+) -> DataFrame:
+    """Count model ``(w1..wn, cnt)`` from ONE scan, ONE tokenize, one
+    explode and one groupBy (single fixed-width shuffle); with
+    ``target_pred`` the same groupBy also counts ``cnt_t``, the grams
+    of the predicate-selected documents."""
+    flags = {} if target_pred is None else {"_tgt": target_pred}
+    return _split_counts(
+        _gram_rows(docs, n, text_col, train=True, flags=flags),
+        [f"w{i}" for i in range(1, n + 1)],
+        "cnt",
+        **({"cnt_t": "_tgt"} if flags else {}),
     )
-    return F.when(F.size(t) >= 2, z).otherwise(
-        F.array().cast("array<struct<w1:string,w2:string>>")
-    )
+
+
+def bigram_lm_train(
+    docs: DataFrame, text_col: str = "text"
+) -> DataFrame:
+    """Train the count model: one row per observed n-gram.
+
+    Output: ``(w1, w2, cnt)`` — bigram rows carry both words; unigram
+    (context) rows carry ``w2 = NULL``. ONE scan, ONE tokenize, one
+    explode + one groupBy (single fixed-width shuffle); the model
+    size is bounded by the corpus vocabulary, not its row count.
+    Both gram arrays are built from one materialized token array and
+    exploded together (a union of per-order branches would re-scan
+    and re-tokenize the corpus once per order).
+    """
+    return _lm_train(docs, 2, text_col)
+
+
+def trigram_lm_train(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """Train the 3-gram count model stupid-backoff scoring consumes:
+    one row per observed n-gram — trigram rows carry all three words,
+    bigram rows have ``w3 = NULL``, unigram rows ``w2 = w3 = NULL``.
+    ONE scan, ONE tokenize, one explode + ONE groupBy (single
+    fixed-width shuffle); model size is bounded by the corpus's
+    distinct n-grams, not its row count.
+    """
+    return _lm_train(docs, 3, text_col)
 
 
 def check_model_shape(columns, smoothing: str, where: str) -> None:
@@ -251,33 +220,24 @@ def check_model_shape(columns, smoothing: str, where: str) -> None:
         )
 
 
-def _resolve_broadcast(
-    caller: str,
-    n_model: int,
-    broadcast_model: bool | None,
-    broadcast_max_rows: int,
-) -> bool:
-    """Shared auto-broadcast policy for the three scorers (add-alpha,
-    Kneser-Ney, stupid backoff): broadcast the model-derived tables
-    while the model fits under ``broadcast_max_rows`` (map-only
-    scoring), else WARN and fall back to a shuffle join. The fallback
-    exchanges the n-gram-exploded corpus on a Zipf-skewed key — slow
-    but bounded; an over-bound broadcast would be an executor OOM.
-    ``broadcast_model=True/False`` forces the choice (the size probe's
-    outcome is ignored; the count itself comes from an aggregation the
-    caller needs anyway, so no work is saved by forcing)."""
-    if broadcast_model is not None:
-        return broadcast_model
+def _resolve_broadcast(caller: str, n_model: int, broadcast_max_rows: int) -> bool:
+    """The scoring core's auto-broadcast policy, applied once per
+    scoring pass by :func:`_join_models` for every smoothing:
+    broadcast the model-derived tables while the model fits under
+    ``broadcast_max_rows`` (map-only scoring), else WARN and fall back
+    to a shuffle join. The fallback exchanges the n-gram-exploded
+    corpus on a Zipf-skewed key — slow but bounded; an over-bound
+    broadcast would be an executor OOM. ``n_model`` comes from the
+    stats aggregate the smoothing runs anyway, so the probe is free
+    (``broadcast_model=True/False`` bypasses this policy)."""
     if n_model <= broadcast_max_rows:
         return True
-    import warnings
-
     warnings.warn(
         f"{caller}: model has {n_model} rows (> broadcast_max_rows="
         f"{broadcast_max_rows}); falling back to a shuffle join on the "
         "Zipf-skewed n-gram key. Train on a bounded sample (the CCNet "
         "contract) so the model broadcasts, or raise broadcast_max_rows.",
-        stacklevel=3,
+        stacklevel=5,
     )
     return False
 
@@ -300,80 +260,521 @@ def _model_norm_entropy(
     return h / math.log(float(n_keys))
 
 
-def _validate_salt_knobs(caller: str, n_salts, salt_threshold) -> None:
-    """Shared knob validation for the four scorers — loud upfront:
-    n_salts=0 would otherwise drop every corpus row in a salted join,
-    and an out-of-range threshold silently never (or always) salts."""
-    if not isinstance(n_salts, int) or n_salts < 1:
-        raise ValueError(
-            f"{caller}: n_salts must be a positive int, got {n_salts!r}"
-        )
-    if not 0.0 <= salt_threshold <= 1.0:
-        raise ValueError(
-            f"{caller}: salt_threshold must be in [0, 1],"
-            f" got {salt_threshold!r}"
-        )
-
-
-def _warn_salting(caller: str, salt_threshold: float, n_salts: int) -> None:
-    import warnings
-
-    warnings.warn(
-        f"{caller}: shuffle-fallback join key is skewed "
-        f"(model bigram norm_entropy < {salt_threshold}); salting "
-        f"the score joins over {n_salts} salts.",
-        stacklevel=3,
-    )
-
-
-def _salt_probe(
-    df: DataFrame, cols: list[str], n_salts: int, salt_col: str
+def _join_models(
+    caller: str,
+    probe: DataFrame,
+    models: list[tuple[DataFrame, list[str]]],
+    stats,
+    broadcast_model: bool | None,
+    broadcast_max_rows: int,
 ) -> DataFrame:
-    """Probe side of a salted skew join: ONE deterministic salt per
-    corpus row (hash of the row's identifying columns) — each row
-    still meets exactly one replica of its matching model row, so a
-    salted left join is row-identical to the plain one, while a
-    Zipf-hot key's rows land on ``n_salts`` reducers instead of one
-    straggler. Pair with :func:`_salt_replicate` on the build side."""
-    return df.withColumn(
-        salt_col, F.pmod(F.xxhash64(*cols), F.lit(n_salts))
-    )
+    """Left-join the corpus n-gram rows against every ``(model table,
+    key columns)`` pair, deciding broadcast / shuffle / salted shuffle
+    ONCE for all of them. Model tables name their keys like the probe
+    columns they match (``w1``/``w2``/``w3``) and carry uniquely named
+    value columns.
 
-
-def _salt_replicate(df: DataFrame, n_salts: int, salt_col: str) -> DataFrame:
-    """Build side of a salted skew join: replicate every model row
-    across ALL ``n_salts`` salt values (model tables are bounded by
-    vocabulary, so the ×n_salts blow-up is small and partitioned)."""
-    return df.withColumn(
-        salt_col, F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-
-
-def bigram_lm_train(
-    docs: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """Train the count model: one row per observed n-gram.
-
-    Output: ``(w1, w2, cnt)`` — bigram rows carry both words; unigram
-    (context) rows carry ``w2 = NULL``. ONE scan, ONE tokenize, one
-    explode + one groupBy (single fixed-width shuffle); the model
-    size is bounded by the corpus vocabulary, not its row count.
-    (Round-15 optimization: the earlier unigram-branch ∪ bigram-branch
-    union re-scanned and re-tokenized the corpus once per n-gram
-    order — union subtrees share nothing; both gram arrays are now
-    built from one materialized token array and exploded together.
-    Same multiset of (w1, w2) rows, so counts are identical.)
+    - ``broadcast_model`` True/False forces the choice; None applies
+      :func:`_resolve_broadcast` to ``stats["rows"]`` (the combined
+      broadcast footprint the smoothing reports).
+    - SKEW PRE-FLIGHT on the shuffle fallback: ``stats`` carries the
+      key-count entropy statistics (``et``/``ek``/``enl``) from the same
+      scalar aggregate — the training corpus's key distribution is the
+      best available proxy for the scoring corpus's. Below
+      ``_SALT_THRESHOLD`` every corpus row gets ONE deterministic salt
+      (xxhash64 of the row) and every model table is replicated across
+      all ``_N_SALTS`` salts: each row still meets exactly one replica
+      of its matching model row, so the result is row-identical to the
+      plain left joins while a Zipf-hot key lands on ``_N_SALTS``
+      reducers instead of one straggler.
     """
-    tok = docs.select(_toks(text_col).alias("_t"))
-    nulls = F.array_repeat(F.lit(None).cast("string"), F.size("_t"))
-    unis = F.arrays_zip(F.col("_t").alias("w1"), nulls.alias("w2"))
-    return (
-        tok.select(
-            F.explode(F.concat(unis, _bigrams(F.col("_t")))).alias("g")
+    bcast = (
+        broadcast_model
+        if broadcast_model is not None
+        else _resolve_broadcast(caller, int(stats["rows"]), broadcast_max_rows)
+    )
+    ne = None if bcast else _model_norm_entropy(stats["et"], stats["ek"], stats["enl"])
+    salt = []
+    if ne is not None and ne < _SALT_THRESHOLD:
+        warnings.warn(
+            f"{caller}: shuffle-fallback join key is skewed "
+            f"(model bigram norm_entropy < {_SALT_THRESHOLD}); salting "
+            f"the score joins over {_N_SALTS} salts.",
+            stacklevel=4,
         )
-        .select("g.w1", "g.w2")
-        .groupBy("w1", "w2")
-        .agg(F.count("*").alias("cnt"))
+        probe = probe.withColumn(
+            "_salt", F.pmod(F.xxhash64(*probe.columns), F.lit(_N_SALTS))
+        )
+        salt = ["_salt"]
+    for i, (model, keys) in enumerate(models):
+        # model keys get fresh names and join by condition: two lookups
+        # into the same rows (e.g. unigrams keyed on w2 and on w3) then
+        # plan as the same broadcast, which Spark builds once and reuses
+        model = model.selectExpr(
+            *(f"{k} AS _m{i}{k}" for k in keys),
+            *(c for c in model.columns if c not in keys),
+        )
+        on = [f"{k} = _m{i}{k}" for k in keys]
+        if bcast:
+            model = F.broadcast(model)
+        elif salt:
+            model = model.withColumn(
+                f"_m{i}_salt", F.explode(F.sequence(F.lit(0), F.lit(_N_SALTS - 1)))
+            )
+            on.append(f"_salt = _m{i}_salt")
+        probe = probe.join(model, F.expr(" AND ".join(on)), "left")
+    return probe
+
+
+def _rollup(
+    joined: DataFrame, id_col: str, n: int, scores: list[tuple[str, str | None, str]]
+) -> DataFrame:
+    """Per-document rollup of scored n-gram rows: one
+    ``(avg_col, exp_col, p_sql)`` per model. Each gram's ``ln(p)``
+    rounds to 6 into DECIMAL(18,6) (sentinel rows contribute NULL,
+    ignored by SUM); one groupBy(_id) emits the gram count and every
+    model's exact total. ``avg_col`` ships UNROUNDED: its operands
+    (exact decimal total, int count) make the division bit-identical
+    on any engine, and a display ROUND would *reintroduce* divergence
+    — Spark rounds the shortest decimal repr where DuckDB rounds the
+    binary value, which differs when the repr lands exactly on a half
+    boundary (observed once in 5,000 docs at sf0.1). ``exp_col``
+    (omitted when None) must round because exp() itself is only
+    ulp-identical across engines. Documents without an n-gram carry
+    NULL scores."""
+    cnt = "n_bigrams" if n == 2 else "n_trigrams"
+    per_doc = joined.selectExpr(
+        "_id",
+        "CAST(w1 IS NOT NULL AS BIGINT) AS _is_g",
+        *(
+            f"CASE WHEN w1 IS NOT NULL THEN CAST(round(ln({p}), 6) AS DECIMAL(18,6)) END AS _q{i}"
+            for i, (_, _, p) in enumerate(scores)
+        ),
+    ).groupBy("_id").agg(
+        F.sum("_is_g").alias(cnt),
+        *(F.sum(f"_q{i}").alias(f"_t{i}") for i in range(len(scores))),
+    )
+    out = [f"_id AS `{id_col}`", cnt]
+    for i, (avg, ex, _) in enumerate(scores):
+        a = f"CASE WHEN {cnt} > 0 THEN -(CAST(_t{i} AS DOUBLE) / CAST({cnt} AS DOUBLE)) END"
+        out += [f"{a} AS {avg}"] + ([f"round(exp({a}), 6) AS {ex}"] if ex else [])
+    return per_doc.selectExpr(*out)
+
+
+def _score(
+    caller, docs, n, text_col, id_col, models, stats, broadcast_model,
+    broadcast_max_rows, scores,
+) -> DataFrame:
+    """The scoring core: gram rows → model joins → rollup."""
+    probe = _gram_rows(docs, n, text_col, id_col)
+    joined = _join_models(
+        caller, probe, models, stats, broadcast_model, broadcast_max_rows
+    )
+    return _rollup(joined, id_col, n, scores)
+
+
+# --- model stats, one aggregate per smoothing ---------------------------------
+# Each scorer derives a handful of bounded scalars from its model in ONE
+# small aggregation job: ``rows`` (the broadcast size signal), the key
+# entropy statistics ``et``/``ek``/``enl`` (Σ count, #keys, Σ count·ln
+# count over the skew-relevant keys — the salting pre-flight) and the
+# smoothing's own constants. A caller that scores MANY batches against
+# one fixed model — the streaming LM gate — runs the probe once per
+# stream via :func:`lm_model_stats` and passes the row back in.
+
+
+def _entropy_aggs(pred: str) -> list[str]:
+    c = f"CASE WHEN {pred} THEN cnt END"
+    return [
+        f"sum({c}) AS et",
+        f"count({c}) AS ek",
+        f"sum(CAST({c} AS DOUBLE) * ln(CAST({c} AS DOUBLE))) AS enl",
+    ]
+
+
+_STATS = {
+    "addk": ["count(*) AS rows", "count_if(w2 IS NULL) AS v", *_entropy_aggs("w2 IS NOT NULL")],
+    "jm": [
+        "count(*) AS rows",
+        "count_if(w2 IS NULL) AS v",
+        "sum(CASE WHEN w2 IS NULL THEN cnt END) AS t",
+        *_entropy_aggs("w2 IS NOT NULL"),
+    ],
+    # unigram keys are the most concentrated of stupid backoff's five
+    # join keys; ``et`` (Σ unigram counts) doubles as its floor ``N``
+    "sb": ["count(*) AS rows", *_entropy_aggs("w2 IS NULL")],
+    # over Kneser-Ney's per-word stats table (:func:`_kn_wordstats`):
+    # ``rows`` = B (distinct bigram types, which bounds every KN model
+    # table), ``v`` = continuation vocabulary
+    "kn": [
+        "coalesce(sum(_n1fwd), 0) AS rows",
+        "count_if(_n1bwd > 0) AS v",
+        "sum(_c1) AS et",
+        "coalesce(sum(_n1fwd), 0) AS ek",
+        "sum(_bnlogn_part) AS enl",
+    ],
+}
+
+
+def _model_stats(df: DataFrame, aggs: list[str]):
+    return df.agg(*map(F.expr, aggs)).first()
+
+
+def _kn_wordstats(lm: DataFrame) -> DataFrame:
+    """Every per-word Kneser-Ney statistic from ONE unpivot (each
+    bigram row explodes into a w1-tagged and a w2-tagged row) + ONE
+    groupBy(word): context total ``_c1 = Σ_w2 c(w1,w2)``, fan-out
+    ``_n1fwd = N1+(w1·)``, continuation count ``_n1bwd = N1+(·w2)``,
+    and the partial ``Σ cnt·ln cnt`` the skew pre-flight sums (double;
+    it never reaches an output value). A word only ever seen as ``w2``
+    carries ``_c1 = NULL`` (the unseen-context branch); one only ever
+    seen as ``w1`` carries ``_n1bwd = 0`` (the same as a miss under
+    the probability's ``coalesce``)."""
+    return (
+        lm.filter("w2 IS NOT NULL")
+        .selectExpr(
+            "explode(array("
+            "struct(w1 AS word, cnt AS _cnt, true AS _fwd),"
+            "struct(w2 AS word, CAST(NULL AS BIGINT) AS _cnt, false AS _fwd)"
+            ")) AS s"
+        )
+        .select("s.*")
+        .groupBy("word")
+        .agg(
+            *map(
+                F.expr,
+                [
+                    "sum(CASE WHEN _fwd THEN _cnt END) AS _c1",
+                    "count(CASE WHEN _fwd THEN 1 END) AS _n1fwd",
+                    "count(CASE WHEN NOT _fwd THEN 1 END) AS _n1bwd",
+                    "sum(CASE WHEN _fwd THEN CAST(_cnt AS DOUBLE)"
+                    " * ln(CAST(_cnt AS DOUBLE)) END) AS _bnlogn_part",
+                ],
+            )
+        )
+    )
+
+
+def lm_model_stats(lm: DataFrame, smoothing: str = "addk"):
+    """Run ``smoothing``'s model-probe aggregation ONCE and return the
+    row the matching scorer's ``model_stats=`` parameter expects. For a
+    model that is fixed across many scoring calls (the streaming gate's
+    per-stream model) this amortizes the per-call driver probe job; the
+    scalars are a pure function of the model, so passing them back in
+    is value-identical to letting the scorer probe itself."""
+    if smoothing not in _STATS:
+        raise ValueError(
+            f"lm_model_stats: unknown smoothing {smoothing!r}"
+            " (expected addk|kn|sb|jm)"
+        )
+    return _model_stats(
+        _kn_wordstats(lm) if smoothing == "kn" else lm, _STATS[smoothing]
+    )
+
+
+def _addk_p(alpha: int, v: int, c2: str = "_c2", c1: str = "_c1") -> str:
+    """Add-alpha bigram probability SQL: ONE IEEE division of exact
+    integers."""
+    return (
+        f"(CAST(coalesce({c2}, 0) + {alpha} AS DOUBLE)"
+        f" / CAST(coalesce({c1}, 0) + {alpha} * {int(v)} AS DOUBLE))"
+    )
+
+
+def perplexity_score(
+    docs: DataFrame,
+    lm: DataFrame,
+    alpha: int = 1,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    broadcast_model: bool | None = None,
+    broadcast_max_rows: int = 8_000_000,
+    model_materialized: bool = False,
+    model_stats=None,
+) -> DataFrame:
+    """Score every document's bigram perplexity under ``lm``.
+
+    Output: ``(doc_id, n_bigrams, avg_neg_logprob, ppl)`` — the
+    add-alpha-smoothed average negative log probability of the
+    document's bigrams and its exponential (the perplexity). A
+    document with fewer than two tokens has ``n_bigrams = 0`` and
+    NULL scores (no bigram evidence — the caller decides its fate).
+
+    ``alpha`` must be a positive integer (the determinism contract —
+    see module doc).
+
+    ``broadcast_model=None`` (the default) picks automatically: the
+    model row count comes out of the same bounded aggregation that
+    derives the vocabulary size ``V`` (no extra pass), so when the
+    model fits under ``broadcast_max_rows`` the score joins get the
+    broadcast hint and the pass is map-only. This matters because the
+    shuffle alternative exchanges the bigram-exploded CORPUS on the
+    ``(w1, w2)`` key — Zipf-distributed, so at 100 TB the "the the"
+    partition is a hot-key exchange. Only an over-bound model (more
+    distinct n-grams than ``broadcast_max_rows``, ≈ a few hundred MB
+    serialized) falls back to the shuffle, with a warning naming the
+    sampled-train-then-broadcast-score contract (train the LM on a
+    bounded sample, as CCNet does; score the full corpus map-side).
+    ``True``/``False`` force the choice without the size probe's
+    outcome mattering. The shuffle fallback is SKEW-GUARDED: when the
+    model's bigram-count entropy (from the same scalar agg as ``V``)
+    is concentrated, the score joins are salted (:func:`_join_models`)
+    — row-identical output, hot keys spread over many reducers.
+
+    The model is consumed three times (stats probe + two broadcast
+    builds); an unmaterialized plan — in particular
+    ``bigram_lm_train``'s full-corpus aggregation — would re-execute
+    per consumer, so it is localCheckpointed once (vocabulary-bounded;
+    measured 3.2x on the sf0.1 train+score entry). Those blocks are
+    not executor-loss-recoverable; on preemptible clusters persist the
+    model to parquet and score from that (the CLI train-filter/score
+    split). ``model_materialized=True`` skips the checkpoint and
+    ``model_stats`` (from :func:`lm_model_stats`) the probe job — the
+    streaming gate's once-per-stream amortization.
+    """
+    if not isinstance(alpha, int) or alpha <= 0:
+        raise ValueError(
+            f"perplexity_score: alpha must be a positive int, got {alpha!r}"
+        )
+    if not model_materialized:
+        lm = lm.localCheckpoint(eager=True)
+    st = model_stats if model_stats is not None else lm_model_stats(lm, "addk")
+    models = [
+        (lm.filter("w2 IS NOT NULL").selectExpr("w1", "w2", "cnt AS _c2"), ["w1", "w2"]),
+        (lm.filter("w2 IS NULL").selectExpr("w1", "cnt AS _c1"), ["w1"]),
+    ]
+    return _score(
+        "perplexity_score", docs, 2, text_col, id_col, models, st,
+        broadcast_model, broadcast_max_rows,
+        [("avg_neg_logprob", "ppl", _addk_p(alpha, st["v"]))],
+    )
+
+
+def kneser_ney_score(
+    docs: DataFrame,
+    lm: DataFrame,
+    discount_milli: int = 750,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    broadcast_model: bool | None = None,
+    broadcast_max_rows: int = 8_000_000,
+    model_materialized: bool = False,
+    model_stats=None,
+) -> DataFrame:
+    """Interpolated Kneser-Ney bigram perplexity — the smoothing real
+    n-gram quality filters use (KenLM/CCNet's default) rather than
+    add-alpha: probability mass is discounted from SEEN bigrams and
+    redistributed by CONTINUATION counts (in how many distinct
+    contexts a word completes), which scores boilerplate far better
+    than raw frequency smoothing.
+
+    ``lm`` is the ``bigram_lm_train`` output (only its bigram rows are
+    used — every other statistic KN needs derives from them):
+    context totals ``c(w1) = Σ_w2 c(w1,w2)``, context fan-out
+    ``N1+(w1·)``, continuation counts ``N1+(·w2)``, and the scalars
+    ``B = N1+(··)`` (distinct bigram types) and ``V`` (continuation
+    vocabulary). With an add-one continuation floor for OOV words:
+
+        Pcont(w2)  = (N1+(·w2) + 1) / (B + V + 1)
+        P(w2|w1)   = max(c2·1000 − D, 0) / (1000·c1)
+                     + [D·N1+(w1·) / (1000·c1)] · Pcont(w2)   (w1 seen)
+                   = Pcont(w2)                                (w1 unseen)
+
+    where ``D = discount_milli`` keeps the discount an INTEGER
+    milli-unit. Every int64 operand stays bounded by
+    1000 × (corpus bigram tokens) — deliberately NOT the
+    cross-multiplied single-fraction form, whose numerator/denominator
+    products (…·(B+V+1)) overflow int64 for realistically sized
+    models. The probability is three IEEE double ops in a pinned tree
+    shape (``t1 + (t2 · pc)``), bit-identical on any engine; the rest
+    is the ``perplexity_score`` determinism contract (ln rounded to
+    6, quantized to DECIMAL(18,6), order-independent decimal sum).
+    The x89 oracle replays every derived statistic and the same
+    expression tree as chained CTEs.
+
+    Plan shape: all per-word statistics come from ONE unpivot + ONE
+    groupBy over the model (:func:`_kn_wordstats`), checkpointed once
+    (vocab-bounded; three consumers); ``B``/``V`` and the skew
+    pre-flight statistics are a tiny agg over that table. The
+    model-derived tables (bigrams, context totals, continuation
+    counts) broadcast under the core's policy — ``B`` bounds all three
+    — with the same warned, skew-guarded shuffle fallback as
+    ``perplexity_score``.
+    """
+    if not isinstance(discount_milli, int) or not 0 < discount_milli < 1000:
+        raise ValueError(
+            "kneser_ney_score: discount_milli must be an int in (0, 1000),"
+            f" got {discount_milli!r}"
+        )
+    if not model_materialized:
+        lm = lm.localCheckpoint(eager=True)
+    ws = _kn_wordstats(lm).localCheckpoint(eager=True)
+    st = model_stats if model_stats is not None else _model_stats(ws, _STATS["kn"])
+    models = [
+        (lm.filter("w2 IS NOT NULL").selectExpr("w1", "w2", "cnt AS _c2"), ["w1", "w2"]),
+        (ws.selectExpr("word AS w1", "_c1", "_n1fwd"), ["w1"]),
+        (ws.selectExpr("word AS w2", "_n1bwd"), ["w2"]),
+    ]
+    scale = int(st["rows"]) + int(st["v"]) + 1
+    dm = int(discount_milli)
+    t1 = (
+        f"CAST(greatest(coalesce(_c2, 0) * 1000 - {dm}, 0) AS DOUBLE)"
+        " / CAST(1000 * _c1 AS DOUBLE)"
+    )
+    t2 = f"CAST({dm} * _n1fwd AS DOUBLE) / CAST(1000 * _c1 AS DOUBLE)"
+    pc = f"CAST(coalesce(_n1bwd, 0) + 1 AS DOUBLE) / CAST({scale} AS DOUBLE)"
+    p = f"CASE WHEN _c1 IS NOT NULL THEN ({t1}) + (({t2}) * ({pc})) ELSE {pc} END"
+    return _score(
+        "kneser_ney_score", docs, 2, text_col, id_col, models, st,
+        broadcast_model, broadcast_max_rows, [("avg_neg_logprob", "ppl", p)],
+    )
+
+
+def stupid_backoff_score(
+    docs: DataFrame,
+    lm: DataFrame,
+    alpha_milli: int = 400,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    broadcast_model: bool | None = None,
+    broadcast_max_rows: int = 8_000_000,
+    model_materialized: bool = False,
+    model_stats=None,
+) -> DataFrame:
+    """Trigram "stupid backoff" scoring (Brants et al. 2007) — the
+    smoothing actually used for web-scale n-gram LMs because it needs
+    NO discount statistics, just raw counts with a fixed backoff
+    penalty:
+
+        S(w3|w1 w2) = c(w1 w2 w3) / c(w1 w2)          if seen
+                    = α · c(w2 w3) / c(w2)            else if seen
+                    = α² · c(w3) / N                  else if w3 seen
+                    = α² · 1 / N                      OOV floor
+
+    with ``α = alpha_milli / 1000`` (0.4, the published constant).
+    Scores are NOT normalized probabilities (the trade Brants makes
+    for scale); the per-document average negative log score and its
+    exponential still rank fluency exactly like perplexity, so the
+    output shape matches the other scorers:
+    ``(doc_id, n_trigrams, avg_neg_logscore, sppl)``. Documents with
+    fewer than three tokens carry NULL scores.
+
+    Determinism: every count ratio is ONE IEEE division of exact
+    int64s; α arrives as ``alpha_milli/1000`` (one exact-int
+    division — bit-identical to the literal the oracle writes), the
+    backoff multiplications follow a pinned tree shape, per-trigram
+    ``ln`` rounds to 6 into DECIMAL(18,6) (order-independent sum) —
+    the x93 oracle replays counts, backoff cases, and the rollup as
+    chained CTEs.
+
+    Plan: the model materializes once (same caveat as
+    ``perplexity_score``); its five lookups broadcast under the
+    core's policy (the model row count rides the same scalar agg that
+    derives ``N``), and the corpus is scanned once (trigram explode +
+    NULL sentinel, map-side). A trigram model is corpus-bounded —
+    Brants-scale models are exactly what this smoothing exists for —
+    so the over-bound case warns and falls back to shuffle joins,
+    skew-guarded on the unigram-count entropy (the most concentrated
+    of the five join keys).
+    """
+    if not isinstance(alpha_milli, int) or not 0 < alpha_milli < 1000:
+        raise ValueError(
+            "stupid_backoff_score: alpha_milli must be an int in (0, 1000),"
+            f" got {alpha_milli!r}"
+        )
+    if not model_materialized:
+        lm = lm.localCheckpoint(eager=True)
+    st = model_stats if model_stats is not None else lm_model_stats(lm, "sb")
+    nt = int(st["et"] or 0)
+    if nt == 0:
+        raise ValueError("stupid_backoff_score: empty model")
+    big = lm.filter("w3 IS NULL AND w2 IS NOT NULL")
+    uni = lm.filter("w2 IS NULL")
+    models = [
+        (
+            lm.filter("w3 IS NOT NULL").selectExpr("w1", "w2", "w3", "cnt AS _c123"),
+            ["w1", "w2", "w3"],
+        ),
+        (big.selectExpr("w1", "w2", "cnt AS _c12"), ["w1", "w2"]),
+        (big.selectExpr("w1 AS w2", "w2 AS w3", "cnt AS _c23"), ["w2", "w3"]),
+        (uni.selectExpr("w1 AS w2", "cnt AS _c2"), ["w2"]),
+        (uni.selectExpr("w1 AS w3", "cnt AS _c3"), ["w3"]),
+    ]
+    a = f"(CAST({int(alpha_milli)} AS DOUBLE) / CAST(1000 AS DOUBLE))"
+    s = (
+        "CASE WHEN _c123 IS NOT NULL THEN"
+        " CAST(_c123 AS DOUBLE) / CAST(_c12 AS DOUBLE)"
+        f" WHEN _c23 IS NOT NULL THEN {a} *"
+        " (CAST(_c23 AS DOUBLE) / CAST(_c2 AS DOUBLE))"
+        f" WHEN _c3 IS NOT NULL THEN ({a} * {a}) *"
+        f" (CAST(_c3 AS DOUBLE) / CAST({nt} AS DOUBLE))"
+        f" ELSE ({a} * {a}) * (CAST(1 AS DOUBLE) / CAST({nt} AS DOUBLE)) END"
+    )
+    return _score(
+        "stupid_backoff_score", docs, 3, text_col, id_col, models, st,
+        broadcast_model, broadcast_max_rows, [("avg_neg_logscore", "sppl", s)],
+    )
+
+
+def jelinek_mercer_score(
+    docs: DataFrame,
+    lm: DataFrame,
+    lam: float = 0.75,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    broadcast_model: bool | None = None,
+    broadcast_max_rows: int = 8_000_000,
+    model_materialized: bool = False,
+    model_stats=None,
+) -> DataFrame:
+    """Jelinek-Mercer INTERPOLATED bigram scoring — the fourth classic
+    smoothing family beside add-alpha (:func:`perplexity_score`),
+    Kneser-Ney (:func:`kneser_ney_score`), and stupid backoff
+    (:func:`stupid_backoff_score`): instead of discounting or backing
+    off, mix the maximum-likelihood bigram with a smoothed unigram,
+    ``p(w2|w1) = λ·c(w1,w2)/c(w1) + (1-λ)·(c(w2)+1)/(T+V)`` — the
+    interpolation weight ``λ`` is the tuning knob CCNet-style filters
+    sweep. The unigram leg is add-1 smoothed so unseen words keep
+    ``p > 0`` (a bare ML mixture hands ``ln 0`` to any OOV token).
+
+    Same model table as :func:`bigram_lm_train` (unigram rows carry
+    both legs: the ``c(w1)`` denominator AND the ``c(w2)`` backoff
+    count), same output shape as ``perplexity_score``
+    (``doc_id, n_bigrams, avg_neg_logprob, ppl``), same determinism
+    contract: exact int64 counts, λ and 1-λ are the same IEEE doubles
+    in any engine, each token's ``ln(p)`` rounds to 6 and sums as
+    DECIMAL(18,6), ``ppl`` rounds 6 because ``exp`` is only
+    ulp-identical. Same broadcast policy and skew-guarded shuffle
+    fallback as every scorer (:func:`_join_models`).
+    """
+    if not 0.0 < lam < 1.0:
+        raise ValueError(
+            f"jelinek_mercer_score: lam must be in (0, 1), got {lam!r}"
+        )
+    if not model_materialized:
+        lm = lm.localCheckpoint(eager=True)
+    st = model_stats if model_stats is not None else lm_model_stats(lm, "jm")
+    uni = lm.filter("w2 IS NULL")
+    models = [
+        (lm.filter("w2 IS NOT NULL").selectExpr("w1", "w2", "cnt AS _c2"), ["w1", "w2"]),
+        (uni.selectExpr("w1", "cnt AS _c1"), ["w1"]),
+        # the SAME unigram rows, re-keyed on w2 for the backoff leg
+        (uni.selectExpr("w1 AS w2", "cnt AS _cu"), ["w2"]),
+    ]
+    # Double literals use the `...D` suffix so they parse AS DOUBLE with
+    # the exact repr round-trip (a bare SQL decimal literal would parse
+    # DECIMAL).
+    denom = float(int(st["t"] or 0) + int(st["v"]))
+    ml = (
+        "CASE WHEN coalesce(_c1, 0) > 0 THEN"
+        " CAST(coalesce(_c2, 0) AS DOUBLE) / CAST(_c1 AS DOUBLE)"
+        " ELSE 0.0D END"
+    )
+    backoff = f"CAST(coalesce(_cu, 0) + 1 AS DOUBLE) / {denom!r}D"
+    p = f"{float(lam)!r}D * ({ml}) + {1.0 - float(lam)!r}D * ({backoff})"
+    return _score(
+        "jelinek_mercer_score", docs, 2, text_col, id_col, models, st,
+        broadcast_model, broadcast_max_rows, [("avg_neg_logprob", "ppl", p)],
     )
 
 
@@ -420,10 +821,8 @@ def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     ``token_drift_from_counts``. Split out so a FIXED side (the drift
     monitor's reference corpus) can be counted ONCE, persisted, and
     reused across micro-batches instead of re-aggregated per batch."""
-    return (
-        docs.select(F.explode(_toks(text_col)).alias("token"))
-        .groupBy("token")
-        .agg(F.count("*").alias("n"))
+    return _split_counts(
+        docs.selectExpr(f"explode({_toks_sql(text_col)}) AS token"), ["token"], "n"
     )
 
 
@@ -464,35 +863,27 @@ def token_drift_split(
     the corpus twice — a row predicate cannot prune parquet row
     groups — then groupBys each side and full-outer joins the two
     count tables. Here ONE explode carries two boolean flags and ONE
-    groupBy(token) emits both counts via count_if (round 16, §2.4 —
-    the same fuse as DSIR's ``target_pred``): one corpus decode, one
-    exchange, no join. Identical values by construction: a token seen
-    only under ``old_pred`` comes out with ``n_new = 0``, exactly the
-    full-outer join's coalesce; rows matching NEITHER predicate are
-    filtered before the explode (they are in neither snapshot, so
-    they never reached either count table); counts are exact int64
-    either way. Same math and determinism contract as
-    :func:`token_drift` from the joined table onward."""
+    groupBy(token) emits both counts (:func:`_split_counts`): one
+    corpus decode, one exchange, no join. Identical values by
+    construction: a token seen only under ``old_pred`` comes out with
+    ``n_new = 0``, exactly the full-outer join's coalesce; rows
+    matching NEITHER predicate are filtered before the explode (they
+    are in neither snapshot, so they never reached either count
+    table); counts are exact int64 either way. Same math and
+    determinism contract as :func:`token_drift` from the joined table
+    onward."""
     if not isinstance(alpha, int) or alpha <= 0:
         raise ValueError(
             f"token_drift_split: alpha must be a positive int, got {alpha!r}"
         )
-    op = F.expr(old_pred) if isinstance(old_pred, str) else old_pred
-    np_ = F.expr(new_pred) if isinstance(new_pred, str) else new_pred
-    j = (
-        docs.select(
-            op.cast("boolean").alias("_o"),
-            np_.cast("boolean").alias("_n"),
-            F.explode(_toks(text_col)).alias("token"),
-        )
-        .filter(F.col("_o") | F.col("_n"))
-        .groupBy("token")
-        .agg(
-            F.count(F.when(F.col("_o"), 1)).alias("n_old"),
-            F.count(F.when(F.col("_n"), 1)).alias("n_new"),
-        )
+    flagged = docs.select(
+        _flag(old_pred, "_o"),
+        _flag(new_pred, "_n"),
+        F.expr(f"explode({_toks_sql(text_col)}) AS token"),
+    ).filter("_o OR _n")
+    return _drift_topk(
+        _split_counts(flagged, ["token"], n_old="_o", n_new="_n"), alpha, k
     )
-    return _drift_topk(j, alpha, k)
 
 
 def _drift_topk(j: DataFrame, alpha: int, k: int) -> DataFrame:
@@ -521,794 +912,6 @@ def _drift_topk(j: DataFrame, alpha: int, k: int) -> DataFrame:
         )
         .orderBy(F.desc("contrib"), F.asc("token"))
         .limit(k)
-    )
-
-
-# --- model-probe aggregates, one per smoothing family -----------------------
-# Each scorer derives a handful of bounded scalars from its model (V /
-# row count for the auto-broadcast decision / count-entropy for the
-# skew pre-flight) in ONE small aggregation job. The aggregates live
-# here, outside the scorers, so a caller that scores MANY batches
-# against one fixed model — the streaming LM gate — can run the probe
-# once per stream via :func:`lm_model_stats` and pass the row back in
-# (round 15, guide §5: the driver job was repeated per micro-batch for
-# a value that cannot change between batches).
-
-
-def _addk_model_stats(lm: DataFrame):
-    _is_bi = F.col("w2").isNotNull()
-    return lm.agg(
-        F.count(F.when(F.col("w2").isNull(), 1)).alias("v"),
-        F.count("*").alias("n"),
-        F.sum(F.when(_is_bi, F.col("cnt"))).alias("bn"),
-        F.count(F.when(_is_bi, 1)).alias("bk"),
-        F.sum(
-            F.when(
-                _is_bi,
-                F.col("cnt").cast("double")
-                * F.log(F.col("cnt").cast("double")),
-            )
-        ).alias("bnlogn"),
-    ).first()
-
-
-def _kn_model_stats(lm: DataFrame):
-    bi = lm.filter(F.col("w2").isNotNull())
-    return bi.agg(
-        F.count("*").alias("b"),
-        F.countDistinct("w2").alias("v"),
-        F.sum("cnt").alias("bn"),
-        F.sum(
-            F.col("cnt").cast("double") * F.log(F.col("cnt").cast("double"))
-        ).alias("bnlogn"),
-    ).first()
-
-
-def _sb_model_stats(lm: DataFrame):
-    _is_uni = F.col("w2").isNull()
-    return lm.agg(
-        F.sum(F.when(_is_uni, F.col("cnt"))).alias("n"),
-        F.count("*").alias("rows"),
-        F.count(F.when(_is_uni, 1)).alias("uk"),
-        F.sum(
-            F.when(
-                _is_uni,
-                F.col("cnt").cast("double")
-                * F.log(F.col("cnt").cast("double")),
-            )
-        ).alias("unlogn"),
-    ).first()
-
-
-def _jm_model_stats(lm: DataFrame):
-    _is_bi = F.col("w2").isNotNull()
-    return lm.agg(
-        F.count(F.when(F.col("w2").isNull(), 1)).alias("v"),
-        F.count("*").alias("n"),
-        F.sum(F.when(F.col("w2").isNull(), F.col("cnt"))).alias("t"),
-        F.sum(F.when(_is_bi, F.col("cnt"))).alias("bt"),
-        F.count(F.when(_is_bi, 1)).alias("bk"),
-        F.sum(
-            F.when(
-                _is_bi,
-                F.col("cnt").cast("double")
-                * F.log(F.col("cnt").cast("double")),
-            )
-        ).alias("bnlogn"),
-    ).first()
-
-
-def lm_model_stats(lm: DataFrame, smoothing: str = "addk"):
-    """Run ``smoothing``'s model-probe aggregation ONCE and return the
-    row the matching scorer's ``model_stats=`` parameter expects. For a
-    model that is fixed across many scoring calls (the streaming gate's
-    per-stream model) this amortizes the per-call driver probe job; the
-    scalars are a pure function of the model, so passing them back in
-    is value-identical to letting the scorer probe itself."""
-    try:
-        probe = {
-            "addk": _addk_model_stats,
-            "kn": _kn_model_stats,
-            "sb": _sb_model_stats,
-            "jm": _jm_model_stats,
-        }[smoothing]
-    except KeyError:
-        raise ValueError(
-            f"lm_model_stats: unknown smoothing {smoothing!r}"
-            " (expected addk|kn|sb|jm)"
-        ) from None
-    return probe(lm)
-
-
-def perplexity_score(
-    docs: DataFrame,
-    lm: DataFrame,
-    alpha: int = 1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    broadcast_model: bool | None = None,
-    broadcast_max_rows: int = 8_000_000,
-    model_materialized: bool = False,
-    n_salts: int = 16,
-    salt_threshold: float = 0.5,
-    model_stats=None,
-    pairs: DataFrame | None = None,
-) -> DataFrame:
-    """Score every document's bigram perplexity under ``lm``.
-
-    Output: ``(doc_id, n_bigrams, avg_neg_logprob, ppl)`` — the
-    add-alpha-smoothed average negative log probability of the
-    document's bigrams and its exponential (the perplexity). A
-    document with fewer than two tokens has ``n_bigrams = 0`` and
-    NULL scores (no bigram evidence — the caller decides its fate).
-
-    ``alpha`` must be a positive integer (the determinism contract —
-    see module doc).
-
-    ``broadcast_model=None`` (the default) picks automatically: the
-    model row count comes out of the same bounded aggregation that
-    derives the vocabulary size ``V`` (no extra pass), so when the
-    model fits under ``broadcast_max_rows`` the score joins get the
-    broadcast hint and the pass is map-only. This matters because the
-    shuffle alternative exchanges the bigram-exploded CORPUS on the
-    ``(w1, w2)`` key — Zipf-distributed, so at 100 TB the "the the"
-    partition is a hot-key exchange. Only an over-bound model (more
-    distinct n-grams than ``broadcast_max_rows``, ≈ a few hundred MB
-    serialized) falls back to the shuffle, with a warning naming the
-    sampled-train-then-broadcast-score contract (train the LM on a
-    bounded sample, as CCNet does; score the full corpus map-side).
-    ``True``/``False`` force the choice without the size probe's
-    outcome mattering.
-
-    The shuffle fallback is additionally SKEW-GUARDED: the model's
-    bigram-count entropy (computed in the same scalar agg as ``V`` —
-    no extra pass) stands in for the scoring corpus's join-key
-    distribution, and when its normalized entropy drops below
-    ``salt_threshold`` the score joins are salted over ``n_salts``
-    deterministic salts (corpus side scattered by xxhash64, model
-    side replicated) — row-identical output, but the hot key's rows
-    land on ``n_salts`` reducers instead of one straggler.
-    """
-    if not isinstance(alpha, int) or alpha <= 0:
-        raise ValueError(
-            f"perplexity_score: alpha must be a positive int, got {alpha!r}"
-        )
-    # loud upfront, like every other knob: n_salts=0 would otherwise
-    # surface as REMAINDER_BY_ZERO mid-job (ANSI) or silently score
-    # every bigram as unseen (non-ANSI pmod -> NULL join keys)
-    _validate_salt_knobs("perplexity_score", n_salts, salt_threshold)
-    spark = docs.sparkSession
-    # The model is consumed THREE times below (size/V probe + the two
-    # broadcast builds); if it arrives as an unmaterialized plan — in
-    # particular bigram_lm_train's full-corpus aggregation — each
-    # consumer would re-execute that aggregation (cross-job, so
-    # exchange reuse cannot save it). Materialize once: the model is
-    # vocabulary-bounded, so executor-local storage is cheap, and the
-    # train-then-score pipeline pays for ONE training pass.
-    # (Measured: 3.2x on the sf0.1 train+score benchmark entry.)
-    # Caveat: localCheckpoint blocks are not executor-loss-recoverable
-    # (lineage truncated); losing one fails the query cleanly — on
-    # preemptible clusters write the trained model to parquet and
-    # score from that instead (the CLI train-filter/score split).
-    # ``model_materialized=True`` skips the checkpoint when the caller
-    # already holds a materialized model (the streaming gate caches the
-    # parquet-read model ONCE across micro-batches and opts out here).
-    if not model_materialized:
-        lm = lm.localCheckpoint(eager=True)
-    uni = lm.filter(F.col("w2").isNull()).select(
-        F.col("w1").alias("_c_w1"), F.col("cnt").alias("_c1")
-    )
-    bi = lm.filter(F.col("w2").isNotNull()).select(
-        F.col("w1").alias("_b_w1"),
-        F.col("w2").alias("_b_w2"),
-        F.col("cnt").alias("_c2"),
-    )
-    # V = distinct unigram types, a scalar the oracle derives the same
-    # way; bounded driver constant. ONE small agg over the model also
-    # yields the total row count (the auto-broadcast size signal) AND
-    # the bigram-key entropy statistics (the skew pre-flight for the
-    # shuffle fallback) — no extra pass for either. A caller scoring
-    # many batches against ONE fixed model (the streaming gate) passes
-    # ``model_stats`` (from :func:`lm_model_stats`) so the probe job
-    # runs once per stream, not once per micro-batch (round 15).
-    v, n_model, b_tokens, b_keys, b_nlogn = (
-        model_stats if model_stats is not None else _addk_model_stats(lm)
-    )
-    broadcast_model = _resolve_broadcast(
-        "perplexity_score", n_model, broadcast_model, broadcast_max_rows
-    )
-    if broadcast_model:
-        uni, bi = F.broadcast(uni), F.broadcast(bi)
-
-    # every document emits its bigrams PLUS one NULL sentinel pair, so
-    # short documents (no bigrams) survive the explode and the corpus
-    # is scanned exactly once — no second filter pass, no anti-join.
-    # ``pairs`` injects a prebuilt (_id, w1, w2) table with EXACTLY
-    # _pair_rows' rows (round 16: the shared-explode compositions let
-    # train and score read one checkpointed gram table instead of
-    # scanning+tokenizing the corpus twice; the DuckDB oracles pin
-    # the composed values).
-    if pairs is None:
-        pairs = _pair_rows(docs, id_col, text_col)
-    _ne = _model_norm_entropy(b_tokens, b_keys, b_nlogn)
-    if not broadcast_model and _ne is not None and _ne < salt_threshold:
-        # SKEW PRE-FLIGHT (free: the entropy came out of the same agg
-        # as V). The shuffle fallback exchanges the bigram-exploded
-        # corpus on the Zipf-skewed (w1, w2) key; when the TRAIN
-        # corpus's bigram distribution — the best available proxy for
-        # the scoring corpus — is concentrated (norm entropy below
-        # ``salt_threshold``), the hot key becomes one straggler
-        # reducer. Salt: scatter each corpus pair over ``n_salts``
-        # deterministic salts and replicate the model rows across all
-        # of them — every pair still meets exactly ONE replica of its
-        # model row, so the result is row-identical to the plain left
-        # join (the x84 oracle is unchanged); the hot key's rows now
-        # land on n_salts reducers instead of one.
-        _warn_salting("perplexity_score", salt_threshold, n_salts)
-        pairs = _salt_probe(pairs, ["_id", "w1", "w2"], n_salts, "_ps")
-        bi = _salt_replicate(bi, n_salts, "_bs")
-        uni = _salt_replicate(uni, n_salts, "_us")
-        joined = (
-            pairs.join(
-                bi,
-                (pairs.w1 == bi._b_w1)
-                & (pairs.w2 == bi._b_w2)
-                & (pairs._ps == bi._bs),
-                "left",
-            )
-            .join(
-                uni,
-                (pairs.w1 == uni._c_w1) & (pairs._ps == uni._us),
-                "left",
-            )
-        )
-    else:
-        joined = (
-            pairs.join(
-                bi, (pairs.w1 == bi._b_w1) & (pairs.w2 == bi._b_w2), "left"
-            )
-            .join(uni, pairs.w1 == uni._c_w1, "left")
-        )
-    # post-join arithmetic as parsed strings (round 16 — the same
-    # construction-cost batching as _pair_rows; identical expression
-    # trees: SQL ln IS F.log, int literals type like F.lit's ints, and
-    # the x84 oracle pins the values). Sentinel rows contribute NULL
-    # _q (ignored by SUM), exactly as before.
-    p = (
-        f"(CAST(coalesce(_c2, 0) + {alpha} AS DOUBLE)"
-        f" / CAST(coalesce(_c1, 0) + {alpha} * {v} AS DOUBLE))"
-    )
-    per_doc = (
-        joined.selectExpr(
-            "_id",
-            "CAST(w1 IS NOT NULL AS BIGINT) AS _is_bg",
-            "CASE WHEN w1 IS NOT NULL THEN "
-            f"CAST(round(ln({p}), 6) AS DECIMAL(18,6)) END AS _q",
-        )
-        .groupBy("_id")
-        .agg(F.sum("_is_bg").alias("n_bigrams"), F.sum("_q").alias("_total"))
-    )
-    avg_nll = (
-        "CASE WHEN n_bigrams > 0 THEN "
-        "-(CAST(_total AS DOUBLE) / CAST(n_bigrams AS DOUBLE)) END"
-    )
-    # avg_neg_logprob ships UNROUNDED: its operands (exact decimal
-    # total, int count) make the division bit-identical on any engine,
-    # and a display ROUND would *reintroduce* divergence — Spark
-    # rounds the shortest decimal repr where DuckDB rounds the binary
-    # value, which differs when the repr lands exactly on a half
-    # boundary (observed once in 5,000 docs at sf0.1). ppl must round
-    # because exp() itself is only ulp-identical across engines.
-    return per_doc.selectExpr(
-        f"_id AS `{id_col}`",
-        "n_bigrams",
-        f"{avg_nll} AS avg_neg_logprob",
-        f"round(exp({avg_nll}), 6) AS ppl",
-    )
-
-
-def kneser_ney_score(
-    docs: DataFrame,
-    lm: DataFrame,
-    discount_milli: int = 750,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    broadcast_model: bool | None = None,
-    broadcast_max_rows: int = 8_000_000,
-    model_materialized: bool = False,
-    n_salts: int = 16,
-    salt_threshold: float = 0.5,
-    model_stats=None,
-    pairs: DataFrame | None = None,
-) -> DataFrame:
-    """Interpolated Kneser-Ney bigram perplexity — the smoothing real
-    n-gram quality filters use (KenLM/CCNet's default) rather than
-    add-alpha: probability mass is discounted from SEEN bigrams and
-    redistributed by CONTINUATION counts (in how many distinct
-    contexts a word completes), which scores boilerplate far better
-    than raw frequency smoothing.
-
-    ``lm`` is the ``bigram_lm_train`` output (only its bigram rows are
-    used — every other statistic KN needs derives from them):
-    context totals ``c(w1) = Σ_w2 c(w1,w2)``, context fan-out
-    ``N1+(w1·)``, continuation counts ``N1+(·w2)``, and the scalars
-    ``B = N1+(··)`` (distinct bigram types) and ``V`` (continuation
-    vocabulary). With an add-one continuation floor for OOV words:
-
-        Pcont(w2)  = (N1+(·w2) + 1) / (B + V + 1)
-        P(w2|w1)   = max(c2·1000 − D, 0) / (1000·c1)
-                     + [D·N1+(w1·) / (1000·c1)] · Pcont(w2)   (w1 seen)
-                   = Pcont(w2)                                (w1 unseen)
-
-    where ``D = discount_milli`` keeps the discount an INTEGER
-    milli-unit. Every int64 operand stays bounded by
-    1000 × (corpus bigram tokens) — deliberately NOT the
-    cross-multiplied single-fraction form, whose numerator/denominator
-    products (…·(B+V+1)) overflow int64 for realistically sized
-    models. The probability is three IEEE double ops in a pinned tree
-    shape (``t1 + (t2 · pc)``), bit-identical on any engine; the rest
-    is the ``perplexity_score`` determinism contract (ln rounded to
-    6, quantized to DECIMAL(18,6), order-independent decimal sum).
-    The x89 oracle replays every derived statistic and the same
-    expression tree as chained CTEs.
-
-    Plan shape: the model-derived tables (bigrams, context totals,
-    continuation counts) are vocabulary-bounded and broadcast under
-    the shared auto-pick policy (``_resolve_broadcast``, same as
-    ``perplexity_score``): the bigram row count — which bounds all
-    three derived tables — comes out of the scalar agg this smoothing
-    needs anyway, so the probe is free; an over-bound model falls back
-    to shuffle joins WITH a warning instead of OOMing executors (a
-    bigram table is corpus-bounded, not vocab-bounded). Under the
-    broadcast (normal) path the corpus is tokenized and scored
-    map-side in one scan (NULL-sentinel trick for short documents) —
-    no shuffle touches corpus rows until the per-document rollup on
-    ``doc_id``.
-
-    Round-16 (§2.4): context totals ``(c1, N1+(w1·))`` and
-    continuation counts ``N1+(·w2)`` used to be TWO separate
-    groupBy-exchange chains over the checkpointed model, and the
-    scalars a third countDistinct scan. All per-word statistics now
-    come out of ONE unpivot (each bigram row explodes into a
-    w1-tagged and a w2-tagged row) + ONE groupBy(word), checkpointed
-    once (vocab-bounded); the scalars are a tiny follow-up agg over
-    that table. Null semantics are preserved exactly: a word only
-    ever seen as ``w2`` carries ``_c1 = NULL`` (sum over an empty
-    fwd set), which takes the same unseen-context branch as the old
-    join miss; a word only ever seen as ``w1`` carries
-    ``_n1bwd = 0``, indistinguishable from the old NULL under the
-    expression's ``coalesce(_n1bwd, 0)``. ``b``/``v``/``bn`` are
-    exact integer aggregates (order-independent); ``bnlogn`` is a
-    double whose summation order changes, but it only feeds the
-    salt-threshold plan decision, never an output value — and the
-    salted plan is row-identical by construction.
-
-    The shuffle fallback is SKEW-GUARDED exactly like
-    ``perplexity_score``: the model's bigram-count entropy rides the
-    same scalar agg as ``B``/``V`` (no extra pass), and when its
-    normalized entropy drops below ``salt_threshold`` all three score
-    joins are salted over ``n_salts`` deterministic salts (corpus side
-    scattered by xxhash64, model sides replicated) — row-identical
-    output, hot keys spread over ``n_salts`` reducers.
-    """
-    if not isinstance(discount_milli, int) or not 0 < discount_milli < 1000:
-        raise ValueError(
-            "kneser_ney_score: discount_milli must be an int in (0, 1000),"
-            f" got {discount_milli!r}"
-        )
-    _validate_salt_knobs("kneser_ney_score", n_salts, salt_threshold)
-    # four consumers (ctx/cont/scalars/broadcast join) — materialize
-    # the vocabulary-bounded model once (see perplexity_score; callers
-    # holding an already-materialized model opt out)
-    if not model_materialized:
-        lm = lm.localCheckpoint(eager=True)
-    bi = lm.filter(F.col("w2").isNotNull()).select("w1", "w2", "cnt")
-    # ONE unpivot + ONE groupBy(word) replaces the old separate
-    # ctx (groupBy w1) and cont (groupBy w2) exchange chains — see
-    # the docstring's round-16 note for the null-semantics proof.
-    # Checkpointed eagerly: it has three consumers (two score joins
-    # plus the scalar probe) and is vocab-bounded.
-    wordstats = (
-        bi.select(
-            F.expr(
-                "explode(array("
-                "struct(w1 AS word, cnt AS _cnt, true AS _fwd),"
-                "struct(w2 AS word, CAST(NULL AS BIGINT) AS _cnt, false AS _fwd)"
-                ")) AS s"
-            )
-        )
-        .select("s.*")
-        .groupBy("word")
-        .agg(
-            F.sum(F.when(F.col("_fwd"), F.col("_cnt"))).alias("_c1"),
-            F.count(F.when(F.col("_fwd"), 1)).alias("_n1fwd"),
-            F.count(F.when(~F.col("_fwd"), 1)).alias("_n1bwd"),
-            # partial Σ cnt·ln(cnt) over this word's bigram rows — the
-            # skew pre-flight's entropy numerator, summed globally in
-            # the scalar probe below (double; order-sensitive only in
-            # the last ulp, and it never reaches an output value)
-            F.sum(
-                F.when(
-                    F.col("_fwd"),
-                    F.col("_cnt").cast("double")
-                    * F.log(F.col("_cnt").cast("double")),
-                )
-            ).alias("_bnlogn_part"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    ctx = wordstats.select(
-        F.col("word").alias("w1"), "_c1", "_n1fwd"
-    )
-    cont = wordstats.select(F.col("word").alias("w2"), "_n1bwd")
-    # scalars: distinct bigram types + continuation vocabulary — a
-    # tiny agg over the vocab-bounded wordstats table (round 16: was
-    # a countDistinct scan over the model); the same agg yields the
-    # count-entropy statistics for the shuffle-fallback skew
-    # pre-flight (no extra pass). Streaming callers amortize it per
-    # stream via lm_model_stats (round 15).
-    if model_stats is not None:
-        b_types, v_cont, b_tokens, b_nlogn = model_stats
-    else:
-        _s = wordstats.agg(
-            F.coalesce(F.sum("_n1fwd"), F.lit(0)).alias("b"),
-            F.count(F.when(F.col("_n1bwd") > 0, 1)).alias("v"),
-            F.sum("_c1").alias("bn"),
-            F.sum("_bnlogn_part").alias("bnlogn"),
-        ).first()
-        b_types, v_cont, b_tokens, b_nlogn = (
-            _s["b"], _s["v"], _s["bn"], _s["bnlogn"],
-        )
-    scale = int(b_types) + int(v_cont) + 1
-    dm = int(discount_milli)
-    # b_types IS the bigram row count, which bounds every broadcast
-    # side below (ctx and cont are per-w1/per-w2 rollups of it)
-    _broadcasting = _resolve_broadcast(
-        "kneser_ney_score", int(b_types), broadcast_model, broadcast_max_rows
-    )
-    _bc = F.broadcast if _broadcasting else (lambda df: df)
-    _ne = _model_norm_entropy(b_tokens, b_types, b_nlogn)
-    _salted = not _broadcasting and _ne is not None and _ne < salt_threshold
-
-    # ``pairs`` injection: see perplexity_score (same contract)
-    if pairs is None:
-        pairs = _pair_rows(docs, id_col, text_col)
-    if _salted:
-        # Same construction as perplexity_score's salted fallback:
-        # every corpus pair carries ONE deterministic salt; every
-        # model-derived table is replicated across all n_salts values,
-        # so each pair still meets exactly one replica of its matching
-        # row (left-join misses stay misses) — row-identical output,
-        # but the Zipf-hot (w1)/(w2) keys land on n_salts reducers.
-        _warn_salting("kneser_ney_score", salt_threshold, n_salts)
-        pairs = _salt_probe(pairs, ["_id", "w1", "w2"], n_salts, "_salt")
-        j = (
-            pairs.join(
-                _salt_replicate(
-                    bi.withColumnRenamed("cnt", "_c2"), n_salts, "_salt"
-                ),
-                ["w1", "w2", "_salt"],
-                "left",
-            )
-            .join(_salt_replicate(ctx, n_salts, "_salt"), ["w1", "_salt"], "left")
-            .join(
-                _salt_replicate(cont, n_salts, "_salt"), ["w2", "_salt"], "left"
-            )
-        )
-    else:
-        j = (
-            pairs.join(
-                _bc(bi.withColumnRenamed("cnt", "_c2")),
-                ["w1", "w2"],
-                "left",
-            )
-            .join(_bc(ctx), ["w1"], "left")
-            .join(_bc(cont), ["w2"], "left")
-        )
-    # Per-term double divisions, NEVER the cross-multiplied int64 form
-    # (max(c2·1000−D,0)·scale and 1000·c1·scale overflow int64 for a
-    # realistically sized model — c1 ~ 6e7 for a hot context times
-    # scale ~ 3e8 bigram types exceeds 2^63). Each factor here stays
-    # bounded by 1000 × (corpus bigram tokens) — exact int64 with
-    # ~400x headroom even at petatoken scale — and the probability is
-    # three IEEE ops in a PINNED order (t1 + (t2 · pc)), which any
-    # engine reproduces bit-for-bit; the x89 oracle mirrors the same
-    # tree shape. Built as parsed strings (round 16 — the _pair_rows
-    # construction-cost batching; identical expression trees, the
-    # oracle pins the values).
-    t1 = (
-        f"CAST(greatest(coalesce(_c2, 0) * 1000 - {dm}, 0) AS DOUBLE)"
-        " / CAST(1000 * _c1 AS DOUBLE)"
-    )
-    t2 = f"CAST({dm} * _n1fwd AS DOUBLE) / CAST(1000 * _c1 AS DOUBLE)"
-    pc = f"CAST(coalesce(_n1bwd, 0) + 1 AS DOUBLE) / CAST({scale} AS DOUBLE)"
-    p = f"CASE WHEN _c1 IS NOT NULL THEN ({t1}) + (({t2}) * ({pc})) ELSE {pc} END"
-    per_doc = (
-        j.selectExpr(
-            "_id",
-            "CAST(w1 IS NOT NULL AS BIGINT) AS _is_bg",
-            "CASE WHEN w1 IS NOT NULL THEN "
-            f"CAST(round(ln({p}), 6) AS DECIMAL(18,6)) END AS _q",
-        )
-        .groupBy("_id")
-        .agg(F.sum("_is_bg").alias("n_bigrams"), F.sum("_q").alias("_total"))
-    )
-    avg_nll = (
-        "CASE WHEN n_bigrams > 0 THEN "
-        "-(CAST(_total AS DOUBLE) / CAST(n_bigrams AS DOUBLE)) END"
-    )
-    return per_doc.selectExpr(
-        f"_id AS `{id_col}`",
-        "n_bigrams",
-        f"{avg_nll} AS avg_neg_logprob",
-        f"round(exp({avg_nll}), 6) AS ppl",
-    )
-
-
-def _trigrams(t):
-    """Consecutive-token triple array — the 3-gram sibling of
-    ``_bigrams`` (same zip_with-over-slices shape, same reason: no
-    per-element re-evaluation of the tokenizer)."""
-    z = F.arrays_zip(
-        F.slice(t, 1, F.size(t) - 2).alias("w1"),
-        F.slice(t, 2, F.size(t) - 2).alias("w2"),
-        F.slice(t, 3, F.size(t) - 2).alias("w3"),
-    )
-    return F.when(F.size(t) >= 3, z).otherwise(
-        F.array().cast("array<struct<w1:string,w2:string,w3:string>>")
-    )
-
-
-def trigram_lm_train(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Train the 3-gram count model stupid-backoff scoring consumes:
-    one row per observed n-gram — trigram rows carry all three words,
-    bigram rows have ``w3 = NULL``, unigram rows ``w2 = w3 = NULL``.
-    ONE scan, ONE tokenize, one explode + ONE groupBy (single
-    fixed-width shuffle); model size is bounded by the corpus's
-    distinct n-grams, not its row count. (Round-15 optimization: the
-    earlier three-branch union re-scanned and re-tokenized the corpus
-    once per n-gram order; all three gram arrays are now built from
-    one materialized token array and exploded together — same
-    multiset of rows, identical counts.)
-    """
-    tok = docs.select(_toks(text_col).alias("_t"))
-    t = F.col("_t")
-    n = F.size(t)
-    nulls = F.array_repeat(F.lit(None).cast("string"), n)
-    unis = F.arrays_zip(t.alias("w1"), nulls.alias("w2"), nulls.alias("w3"))
-    bis = F.when(
-        n >= 2,
-        F.arrays_zip(
-            F.slice(t, 1, n - 1).alias("w1"),
-            F.slice(t, 2, n - 1).alias("w2"),
-            F.slice(nulls, 1, n - 1).alias("w3"),
-        ),
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string,w3:string>>"))
-    return (
-        tok.select(
-            F.explode(F.concat(unis, bis, _trigrams(t))).alias("g")
-        )
-        .select("g.w1", "g.w2", "g.w3")
-        .groupBy("w1", "w2", "w3")
-        .agg(F.count("*").alias("cnt"))
-    )
-
-
-def stupid_backoff_score(
-    docs: DataFrame,
-    lm: DataFrame,
-    alpha_milli: int = 400,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    broadcast_model: bool | None = None,
-    broadcast_max_rows: int = 8_000_000,
-    model_materialized: bool = False,
-    n_salts: int = 16,
-    salt_threshold: float = 0.5,
-    model_stats=None,
-) -> DataFrame:
-    """Trigram "stupid backoff" scoring (Brants et al. 2007) — the
-    smoothing actually used for web-scale n-gram LMs because it needs
-    NO discount statistics, just raw counts with a fixed backoff
-    penalty:
-
-        S(w3|w1 w2) = c(w1 w2 w3) / c(w1 w2)          if seen
-                    = α · c(w2 w3) / c(w2)            else if seen
-                    = α² · c(w3) / N                  else if w3 seen
-                    = α² · 1 / N                      OOV floor
-
-    with ``α = alpha_milli / 1000`` (0.4, the published constant).
-    Scores are NOT normalized probabilities (the trade Brants makes
-    for scale); the per-document average negative log score and its
-    exponential still rank fluency exactly like perplexity, so the
-    output shape matches the other scorers:
-    ``(doc_id, n_trigrams, avg_neg_logscore, sppl)``. Documents with
-    fewer than three tokens carry NULL scores.
-
-    Determinism: every count ratio is ONE IEEE division of exact
-    int64s; α arrives as ``alpha_milli/1000`` (one exact-int
-    division — bit-identical to the literal the oracle writes), the
-    backoff multiplications follow a pinned tree shape, per-trigram
-    ``ln`` rounds to 6 into DECIMAL(18,6) (order-independent sum) —
-    the x93 oracle replays counts, backoff cases, and the rollup as
-    chained CTEs.
-
-    Plan: the model materializes once (localCheckpoint, same caveat
-    as ``perplexity_score``), its derived tables broadcast under the
-    shared auto-pick policy (``_resolve_broadcast``; the model row
-    count rides the same scalar agg that derives ``N``, so the probe
-    is free), and the corpus is scanned once (trigram explode + NULL
-    sentinel, map-side). A trigram model is corpus-bounded — Brants-
-    scale models are exactly what this smoothing exists for — so the
-    over-bound case warns and falls back to shuffle joins instead of
-    OOMing executors.
-
-    The shuffle fallback is SKEW-GUARDED like the other two scorers:
-    the unigram-count entropy rides the same scalar agg as ``N`` (no
-    extra pass — the unigram keys are the most concentrated of the
-    five join keys, so they are the signal), and below
-    ``salt_threshold`` all five score joins are salted over
-    ``n_salts`` deterministic salts (corpus side scattered by
-    xxhash64, model sides replicated) — row-identical output with hot
-    keys spread over ``n_salts`` reducers.
-    """
-    if not isinstance(alpha_milli, int) or not 0 < alpha_milli < 1000:
-        raise ValueError(
-            "stupid_backoff_score: alpha_milli must be an int in (0, 1000),"
-            f" got {alpha_milli!r}"
-        )
-    _validate_salt_knobs("stupid_backoff_score", n_salts, salt_threshold)
-    if not model_materialized:
-        lm = lm.localCheckpoint(eager=True)
-    tri = lm.filter(F.col("w3").isNotNull()).select(
-        F.col("w1").alias("_t_w1"),
-        F.col("w2").alias("_t_w2"),
-        F.col("w3").alias("_t_w3"),
-        F.col("cnt").alias("_c123"),
-    )
-    big = lm.filter(F.col("w3").isNull() & F.col("w2").isNotNull()).select(
-        F.col("w1").alias("_b_w1"),
-        F.col("w2").alias("_b_w2"),
-        F.col("cnt").alias("_b_cnt"),
-    )
-    uni = lm.filter(F.col("w2").isNull()).select(
-        F.col("w1").alias("_u_w1"), F.col("cnt").alias("_u_cnt")
-    )
-    # ONE bounded agg yields the unigram total N (the scoring floor),
-    # the model row count (the auto-broadcast size signal), AND the
-    # unigram-count entropy statistics (the skew pre-flight for the
-    # shuffle fallback — unigram keys are the most concentrated of the
-    # five join keys)
-    n_tokens, n_model, u_keys, u_nlogn = (
-        model_stats if model_stats is not None else _sb_model_stats(lm)
-    )
-    n_tokens = int(n_tokens or 0)
-    if n_tokens == 0:
-        raise ValueError("stupid_backoff_score: empty model")
-    _broadcasting = _resolve_broadcast(
-        "stupid_backoff_score", int(n_model), broadcast_model, broadcast_max_rows
-    )
-    _bc = F.broadcast if _broadcasting else (lambda df: df)
-    _ne = _model_norm_entropy(n_tokens, u_keys, u_nlogn)
-    _salted = not _broadcasting and _ne is not None and _ne < salt_threshold
-    if _salted:
-        _warn_salting("stupid_backoff_score", salt_threshold, n_salts)
-
-    triples = _triple_rows(docs, id_col, text_col)
-    if _salted:
-        # one deterministic salt per corpus triple; each model table is
-        # replicated across all n_salts values under its own salt
-        # column, and every join condition gains a salt equality — each
-        # triple meets exactly ONE replica of its matching row, so the
-        # output is row-identical to the unsalted left joins while the
-        # Zipf-hot unigram/bigram keys land on n_salts reducers.
-        triples = _salt_probe(
-            triples, ["_id", "w1", "w2", "w3"], n_salts, "_ss"
-        )
-        tri = _salt_replicate(tri, n_salts, "_ts")
-        big = _salt_replicate(big, n_salts, "_gs")
-        uni = _salt_replicate(uni, n_salts, "_ns")
-        _tri_on = F.col("_ss") == F.col("_ts")
-        _b12_on = F.col("_ss") == F.col("_b12s")
-        _b23_on = F.col("_ss") == F.col("_b23s")
-        _u2_on = F.col("_ss") == F.col("_u2s")
-        _u3_on = F.col("_ss") == F.col("_u3s")
-    else:
-        _tri_on = _b12_on = _b23_on = _u2_on = _u3_on = F.lit(True)
-        big = big.withColumn("_gs", F.lit(0))
-        uni = uni.withColumn("_ns", F.lit(0))
-    j = (
-        triples.join(
-            _bc(tri),
-            (F.col("w1") == F.col("_t_w1"))
-            & (F.col("w2") == F.col("_t_w2"))
-            & (F.col("w3") == F.col("_t_w3"))
-            & _tri_on,
-            "left",
-        )
-        .join(
-            _bc(
-                big.withColumnRenamed("_b_cnt", "_c12").withColumnRenamed(
-                    "_gs", "_b12s"
-                )
-            ),
-            (F.col("w1") == F.col("_b_w1"))
-            & (F.col("w2") == F.col("_b_w2"))
-            & _b12_on,
-            "left",
-        )
-        .drop("_b_w1", "_b_w2")
-        .join(
-            _bc(
-                big.select(
-                    F.col("_b_w1").alias("_b2_w1"),
-                    F.col("_b_w2").alias("_b2_w2"),
-                    F.col("_b_cnt").alias("_c23"),
-                    F.col("_gs").alias("_b23s"),
-                )
-            ),
-            (F.col("w2") == F.col("_b2_w1"))
-            & (F.col("w3") == F.col("_b2_w2"))
-            & _b23_on,
-            "left",
-        )
-        .join(
-            _bc(
-                uni.select(
-                    F.col("_u_w1").alias("_u2_w1"),
-                    F.col("_u_cnt").alias("_c2"),
-                    F.col("_ns").alias("_u2s"),
-                )
-            ),
-            (F.col("w2") == F.col("_u2_w1")) & _u2_on,
-            "left",
-        )
-        .join(
-            _bc(
-                uni.select(
-                    F.col("_u_w1").alias("_u3_w1"),
-                    F.col("_u_cnt").alias("_c3"),
-                    F.col("_ns").alias("_u3s"),
-                )
-            ),
-            (F.col("w3") == F.col("_u3_w1")) & _u3_on,
-            "left",
-        )
-    )
-    # scoring arithmetic as parsed strings (round 16 — the _pair_rows
-    # construction-cost batching; identical expression trees, x93's
-    # oracle pins the values). ``a`` is the same Divide-of-casts tree
-    # the Column form built; constant folding collapses both alike.
-    a = f"(CAST({int(alpha_milli)} AS DOUBLE) / CAST(1000 AS DOUBLE))"
-    nt = int(n_tokens)
-    s = (
-        "CASE WHEN _c123 IS NOT NULL THEN"
-        " CAST(_c123 AS DOUBLE) / CAST(_c12 AS DOUBLE)"
-        f" WHEN _c23 IS NOT NULL THEN {a} *"
-        " (CAST(_c23 AS DOUBLE) / CAST(_c2 AS DOUBLE))"
-        f" WHEN _c3 IS NOT NULL THEN ({a} * {a}) *"
-        f" (CAST(_c3 AS DOUBLE) / CAST({nt} AS DOUBLE))"
-        f" ELSE ({a} * {a}) * (CAST(1 AS DOUBLE) / CAST({nt} AS DOUBLE)) END"
-    )
-    per_doc = (
-        j.selectExpr(
-            "_id",
-            "CAST(w1 IS NOT NULL AS BIGINT) AS _is_tg",
-            "CASE WHEN w1 IS NOT NULL THEN "
-            f"CAST(round(ln({s}), 6) AS DECIMAL(18,6)) END AS _q",
-        )
-        .groupBy("_id")
-        .agg(F.sum("_is_tg").alias("n_trigrams"), F.sum("_q").alias("_total"))
-    )
-    avg_nls = (
-        "CASE WHEN n_trigrams > 0 THEN "
-        "-(CAST(_total AS DOUBLE) / CAST(n_trigrams AS DOUBLE)) END"
-    )
-    return per_doc.selectExpr(
-        f"_id AS `{id_col}`",
-        "n_trigrams",
-        f"{avg_nls} AS avg_neg_logscore",
-        f"round(exp({avg_nls}), 6) AS sppl",
     )
 
 
@@ -1350,8 +953,6 @@ def perplexity_buckets(
     ``perplexity_score`` already pays. Reference scope:
     beyond-reference (training-pipeline extension).
     """
-    from pyspark.sql import Window
-
     if n_buckets < 2:
         raise ValueError(f"perplexity_buckets: need n_buckets >= 2, got {n_buckets}")
     if labels is None:
@@ -1435,154 +1036,6 @@ def perplexity_buckets(
     )
 
 
-def jelinek_mercer_score(
-    docs: DataFrame,
-    lm: DataFrame,
-    lam: float = 0.75,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    broadcast_model: bool | None = None,
-    broadcast_max_rows: int = 8_000_000,
-    model_materialized: bool = False,
-    n_salts: int = 16,
-    salt_threshold: float = 0.5,
-    model_stats=None,
-    pairs: DataFrame | None = None,
-) -> DataFrame:
-    """Jelinek-Mercer INTERPOLATED bigram scoring — the fourth classic
-    smoothing family beside add-alpha (:func:`perplexity_score`),
-    Kneser-Ney (:func:`kneser_ney_score`), and stupid backoff
-    (:func:`stupid_backoff_score`): instead of discounting or backing
-    off, mix the maximum-likelihood bigram with a smoothed unigram,
-    ``p(w2|w1) = λ·c(w1,w2)/c(w1) + (1-λ)·(c(w2)+1)/(T+V)`` — the
-    interpolation weight ``λ`` is the tuning knob CCNet-style filters
-    sweep. The unigram leg is add-1 smoothed so unseen words keep
-    ``p > 0`` (a bare ML mixture hands ``ln 0`` to any OOV token).
-
-    Same model table as :func:`bigram_lm_train` (unigram rows carry
-    both legs: the ``c(w1)`` denominator AND the ``c(w2)`` backoff
-    count), same output shape as ``perplexity_score``
-    (``doc_id, n_bigrams, avg_neg_logprob, ppl``), same determinism
-    contract: exact int64 counts, λ and 1-λ are the same IEEE doubles
-    in any engine, each token's ``ln(p)`` rounds to 6 and sums as
-    DECIMAL(18,6), ``ppl`` rounds 6 because ``exp`` is only
-    ulp-identical.
-
-    Shares the scorers' size-guarded auto-broadcast policy
-    (``_resolve_broadcast``) AND their skew pre-flight: when the model
-    has to shuffle (over-bound) and its bigram distribution is
-    concentrated (normalized entropy below ``salt_threshold``), all
-    three score joins are salted over ``n_salts`` deterministic salts
-    (probe rows carry one salt, model tables replicate across all) —
-    row-identical output, Zipf-hot keys spread over ``n_salts``
-    reducers.
-    """
-    if not 0.0 < lam < 1.0:
-        raise ValueError(
-            f"jelinek_mercer_score: lam must be in (0, 1), got {lam!r}"
-        )
-    _validate_salt_knobs("jelinek_mercer_score", n_salts, salt_threshold)
-    if not model_materialized:
-        lm = lm.localCheckpoint(eager=True)
-    uni = lm.filter(F.col("w2").isNull()).select(
-        F.col("w1").alias("_c_w1"), F.col("cnt").alias("_c1")
-    )
-    # the SAME unigram rows, re-keyed on w2 for the backoff leg
-    uni2 = lm.filter(F.col("w2").isNull()).select(
-        F.col("w1").alias("_u_w2"), F.col("cnt").alias("_cu")
-    )
-    bi = lm.filter(F.col("w2").isNotNull()).select(
-        F.col("w1").alias("_b_w1"),
-        F.col("w2").alias("_b_w2"),
-        F.col("cnt").alias("_c2"),
-    )
-    v, n_model, t_tokens, b_tokens, b_keys, b_nlogn = (
-        model_stats if model_stats is not None else _jm_model_stats(lm)
-    )
-    broadcast_model = _resolve_broadcast(
-        "jelinek_mercer_score", n_model, broadcast_model, broadcast_max_rows
-    )
-    if broadcast_model:
-        uni, uni2, bi = F.broadcast(uni), F.broadcast(uni2), F.broadcast(bi)
-    _ne = _model_norm_entropy(b_tokens, b_keys, b_nlogn)
-    _salted = not broadcast_model and _ne is not None and _ne < salt_threshold
-
-    # ``pairs`` injection: see perplexity_score (same contract)
-    if pairs is None:
-        pairs = _pair_rows(docs, id_col, text_col)
-    if _salted:
-        # same construction as the other three scorers (see
-        # _salt_probe/_salt_replicate): one deterministic salt per
-        # corpus pair, model tables replicated across all salts, every
-        # join gains a salt equality — row-identical to the unsalted
-        # left joins, hot keys on n_salts reducers.
-        _warn_salting("jelinek_mercer_score", salt_threshold, n_salts)
-        pairs = _salt_probe(pairs, ["_id", "w1", "w2"], n_salts, "_ps")
-        bi = _salt_replicate(bi, n_salts, "_bs")
-        uni = _salt_replicate(uni, n_salts, "_us")
-        uni2 = _salt_replicate(uni2, n_salts, "_u2s")
-        joined = (
-            pairs.join(
-                bi,
-                (pairs.w1 == bi._b_w1)
-                & (pairs.w2 == bi._b_w2)
-                & (pairs._ps == bi._bs),
-                "left",
-            )
-            .join(
-                uni,
-                (pairs.w1 == uni._c_w1) & (pairs._ps == uni._us),
-                "left",
-            )
-            .join(
-                uni2,
-                (pairs.w2 == uni2._u_w2) & (pairs._ps == uni2._u2s),
-                "left",
-            )
-        )
-    else:
-        joined = (
-            pairs.join(
-                bi, (pairs.w1 == bi._b_w1) & (pairs.w2 == bi._b_w2), "left"
-            )
-            .join(uni, pairs.w1 == uni._c_w1, "left")
-            .join(uni2, pairs.w2 == uni2._u_w2, "left")
-        )
-    # scoring arithmetic as parsed strings (round 16 — the _pair_rows
-    # construction-cost batching; identical trees, x110's oracle pins
-    # the values). Double literals use the `...D` suffix so they parse
-    # AS DOUBLE with the exact repr round-trip of the F.lit floats
-    # they replace (a bare SQL decimal literal would parse DECIMAL).
-    denom = float(int(t_tokens or 0) + int(v))
-    ml = (
-        "CASE WHEN coalesce(_c1, 0) > 0 THEN"
-        " CAST(coalesce(_c2, 0) AS DOUBLE) / CAST(_c1 AS DOUBLE)"
-        " ELSE 0.0D END"
-    )
-    backoff = f"CAST(coalesce(_cu, 0) + 1 AS DOUBLE) / {denom!r}D"
-    p = f"{float(lam)!r}D * ({ml}) + {1.0 - float(lam)!r}D * ({backoff})"
-    per_doc = (
-        joined.selectExpr(
-            "_id",
-            "CAST(w1 IS NOT NULL AS BIGINT) AS _is_bg",
-            "CASE WHEN w1 IS NOT NULL THEN "
-            f"CAST(round(ln({p}), 6) AS DECIMAL(18,6)) END AS _q",
-        )
-        .groupBy("_id")
-        .agg(F.sum("_is_bg").alias("n_bigrams"), F.sum("_q").alias("_total"))
-    )
-    avg_nll = (
-        "CASE WHEN n_bigrams > 0 THEN "
-        "-(CAST(_total AS DOUBLE) / CAST(n_bigrams AS DOUBLE)) END"
-    )
-    return per_doc.selectExpr(
-        f"_id AS `{id_col}`",
-        "n_bigrams",
-        f"{avg_nll} AS avg_neg_logprob",
-        f"round(exp({avg_nll}), 6) AS ppl",
-    )
-
-
 def _addk_scores_pair(
     docs: DataFrame,
     model: DataFrame,
@@ -1592,87 +1045,71 @@ def _addk_scores_pair(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Score every document under TWO add-1 bigram models in ONE
-    corpus pass (round 16, §2.4 — doremi's fused scoring half).
+    corpus pass (doremi's fused scoring half) through the scoring
+    core, both models' tables broadcast in one map-side stage (the
+    caller gates on their combined rows).
 
     ``model`` is the fused count table ``(w1, w2, cnt, cnt_t)``:
     ``cnt`` the base-corpus counts (= ``bigram_lm_train(docs)``),
     ``cnt_t`` the target-subset counts (a gram unseen in the target
-    has ``cnt_t = 0`` — exactly absent from the target model). The
-    corpus is exploded into bigram pairs ONCE and left-joined against
-    both models' broadcast uni/bi tables in the same map-side stage;
-    one groupBy(_id) emits both documents' sums. Each model's
-    per-pair probability/ln/round/DECIMAL tree is byte-for-byte the
-    expression ``perplexity_score`` builds (alpha=1), so per-doc
-    ``avg_neg_logprob`` values are bit-identical to two independent
-    scoring passes — the x142 DuckDB oracle and the pred-vs-DataFrame
-    equivalence test pin it. Returns ``(id_col, _ab, _ar)``; docs
-    with no bigram evidence carry NULL in both (the sentinel row
-    keeps them in the output, as in ``perplexity_score``)."""
-    uni_b = model.filter("w2 IS NULL").select(
-        F.col("w1").alias("_cb_w1"), F.col("cnt").alias("_c1b")
+    has ``cnt_t = 0`` — exactly absent from the target model). Each
+    model's probability is ``perplexity_score``'s (alpha=1), so the
+    per-doc ``_ab``/``_ar`` averages are bit-identical to two
+    independent scoring passes — pinned by the x142 DuckDB oracle and
+    the pred-vs-DataFrame equivalence test. Docs with no bigram
+    evidence carry NULL in both."""
+    models = [
+        (model.filter("w2 IS NOT NULL").selectExpr("w1", "w2", "cnt AS _c2b"), ["w1", "w2"]),
+        (model.filter("w2 IS NULL").selectExpr("w1", "cnt AS _c1b"), ["w1"]),
+        (
+            model.filter("w2 IS NOT NULL AND cnt_t > 0").selectExpr("w1", "w2", "cnt_t AS _c2r"),
+            ["w1", "w2"],
+        ),
+        (model.filter("w2 IS NULL AND cnt_t > 0").selectExpr("w1", "cnt_t AS _c1r"), ["w1"]),
+    ]
+    return _score(
+        "doremi_domain_weights", docs, 2, text_col, id_col, models, None, True, 0,
+        [
+            ("_ab", None, _addk_p(1, v_b, "_c2b", "_c1b")),
+            ("_ar", None, _addk_p(1, v_r, "_c2r", "_c1r")),
+        ],
     )
-    bi_b = model.filter("w2 IS NOT NULL").select(
-        F.col("w1").alias("_bb_w1"),
-        F.col("w2").alias("_bb_w2"),
-        F.col("cnt").alias("_c2b"),
+
+
+def _domain_weights(
+    joined: DataFrame, eta: float, prior: DataFrame | None = None
+) -> DataFrame:
+    """The per-domain DoReMi update shared by the single-round and the
+    iterated operator: ``n_docs``, exact DECIMAL(18,6) sums of the
+    6-rounded per-doc ``_ab``/``_ar``, ``excess_anlp`` (rounded 6),
+    ``weight = round(prior · exp(eta · excess), 6)`` and the share
+    over an exact decimal total. ``prior`` is the previous round's
+    ``(domain, _prev, n_selected)`` table (broadcast onto the few-row
+    aggregate; its ``n_selected`` rides along), or None for the
+    single round's uniform prior."""
+    keep = ["domain", "n_docs"]
+    weight = F.exp(F.lit(float(eta)) * F.col("excess_anlp"))
+
+    def dsum(c):
+        return F.sum(F.round(c, 6).cast("decimal(18,6)")).cast("double")
+
+    w = joined.groupBy("domain").agg(
+        F.count("*").alias("n_docs"), dsum("_ab").alias("_sb"), dsum("_ar").alias("_sr")
     )
-    uni_r = model.filter("w2 IS NULL AND cnt_t > 0").select(
-        F.col("w1").alias("_cr_w1"), F.col("cnt_t").alias("_c1r")
-    )
-    bi_r = model.filter("w2 IS NOT NULL AND cnt_t > 0").select(
-        F.col("w1").alias("_br_w1"),
-        F.col("w2").alias("_br_w2"),
-        F.col("cnt_t").alias("_c2r"),
-    )
-    pairs = _pair_rows(docs, id_col, text_col)
-    j = (
-        pairs.join(
-            F.broadcast(bi_b),
-            (pairs.w1 == F.col("_bb_w1")) & (pairs.w2 == F.col("_bb_w2")),
-            "left",
-        )
-        .join(F.broadcast(uni_b), pairs.w1 == F.col("_cb_w1"), "left")
-        .join(
-            F.broadcast(bi_r),
-            (pairs.w1 == F.col("_br_w1")) & (pairs.w2 == F.col("_br_w2")),
-            "left",
-        )
-        .join(F.broadcast(uni_r), pairs.w1 == F.col("_cr_w1"), "left")
-    )
-    pb = (
-        "(CAST(coalesce(_c2b, 0) + 1 AS DOUBLE)"
-        f" / CAST(coalesce(_c1b, 0) + 1 * {int(v_b)} AS DOUBLE))"
-    )
-    pr = (
-        "(CAST(coalesce(_c2r, 0) + 1 AS DOUBLE)"
-        f" / CAST(coalesce(_c1r, 0) + 1 * {int(v_r)} AS DOUBLE))"
-    )
-    per_doc = (
-        j.selectExpr(
-            "_id",
-            "CAST(w1 IS NOT NULL AS BIGINT) AS _is_bg",
-            "CASE WHEN w1 IS NOT NULL THEN "
-            f"CAST(round(ln({pb}), 6) AS DECIMAL(18,6)) END AS _qb",
-            "CASE WHEN w1 IS NOT NULL THEN "
-            f"CAST(round(ln({pr}), 6) AS DECIMAL(18,6)) END AS _qr",
-        )
-        .groupBy("_id")
-        .agg(
-            F.sum("_is_bg").alias("n_bigrams"),
-            F.sum("_qb").alias("_tb"),
-            F.sum("_qr").alias("_tr"),
-        )
-    )
-    ab = (
-        "CASE WHEN n_bigrams > 0 THEN "
-        "-(CAST(_tb AS DOUBLE) / CAST(n_bigrams AS DOUBLE)) END"
-    )
-    ar = (
-        "CASE WHEN n_bigrams > 0 THEN "
-        "-(CAST(_tr AS DOUBLE) / CAST(n_bigrams AS DOUBLE)) END"
-    )
-    return per_doc.selectExpr(
-        f"_id AS `{id_col}`", f"{ab} AS _ab", f"{ar} AS _ar"
+    if prior is not None:
+        w = w.join(F.broadcast(prior), "domain")
+        keep.insert(1, "n_selected")
+        weight = F.col("_prev") * weight
+    w = w.withColumn(
+        "excess_anlp",
+        F.round(F.col("_sb") / F.col("n_docs") - F.col("_sr") / F.col("n_docs"), 6),
+    ).withColumn("weight", F.round(weight, 6))
+    tot = F.sum(F.col("weight").cast("decimal(18,6)")).over(Window.partitionBy())
+    return w.select(
+        *keep,
+        "excess_anlp",
+        "weight",
+        F.round(F.col("weight") / tot.cast("double"), 6).alias("mixture_share"),
     )
 
 
@@ -1716,32 +1153,30 @@ def doremi_domain_weights(
     scoreable docs).
 
     Scale: the scoring is the same auto-broadcast map-only scan x84
-    runs at 100 TB; the per-domain aggregate is one fixed-width
-    shuffle on the domain key; everything after it is a few-row
-    window. Reference scope: beyond-reference (training-pipeline
-    extension).
+    runs at 100 TB (``broadcast_max_rows`` bounds each scoring pass);
+    the per-domain aggregate is one fixed-width shuffle on the domain
+    key; everything after it is a few-row window. Reference scope:
+    beyond-reference (training-pipeline extension).
 
-    ``target_pred`` (round 16, §2.4 — the dsir_score/x131 pattern):
-    when the target is a predicate-selected subset of ``docs``, pass
-    the predicate instead of a DataFrame and the whole update fuses
-    to TWO corpus-wide passes (the algorithmic floor: count grams
-    once, score once) from the generic path's four. ONE
-    explode+groupBy counts BOTH corpora (``count`` / ``count_if`` —
-    the token_drift_split trick; a gram with ``cnt_t = 0`` is exactly
-    a gram absent from the target model, and both count columns are
-    exact int64 either way), checkpointed once (vocab-bounded, the
-    same bound as each scorer's own model checkpoint); ONE corpus
-    pass scores both models (:func:`_addk_scores_pair`, per-model
-    expression trees identical to ``perplexity_score``'s); and the
-    per-document join against ``domain`` runs once instead of twice.
-    When the two models together exceed ``broadcast_max_rows`` (the
-    fused pass broadcasts both at once), scoring falls back to the
-    two independent passes — each broadcasts its own model while it
-    fits the bound alone, else takes its own skew-salted shuffle
-    join — while keeping the fused single-pass training.
-    Values are bit-identical to the generic path by construction —
-    pinned by the x142 DuckDB oracle and the pred-vs-DataFrame
-    equivalence test.
+    ``target_pred`` (the dsir_score/x131 pattern): when the target is
+    a predicate-selected subset of ``docs``, pass the predicate
+    instead of a DataFrame and the whole update fuses to TWO
+    corpus-wide passes (the algorithmic floor: count grams once, score
+    once) from the generic path's four. ONE explode+groupBy counts
+    BOTH corpora (:func:`_split_counts`; a gram with ``cnt_t = 0`` is
+    exactly a gram absent from the target model, and both count
+    columns are exact int64 either way), checkpointed once
+    (vocab-bounded, the same bound as each scorer's own model
+    checkpoint); ONE corpus pass scores both models
+    (:func:`_addk_scores_pair`); and the per-document join against
+    ``domain`` runs once instead of twice. When the two models
+    together exceed ``broadcast_max_rows`` (the fused pass broadcasts
+    both at once), scoring falls back to the two independent passes —
+    each broadcasts its own model while it fits the bound alone, else
+    takes its own skew-guarded shuffle join — while keeping the fused
+    single-pass training. Values are bit-identical to the generic
+    path by construction — pinned by the x142 DuckDB oracle and the
+    pred-vs-DataFrame equivalence test.
     """
     if (target is None) == (target_pred is None):
         raise ValueError(
@@ -1749,122 +1184,44 @@ def doremi_domain_weights(
             "separate corpus) or target_pred (a predicate selecting "
             "the target subset of docs)"
         )
+
+    def score(lm, alias, stats=None):
+        # a model with precomputed stats is the fused, checkpointed one
+        return perplexity_score(
+            docs,
+            lm,
+            text_col=text_col,
+            broadcast_max_rows=broadcast_max_rows,
+            model_materialized=stats is not None,
+            model_stats=stats,
+        ).select("doc_id", F.col("avg_neg_logprob").alias(alias))
+
     if target_pred is None:
-        base_lm = bigram_lm_train(docs, text_col=text_col)
-        ref_lm = bigram_lm_train(target, text_col=text_col)
-        sb = perplexity_score(docs, base_lm, text_col=text_col).select(
-            "doc_id", F.col("avg_neg_logprob").alias("_ab")
-        )
-        sr = perplexity_score(docs, ref_lm, text_col=text_col).select(
-            "doc_id", F.col("avg_neg_logprob").alias("_ar")
-        )
-        joined = (
-            docs.select("doc_id", F.col(domain_col).alias("domain"))
-            .join(sb, "doc_id")
-            .join(sr, "doc_id")
-            .filter(F.col("_ab").isNotNull() & F.col("_ar").isNotNull())
+        scored = score(bigram_lm_train(docs, text_col), "_ab").join(
+            score(bigram_lm_train(target, text_col), "_ar"), "doc_id"
         )
     else:
-        pred = (
-            F.expr(target_pred)
-            if isinstance(target_pred, str)
-            else target_pred
-        )
-        # ONE explode + ONE groupBy trains BOTH models. Row multisets
-        # are exactly bigram_lm_train's: base counts every gram of
-        # every doc; target counts only rows whose flag is true (a
-        # NULL predicate counts like filter() — not at all).
-        tok = docs.select(
-            pred.cast("boolean").alias("_tgt"), _toks(text_col).alias("_t")
-        )
-        nulls = F.array_repeat(F.lit(None).cast("string"), F.size("_t"))
-        unis = F.arrays_zip(F.col("_t").alias("w1"), nulls.alias("w2"))
-        grams = tok.select(
-            "_tgt",
-            F.explode(F.concat(unis, _bigrams(F.col("_t")))).alias("g"),
-        ).select("_tgt", "g.w1", "g.w2")
-        model = (
-            grams.groupBy("w1", "w2")
-            .agg(
-                F.count("*").alias("cnt"),
-                F.count(F.when(F.col("_tgt"), 1)).alias("cnt_t"),
-            )
-            .localCheckpoint(eager=True)
+        model = _lm_train(docs, 2, text_col, target_pred).localCheckpoint(
+            eager=True
         )
         base_lm = model.select("w1", "w2", "cnt")
-        ref_lm = model.filter("cnt_t > 0").select(
-            "w1", "w2", F.col("cnt_t").alias("cnt")
-        )
-        stats_b = _addk_model_stats(base_lm)
-        stats_r = _addk_model_stats(ref_lm)
-        # the fused pass broadcasts BOTH models in one stage, so the
-        # bound applies to their combined rows; over it, each model
-        # is gated (and warned about) alone by its own
-        # perplexity_score pass below
-        if int(stats_b["n"]) + int(stats_r["n"]) <= broadcast_max_rows:
+        ref_lm = model.filter("cnt_t > 0").selectExpr("w1", "w2", "cnt_t AS cnt")
+        stats_b = lm_model_stats(base_lm, "addk")
+        stats_r = lm_model_stats(ref_lm, "addk")
+        if int(stats_b["rows"]) + int(stats_r["rows"]) <= broadcast_max_rows:
             scored = _addk_scores_pair(
-                docs,
-                model,
-                int(stats_b["v"]),
-                int(stats_r["v"]),
-                text_col,
+                docs, model, int(stats_b["v"]), int(stats_r["v"]), text_col
             )
         else:
-            sb = perplexity_score(
-                docs,
-                base_lm,
-                text_col=text_col,
-                model_materialized=True,
-                model_stats=stats_b,
-                broadcast_max_rows=broadcast_max_rows,
-            ).select("doc_id", F.col("avg_neg_logprob").alias("_ab"))
-            sr = perplexity_score(
-                docs,
-                ref_lm,
-                text_col=text_col,
-                model_materialized=True,
-                model_stats=stats_r,
-                broadcast_max_rows=broadcast_max_rows,
-            ).select("doc_id", F.col("avg_neg_logprob").alias("_ar"))
-            scored = sb.join(sr, "doc_id")
-        joined = (
-            docs.select("doc_id", F.col(domain_col).alias("domain"))
-            .join(scored, "doc_id")
-            .filter(F.col("_ab").isNotNull() & F.col("_ar").isNotNull())
-        )
-    agg = joined.groupBy("domain").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(F.round("_ab", 6).cast("decimal(18,6)"))
-        .cast("double")
-        .alias("_sb"),
-        F.sum(F.round("_ar", 6).cast("decimal(18,6)"))
-        .cast("double")
-        .alias("_sr"),
+            scored = score(base_lm, "_ab", stats_b).join(
+                score(ref_lm, "_ar", stats_r), "doc_id"
+            )
+    joined = (
+        docs.select("doc_id", F.col(domain_col).alias("domain"))
+        .join(scored, "doc_id")
+        .filter(F.col("_ab").isNotNull() & F.col("_ar").isNotNull())
     )
-    w = agg.select(
-        "domain",
-        "n_docs",
-        F.round(
-            F.col("_sb") / F.col("n_docs") - F.col("_sr") / F.col("n_docs"), 6
-        ).alias("excess_anlp"),
-    ).withColumn(
-        "weight",
-        F.round(F.exp(F.lit(float(eta)) * F.col("excess_anlp")), 6),
-    )
-    from pyspark.sql import Window
-
-    tot = F.sum(F.col("weight").cast("decimal(18,6)")).over(
-        Window.partitionBy()
-    )
-    return w.select(
-        "domain",
-        "n_docs",
-        "excess_anlp",
-        "weight",
-        F.round(F.col("weight") / tot.cast("double"), 6).alias(
-            "mixture_share"
-        ),
-    )
+    return _domain_weights(joined, eta)
 
 
 def doremi_domain_weights_iterated(
@@ -1906,11 +1263,12 @@ def doremi_domain_weights_iterated(
 
     Determinism (the x142 contract, extended across rounds): every
     per-round statistic uses the exact-decimal/round-at-6 discipline
-    of the single-round operator; the ONLY values that cross the
-    driver boundary between rounds are the 6-decimal shares (read
-    back exactly via ``Decimal(str(·))``) and the integer ``n_d``
-    (an exact decimal×int floor), so a DuckDB oracle can replay all
-    T rounds as chained CTEs. Per-round results are
+    of the single-round operator (the same :func:`_domain_weights`
+    helper, with the prior share as a column); the ONLY values that
+    cross the driver boundary between rounds are the 6-decimal shares
+    (read back exactly via ``Decimal(str(·))``) and the integer
+    ``n_d`` (an exact decimal×int floor), so a DuckDB oracle can
+    replay all T rounds as chained CTEs. Per-round results are
     ``localCheckpoint``-ed (bounded: one row per domain), so the
     returned union never re-executes an LM chain.
 
@@ -1920,9 +1278,8 @@ def doremi_domain_weights_iterated(
     shuffle — T rounds cost T× the single-round operator's scoring,
     nothing super-linear. Reference scope: beyond-reference
     (training-pipeline extension)."""
+    import math
     from decimal import Decimal, ROUND_HALF_UP
-
-    from pyspark.sql import Window
 
     if rounds < 1:
         raise ValueError(f"doremi iterated: rounds must be >= 1, got {rounds}")
@@ -1989,60 +1346,14 @@ def doremi_domain_weights_iterated(
             .join(sr, "doc_id")
             .filter(F.col("_ab").isNotNull() & F.col("_ar").isNotNull())
         )
-        w = (
-            joined.groupBy("domain")
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum(F.round("_ab", 6).cast("decimal(18,6)"))
-                .cast("double")
-                .alias("_sb"),
-                F.sum(F.round("_ar", 6).cast("decimal(18,6)"))
-                .cast("double")
-                .alias("_sr"),
-            )
-            .join(F.broadcast(prevdf), "domain")
-            .select(
-                "domain",
-                "n_selected",
-                "n_docs",
-                F.round(
-                    F.col("_sb") / F.col("n_docs")
-                    - F.col("_sr") / F.col("n_docs"),
-                    6,
-                ).alias("excess_anlp"),
-                "_prev",
-            )
-            .withColumn(
-                "weight",
-                F.round(
-                    F.col("_prev")
-                    * F.exp(F.lit(float(eta)) * F.col("excess_anlp")),
-                    6,
-                ),
-            )
-        )
-        tot = F.sum(F.col("weight").cast("decimal(18,6)")).over(
-            Window.partitionBy()
-        )
-        w = w.select(
-            F.lit(t).alias("round"),
-            "domain",
-            "n_selected",
-            "n_docs",
-            "excess_anlp",
-            "weight",
-            F.round(F.col("weight") / tot.cast("double"), 6).alias(
-                "mixture_share"
-            ),
-        ).localCheckpoint(eager=True)
+        w = _domain_weights(joined, eta, prevdf)
+        w = w.select(F.lit(t).alias("round"), *w.columns).localCheckpoint(eager=True)
         # a domain whose docs are all too short to score never reaches
         # the agg — carry its share forward instead of KeyError-ing
         # the next round's budget (it still gets its >=1-doc floor)
         rows_t = w.collect()
-        import math as _math
-
         if any(
-            r["mixture_share"] is None or _math.isnan(r["mixture_share"])
+            r["mixture_share"] is None or math.isnan(r["mixture_share"])
             for r in rows_t
         ):
             # every weight rounded to 0 at 6 decimals → Σ = 0 and the

@@ -374,6 +374,54 @@ def probe_shard_schema(shard_addr: str, table: str) -> list[tuple[str, int]]:
     return cols
 
 
+def _fetch_frame(
+    spark: SparkSession,
+    probe_cols: list[tuple[str, int]],
+    targets: list[tuple[str, int, str, str, str]],
+) -> DataFrame:
+    """One executor task per ``(host, port, user, db, sql)`` target,
+    each running its SQL over raw pgwire and yielding the rows as
+    pandas frames typed by the probed ``(column, oid)`` list — the
+    fetch half shared by :func:`read_shard_pg` and
+    :func:`read_shards_sql`."""
+    from csvb_spark.sources.pgclient import OID_SPARK
+
+    schema = ", ".join(f"{c} {OID_SPARK.get(oid, 'string')}" for c, oid in probe_cols)
+    oids = [oid for _, oid in probe_cols]
+    names = [c for c, _ in probe_cols]
+
+    # The closure must not require csvb_spark on executor PYTHONPATH
+    # (driver-side sys.path edits don't propagate to python workers),
+    # so the pgclient module is pickled BY VALUE into the task.
+    import csvb_spark.sources.pgclient as _pgclient_mod
+
+    try:
+        from pyspark.cloudpickle import register_pickle_by_value
+
+        register_pickle_by_value(_pgclient_mod)
+    except Exception:  # noqa: BLE001 — older vendored cloudpickle
+        pass
+    _rows_pdf = _pgclient_mod.rows_to_pandas
+    _q = _pgclient_mod.pg_simple_query
+
+    def fetch(batches):
+        for pdf in batches:
+            for _, r in pdf.iterrows():
+                _, rows = _q(
+                    r["host"], int(r["port"]), r["sql"], user=r["user"], database=r["db"]
+                )
+                # None on an empty result set (the float64→timestamp
+                # Arrow trap) — the guard lives once, in pgclient
+                out = _rows_pdf(rows, names, oids)
+                if out is not None:
+                    yield out
+
+    work = spark.createDataFrame(
+        targets, "host string, port int, user string, db string, sql string"
+    ).repartition(len(targets))
+    return work.mapInPandas(fetch, schema=schema)
+
+
 def read_shard_pg(
     spark: SparkSession,
     shard_addr: str,
@@ -408,8 +456,6 @@ def read_shard_pg(
     N > 1, each slice carries the limit as a safe upper bound and the
     exact global limit is re-applied Spark-side.
     """
-    from csvb_spark.sources.pgclient import OID_SPARK
-
     params = parse_postgres_conn_str(shard_addr)
     host = params["host"]
     port = int(params.get("port", "5432"))
@@ -447,41 +493,9 @@ def read_shard_pg(
             sql += f" LIMIT {limit}"
         part_sqls.append(sql)
 
-    schema = ", ".join(f"{c} {OID_SPARK.get(oid, 'string')}" for c, oid in probe_cols)
-    oids = [oid for _, oid in probe_cols]
-    names = [c for c, _ in probe_cols]
-
-    # The closure must not require csvb_spark on executor PYTHONPATH
-    # (driver-side sys.path edits don't propagate to python workers),
-    # so the pgclient module is pickled BY VALUE into the task.
-    import csvb_spark.sources.pgclient as _pgclient_mod
-
-    try:
-        from pyspark.cloudpickle import register_pickle_by_value
-
-        register_pickle_by_value(_pgclient_mod)
-    except Exception:  # noqa: BLE001 — older vendored cloudpickle
-        pass
-    _rows_pdf = _pgclient_mod.rows_to_pandas
-    _q = _pgclient_mod.pg_simple_query
-
-    def fetch(batches):
-        for pdf in batches:
-            for _, r in pdf.iterrows():
-                _, rows = _q(
-                    r["host"], int(r["port"]), r["sql"], user=r["user"], database=r["db"]
-                )
-                # None on an empty result set (the float64→timestamp
-                # Arrow trap) — the guard lives once, in pgclient
-                out = _rows_pdf(rows, names, oids)
-                if out is not None:
-                    yield out
-
-    work = spark.createDataFrame(
-        [(host, port, user, db, s) for s in part_sqls],
-        "host string, port int, user string, db string, sql string",
-    ).repartition(n_parts)
-    out = work.mapInPandas(fetch, schema=schema)
+    out = _fetch_frame(
+        spark, probe_cols, [(host, port, user, db, s) for s in part_sqls]
+    )
     if limit is not None and n_parts > 1:
         out = out.limit(limit)  # per-slice LIMIT is only an upper bound
     return out
@@ -622,7 +636,7 @@ def read_shards_sql(
     union the results — one executor task per shard, schema probed
     once with a ``LIMIT 0`` wrapper (both Postgres and csvb_spark
     shards answer the column set without executing the query)."""
-    from csvb_spark.sources.pgclient import OID_SPARK, pg_simple_query
+    from csvb_spark.sources.pgclient import pg_simple_query
 
     first = parse_postgres_conn_str(shard_addrs[0])
     probe_cols, _ = pg_simple_query(
@@ -634,34 +648,9 @@ def read_shards_sql(
     )
     if not probe_cols:
         raise ValueError(f"shard SQL produced no columns: {sql!r}")
-    schema = ", ".join(f"{c} {OID_SPARK.get(oid, 'string')}" for c, oid in probe_cols)
-    oids = [oid for _, oid in probe_cols]
-    names = [c for c, _ in probe_cols]
-
-    import csvb_spark.sources.pgclient as _pgclient_mod
-
-    try:
-        from pyspark.cloudpickle import register_pickle_by_value
-
-        register_pickle_by_value(_pgclient_mod)
-    except Exception:  # noqa: BLE001 — older vendored cloudpickle
-        pass
-    _rows_pdf = _pgclient_mod.rows_to_pandas
-    _q = _pgclient_mod.pg_simple_query
-
-    def fetch(batches):
-        for pdf in batches:
-            for _, r in pdf.iterrows():
-                _, rows = _q(
-                    r["host"], int(r["port"]), r["sql"], user=r["user"], database=r["db"]
-                )
-                # None on an empty result set (the float64→timestamp
-                # Arrow trap) — the guard lives once, in pgclient
-                out = _rows_pdf(rows, names, oids)
-                if out is not None:
-                    yield out
-
-    work = spark.createDataFrame(
+    return _fetch_frame(
+        spark,
+        probe_cols,
         [
             (
                 (p := parse_postgres_conn_str(a))["host"],
@@ -672,9 +661,7 @@ def read_shards_sql(
             )
             for a in shard_addrs
         ],
-        "host string, port int, user string, db string, sql string",
-    ).repartition(len(shard_addrs))
-    return work.mapInPandas(fetch, schema=schema)
+    )
 
 
 _FED_AGG_MERGE = {

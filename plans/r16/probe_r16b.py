@@ -25,10 +25,10 @@ sys.path.insert(0, "/root/repo")
 from csvb_spark.session import get_session  # noqa: E402
 from csvb_spark.operators import lm as LM  # noqa: E402
 from csvb_spark.operators.lm import (  # noqa: E402
-    _addk_model_stats,
-    _bigrams,
-    _pair_rows,
-    _toks,
+    _gram_rows,
+    _toks_sql,
+    _zip_sql,
+    lm_model_stats,
 )
 
 SF = "/root/testdata/sf0.1"
@@ -49,12 +49,12 @@ def x142_fused(spark, sf=SF):
     # one explode trains both models
     tok = d.select(
         F.expr("doc_id % 7 = 0").cast("boolean").alias("_tgt"),
-        _toks("text").alias("_t"),
+        F.expr(_toks_sql("text")).alias("_t"),
     )
     nulls = F.array_repeat(F.lit(None).cast("string"), F.size("_t"))
     unis = F.arrays_zip(F.col("_t").alias("w1"), nulls.alias("w2"))
     grams = tok.select(
-        "_tgt", F.explode(F.concat(unis, _bigrams(F.col("_t")))).alias("g")
+        "_tgt", F.explode(F.concat(unis, F.expr(_zip_sql(2, 2)))).alias("g")
     ).select("_tgt", "g.w1", "g.w2")
     model = (
         grams.groupBy("w1", "w2")
@@ -68,8 +68,8 @@ def x142_fused(spark, sf=SF):
     ref_lm = model.filter("cnt_t > 0").select(
         "w1", "w2", F.col("cnt_t").alias("cnt")
     )
-    vb = int(_addk_model_stats(base_lm)["v"])
-    vr = int(_addk_model_stats(ref_lm)["v"])
+    vb = int(lm_model_stats(base_lm, "addk")["v"])
+    vr = int(lm_model_stats(ref_lm, "addk")["v"])
     # one corpus pass scores both models
     uni_b = model.filter("w2 IS NULL").select(
         F.col("w1").alias("_cb_w1"), F.col("cnt").alias("_c1b")
@@ -87,7 +87,7 @@ def x142_fused(spark, sf=SF):
         F.col("w2").alias("_br_w2"),
         F.col("cnt_t").alias("_c2r"),
     )
-    pairs = _pair_rows(d, "doc_id", "text")
+    pairs = _gram_rows(d, 2, "text", "doc_id")
     j = (
         pairs.join(
             F.broadcast(bi_b),
@@ -186,9 +186,9 @@ def x89_cur(spark, sf=SF):
 
 def x89_btrim(spark, sf=SF):
     d = docs_df(spark, sf)
-    tok = d.filter(F.col("doc_id") % 2 == 0).select(_toks("text").alias("_t"))
+    tok = d.filter(F.col("doc_id") % 2 == 0).select(F.expr(_toks_sql("text")).alias("_t"))
     bi_train = (
-        tok.select(F.explode(_bigrams(F.col("_t"))).alias("g"))
+        tok.select(F.explode(F.expr(_zip_sql(2, 2))).alias("g"))
         .select("g.w1", "g.w2")
         .groupBy("w1", "w2")
         .agg(F.count("*").alias("cnt"))
@@ -197,14 +197,9 @@ def x89_btrim(spark, sf=SF):
 
 
 # --------------------------------------------------------------- C: x84
-def x84_cur(spark, sf=SF):
-    d = docs_df(spark, sf)
-    return LM.perplexity_score(d, LM.bigram_lm_train(d))
-
-
 def x84_fused(spark, sf=SF):
     d = docs_df(spark, sf)
-    tok = d.select(F.col("doc_id").alias("_id"), _toks("text").alias("_t"))
+    tok = d.select(F.col("doc_id").alias("_id"), F.expr(_toks_sql("text")).alias("_t"))
     nulls = F.array_repeat(F.lit(None).cast("string"), F.size("_t"))
     unis = F.arrays_zip(F.col("_t").alias("w1"), nulls.alias("w2"))
     sent = F.array(
@@ -216,7 +211,7 @@ def x84_fused(spark, sf=SF):
     base = (
         tok.select(
             "_id",
-            F.explode(F.concat(unis, _bigrams(F.col("_t")), sent)).alias("g"),
+            F.explode(F.concat(unis, F.expr(_zip_sql(2, 2)), sent)).alias("g"),
         )
         .select("_id", "g.w1", "g.w2")
         .localCheckpoint(eager=True)
@@ -229,7 +224,7 @@ def x84_fused(spark, sf=SF):
     )
     pairs = base.filter("w2 IS NOT NULL OR w1 IS NULL")
     # scoring tail of perplexity_score (broadcast path, alpha=1)
-    stats = _addk_model_stats(lm)
+    stats = lm_model_stats(lm, "addk")
     v = int(stats["v"])
     uni = lm.filter(F.col("w2").isNull()).select(
         F.col("w1").alias("_c_w1"), F.col("cnt").alias("_c1")
@@ -382,44 +377,9 @@ def x142_pred(spark, sf=SF):
     return LM.doremi_domain_weights(d, target_pred="doc_id % 7 = 0")
 
 
-def x84_shared(spark, sf=SF):
-    d = docs_df(spark, sf)
-    lm, pairs = LM.bigram_shared_train_inputs(d)
-    return LM.perplexity_score(d, lm, pairs=pairs)
-
-
-def x110_cur(spark, sf=SF):
-    d = docs_df(spark, sf)
-    return LM.jelinek_mercer_score(d, LM.bigram_lm_train(d))
-
-
-def x110_shared(spark, sf=SF):
-    d = docs_df(spark, sf)
-    lm, pairs = LM.bigram_shared_train_inputs(d)
-    return LM.jelinek_mercer_score(d, lm, pairs=pairs)
-
-
-def x95_shared(spark, sf=SF):
-    d = docs_df(spark, sf)
-    lm, pairs = LM.bigram_shared_train_inputs(d)
-    return LM.perplexity_buckets(d, lm, pairs=pairs)
-
-
-def x89_shared(spark, sf=SF):
-    d = docs_df(spark, sf)
-    lm, pairs = LM.bigram_shared_train_inputs(
-        d, train_pred="doc_id % 2 = 0", bigram_only=True
-    )
-    return LM.kneser_ney_score(d, lm, pairs=pairs)
-
-
 PAIRS = {
     "x142": (x142_generic, x142_pred),
     "x89": (x89_cur, x89_btrim),
-    "x89s": (x89_cur, x89_shared),
-    "x84": (x84_cur, x84_shared),
-    "x110": (x110_cur, x110_shared),
-    "x95": (x95_cur, x95_shared),
     "x95d": (x95_preD, x95_cur),
 }
 

@@ -120,7 +120,7 @@ def model_side():
     bi = m.filter(F.col("w2").isNotNull()).select("w1", "w2", "cnt")
     ctx = bi.groupBy("w1").agg(F.sum("cnt").alias("_c1"), F.count("*").alias("_n1fwd"))
     cont = bi.groupBy("w2").agg(F.count("*").alias("_n1bwd"))
-    L._kn_model_stats(m)
+    L.lm_model_stats(m, "kn")
     noop(ctx)
     noop(cont)
 

@@ -26,7 +26,7 @@ spark = get_session(app_name="probe_x86", master="local[32]", shuffle_partitions
 docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
 
 from csvb_spark.operators import lm as L
-from csvb_spark.operators.lm import _toks
+from csvb_spark.operators.lm import _toks_sql
 
 
 def declared():
@@ -44,7 +44,7 @@ def one_scan(alpha=1, k=40):
         docs.select(
             op.cast("boolean").alias("_o"),
             np_.cast("boolean").alias("_n"),
-            F.explode(_toks("text")).alias("token"),
+            F.expr(f"explode({_toks_sql('text')}) AS token"),
         )
         .filter(F.col("_o") | F.col("_n"))
         .groupBy("token")

@@ -38,7 +38,7 @@ docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
 train = docs.filter(F.col("doc_id") % 2 == 0)
 
 from csvb_spark.operators import lm as L
-from csvb_spark.operators.lm import _pair_rows
+from csvb_spark.operators.lm import _gram_rows
 
 
 def t(label, fn, n=3):
@@ -91,7 +91,7 @@ def kn_fused(docs, lm, discount_milli=750, id_col="doc_id", text_col="text"):
     b_types, v_cont = int(stats["b"]), int(stats["v"])
     scale = b_types + v_cont + 1
     dm = int(discount_milli)
-    pairs = _pair_rows(docs, id_col, text_col)
+    pairs = _gram_rows(docs, 2, text_col, id_col)
     ws = wordstats.select("word", "_c1", "_n1fwd", "_n1bwd")
     j = (
         pairs.join(F.broadcast(bi.withColumnRenamed("cnt", "_c2")), ["w1", "w2"], "left")

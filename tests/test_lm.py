@@ -782,22 +782,6 @@ def test_perplexity_buckets_assignment_is_broadcast(spark):
     assert "BroadcastHashJoin" in _plan_of(out)
 
 
-def test_perplexity_score_validates_salt_knobs(spark):
-    """n_salts=0 would otherwise surface as REMAINDER_BY_ZERO mid-job
-    (ANSI) or silently mis-score every bigram (non-ANSI) — loud
-    upfront like every other knob."""
-    import pytest as _pytest
-
-    from csvb_spark.operators.lm import bigram_lm_train, perplexity_score
-
-    docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    lm = bigram_lm_train(docs)
-    with _pytest.raises(ValueError, match="n_salts"):
-        perplexity_score(docs, lm, n_salts=0)
-    with _pytest.raises(ValueError, match="salt_threshold"):
-        perplexity_score(docs, lm, salt_threshold=1.5)
-
-
 # --- round 8: Jelinek-Mercer interpolation ------------------------------------
 def test_jelinek_mercer_ranks_and_validates(spark):
     """JM interpolation: fluent text outranks unseen-bigram text,
@@ -900,12 +884,12 @@ def test_cli_score_lm_jm_smoothing(spark, tmp_path, capsys):
 @pytest.mark.parametrize("smoothing", ["kn", "sb", "jm", "addk"])
 def test_kn_sb_shuffle_fallback_salts_skewed_key(spark, smoothing):
     """ALL FOUR smoothing families share the skew guard on the
-    over-bound shuffle fallback (one _salt_probe/_salt_replicate
-    construction). Planted 90%-one-n-gram corpus +
-    broadcast_max_rows=0: each scorer must detect the concentrated key
-    distribution (entropy probe rides the scalar agg it already runs)
-    and salt the score joins, with output row-identical to the
-    broadcast path; a uniform corpus's fallback must NOT salt."""
+    over-bound shuffle fallback (the scoring core's _join_models).
+    Planted 90%-one-n-gram corpus + broadcast_max_rows=0: each scorer
+    must detect the concentrated key distribution (entropy probe rides
+    the scalar agg it already runs) and salt the score joins, with
+    output row-identical to the broadcast path; a uniform corpus's
+    fallback must NOT salt."""
     import warnings as _warnings
 
     from csvb_spark.operators.lm import (
@@ -956,12 +940,6 @@ def test_kn_sb_shuffle_fallback_salts_skewed_key(spark, smoothing):
     assert not any("salting" in str(w.message) for w in caught2)
     assert "xxhash64" not in _plan_of(unsalted)
 
-    # knob validation matches the add-k scorer's contract
-    with pytest.raises(ValueError, match="n_salts"):
-        score(docs, lm, n_salts=0)
-    with pytest.raises(ValueError, match="salt_threshold"):
-        score(docs, lm, salt_threshold=-0.1)
-
 
 def test_doremi_domain_weights_semantics(spark):
     """DoReMi polarity (round 14, x142): the domain whose text the
@@ -992,50 +970,6 @@ def test_doremi_domain_weights_semantics(spark):
     assert out["clean"].n_docs == 30 and out["junk"].n_docs == 30
     assert out["clean"].mixture_share > out["junk"].mixture_share
     assert abs(out["clean"].mixture_share + out["junk"].mixture_share - 1.0) < 1e-5
-
-
-def test_bigram_shared_train_inputs_matches_separate(spark):
-    """Round-16 refactor pin: the shared-explode composition's
-    ``(lm, pairs)`` must be EXACTLY the row multisets of the two
-    separate constructions (``bigram_lm_train`` + ``_pair_rows``) on
-    adversarial input — NULL/empty text (the '' token; sentinel
-    rows), single-token docs (no bigrams), a train predicate, and
-    the bigram_only variant Kneser-Ney consumes."""
-    from csvb_spark.operators.lm import (
-        _pair_rows,
-        bigram_lm_train,
-        bigram_shared_train_inputs,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (0, "a b c a b"),
-            (1, None),
-            (2, ""),
-            (3, "single"),
-            (4, "a b"),
-            (5, "x y z x y z"),
-        ],
-        "doc_id bigint, text string",
-    )
-
-    def eq(a, b):
-        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-    lm, pairs = bigram_shared_train_inputs(docs)
-    eq(lm, bigram_lm_train(docs))
-    eq(pairs, _pair_rows(docs, "doc_id", "text"))
-
-    lm2, pairs2 = bigram_shared_train_inputs(
-        docs, train_pred="doc_id % 2 = 0", bigram_only=True
-    )
-    eq(
-        lm2,
-        bigram_lm_train(docs.filter("doc_id % 2 = 0")).filter(
-            "w2 IS NOT NULL"
-        ),
-    )
-    eq(pairs2, _pair_rows(docs, "doc_id", "text"))
 
 
 def test_doremi_target_pred_matches_target_df(spark):
@@ -1082,6 +1016,20 @@ def test_doremi_target_pred_matches_target_df(spark):
         key=lambda r: (r["domain"] is None, r["domain"]),
     )
     assert [tuple(r) for r in fb_rows] == [tuple(r) for r in pred_rows]
+    # the target= branch honours the bound too: both scoring passes
+    # warn and shuffle, with the same weights
+    import warnings
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        df_fb_rows = sorted(
+            doremi_domain_weights(
+                docs, docs.filter("doc_id % 2 = 0"), broadcast_max_rows=0
+            ).collect(),
+            key=lambda r: (r["domain"] is None, r["domain"]),
+        )
+    assert any("broadcast_max_rows" in str(w.message) for w in caught)
+    assert [tuple(r) for r in df_fb_rows] == [tuple(r) for r in df_rows]
     # exactly one of target / target_pred, loudly
     with _pytest.raises(ValueError, match="exactly one"):
         doremi_domain_weights(docs)
@@ -1111,18 +1059,18 @@ def test_doremi_fused_broadcast_gates_on_both_models(spark, monkeypatch):
         "doc_id bigint, text string, source string",
     )
     sizes, fused = [], []
-    stats, pair = lm._addk_model_stats, lm._addk_scores_pair
+    stats, pair = lm._model_stats, lm._addk_scores_pair
 
-    def spy_stats(model):
-        row = stats(model)
-        sizes.append(row["n"])
+    def spy_stats(*args):
+        row = stats(*args)
+        sizes.append(row["rows"])
         return row
 
     def spy_pair(*args):
         fused.append(1)
         return pair(*args)
 
-    monkeypatch.setattr(lm, "_addk_model_stats", spy_stats)
+    monkeypatch.setattr(lm, "_model_stats", spy_stats)
     monkeypatch.setattr(lm, "_addk_scores_pair", spy_pair)
 
     def weights(bound: int) -> list[tuple]:

@@ -1155,15 +1155,26 @@ def test_pagerank_dangling_scalar_broadcasts(spark):
     assert "CartesianProduct" not in plan
 
 
-# --- round 7: perplexity auto-broadcast --------------------------------------
-def test_perplexity_default_broadcasts_bounded_model(spark, sf_dir):
-    """With DEFAULT args a bounded LM broadcasts: the score pass is
-    map-only over the corpus — no sort-merge exchange of the
-    bigram-exploded corpus on the Zipf-skewed (w1, w2) key."""
-    from csvb_spark.operators.lm import bigram_lm_train, perplexity_score
+# --- LM scorers: auto-broadcast ----------------------------------------------
+@pytest.mark.parametrize("smoothing", ["addk", "kn", "sb", "jm"])
+def test_lm_scorers_default_broadcast_model_tables(spark, sf_dir, smoothing):
+    """With DEFAULT args every smoothing broadcasts its bounded model
+    tables (bigrams, context/continuation counts, backoff lookups):
+    the score pass is map-only over the corpus — no sort-merge
+    exchange of the n-gram-exploded corpus on a Zipf-skewed token
+    key."""
+    from pyspark.sql import functions as F
 
+    from csvb_spark.operators import lm as L
+
+    train, score = {
+        "addk": (L.bigram_lm_train, L.perplexity_score),
+        "kn": (L.bigram_lm_train, L.kneser_ney_score),
+        "sb": (L.trigram_lm_train, L.stupid_backoff_score),
+        "jm": (L.bigram_lm_train, L.jelinek_mercer_score),
+    }[smoothing]
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    plan = _plan(perplexity_score(docs, bigram_lm_train(docs)))
+    plan = _plan(score(docs, train(docs.filter(F.col("doc_id") % 2 == 0))))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
@@ -1201,35 +1212,6 @@ def test_mulaw_pipeline_is_map_only(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     plan = _plan(mulaw_round_trip(docs))
     assert "Exchange" not in plan
-
-
-def test_kneser_ney_scoring_broadcasts_model_tables(spark, sf_dir):
-    """All three model-derived tables (bigrams, context totals,
-    continuation counts) broadcast: the corpus is never sort-merged
-    on a token key."""
-    from pyspark.sql import functions as F
-
-    from csvb_spark.operators.lm import bigram_lm_train, kneser_ney_score
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    lm = bigram_lm_train(docs.filter(F.col("doc_id") % 2 == 0))
-    plan = _plan(kneser_ney_score(docs, lm))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
-def test_stupid_backoff_broadcasts_all_model_tables(spark, sf_dir):
-    """All five model lookups broadcast: the trigram-exploded corpus
-    is never sort-merged on a token key."""
-    from pyspark.sql import functions as F
-
-    from csvb_spark.operators.lm import stupid_backoff_score, trigram_lm_train
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    lm = trigram_lm_train(docs.filter(F.col("doc_id") % 2 == 0))
-    plan = _plan(stupid_backoff_score(docs, lm))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
 
 
 def test_minhash_skew_preflight_warns_on_hot_bucket(spark):
