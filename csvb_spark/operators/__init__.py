@@ -1,7 +1,9 @@
 """Beyond-reference operators for large-scale training-data pipelines.
 
 - ``dedup``       exact / MinHash-LSH / SimHash / n-gram Jaccard
-- ``similarity``  brute-force, hyperplane-LSH and IVF cosine top-k
+- ``similarity``  exact, LSH, IVF and IVF-PQ top-k, k-NN join, k-means
+                  and PQ training on one numpy fold and one
+                  cell-assignment kernel
 - ``text``        token stats, quality, language ID, fingerprints
 - ``sessions``    gap-based sessionization (batch; streaming twin in
                   ``csvb_spark.streaming.sessions``)

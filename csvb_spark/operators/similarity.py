@@ -1,22 +1,33 @@
-"""Embedding similarity search over an ``array<float>`` column.
+"""Embedding similarity over an ``array<float>`` column: exact cosine
+top-k, LSH and IVF/PQ approximate search, k-means and PQ training,
+embedding-space dedup, projection and drift.
 
-- ``cosine(a, b)``: higher-order-function dot/norm in DOUBLE
-  precision — sequential fold, so the result is bit-deterministic
-  (matches a sequential oracle).
-- ``brute_force_topk``: exact baseline — broadcast the probe(s),
-  map-side cosine, TakeOrderedAndProject for the top-k. One pass over
-  the corpus, no shuffle except the final k-row gather. This is the
-  right *exact* plan at any scale; cost is O(corpus × dim).
-- ``hyperplane_lsh_topk``: the scale path — random-hyperplane LSH:
-  each vector maps to a small integer bucket (sign bits of dot
-  products with fixed pseudo-random hyperplanes); the probe only
-  scans its bucket (and optionally Hamming-adjacent buckets). At
-  100 TB you persist the bucketed table partitioned by bucket id, so
-  a query prunes to ~1/2^bits of the data before any compute.
+All arithmetic that decides a ranking runs in one IEEE order, the
+strict left-fold ``0.0 + t_0 + t_1 + …`` in DOUBLE that DuckDB's
+``list_dot_product`` also uses, so every operator is bit-identical to
+a SQL oracle:
 
-Hyperplanes are generated from a seeded NumPy RNG on the driver and
-inlined as literals — deterministic and tiny (n_planes × dim
-doubles), no broadcast machinery needed.
+- ``dot`` / ``norm2`` / ``cosine``: the fold as a SQL higher-order
+  ``aggregate``. The exact paths score with it (``brute_force_topk``,
+  ``knn_join``, ``matryoshka_topk``, ``hyperplane_lsh_topk``).
+- ``_fold``: the same fold in numpy, over the last axis of broadcast
+  arrays, for a dot product or a squared L2 distance. The driver runs
+  it for every constant it computes (centroid norms, probe cell
+  rankings, PQ ADC tables), the executors inside the kernel below.
+- ``_cell_kernel``: the one Arrow-batched ``pandas_udf`` that assigns
+  cells. Against centroid literals it gives each row its nearest cell
+  (a probe its ``n`` nearest, a PQ row one code per subspace) by one
+  of three metrics, ties to the lower cid:
+  ``cos`` (max ``v·c/‖c‖``; ``ivf_topk``), ``l2ip`` (min
+  ``c·c − 2·v·c``; ``kmeans_train``, ``knn_join``, ``write_ivf_index``)
+  and ``l2`` (min squared L2; PQ codes and IVF-PQ cells). A NULL or
+  wrong-dim vector gets a NULL cell (``bucket_id``'s rule): it is
+  never an IVF candidate and never enters a centroid mean.
+
+Quantizers (hyperplanes, seed vectors, trained or seeded codebooks) are
+bounded driver constants inlined as literals, so a probe prunes to its
+cells before any distance math and a DuckDB oracle can replay
+assignment, probing and scoring.
 """
 
 from __future__ import annotations
@@ -69,25 +80,32 @@ def brute_force_topk(
     probe must have columns (id_col, vec_col); output:
     (vec_id, cos_sim) ordered desc with id tiebreak.
     """
-    p = F.broadcast(
-        probe.select(
-            F.col(id_col).alias("probe_id"),
-            F.col(vec_col).alias("probe_vec"),
-            norm2(as_double(F.col(vec_col))).alias("probe_norm"),
-        )
-    )
+    p = F.broadcast(probe.select(*_probe_cols(id_col, vec_col)))
+    return _cos_topk(embeddings.crossJoin(p), k, vec_col, id_col)
+
+
+def _probe_cols(id_col: str, vec_col: str) -> list[Column]:
+    """A broadcast probe's id, vector and norm, the norm computed once
+    per probe with :func:`cosine`'s own fold."""
+    return [
+        F.col(id_col).alias("probe_id"),
+        F.col(vec_col).alias("probe_vec"),
+        norm2(as_double(F.col(vec_col))).alias("probe_norm"),
+    ]
+
+
+def _cos_sim(vec_col: str) -> Column:
+    return F.round(
+        cosine_pnorm(F.col(vec_col), F.col("probe_vec"), F.col("probe_norm")), 6
+    ).alias("cos_sim")
+
+
+def _cos_topk(candidates: DataFrame, k: int, vec_col: str, id_col: str) -> DataFrame:
+    """Top-k (row, probe) candidate pairs by cosine DESC, id ASC, the
+    probe's own row excluded."""
     return (
-        embeddings.crossJoin(p)
-        .filter(F.col(id_col) != F.col("probe_id"))
-        .select(
-            id_col,
-            F.round(
-                cosine_pnorm(
-                    F.col(vec_col), F.col("probe_vec"), F.col("probe_norm")
-                ),
-                6,
-            ).alias("cos_sim"),
-        )
+        candidates.filter(F.col(id_col) != F.col("probe_id"))
+        .select(id_col, _cos_sim(vec_col))
         .orderBy(F.desc("cos_sim"), F.asc(id_col))
         .limit(k)
     )
@@ -147,9 +165,7 @@ def matryoshka_topk(
 
     p = F.broadcast(
         probe.select(
-            F.col(id_col).alias("probe_id"),
-            F.col(vec_col).alias("probe_vec"),
-            norm2(as_double(F.col(vec_col))).alias("probe_norm"),
+            *_probe_cols(id_col, vec_col),
             pref(F.col(vec_col)).alias("probe_pref"),
             norm2(as_double(pref(F.col(vec_col)))).alias("probe_pref_norm"),
         )
@@ -258,27 +274,205 @@ def hyperplane_lsh_topk(
     probe_buckets = F.array(pb, *[pb.bitwiseXOR(F.lit(m)) for m in masks])
     p = F.broadcast(
         probe.select(
-            F.col(id_col).alias("probe_id"),
-            F.col(vec_col).alias("probe_vec"),
-            probe_buckets.alias("probe_buckets"),
-            norm2(as_double(F.col(vec_col))).alias("probe_norm"),
+            *_probe_cols(id_col, vec_col), probe_buckets.alias("probe_buckets")
         )
     )
+    candidates = bucketed.join(
+        p, F.array_contains(F.col("probe_buckets"), F.col("bucket"))
+    )
+    return _cos_topk(candidates, k, vec_col, id_col)
+
+
+# --- one fold and one cell-assignment kernel -------------------------------
+
+
+def _numpy_core():
+    """The fold, the three cell metrics and the cell ranking, built as
+    LOCAL functions: cloudpickle ships a module-level function by
+    reference (an executor would have to import csvb_spark) but these
+    by value, so the driver and the executors run the same code."""
+
+    def fold(a, b, sq=False):
+        """Strict left-fold over the last axis, broadcasting the others:
+        ``0.0 + t_0 + t_1 + …`` with ``t_d = a_d·b_d``, or
+        ``(a_d − b_d)²`` when ``sq`` — the IEEE order of :func:`dot`."""
+        a = np.asarray(a, dtype=np.float64)
+        b = np.asarray(b, dtype=np.float64)
+        out = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
+        for d in range(a.shape[-1]):
+            t = a[..., d] - b[..., d] if sq else a[..., d] * b[..., d]
+            out += t * t if sq else t
+        return out
+
+    def dist(V, C, metric):
+        """rows(V) × rows(C), smaller = nearer: ``cos`` is −v·c/‖c‖
+        (the row's own norm cannot change the order), ``l2ip`` is
+        c·c − 2·v·c (nor can ‖v‖²), ``l2`` the squared L2 distance."""
+        if metric == "l2":
+            return fold(V[:, None], C[None], sq=True)
+        dots = fold(V[:, None], C[None])
+        cc = fold(C, C)
+        return -(dots / np.sqrt(cc)) if metric == "cos" else cc - 2.0 * dots
+
+    def rank(V, C, metric, n=1):
+        """Row indices into C of each row's ``n`` nearest cells,
+        nearest first, ties to the lower index."""
+        D = dist(V, C, metric)
+        if n == 1:
+            return D.argmin(axis=1)[:, None]
+        return np.argsort(D, axis=1, kind="stable")[:, :n]
+
+    return fold, dist, rank
+
+
+_fold, _dist, _rank = _numpy_core()
+
+
+def _book_arrays(book: dict[int, list[float]]) -> tuple[np.ndarray, np.ndarray]:
+    ids = sorted(book)
     return (
-        bucketed.join(p, F.array_contains(F.col("probe_buckets"), F.col("bucket")))
-        .filter(F.col(id_col) != F.col("probe_id"))
-        .select(
-            id_col,
-            F.round(
-                cosine_pnorm(
-                    F.col(vec_col), F.col("probe_vec"), F.col("probe_norm")
-                ),
-                6,
-            ).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
-        .limit(k)
+        np.array(ids, dtype=np.int64),
+        np.array([book[c] for c in ids], dtype=np.float64),
     )
+
+
+def _cell_kernel(books: list[dict], metric: str, n: int = 1, probes=None):
+    """The cell-assignment ``pandas_udf`` over a vector column.
+
+    ``books`` holds one ``{cid: components}`` codebook per contiguous
+    slice of the vector: one for IVF, ``m`` for PQ. The UDF returns
+    ``array<bigint>``: the ``n`` nearest cids of a single codebook, or
+    one code per slice. With ``probes`` (P × dim) it returns
+    ``struct<cells, vnorm, pdots>`` instead, adding the row norm and
+    the row's dot with every probe (``ivf_topk``'s scoring inputs).
+    NULL and wrong-dim vectors get NULL.
+
+    Marked nondeterministic (the values are not): a filter on its
+    output would otherwise be pushed below the projection and the
+    optimizer would evaluate the UDF twice."""
+    from pyspark.sql.functions import pandas_udf
+
+    arrays = [_book_arrays(b) for b in books]
+    dim = sum(C.shape[1] for _, C in arrays)
+    P = None if probes is None else np.asarray(probes, dtype=np.float64)
+
+    def cells(vs: pd.Series) -> pd.Series:
+        ok = np.array([v is not None and len(v) == dim for v in vs], dtype=bool)
+        V = np.zeros((int(ok.sum()), dim))
+        if len(V):
+            V[:] = np.stack(vs[ok].tolist())
+        picked, off = [], 0
+        for ids, C in arrays:
+            picked.append(ids[_rank(V[:, off : off + C.shape[1]], C, metric, n)])
+            off += C.shape[1]
+        rows = np.flatnonzero(ok)
+        out = [None] * len(vs)
+        for i, cid in zip(rows, np.concatenate(picked, axis=1)):
+            out[i] = cid
+        if P is None:
+            return pd.Series(out)
+        vnorm = np.full(len(vs), np.nan)
+        vnorm[ok] = np.sqrt(_fold(V, V))
+        pdots = [None] * len(vs)
+        for i, pd_row in zip(rows, _fold(V[:, None], P[None])):
+            pdots[i] = pd_row
+        return pd.DataFrame({"cells": out, "vnorm": vnorm, "pdots": pdots})
+
+    rtype = (
+        "array<bigint>"
+        if P is None
+        else "struct<cells:array<bigint>,vnorm:double,pdots:array<double>>"
+    )
+    return pandas_udf(cells, rtype).asNondeterministic()
+
+
+def _assign(df: DataFrame, book: dict, metric: str, vec_col: str) -> DataFrame:
+    """``df`` plus ``cid``, each row's nearest cell (NULL for a NULL or
+    wrong-dim vector)."""
+    return df.withColumn("cid", _cell_kernel([book], metric)(F.col(vec_col))[0])
+
+
+def _nearest(vecs: np.ndarray, book: dict, metric: str, n: int) -> list[list[int]]:
+    """Driver-side twin of the kernel: each probe's ``n`` nearest cids."""
+    ids, C = _book_arrays(book)
+    return ids[_rank(np.atleast_2d(vecs), C, metric, n)].tolist()
+
+
+def _codebook(centroids, nprobe: int = 1) -> dict[int, list[float]]:
+    """A coarse codebook as ``{cid: components}`` in cid order, from a
+    :func:`kmeans_train`-shaped (cid, pos, val) DataFrame or a dict,
+    validated for what would otherwise fail silently downstream:
+    at least ``nprobe`` cells, no NULL cell, one dimension."""
+    if not isinstance(centroids, dict):
+        by_cid: dict[int, dict[int, float]] = {}
+        for r in centroids.collect():
+            by_cid.setdefault(int(r["cid"]), {})[int(r["pos"])] = float(r["val"])
+        centroids = {c: [v[p] for p in sorted(v)] for c, v in by_cid.items()}
+    if len(centroids) < nprobe:
+        raise ValueError(
+            f"codebook has {len(centroids)} centroids but nprobe={nprobe}"
+        )
+    if any(v is None for v in centroids.values()):
+        raise ValueError("codebook has a NULL centroid")
+    dims = {len(v) for v in centroids.values()}
+    if len(dims) != 1:
+        raise ValueError(f"codebook dimensions are inconsistent: {sorted(dims)}")
+    return {int(c): [float(x) for x in centroids[c]] for c in sorted(centroids)}
+
+
+def _width(book: dict) -> int:
+    return len(next(iter(book.values())))
+
+
+def seed_centroids(
+    embs: DataFrame,
+    n_centroids: int,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    seed_ids: list | None = None,
+) -> dict[int, list[float]]:
+    """The IVF seed convention as a reusable collect: cell ``c``'s
+    centroid is the vector with id ``seed_ids[c]`` (a bounded K×dim
+    driver constant). ``seed_ids`` defaults to ``0..n_centroids-1``,
+    so a corpus whose ids don't start at 0 passes any ``n_centroids``
+    ids it likes — cells are numbered by position in the list."""
+    if seed_ids is None:
+        seed_ids = list(range(n_centroids))
+    if len(seed_ids) != len(set(seed_ids)) or len(seed_ids) != n_centroids:
+        raise ValueError(
+            f"seed_centroids: seed_ids must be {n_centroids} distinct ids,"
+            f" got {seed_ids!r}"
+        )
+    seeds = embs.filter(F.col(id_col).isin(list(seed_ids)))
+    by_id = dict(seeds.select(id_col, vec_col).collect())
+    missing = [s for s in seed_ids if s not in by_id]
+    if missing:
+        raise ValueError(
+            f"seed_centroids: need ids {seed_ids} as seed "
+            f"centroids, found {sorted(by_id)}"
+        )
+    return _codebook({c: by_id[s] for c, s in enumerate(seed_ids)})
+
+
+def _probe_rows(
+    probe: DataFrame, id_col: str, vec_col: str, dim: int, limit: int, who: str
+) -> list[tuple[object, np.ndarray]]:
+    """At most ``limit`` probe rows as ``(id, float64 vector)``. Probes
+    are driver constants, so a NULL or wrong-dim probe vector raises
+    here instead of silently matching nothing."""
+    rows = probe.select(id_col, vec_col).limit(limit).collect()
+    for pid, pv in rows:
+        if pv is None or len(pv) != dim:
+            got = "NULL" if pv is None else f"{len(pv)}-dim"
+            raise ValueError(f"{who}: probe {pid} vector is {got}, expected {dim}-dim")
+    return [(pid, np.array(pv, dtype=np.float64)) for pid, pv in rows]
+
+
+def _probe(probe, id_col, vec_col, dim, who) -> tuple[object, np.ndarray]:
+    rows = _probe_rows(probe, id_col, vec_col, dim, 1, who)
+    if not rows:
+        raise ValueError(f"{who}: empty probe DataFrame")
+    return rows[0]
 
 
 def ivf_topk(
@@ -293,8 +487,9 @@ def ivf_topk(
     max_probes: int = 10_000,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: coarse-quantize every
-    vector to its nearest centroid, then scan only the probe's
-    ``nprobe`` closest centroid lists.
+    vector to its nearest centroid, then scan only each probe's
+    ``nprobe`` closest centroid lists; one global top-k over all
+    probes' candidates.
 
     The BOUNDED-PROBE contract is enforced: the probe side collects to
     the driver (the IVF query shape — a handful of query vectors
@@ -303,76 +498,32 @@ def ivf_topk(
     distributed operator, instead of silently materializing on the
     driver.
 
-    The coarse quantizer is deterministic — centroid c is the vector
-    with ``vec_id == c`` (c < n_centroids), or a trained codebook
+    The coarse quantizer is :func:`seed_centroids` (centroid c is the
+    vector with ``vec_id == c``, c < n_centroids) or a trained codebook
     passed via ``centroids`` ({cid: components}, e.g. a pivoted
-    :func:`kmeans_train` result) — either way the operator is
-    SQL-expressible and oracle-checkable.
-    Collecting the centroid table to the driver is the standard IVF
-    shape: the quantizer is a bounded K×dim constant replicated to
-    every executor (like hyperplanes in ``hyperplane_lsh_topk``), NOT
-    a data-path collect. At 100 TB you'd persist the assignment,
-    partitioned by ``cid``, so a probe prunes to nprobe/K of the
-    corpus at the file level before any distance math.
+    :func:`kmeans_train` result; ``n_centroids`` is then ignored).
+    Cells rank by cosine DESC, cid ASC — the kernel's ``cos`` metric on
+    the executors for assignment, the same fold on the driver for each
+    probe's cells.
 
-    Ranking (both for assignment and probing) orders by cosine DESC
-    with centroid-id ASC tie-break.
+    Plan: one Arrow-batched UDF per corpus row computes the cell, the
+    row norm and the dot with every probe; the rest is scalar codegen
+    (posexplode the dots, keep (row, probe) pairs whose cell that probe
+    probes, cos = pdot/(vnorm·pnorm)) and TakeOrderedAndProject. No
+    join and no interpreted HOF.
     """
-    import math
-
-    if centroids is not None:
-        # a trained quantizer (e.g. kmeans_train output, pivoted to
-        # {cid: [components]}) replaces the seed vectors; n_centroids
-        # is IGNORED in this mode — the codebook defines K. Validate
-        # here: a short or ragged codebook would otherwise surface as
-        # silently reduced probe coverage or a downstream size error.
-        if len(centroids) < nprobe:
-            raise ValueError(
-                f"codebook has {len(centroids)} centroids but nprobe={nprobe}"
-            )
-        dims = {len(v) for v in centroids.values()}
-        if len(dims) != 1:
-            raise ValueError(
-                f"codebook dimensions are inconsistent: {sorted(dims)}"
-            )
-        cents = [(cid, centroids[cid]) for cid in sorted(centroids)]
-    else:
-        cents = [
-            (int(r.cid), list(r.cvec))
-            for r in sorted(
-                embeddings.filter(F.col(id_col) < n_centroids)
-                .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
-                .collect(),
-                key=lambda r: r.cid,
-            )
-        ]
-    # (cid, components, ||c||) — the norm is a Python sequential fold,
-    # same IEEE order as the SQL dot product, so every ranking that
-    # divides by it stays bit-identical to the oracle's formulation.
-    # Assignment/probing rank by dot(v,c)/||c||: the row's own norm is
-    # a positive constant across centroids, so dropping it preserves
-    # the cosine ORDER while cutting the per-row cost.
-    cent_lits = []
-    for cid_, cvec_ in cents:
-        vals = [float(x) for x in cvec_]
-        acc = 0.0  # sequential fold — same IEEE order as the SQL dot product
-        for v in vals:
-            acc += v * v
-        cent_lits.append((cid_, vals, math.sqrt(acc)))
-
     from csvb_spark.operators.dedup import spread
 
-    # bounded-probe contract in ONE driver job (round-15 optimization:
-    # the separate limit+count pre-flight was a second job per call):
-    # collect at most max_probes + 1 rows — the limit pushes into the
-    # scan, so an over-bound probe still fails fast without ever
-    # materializing more than one row past the bound
-    p_rows = (
-        probe.select(F.col(id_col).alias("pid"), F.col(vec_col).alias("pvec"))
-        .limit(max_probes + 1)
-        .collect()
+    book = _codebook(
+        seed_centroids(embeddings, n_centroids, vec_col, id_col)
+        if centroids is None
+        else centroids,
+        nprobe,
     )
-    if len(p_rows) > max_probes:
+    probes = _probe_rows(
+        probe, id_col, vec_col, _width(book), max_probes + 1, "ivf_topk"
+    )
+    if len(probes) > max_probes:
         raise ValueError(
             f"ivf_topk: probe side exceeds max_probes={max_probes} rows;"
             " it is collected to the driver (the bounded-probe IVF"
@@ -380,187 +531,39 @@ def ivf_topk(
             "/cell-equi-join scoring, fully distributed), or raise"
             " max_probes."
         )
+    if not probes:
+        return embeddings.select(id_col, F.lit(0.0).alias("cos_sim")).limit(0)
 
-    if len(p_rows) == 1:
-        # --- fully-vectorized single-probe path (the common shape) ---
-        # Corpus-side assignment + scoring is the hot path; expression
-        # HOFs are interpreted (never whole-stage-codegen'd), so one
-        # Arrow-batched pandas UDF computes, per batch:
-        #   cid   — argmax over a batch×K float64 matmul (ties → first
-        #           index = lowest cid, matching ORDER BY sim DESC,
-        #           cid ASC; matmul differs from the sequential fold
-        #           only in the last ulp, which continuous embedding
-        #           data never turns into a flipped argmax),
-        #   vnorm — sqrt of np.add.accumulate(v*v)[-1]: accumulate is
-        #           a strict LEFT-FOLD (unlike pairwise sum/matmul),
-        #           so this is bit-identical to the SQL/DuckDB
-        #           sequential fold (verified against
-        #           list_dot_product on the fixture data),
-        #   pdot  — add.accumulate(v*probe)[-1], same left-fold.
-        # Downstream the plan is scalar codegen only: filter on
-        # cid ∈ probe_cids, cos = pdot/(vnorm*pnorm), top-k via
-        # TakeOrderedAndProject. No HOF evaluation anywhere.
-        # The closure captures only numpy arrays (pickled by value —
-        # no csvb_spark import needed on executors).
-        from pyspark.sql.functions import pandas_udf
-
-        pid = int(p_rows[0].pid)
-        pv = [float(x) for x in p_rows[0].pvec]
-
-        def _fold_dot(a: list[float], b: list[float]) -> float:
-            acc = 0.0  # sequential fold — same IEEE order as SQL
-            for x, y in zip(a, b):
-                acc += x * y
-            return acc
-
-        cent_vecs = [[float(x) for x in cv] for _, cv in cents]
-        # probe ranking: ORDER BY dot(p,c)/||c|| DESC, cid ASC — all
-        # Python left-folds, bit-identical to the oracle's ranking
-        scored = sorted(
-            (-(_fold_dot(pv, cv) / nc), cid)
-            for cv, (cid, _, nc) in zip(cent_vecs, cent_lits)
-        )
-        probe_cids = [cid for _, cid in scored[:nprobe]]
-        pnorm = math.sqrt(_fold_dot(pv, pv))
-
-        cid_arr = np.array([cid for cid, _, _ in cent_lits], dtype=np.int64)
-        cmat = np.array(cent_vecs, dtype=np.float64)
-        cnorms = np.array([nc for _, _, nc in cent_lits], dtype=np.float64)
-        proj = (cmat / cnorms[:, None]).T  # dim × K
-        pvec_np = np.array(pv, dtype=np.float64)
-
-        @pandas_udf("struct<cid:bigint,vnorm:double,pdot:double>")
-        def _feat(vs: pd.Series) -> pd.DataFrame:
-            import numpy as _np
-
-            if len(vs) == 0:
-                return pd.DataFrame({"cid": [], "vnorm": [], "pdot": []})
-            v = _np.stack([_np.asarray(x, dtype=_np.float64) for x in vs])
-            return pd.DataFrame(
-                {
-                    "cid": cid_arr[_np.argmax(v @ proj, axis=1)],
-                    "vnorm": _np.sqrt(_np.add.accumulate(v * v, axis=1)[:, -1]),
-                    "pdot": _np.add.accumulate(v * pvec_np, axis=1)[:, -1],
-                }
-            )
-
-        # nondeterministic marker (round-15, guide §4.4): the cell
-        # filter below references f.cid, and the optimizer's pushdown
-        # otherwise DUPLICATES the whole UDF — one ArrowEvalPython
-        # under the pushed filter, a second above it re-computing
-        # vnorm/pdot for the survivors (two Python round-trips of the
-        # full embedding column, measured in the x14 plan). The values
-        # are deterministic; the marker only forbids the reorder.
-        _feat = _feat.asNondeterministic()
-
-        return (
-            spread(embeddings)
-            .filter(F.col(id_col) != pid)
-            .select(id_col, _feat(F.col(vec_col)).alias("f"))
-            .filter(F.col("f.cid").isin(probe_cids))
-            .select(
-                id_col,
-                F.round(
-                    F.col("f.pdot") / (F.col("f.vnorm") * F.lit(pnorm)), 6
-                ).alias("cos_sim"),
-            )
-            .orderBy(F.desc("cos_sim"), F.asc(id_col))
-            .limit(k)
-        )
-
-    if not p_rows:
-        return embeddings.select(
-            id_col, F.lit(0.0).alias("cos_sim")
-        ).limit(0)
-
-    # --- multi-probe path: the SAME vectorized shape with a probe
-    # MATRIX. One Arrow-batched pandas UDF computes, per batch, the
-    # corpus-side cell (argmax matmul — ranking only, as above), the
-    # row norm (left-fold accumulate, bit-identical to the SQL fold)
-    # and a dim-folded dot against EVERY probe at once
-    # (batch × P × dim accumulate → batch × P, each entry a strict
-    # left-fold). Downstream is scalar codegen: posexplode the pdots,
-    # keep (row, probe) pairs whose cell is in that probe's probed
-    # set (literal array lookup — the probe count is bounded), cos =
-    # pdot/(vnorm·pnorm), global top-k via TakeOrderedAndProject.
-    # No join in the plan and no interpreted HOF evaluation — the r2
-    # fallback evaluated K HOF dot products per corpus row.
-    from pyspark.sql.functions import pandas_udf
-
-    def _fold_dot(a: list[float], b: list[float]) -> float:
-        acc = 0.0  # sequential fold — same IEEE order as SQL
-        for x, y in zip(a, b):
-            acc += x * y
-        return acc
-
-    cent_vecs = [[float(x) for x in cv] for _, cv in cents]
-    probes_py = [(int(r.pid), [float(x) for x in r.pvec]) for r in p_rows]
-    probe_cids: list[list[int]] = []
-    pnorms: list[float] = []
-    for _pid, pv in probes_py:
-        scored = sorted(
-            (-(_fold_dot(pv, cv) / nc), cid)
-            for cv, (cid, _, nc) in zip(cent_vecs, cent_lits)
-        )
-        probe_cids.append([cid for _, cid in scored[:nprobe]])
-        pnorms.append(math.sqrt(_fold_dot(pv, pv)))
-
-    cid_arr = np.array([cid for cid, _, _ in cent_lits], dtype=np.int64)
-    cmat = np.array(cent_vecs, dtype=np.float64)
-    cnorms = np.array([nc for _, _, nc in cent_lits], dtype=np.float64)
-    proj = (cmat / cnorms[:, None]).T  # dim × K
-    pmat = np.array([pv for _, pv in probes_py], dtype=np.float64)  # P × dim
-
-    @pandas_udf("struct<cid:bigint,vnorm:double,pdots:array<double>>")
-    def _feat_multi(vs: pd.Series) -> pd.DataFrame:
-        import numpy as _np
-
-        if len(vs) == 0:
-            return pd.DataFrame({"cid": [], "vnorm": [], "pdots": []})
-        v = _np.stack([_np.asarray(x, dtype=_np.float64) for x in vs])
-        # dim-axis loop: the same strict left-fold (0.0 + x_0 + x_1 …,
-        # matching the SQL aggregate's F.lit(0.0) seed) in O(batch × P)
-        # memory — the broadcast batch×P×dim temporary this replaces
-        # was ~4 GB per batch at 10k rows × 100 probes × 512 dims
-        pdots = _np.zeros((v.shape[0], pmat.shape[0]), dtype=_np.float64)
-        for d in range(v.shape[1]):
-            pdots += v[:, d, None] * pmat[None, :, d]
-        return pd.DataFrame(
-            {
-                "cid": cid_arr[_np.argmax(v @ proj, axis=1)],
-                "vnorm": _np.sqrt(_np.add.accumulate(v * v, axis=1)[:, -1]),
-                "pdots": list(pdots),
-            }
-        )
-
-    # same §4.4 duplication guard as the single-probe path: the cell
-    # membership filter would otherwise push below the posexplode and
-    # clone the UDF evaluation
-    _feat_multi = _feat_multi.asNondeterministic()
-
+    pids = [pid for pid, _ in probes]
+    pmat = np.array([pv for _, pv in probes])
     cids_lit = F.array(
-        *[F.array(*[F.lit(c) for c in cl]) for cl in probe_cids]
+        *[
+            F.array(*[F.lit(c) for c in cl])
+            for cl in _nearest(pmat, book, "cos", nprobe)
+        ]
     )
-    pid_lit = F.array(*[F.lit(pid) for pid, _ in probes_py])
-    pnorm_lit = F.array(*[F.lit(x) for x in pnorms])
-    j1 = F.col("j") + 1  # posexplode is 0-based, element_at 1-based
+    pid_lit = F.array(*[F.lit(pid) for pid in pids])
+    pnorm_lit = F.array(*[F.lit(float(x)) for x in np.sqrt(_fold(pmat, pmat))])
+    j = F.col("j")
+    cos = F.round(F.col("pdot") / (F.col("vnorm") * pnorm_lit[j]), 6)
+    rows = spread(embeddings)
+    if len(pids) == 1:
+        # the lone probe's self-exclusion pushes into the scan
+        rows = rows.filter(F.col(id_col) != pids[0])
     return (
-        spread(embeddings)
-        .select(id_col, _feat_multi(F.col(vec_col)).alias("f"))
-        .select(
-            id_col,
-            F.col("f.cid").alias("cid"),
-            F.col("f.vnorm").alias("vnorm"),
-            F.posexplode("f.pdots").alias("j", "pdot"),
+        rows.select(
+            id_col, _cell_kernel([book], "cos", probes=pmat)(F.col(vec_col)).alias("f")
         )
-        .filter(F.array_contains(F.element_at(cids_lit, j1), F.col("cid")))
-        .filter(F.col(id_col) != F.element_at(pid_lit, j1))
-        .select(
-            id_col,
-            F.round(
-                F.col("pdot") / (F.col("vnorm") * F.element_at(pnorm_lit, j1)), 6
-            ).alias("cos_sim"),
+        .selectExpr(
+            f"`{id_col}`",
+            "f.cells[0] AS cid",
+            "f.vnorm",
+            "posexplode(f.pdots) AS (j, pdot)",
         )
+        .filter(
+            F.array_contains(cids_lit[j], F.col("cid")) & (F.col(id_col) != pid_lit[j])
+        )
+        .select(id_col, cos.alias("cos_sim"))
         .orderBy(F.desc("cos_sim"), F.asc(id_col))
         .limit(k)
     )
@@ -636,59 +639,43 @@ def kmeans_train(
     Determinism contract (everything an engine could disagree on is
     pinned):
 
-    - init = the ``k`` lowest-id vectors (the same seeding
-      :func:`ivf_topk` uses for its quantizer);
-    - assignment distance is ``dot(c,c) - 2*dot(v,c)`` with the
-      sequential-fold :func:`dot` on both engines (``||v||²`` is
-      constant per row and cannot change the argmin); ties go to the
-      lower centroid id via lexicographic ``array_min`` on
-      ``(distance, cid)`` structs;
-    - the centroid update is a per-(cid, dim) mean of DECIMAL(18,6)
+    - init = the ``k`` lowest-id vectors;
+    - assignment is the kernel's ``l2ip`` metric, argmin of
+      ``dot(c,c) - 2*dot(v,c)`` in the fold's IEEE order (``||v||²`` is
+      constant per row and cannot change the argmin), ties to the
+      lower centroid id;
+    - the centroid update is a per-(cid, dim) mean of DECIMAL(30,6)
       sums — order-independent, so parallel partial aggregation
       cannot perturb it;
-    - a cluster that loses all members keeps its previous centroid.
+    - a cluster that loses all members keeps its previous centroid;
+    - a NULL or wrong-dim vector joins no cluster.
 
     Per iteration: one map-only assignment pass against centroid
     literals + one shuffle (the (cid, dim) aggregate, ≤ k×dim groups).
-    The driver holds only the k×dim quantizer (same bounded-constant
-    pattern as ``ivf_topk``'s centroid collect); at 100 TB swap the
-    k interpreted assignment folds for the pandas_udf matmul exactly
-    as ``ivf_topk`` does, and train on a deterministic sample.
+    The driver holds only the k×dim quantizer.
 
     Returns the trained quantizer as rows ``(cid, pos, val)`` with
     1-based ``pos``.
     """
     spark = embs.sparkSession
-    vecs = embs.select(
-        F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("v")
-    )
+    vecs = embs.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
     init = vecs.orderBy("vid").limit(k).collect()
-    cents: dict[int, list[float]] = {
-        int(r["vid"]): [float(x) for x in r["v"]] for r in init
-    }
-    if len(cents) < k:
-        raise ValueError(f"kmeans_train: need >= {k} vectors, got {len(cents)}")
+    if len(init) < k:
+        raise ValueError(f"kmeans_train: need >= {k} vectors, got {len(init)}")
+    cents = _codebook({int(r["vid"]): r["v"] for r in init})
+    # DECIMAL(30,6) components (sum accumulates in DECIMAL(38,6)): a
+    # (18,6) per-value cast would NULL-overflow any component >= 10^12
+    # and silently zero that centroid dimension via the dict
+    # initialization below.
+    exact = F.col("val").cast("double").cast("decimal(30,6)")
+    mean = (F.sum(exact).cast("double") / F.count("*")).alias("m")
     for _ in range(iters):
-        choices = []
-        for cid in sorted(cents):
-            carr = F.array(*[F.lit(x) for x in cents[cid]])
-            d = dot(carr, carr) - 2.0 * dot(F.col("v"), carr)
-            choices.append(F.struct(d.alias("d"), F.lit(cid).alias("cid")))
-        asn = vecs.withColumn("cid", F.array_min(F.array(*choices))["cid"])
-        # DECIMAL(30,6) components (sum accumulates in DECIMAL(38,6)):
-        # a (18,6) per-value cast would NULL-overflow any component
-        # >= 10^12 and silently zero that centroid dimension via the
-        # dict initialization below. Scale 6 is unchanged, so the
-        # quantization — and the oracle's decimal mean — is identical.
         stats = (
-            asn.select("cid", F.posexplode("v").alias("pos", "val"))
+            _assign(vecs, cents, "l2ip", "v")
+            .filter(F.col("cid").isNotNull())
+            .select("cid", F.posexplode("v").alias("pos", "val"))
             .groupBy("cid", "pos")
-            .agg(
-                (
-                    F.sum(F.col("val").cast("decimal(30,6)")).cast("double")
-                    / F.count("*")
-                ).alias("m")
-            )
+            .agg(mean)
             .collect()
         )
         new: dict[int, list[float]] = {}
@@ -696,8 +683,7 @@ def kmeans_train(
             new.setdefault(int(r["cid"]), [0.0] * len(cents[int(r["cid"])]))[
                 int(r["pos"])
             ] = float(r["m"])
-        for cid, vals in new.items():
-            cents[cid] = vals
+        cents.update(new)
     rows = [
         (cid, pos + 1, val)
         for cid in sorted(cents)
@@ -734,28 +720,6 @@ def emb_near_dedup(
     # heavily-duplicated crawl) — AQE broadcasts it when it actually fits
     return embs.join(drop, "vec_id", "left_anti").select("vec_id", "label")
 
-
-def _collect_codebook(centroids: DataFrame, nprobe: int) -> list[tuple[int, list[float]]]:
-    """Pivot a ``kmeans_train``-shaped (cid, pos, val) DataFrame into
-    ``[(cid, components)]`` sorted by cid, validating what a silent
-    failure downstream would otherwise hide: enough cells to probe,
-    and a consistent dimension across cells."""
-    by_cid: dict[int, dict[int, float]] = {}
-    for r in centroids.collect():
-        by_cid.setdefault(int(r["cid"]), {})[int(r["pos"])] = float(r["val"])
-    if len(by_cid) < nprobe:
-        raise ValueError(
-            f"codebook has {len(by_cid)} centroids but nprobe={nprobe}"
-        )
-    dims = {len(v) for v in by_cid.values()}
-    if len(dims) != 1:
-        raise ValueError(f"codebook dimensions are inconsistent: {sorted(dims)}")
-    return [
-        (cid, [by_cid[cid][p] for p in sorted(by_cid[cid])])
-        for cid in sorted(by_cid)
-    ]
-
-
 def knn_join(
     corpus: DataFrame,
     probes: DataFrame,
@@ -785,16 +749,15 @@ def knn_join(
     of them, fine for a bounded probe batch.
 
     IVF-pruned formulation (``centroids=`` a :func:`kmeans_train`
-    result): both sides are coarse-quantized against the codebook —
-    every corpus row to its single nearest cell (Euclidean argmin
-    ``c·c − 2·v·c`` with lower-cid tie-break, exactly the trainer's
-    assignment), every probe to its ``nprobe`` nearest cells — and
-    candidates meet through a cid equi-join instead of a cross join,
-    so the ranking exchange carries ≈ |probes|×|corpus|·(nprobe/K)
-    rows. The codebook is a bounded K×dim driver constant (the same
-    pattern as :func:`ivf_topk`); scoring and ranking are identical
-    to the exact path. Approximate: a true neighbor in an unprobed
-    cell is missed — that is the IVF contract.
+    result): the kernel's ``l2ip`` metric (``c·c − 2·v·c``, lower-cid
+    ties — the trainer's assignment) puts every corpus row in its
+    nearest cell and every probe in its ``nprobe`` nearest, and
+    candidates meet through a broadcast cid equi-join instead of a
+    cross join, so the ranking exchange carries ≈
+    |probes|×|corpus|·(nprobe/K) rows. Scoring and ranking are
+    identical to the exact path. Approximate: a true neighbor in an
+    unprobed cell is missed — that is the IVF contract. A NULL or
+    wrong-dim vector, on either side, has no cell and meets nothing.
 
     ``exclude_self`` drops candidates whose ``id_col`` equals the
     probe's id — the right default when probes are drawn from the
@@ -807,57 +770,22 @@ def knn_join(
     """
     from pyspark.sql import Window
 
-    p_cols = [
-        F.col(id_col).alias("probe_id"),
-        F.col(vec_col).alias("probe_vec"),
-        norm2(as_double(F.col(vec_col))).alias("probe_norm"),
-    ]
+    p_cols = _probe_cols(id_col, vec_col)
     if neg_label_col is not None:
         p_cols.append(F.col(neg_label_col).alias("probe_label"))
 
     if centroids is None:
-        p = F.broadcast(probes.select(*p_cols))
-        candidates = corpus.crossJoin(p)
+        candidates = corpus.crossJoin(F.broadcast(probes.select(*p_cols)))
     else:
-        cents = _collect_codebook(centroids, nprobe)
-
-        def _fold_dot(a: list[float], b: list[float]) -> float:
-            acc = 0.0  # sequential fold — same IEEE order as SQL
-            for x, y in zip(a, b):
-                acc += x * y
-            return acc
-
-        def cell_choices(vec: Column) -> list[Column]:
-            vd = as_double(vec)
-            return [
-                F.struct(
-                    (F.lit(_fold_dot(cv, cv)) - 2.0 * dot(vd, F.array(*[F.lit(x) for x in cv]))).alias("d"),
-                    F.lit(cid).alias("cid"),
-                )
-                for cid, cv in cents
-            ]
-
-        p = F.broadcast(
-            probes.select(
-                *p_cols,
-                F.explode(
-                    F.transform(
-                        F.slice(
-                            F.array_sort(F.array(*cell_choices(F.col(vec_col)))),
-                            1,
-                            nprobe,
-                        ),
-                        lambda s: s["cid"],
-                    )
-                ).alias("cid"),
-            )
-        )
-        assigned = corpus.withColumn(
-            "cid", F.array_min(F.array(*cell_choices(F.col(vec_col))))["cid"]
-        )
+        book = _codebook(centroids, nprobe)
+        cells = _cell_kernel([book], "l2ip", nprobe)(F.col(vec_col))
+        p = probes.select(*p_cols, cells.alias("_cells"))
+        p = p.select("*", F.explode("_cells").alias("cid")).drop("_cells")
         # corpus rows carry ONE cell, so a (probe, corpus) pair meets in
         # at most one cell — the equi-join never duplicates candidates
-        candidates = assigned.join(p, "cid")
+        candidates = _assign(corpus, book, "l2ip", vec_col).join(
+            F.broadcast(p), "cid"
+        )
 
     if neg_label_col is not None:
         # null-safe: a NULL label is a distinct label VALUE, so
@@ -869,14 +797,7 @@ def knn_join(
         )
     scored = candidates.filter(
         F.col(id_col) != F.col("probe_id") if exclude_self else F.lit(True)
-    ).select(
-        "probe_id",
-        id_col,
-        F.round(
-            cosine_pnorm(F.col(vec_col), F.col("probe_vec"), F.col("probe_norm")),
-            6,
-        ).alias("cos_sim"),
-    )
+    ).select("probe_id", id_col, _cos_sim(vec_col))
     w = Window.partitionBy("probe_id").orderBy(
         F.desc("cos_sim"), F.asc(id_col)
     )
@@ -930,61 +851,47 @@ def pq_train(
     return out
 
 
-def _pq_codebook_dict(codebooks) -> dict[tuple[int, int], list[float]]:
-    """Normalize a codebook to {(s, cid): [vals]} from either a
-    ``pq_train`` DataFrame or an existing dict; validates shape."""
+def _pq_books(codebooks) -> list[dict[int, list[float]]]:
+    """One ``{cid: components}`` book per subspace, from a
+    :func:`pq_train` DataFrame ``(s, cid, pos, val)`` or a
+    ``{(s, cid): components}`` dict, validated: contiguous subspaces,
+    one subvector length, and dense 0-based cids (ADC's lookup tables
+    index by code value; pq_train over dense ids yields this)."""
     if isinstance(codebooks, dict):
-        cb = {k2: list(map(float, v)) for k2, v in codebooks.items()}
+        cb = {key: list(map(float, v)) for key, v in codebooks.items()}
     else:
-        rows = codebooks.collect()
         tmp: dict[tuple[int, int], dict[int, float]] = {}
-        for r in rows:
+        for r in codebooks.collect():
             tmp.setdefault((int(r["s"]), int(r["cid"])), {})[int(r["pos"])] = float(
                 r["val"]
             )
-        cb = {
-            key: [vals[p] for p in sorted(vals)] for key, vals in tmp.items()
-        }
+        cb = {key: [vals[p] for p in sorted(vals)] for key, vals in tmp.items()}
     if not cb:
         raise ValueError("pq: empty codebook")
     subs = {s for s, _ in cb}
     if subs != set(range(len(subs))):
         raise ValueError(f"pq: non-contiguous subspace ids {sorted(subs)}")
-    lens = {len(v) for v in cb.values()}
-    if len(lens) != 1:
+    if len({len(v) for v in cb.values()}) != 1:
         raise ValueError("pq: ragged codebook subvector lengths")
-    for s in sorted({sp for sp, _ in cb}):
-        cids = sorted(c for sp, c in cb if sp == s)
-        if cids != list(range(len(cids))):
-            # ADC's lookup tables index by code value, so codewords
-            # must be dense 0-based (pq_train over dense ids yields
-            # this; re-key the codebook otherwise)
-            raise ValueError(f"pq: non-dense cids {cids} in subspace {s}")
-    return cb
+    books = [{c: v for (sp, c), v in cb.items() if sp == s} for s in range(len(subs))]
+    for s, book in enumerate(books):
+        if sorted(book) != list(range(len(book))):
+            raise ValueError(f"pq: non-dense cids {sorted(book)} in subspace {s}")
+    return books
 
 
-def _sq_l2(slice_col: Column, cvals: list[float]) -> Column:
-    """Squared L2 distance between a vector slice and a literal
-    centroid, as the sequential diff fold both engines share
-    (matches DuckDB's ``list_dot_product(diff, diff)``)."""
-    carr = F.array(*[F.lit(x) for x in cvals])
-    diff = F.zip_with(slice_col, carr, lambda x, c: x - c)
-    return dot(diff, diff)
+def _pq_dim(books: list[dict]) -> int:
+    return len(books) * _width(books[0])
 
 
-def _py_sq(a: list[float], b: list[float]) -> float:
-    """Driver-side twin of :func:`_sq_l2`: the SAME sequential
-    (x−y)² left-fold, so driver-computed constants (ADC tables, cell
-    rankings) are bit-identical to the SQL/DuckDB formulation. One
-    definition for every caller — this fold is bit-exactness-critical
-    and must not drift between copies."""
-    if len(a) != len(b):
-        raise ValueError(f"_py_sq: length mismatch {len(a)} != {len(b)}")
-    acc = 0.0
-    for x, y in zip(a, b):
-        d = x - y
-        acc = acc + d * d
-    return acc
+def _pq_codes(df: DataFrame, books: list[dict], vec: Column, keep: list) -> DataFrame:
+    """``keep`` columns plus ``code_0 … code_{m-1}``: the kernel's
+    per-subspace squared-L2 argmin of ``vec``."""
+    codes = df.select(*keep, _cell_kernel(books, "l2")(vec).alias("_codes"))
+    return codes.select(
+        *keep,
+        *[F.col("_codes")[s].cast("int").alias(f"code_{s}") for s in range(len(books))],
+    )
 
 
 def pq_encode(
@@ -996,23 +903,39 @@ def pq_encode(
     """Assign each vector its per-subspace nearest codeword (true
     squared-L2 argmin, ties to the lower cid). Output:
     ``(id, code_0 … code_{m-1})`` — one small int per subspace, the
-    entire PQ index row. Map-only against codebook literals; at very
-    large m×k swap the interpreted folds for the pandas_udf matmul
-    exactly as ``ivf_topk`` does.
+    entire PQ index row; NULL codes for a NULL or wrong-dim vector.
+    Map-only: one kernel call against the codebook literals.
     """
-    cb = _pq_codebook_dict(codebooks)
-    m = len({s for s, _ in cb})
-    sub = len(next(iter(cb.values())))
-    v = as_double(F.col(vec_col))
-    cols = [F.col(id_col)]
-    for s in range(m):
-        sl = F.slice(v, s * sub + 1, sub)
-        choices = [
-            F.struct(_sq_l2(sl, cb[(s, cid)]).alias("d"), F.lit(cid).alias("cid"))
-            for cid in sorted(c for sp, c in cb if sp == s)
-        ]
-        cols.append(F.array_min(F.array(*choices))["cid"].alias(f"code_{s}"))
-    return embs.select(*cols)
+    return _pq_codes(embs, _pq_books(codebooks), F.col(vec_col), [id_col])
+
+
+def _adc_sum(pv: np.ndarray, books: list[dict]) -> Column:
+    """The ADC distance of a row as m table lookups: entry (s, cid) is
+    the squared-L2 fold of probe slice s against codeword cid, computed
+    on the driver, and the terms add left to right like the oracle's
+    ``((t0 + t1) + t2) + t3``."""
+    dist, off = None, 0
+    for s, book in enumerate(books):
+        _, C = _book_arrays(book)
+        table = _fold(pv[off : off + C.shape[1]], C, sq=True)
+        off += C.shape[1]
+        term = F.element_at(
+            F.array(*[F.lit(float(x)) for x in table]),
+            F.col(f"code_{s}").cast("int") + 1,
+        )
+        dist = term if dist is None else dist + term
+    return dist
+
+
+def _adc_topk(coded: DataFrame, dist: Column, pid, k: int, id_col: str) -> DataFrame:
+    return (
+        coded.filter(F.col(id_col) != F.lit(pid))
+        .select(id_col, F.round(dist, 6).alias("adc_dist"))
+        # a NULL or wrong-dim vector has NULL codes, which ASC would rank first
+        .filter(F.col("adc_dist").isNotNull())
+        .orderBy(F.asc("adc_dist"), F.asc(id_col))
+        .limit(k)
+    )
 
 
 def pq_adc_topk(
@@ -1029,45 +952,18 @@ def pq_adc_topk(
     of ``m`` table lookups — no per-row vector math at all. Output:
     ``(id, adc_dist)`` ascending with id tiebreak (squared L2).
 
-    The probe and the m×K table are bounded driver constants (the
-    kmeans_train contract); the table entries are computed with the
-    same sequential diff fold the oracle's ``list_dot_product`` uses,
-    so the lookups are bit-identical cross-engine. The scored scan is
-    pure codegen (element_at on literal arrays + a fixed-order sum)
-    and the top-k is TakeOrderedAndProject. At scale the codes table
-    is the only thing read — m bytes per row instead of the vector.
+    The probe and the m×K table are bounded driver constants; the
+    table entries come from the same fold the oracle's
+    ``list_dot_product`` uses, so the lookups are bit-identical
+    cross-engine. The scored scan is pure codegen (element_at on
+    literal arrays + a fixed-order sum) and the top-k is
+    TakeOrderedAndProject. At scale the codes table is the only thing
+    read — m bytes per row instead of the vector.
     """
-    cb = _pq_codebook_dict(codebooks)
-    m = len({s for s, _ in cb})
-    sub = len(next(iter(cb.values())))
-    prow = probe.select(
-        F.col(id_col).alias("pid"), as_double(F.col(vec_col)).alias("pv")
-    ).first()
-    if prow is None:
-        raise ValueError("pq: empty probe DataFrame")
-    pv = [float(x) for x in prow["pv"]]
-    if len(pv) != m * sub:
-        raise ValueError(f"pq: probe dim {len(pv)} != m*sub {m * sub}")
-
-    tables: list[dict[int, float]] = []
-    for s in range(m):
-        ps = pv[s * sub : (s + 1) * sub]
-        tables.append(
-            {cid: _py_sq(ps, cb[(s, cid)]) for sp, cid in cb if sp == s}
-        )
-    codes = pq_encode(embs, cb, vec_col=vec_col, id_col=id_col)
-    dist = None
-    for s in range(m):
-        tbl = tables[s]
-        lut = F.array(*[F.lit(tbl[cid]) for cid in sorted(tbl)])
-        term = F.element_at(lut, F.col(f"code_{s}").cast("int") + 1)
-        dist = term if dist is None else (dist + term)
-    return (
-        codes.filter(F.col(id_col) != F.lit(prow["pid"]))
-        .select(id_col, F.round(dist, 6).alias("adc_dist"))
-        .orderBy(F.asc("adc_dist"), F.asc(id_col))
-        .limit(k)
-    )
+    books = _pq_books(codebooks)
+    pid, pv = _probe(probe, id_col, vec_col, _pq_dim(books), "pq")
+    codes = _pq_codes(embs, books, F.col(vec_col), [id_col])
+    return _adc_topk(codes, _adc_sum(pv, books), pid, k, id_col)
 
 
 def pq_seeded_codebook(
@@ -1089,77 +985,53 @@ def pq_seeded_codebook(
     }
 
 
+def _ivfpq_books(codebooks, cents: dict) -> list[dict]:
+    books = _pq_books(codebooks)
+    if _width(cents) != _pq_dim(books):
+        raise ValueError(
+            f"ivfpq: centroid dim {_width(cents)} != m*sub {_pq_dim(books)}"
+        )
+    return books
+
+
 def _ivfpq_coded(
-    embs: DataFrame,
-    cb: dict,
-    m: int,
-    sub: int,
-    cents: dict[int, list[float]],
+    embs: DataFrame, books: list[dict], cents: dict, vec_col: str, id_col: str
+) -> DataFrame:
+    """(id, cid, code_0..m-1): the coarse cell (squared L2) and the PQ
+    codes of the RESIDUAL vector − centroid — the map-only encode that
+    ivfpq_topk and the persisted index share. Cells are the dense
+    0..K-1 of :func:`seed_centroids`."""
+    table = F.array(*[F.array(*[F.lit(x) for x in cents[c]]) for c in sorted(cents)])
+    resid = F.zip_with(
+        F.col(vec_col),
+        F.element_at(table, F.col("cid").cast("int") + 1),
+        lambda a, b: a.cast("double") - b,
+    )
+    cells = _assign(embs, cents, "l2", vec_col).select(id_col, "cid", resid.alias("_r"))
+    return _pq_codes(cells, books, F.col("_r"), [id_col, "cid"])
+
+
+def _ivfpq_search(
+    coded: DataFrame,
+    probe: DataFrame,
+    books: list[dict],
+    cents: dict,
+    k: int,
+    nprobe: int,
     vec_col: str,
     id_col: str,
 ) -> DataFrame:
-    """(id, cid, code_0..m-1): coarse cell assignment + residual PQ
-    codes — the map-only encode stage ivfpq_topk and the persisted
-    index share."""
-    v = as_double(F.col(vec_col))
-    choices = [
-        F.struct(_sq_l2(v, cents[c]).alias("d"), F.lit(c).alias("cid"))
-        for c in sorted(cents)
-    ]
-    cid_col = F.array_min(F.array(*choices))["cid"]
-    cent_table = F.array(
-        *[F.array(*[F.lit(x) for x in cents[c]]) for c in sorted(cents)]
-    )
-    resid = F.zip_with(
-        F.col("_v"),
-        F.element_at(cent_table, F.col("cid").cast("int") + 1),
-        lambda a, b: a - b,
-    )
-    coded = embs.select(F.col(id_col), v.alias("_v"), cid_col.alias("cid")).select(
-        id_col, "cid", resid.alias("_r")
-    )
-    code_cols = []
-    for s in range(m):
-        sl = F.slice(F.col("_r"), s * sub + 1, sub)
-        ch = [
-            F.struct(_sq_l2(sl, cb[(s, cid)]).alias("d"), F.lit(cid).alias("cid2"))
-            for cid in sorted(c for sp, c in cb if sp == s)
-        ]
-        code_cols.append(F.array_min(F.array(*ch))["cid2"].alias(f"code_{s}"))
-    return coded.select(id_col, "cid", *code_cols)
-
-
-def _ivfpq_adc(
-    coded: DataFrame,
-    m: int,
-    probed: list[int],
-    tables: dict,
-    pid,
-    k: int,
-    id_col: str,
-) -> DataFrame:
-    """ADC scoring over a coded table restricted to the probed cells —
-    shared by the in-memory and persisted-index paths."""
+    """The probe side ivfpq_topk and ivfpq_index_topk share: the probe's
+    ``nprobe`` nearest cells (squared L2), one residual ADC table set
+    per probed cell chosen by a CASE on ``cid``, and the top-k."""
+    pid, pv = _probe(probe, id_col, vec_col, _pq_dim(books), "ivfpq")
+    probed = _nearest(pv, cents, "l2", nprobe)[0]
     dist = None
     for c in probed:
-        cd = None
-        for s in range(m):
-            tbl = tables[c][s]
-            lut = F.array(*[F.lit(tbl[cid]) for cid in sorted(tbl)])
-            term = F.element_at(lut, F.col(f"code_{s}").cast("int") + 1)
-            cd = term if cd is None else (cd + term)
-        dist = (
-            F.when(F.col("cid") == c, cd)
-            if dist is None
-            else dist.when(F.col("cid") == c, cd)
-        )
-    return (
-        coded.filter(F.col("cid").isin([int(c) for c in probed]))
-        .filter(F.col(id_col) != F.lit(pid))
-        .select(id_col, F.round(dist, 6).alias("adc_dist"))
-        .orderBy(F.asc("adc_dist"), F.asc(id_col))
-        .limit(k)
-    )
+        cd = _adc_sum(pv - np.array(cents[c]), books)
+        hit = F.col("cid") == c
+        dist = F.when(hit, cd) if dist is None else dist.when(hit, cd)
+    return _adc_topk(coded.filter(F.col("cid").isin(probed)), dist, pid, k, id_col)
 
 
 def ivfpq_topk(
@@ -1181,14 +1053,11 @@ def ivfpq_topk(
     makes small PQ codebooks accurate: each subquantizer only has to
     cover the spread within a cell, not the whole space.
 
-    Deterministic contract: the coarse quantizer is the ``ivf_topk``
-    seed convention (centroid c = the vector with id == c,
-    c < n_centroids) — data rows, so the oracle reads them from the
-    table; assignment is true squared-L2 argmin with lower-cid ties
-    (the same diff fold as :func:`pq_encode`); the probe's cell
-    ranking and the per-cell ADC tables are bounded driver constants
-    computed with the sequential fold that matches the oracle's
-    ``list_dot_product``.
+    Deterministic contract: the coarse quantizer is
+    :func:`seed_centroids` — data rows, so the oracle reads them from
+    the table; assignment and the probe's cell ranking are the
+    kernel's true squared-L2 argmin with lower-cid ties, and the
+    per-cell ADC tables are driver constants from the same fold.
 
     Plan: assignment + residual + codes are map-only against
     centroid/codebook literals; the scored scan filters to probed
@@ -1198,43 +1067,12 @@ def ivfpq_topk(
     TakeOrderedAndProject. Output: (id, adc_dist) ascending, id
     tiebreak, probe row excluded.
     """
-    cb = _pq_codebook_dict(codebooks)
-    m = len({s for s, _ in cb})
-    sub = len(next(iter(cb.values())))
-
-    cents = seed_centroids(embs, n_centroids, vec_col, id_col, seed_ids)
-    for cid_, cv_ in cents.items():
-        if len(cv_) != m * sub:
-            raise ValueError(
-                f"ivfpq: centroid {cid_} dim {len(cv_)} != m*sub {m * sub}"
-            )
-
-    coded = _ivfpq_coded(embs, cb, m, sub, cents, vec_col, id_col)
-
-    prow = probe.select(
-        F.col(id_col).alias("pid"), as_double(F.col(vec_col)).alias("pv")
-    ).first()
-    if prow is None:
-        raise ValueError("ivfpq: empty probe DataFrame")
-    pv = [float(x) for x in prow["pv"]]
-    if len(pv) != m * sub:
-        raise ValueError(f"ivfpq: probe dim {len(pv)} != m*sub {m * sub}")
-
-    cell_rank = sorted((_py_sq(pv, cents[c]), c) for c in sorted(cents))
-    probed = [c for _, c in cell_rank[:nprobe]]
-    tables: dict[int, list[dict[int, float]]] = {}
-    for c in probed:
-        pr = [a - b for a, b in zip(pv, cents[c])]
-        tables[c] = [
-            {
-                cid: _py_sq(pr[s * sub : (s + 1) * sub], cb[(s, cid)])
-                for sp, cid in cb
-                if sp == s
-            }
-            for s in range(m)
-        ]
-
-    return _ivfpq_adc(coded, m, probed, tables, prow["pid"], k, id_col)
+    cents = _codebook(
+        seed_centroids(embs, n_centroids, vec_col, id_col, seed_ids), nprobe
+    )
+    books = _ivfpq_books(codebooks, cents)
+    coded = _ivfpq_coded(embs, books, cents, vec_col, id_col)
+    return _ivfpq_search(coded, probe, books, cents, k, nprobe, vec_col, id_col)
 
 
 def rp_signs(out_dim: int, in_dim: int, seed: int = 11) -> list[list[int]]:
@@ -1348,32 +1186,6 @@ def hard_negatives(
     )
 
 
-def ivf_cell_expr(vec: Column, cents: list[tuple[int, list[float]]]) -> Column:
-    """Nearest-cell id for a vector against a collected codebook —
-    the Euclidean argmin ``c·c − 2·v·c`` with lower-cid tie-break,
-    identical to :func:`knn_join`'s assignment (||v||² is constant
-    per row and cannot change the argmin)."""
-
-    def _fold_dot(a: list[float], b: list[float]) -> float:
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc += x * y
-        return acc
-
-    vd = as_double(vec)
-    choices = [
-        F.struct(
-            (
-                F.lit(_fold_dot(cv, cv))
-                - 2.0 * dot(vd, F.array(*[F.lit(x) for x in cv]))
-            ).alias("d"),
-            F.lit(cid).alias("cid"),
-        )
-        for cid, cv in cents
-    ]
-    return F.array_min(F.array(*choices))["cid"]
-
-
 def write_ivf_index(
     embs: DataFrame,
     centroids: DataFrame,
@@ -1388,16 +1200,14 @@ def write_ivf_index(
     side partition-prunes to those directories and per-query I/O is
     ``nprobe/K`` of the corpus BEFORE any compute — the property that
     makes IVF pay at 100 TB, where the win is skipped I/O, not
-    skipped math. One shuffle (repartition by cid keeps one file per
-    cell per write, so pruned partitions are also few files)."""
-    cents = _collect_codebook(centroids, nprobe=1)
-    (
-        embs.withColumn("cid", ivf_cell_expr(F.col(vec_col), cents))
-        .repartition("cid")
-        .write.mode(mode)
-        .partitionBy("cid")
-        .parquet(path)
-    )
+    skipped math. Cells are :func:`knn_join`'s (the kernel's ``l2ip``
+    metric). One shuffle (repartition by cid keeps one file per cell
+    per write, so pruned partitions are also few files)."""
+    _write_cells(_assign(embs, _codebook(centroids), "l2ip", vec_col), path, mode)
+
+
+def _write_cells(df: DataFrame, path: str, mode: str) -> None:
+    df.repartition("cid").write.mode(mode).partitionBy("cid").parquet(path)
 
 
 def ivf_index_topk(
@@ -1415,48 +1225,18 @@ def ivf_index_topk(
     filter is on the partition column, so it prunes directories at
     planning time — asserted via ``PartitionFilters`` in tests).
 
-    Cell assignment and probe-cell choice use squared-L2 argmin
-    (``c·c − 2·v·c``) — :func:`knn_join`'s IVF-pruned convention, and
-    the twin this index agrees with exactly (the parity test compares
-    against ``knn_join(centroids=...)``). :func:`ivf_topk` ranks its
-    probe CELLS by cosine instead, so with centroids of unequal norm
-    the two can probe different cells; within identical candidate
-    sets the scoring and ranking are the same."""
-    cents = _collect_codebook(centroids, nprobe)
-    prow = probe.select(
-        F.col(id_col).alias("pid"), as_double(F.col(vec_col)).alias("pv")
-    ).first()
-    if prow is None:
-        raise ValueError("ivf_index_topk: empty probe")
-    pv = [float(x) for x in prow["pv"]]
-
-    def _d(cv: list[float]) -> float:
-        acc = 0.0
-        for x, y in zip(cv, pv):
-            acc += x * y
-        cc = 0.0
-        for x in cv:
-            cc += x * x
-        return cc - 2.0 * acc
-
-    probed = [cid for _, cid in sorted((( _d(cv), cid)) for cid, cv in cents)[:nprobe]]
-    pvec = F.array(*[F.lit(x) for x in pv])
-    pnorm = float(sum(x * x for x in pv)) ** 0.5
-    return (
-        spark.read.parquet(path)
-        .filter(F.col("cid").isin(probed))
-        .filter(F.col(id_col) != F.lit(prow["pid"]))
-        .select(
-            id_col,
-            F.round(
-                dot(as_double(F.col(vec_col)), pvec)
-                / (norm2(as_double(F.col(vec_col))) * F.lit(pnorm)),
-                6,
-            ).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
-        .limit(k)
+    The probe's cells are :func:`knn_join`'s (the ``l2ip`` ranking on
+    the driver) and the pruned cells are scored by
+    :func:`brute_force_topk`, so the result equals
+    ``knn_join(centroids=...)`` for that probe. :func:`ivf_topk` ranks
+    cells by cosine instead, so with centroids of unequal norm the two
+    can probe different cells."""
+    book = _codebook(centroids, nprobe)
+    _, pv = _probe(probe, id_col, vec_col, _width(book), "ivf_index_topk")
+    cells = spark.read.parquet(path).filter(
+        F.col("cid").isin(_nearest(pv, book, "l2ip", nprobe)[0])
     )
+    return brute_force_topk(cells, probe.limit(1), k, vec_col, id_col)
 
 
 def write_ivfpq_index(
@@ -1475,54 +1255,9 @@ def write_ivfpq_index(
     the full vector (the raw embeddings can go cold), and a probe
     reads only its ``nprobe`` cell directories before any ADC math.
     One shuffle (repartition by cid → one file per cell per write)."""
-    cb = _pq_codebook_dict(codebooks)
-    m = len({s for s, _ in cb})
-    sub = len(next(iter(cb.values())))
     cents = seed_centroids(embs, n_centroids, vec_col, id_col, seed_ids)
-    coded = _ivfpq_coded(embs, cb, m, sub, cents, vec_col, id_col)
-    (
-        coded.repartition("cid")
-        .write.mode(mode)
-        .partitionBy("cid")
-        .parquet(path)
-    )
-
-
-def seed_centroids(
-    embs: DataFrame,
-    n_centroids: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed_ids: list | None = None,
-) -> dict[int, list[float]]:
-    """The ivf_topk/ivfpq seed convention as a reusable collect:
-    cell ``c``'s centroid is the vector with id ``seed_ids[c]``
-    (bounded K×dim driver constant). ``seed_ids`` defaults to
-    ``0..n_centroids-1`` (the historical convention), so a corpus
-    whose ids don't start at 0 passes any ``n_centroids`` ids it
-    likes — cells are numbered by position in the list."""
-    if seed_ids is None:
-        seed_ids = list(range(n_centroids))
-    if len(seed_ids) != len(set(seed_ids)) or len(seed_ids) != n_centroids:
-        raise ValueError(
-            f"seed_centroids: seed_ids must be {n_centroids} distinct ids,"
-            f" got {seed_ids!r}"
-        )
-    by_id = {
-        r["sid"]: [float(x) for x in r["cv"]]
-        for r in embs.filter(F.col(id_col).isin(list(seed_ids)))
-        .select(
-            F.col(id_col).alias("sid"), as_double(F.col(vec_col)).alias("cv")
-        )
-        .collect()
-    }
-    missing = [s for s in seed_ids if s not in by_id]
-    if missing:
-        raise ValueError(
-            f"seed_centroids: need ids {seed_ids} as seed "
-            f"centroids, found {sorted(by_id)}"
-        )
-    return {c: by_id[s] for c, s in enumerate(seed_ids)}
+    books = _ivfpq_books(codebooks, cents)
+    _write_cells(_ivfpq_coded(embs, books, cents, vec_col, id_col), path, mode)
 
 
 def ivfpq_index_topk(
@@ -1539,37 +1274,13 @@ def ivfpq_index_topk(
     """ADC top-k against a :func:`write_ivfpq_index` layout, reading
     ONLY the probe's ``nprobe`` nearest cells (planning-time partition
     pruning — the cid filter never scans the other cells' files).
-    Candidates, ADC tables, and ranking are identical to
-    :func:`ivfpq_topk` over the same codebook/centroids, so the two
-    agree exactly; the index buys cold storage + pruned I/O."""
-    cb = _pq_codebook_dict(codebooks)
-    m = len({s for s, _ in cb})
-    sub = len(next(iter(cb.values())))
-    prow = probe.select(
-        F.col(id_col).alias("pid"), as_double(F.col(vec_col)).alias("pv")
-    ).first()
-    if prow is None:
-        raise ValueError("ivfpq_index_topk: empty probe DataFrame")
-    pv = [float(x) for x in prow["pv"]]
-    if len(pv) != m * sub:
-        raise ValueError(
-            f"ivfpq_index_topk: probe dim {len(pv)} != m*sub {m * sub}"
-        )
-    cell_rank = sorted((_py_sq(pv, centroids[c]), c) for c in sorted(centroids))
-    probed = [c for _, c in cell_rank[:nprobe]]
-    tables: dict[int, list[dict[int, float]]] = {}
-    for c in probed:
-        pr = [a - b for a, b in zip(pv, centroids[c])]
-        tables[c] = [
-            {
-                cid: _py_sq(pr[s * sub : (s + 1) * sub], cb[(s, cid)])
-                for sp, cid in cb
-                if sp == s
-            }
-            for s in range(m)
-        ]
-    return _ivfpq_adc(
-        spark.read.parquet(path), m, probed, tables, prow["pid"], k, id_col
+    Candidates, ADC tables, and ranking are :func:`ivfpq_topk`'s over
+    the same codebook/centroids, so the two agree exactly; the index
+    buys cold storage + pruned I/O."""
+    cents = _codebook(centroids, nprobe)
+    books = _ivfpq_books(codebooks, cents)
+    return _ivfpq_search(
+        spark.read.parquet(path), probe, books, cents, k, nprobe, vec_col, id_col
     )
 
 

@@ -464,13 +464,21 @@ def test_ivfpq_index_accepts_shifted_seed_ids(spark, sf_dir, tmp_path):
 
 
 def test_seed_centroids_validates_ids(spark, sf_dir):
-    from csvb_spark.operators.similarity import seed_centroids
+    from csvb_spark.operators.similarity import ivf_topk, seed_centroids
 
     embs = _embs(spark, sf_dir)
     with pytest.raises(ValueError, match="distinct ids"):
         seed_centroids(embs, 3, seed_ids=[0, 0, 1])
     with pytest.raises(ValueError, match="seed centroids"):
         seed_centroids(embs, 2, seed_ids=[0, 10**9])
+    # ivf_topk shares the seed convention and the codebook check: a
+    # corpus missing a seed id raises instead of probing fewer cells,
+    # and so does a seed codebook smaller than nprobe
+    probe = embs.filter(F.col("vec_id") == 5)
+    with pytest.raises(ValueError, match="seed centroids"):
+        ivf_topk(embs.filter(F.col("vec_id") != 2), probe, n_centroids=4)
+    with pytest.raises(ValueError, match="nprobe"):
+        ivf_topk(embs, probe, n_centroids=2, nprobe=4)
 
 
 def test_hard_negatives_null_labels_are_a_distinct_value(spark):

@@ -105,40 +105,131 @@ def test_minhash_signature_stays_codegen(spark, sf_dir):
     assert "partial_min" in _plan(minhash_signatures(_docs(spark, sf_dir)), "simple")
 
 
-def test_ivf_plan_shape(spark, sf_dir):
-    """p14 single-probe: corpus side is scan → Arrow-batched pandas
-    UDF → scalar filter/top-k. No higher-order aggregate evaluation,
-    no join at all, top-k via TakeOrderedAndProject."""
+@pytest.mark.parametrize("n_probes", [1, 2])
+def test_ivf_plan_shape(spark, sf_dir, n_probes):
+    """p14 (one probe) and x52 (two): one path, the P = 1 case of the
+    probe-MATRIX shape. The corpus side is scan → one Arrow-batched
+    pandas UDF (cell, row norm, dot with every probe) → scalar
+    filter/top-k. No higher-order aggregate evaluation (r3's fallback
+    evaluated K interpreted HOF dot products per corpus row), no join
+    at all (probes are driver-side literal arrays), top-k via
+    TakeOrderedAndProject."""
     from pyspark.sql import functions as F
 
     from csvb_spark.operators.similarity import ivf_topk
 
     e = _embs(spark, sf_dir)
-    plan = _plan(ivf_topk(e, e.filter(F.col("vec_id") == 0), k=10))
-    assert "ArrowEvalPython" in plan  # vectorized assignment/scoring
-    assert "TakeOrderedAndProject" in plan
-    assert "Join" not in plan  # probe is driver-side constants
-    assert "aggregate(" not in plan  # no interpreted HOF folds
-
-
-def test_ivf_multi_probe_vectorized(spark, sf_dir):
-    """With >1 probe row ivf_topk runs the probe-MATRIX pandas UDF —
-    same Arrow-batched shape as the single-probe path (r3's fallback
-    evaluated K interpreted HOF dot products per corpus row). Plan:
-    UDF + scalar codegen + TakeOrderedAndProject, no join, no HOFs."""
-    from pyspark.sql import functions as F
-
-    from csvb_spark.operators.similarity import ivf_topk
-
-    e = _embs(spark, sf_dir)
-    out = ivf_topk(e, e.filter(F.col("vec_id") < 2), k=10).collect()
+    probe = e.filter(F.col("vec_id") < n_probes)
+    out = ivf_topk(e, probe, k=10).collect()
     assert len(out) == 10
     assert all(-1.0 <= r.cos_sim <= 1.0 for r in out)
-    plan = _plan(ivf_topk(e, e.filter(F.col("vec_id") < 2), k=10))
-    assert "ArrowEvalPython" in plan
+    plan = _plan(ivf_topk(e, probe, k=10))
+    assert "ArrowEvalPython" in plan  # vectorized assignment/scoring
     assert "TakeOrderedAndProject" in plan
-    assert "Join" not in plan  # probes are driver-side literal arrays
+    assert "Join" not in plan  # probes are driver-side constants
     assert "aggregate(" not in plan  # no interpreted HOF folds
+
+
+@pytest.mark.parametrize("metric", ["cos", "l2ip", "l2"])
+def test_cell_kernel_matches_sql_folds(spark, sf_dir, metric):
+    """The numpy fold behind the cell kernel is bit-equal to the SQL
+    ``dot`` formulation of each metric (and so to the DuckDB oracles'
+    ``list_dot_product``) for every row × centroid, run on the driver
+    and inside a pandas UDF on the executors; the kernel's cell is the
+    SQL argmin with lower-cid ties."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import functions as F
+    from pyspark.sql.functions import pandas_udf
+
+    from csvb_spark.operators import similarity as S
+
+    e = _embs(spark, sf_dir)
+    book = S.seed_centroids(e, 8)
+    ids, C = S._book_arrays(book)
+    v = S.as_double(F.col("embedding"))
+
+    def sql_dist(cv):
+        c = F.array(*[F.lit(x) for x in cv])
+        if metric == "l2":
+            diff = F.zip_with(v, c, lambda x, y: x - y)
+            return S.dot(diff, diff)
+        if metric == "l2ip":
+            return S.dot(c, c) - 2.0 * S.dot(v, c)
+        return -(S.dot(v, c) / F.sqrt(S.dot(c, c)))
+
+    dist = S._dist
+
+    def on_executor(vs):
+        return pd.Series(list(dist(np.stack(vs.tolist()), C, metric)))
+
+    on_executor.__annotations__ = {"vs": pd.Series, "return": pd.Series}
+    rows = e.select(
+        "embedding",
+        F.array(*[sql_dist(book[c]) for c in ids]).alias("sql"),
+        pandas_udf(on_executor, "array<double>")("embedding").alias("ex"),
+        S._cell_kernel([book], metric)(F.col("embedding"))[0].alias("cell"),
+    ).collect()
+    on_driver = dist(np.array([r.embedding for r in rows]), C, metric)
+    assert len(rows) == 500
+    for r, drv in zip(rows, on_driver):
+        assert r.sql == list(r.ex) == drv.tolist()
+        assert r.cell == min(zip(r.sql, ids.tolist()))[1]
+
+
+def test_similarity_udfs_unpickle_without_csvb_spark(spark, tmp_path):
+    """Executor closures capture only numpy arrays and functions built
+    inside the module: every similarity UDF's pickled function loads
+    and runs, with the same output, in an interpreter where importing
+    csvb_spark fails. (A search of the pickle bytes for "csvb_spark"
+    cannot express this: cloudpickle records the source file and
+    module name of every function it ships by value.)"""
+    import subprocess
+    import sys
+
+    import numpy as np
+    import pandas as pd
+    from pyspark import cloudpickle
+
+    from csvb_spark.operators import similarity as S
+
+    book = {0: [1.0, 0.0], 1: [0.0, 1.0], 2: [1.0, 1.0]}
+    pq = [{0: [1.0], 1: [-1.0]}, {0: [0.5], 1: [2.0]}]
+    funcs = [
+        u.func
+        for u in (
+            S._cell_kernel([book], "cos", probes=np.array([[1.0, 2.0]])),
+            S._cell_kernel([book], "l2ip", 2),
+            S._cell_kernel(pq, "l2"),
+        )
+    ]
+    script = """
+import pickle, sys
+class _NoCsvb:
+    def find_spec(self, name, path=None, target=None):
+        if name.split(".")[0] == "csvb_spark":
+            raise ImportError("csvb_spark is not importable here")
+sys.meta_path.insert(0, _NoCsvb())
+import numpy as np, pandas as pd
+funcs = pickle.loads(sys.stdin.buffer.read())
+vs = pd.Series([np.array(x, dtype=np.float32) if x else None
+                for x in ([0.9, 0.1], None, [1.0], [-2.0, 3.0])])
+print(repr([f(vs) for f in funcs]))
+assert not [m for m in sys.modules if m.startswith("csvb_spark")]
+"""
+    got = subprocess.run(
+        [sys.executable, "-c", script],
+        input=cloudpickle.dumps(funcs),
+        capture_output=True,
+        cwd=tmp_path,
+        timeout=120,
+    )
+    assert got.returncode == 0, got.stderr.decode()
+    vs = pd.Series(
+        [np.array(x, dtype=np.float32) if x else None
+         for x in ([0.9, 0.1], None, [1.0], [-2.0, 3.0])]
+    )
+    assert got.stdout.decode().strip() == repr([f(vs) for f in funcs])
 
 
 def test_ivf_bounded_probe_contract_enforced(spark, sf_dir):
@@ -247,6 +338,103 @@ def test_knn_join_codebook_validation(spark, sf_dir):
     ragged = cb.filter("NOT (cid = 1 AND pos = 1)")  # drop one component
     with pytest.raises(ValueError, match="dimensions"):
         knn_join(e, probes, centroids=ragged, nprobe=2)
+
+
+def _ragged_embs(spark):
+    """Twelve 4-dim vectors plus one NULL (id 12) and one 2-dim vector
+    (id 13)."""
+    import numpy as np
+
+    vecs = np.random.RandomState(5).standard_normal((12, 4)).round(3).tolist()
+    rows = [(i, v) for i, v in enumerate(vecs)] + [(12, None), (13, [50.0, 50.0])]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def test_ivf_family_skips_null_and_wrong_dim_vectors(spark):
+    """A NULL or wrong-dim vector has no cell: it is never an IVF or
+    IVF-PQ candidate, never enters a k-means centroid, and gets NULL PQ
+    codes; as a probe it raises on the driver. (Before, np.stack failed
+    on the ragged batch, and a NULL distance sorted first in
+    array_min, so both rows landed in cell 0 and the 2-dim vector
+    dragged a k-means centroid toward (50, 50).)"""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from csvb_spark.operators import similarity as S
+
+    e = _ragged_embs(spark)
+    good = e.filter(F.col("vec_id") < 12)
+    valid = set(range(12))
+
+    def ids(df, col="vec_id"):
+        return {r[col] for r in df.collect()}
+
+    one = S.ivf_topk(e, e.filter("vec_id = 0"), k=20, n_centroids=3, nprobe=3)
+    assert ids(one) == valid - {0}
+    two = S.ivf_topk(e, e.filter("vec_id < 2"), k=40, n_centroids=3, nprobe=3)
+    assert ids(two) == valid
+    for bad, msg in ((12, "NULL"), (13, "2-dim")):
+        with pytest.raises(ValueError, match=msg):
+            S.ivf_topk(e, e.filter(F.col("vec_id") == bad), n_centroids=3, nprobe=1)
+
+    cb = S.kmeans_train(e, k=3, iters=1)
+    assert sorted(cb.collect()) == sorted(S.kmeans_train(good, k=3, iters=1).collect())
+
+    knn = S.knn_join(e, e.filter("vec_id < 2"), k=20, centroids=cb, nprobe=3)
+    assert ids(knn) == valid
+    assert all(r.cos_sim is not None for r in knn.collect())
+
+    pq = S.pq_seeded_codebook(m=2, k=2, sub=2, seed=3)
+    codes = {r.vec_id: (r.code_0, r.code_1) for r in S.pq_encode(e, pq).collect()}
+    assert codes[12] == codes[13] == (None, None)
+    assert all(None not in codes[i] for i in valid)
+
+    ivfpq = S.ivfpq_topk(e, e.filter("vec_id = 0"), pq, k=20, n_centroids=3, nprobe=3)
+    assert ids(ivfpq) == valid - {0}
+
+
+def test_cell_assignment_plans_have_no_hof_folds(spark, sf_dir, monkeypatch, tmp_path):
+    """Every cell assignment runs in the Arrow-batched kernel: no
+    interpreted ``aggregate(`` fold in the plans kmeans_train collects,
+    write_ivf_index writes, pq_encode and ivfpq_topk build, and
+    knn_join(centroids=) keeps only the scoring folds the exact path
+    has."""
+    from pyspark.sql import functions as F
+
+    from csvb_spark.operators import similarity as S
+
+    e = _embs(spark, sf_dir)
+    seen: list[str] = []
+    collect, parquet = type(e).collect, type(e.write).parquet
+
+    def spy_collect(df):
+        seen.append(_plan(df))
+        return collect(df)
+
+    def spy_parquet(writer, path, *a, **kw):
+        seen.append(_plan(writer._df))  # noqa: SLF001
+        return parquet(writer, path, *a, **kw)
+
+    monkeypatch.setattr(type(e), "collect", spy_collect)
+    monkeypatch.setattr(type(e.write), "parquet", spy_parquet)
+    cb = S.kmeans_train(e, k=4, iters=1)
+    S.write_ivf_index(e, cb, str(tmp_path / "idx"))
+    monkeypatch.undo()
+    assignments = [p for p in seen if "ArrowEvalPython" in p]
+    assert len(assignments) == 2  # one Lloyd pass + the index write
+    pq = S.pq_seeded_codebook(m=4, k=4, sub=16, seed=11, scale=0.1)
+    probe = e.filter(F.col("vec_id") == 0)
+    assignments += [
+        _plan(S.pq_encode(e, pq)),
+        _plan(S.ivfpq_topk(e, probe, pq, k=10, n_centroids=8, nprobe=2)),
+    ]
+    for plan in assignments:
+        assert "ArrowEvalPython" in plan and "aggregate(" not in plan
+    probes = e.filter(F.col("vec_id") < 20)
+    ivf = _plan(S.knn_join(e, probes, k=5, centroids=cb, nprobe=2))
+    exact = _plan(S.knn_join(e, probes, k=5))
+    assert "ArrowEvalPython" in ivf
+    assert ivf.count("aggregate(") == exact.count("aggregate(")
 
 
 def test_knn_join_exclude_self_off_keeps_equal_ids(spark, sf_dir):
