@@ -8,12 +8,15 @@ the subset that real clients use):
 
 - startup: SSLRequest → 'N'; StartupMessage → AuthenticationOk,
   ParameterStatus, BackendKeyData, ReadyForQuery
-- simple query ('Q'): RowDescription / DataRow* / CommandComplete.
-  Every row loop (simple query, portal, COPY TO) fetches through
-  ``_fetch_rows``: one ``collect()`` job for a result whose plan
-  estimate is within ``_COLLECT_BUDGET_BYTES``, otherwise
-  ``toLocalIterator`` streaming. Each statement logs one INFO line
-  (duration, rows, fetch mode).
+- simple query ('Q'): RowDescription / DataRow* / CommandComplete,
+  run as an unlimited all-text portal. Simple query, portal, COPY TO
+  and COPY FROM share one lifecycle (``_Conn._statement``: cancel
+  state, Spark job tag, SQLSTATE, one INFO line per statement with
+  duration, rows and fetch mode); the first three share one row loop
+  (``_Conn._send_rows``) fed by ``_fetch_rows`` — one ``collect()``
+  job within ``_COLLECT_BUDGET_BYTES`` of plan estimate, else
+  ``toLocalIterator`` streaming — and framed by ``_fields_frame``
+  (DataRow, binary CopyData) or ``_line_frame`` (text/CSV CopyData).
 - COPY (query|table) TO STDOUT [WITH (FORMAT TEXT|CSV, HEADER,
   DELIMITER 'c')]: CopyOutResponse / CopyData* / CopyDone / COPY n
   (postgres text-format escaping or RFC-4180 CSV)
@@ -59,9 +62,10 @@ the subset that real clients use):
   discarded until Sync (spec behavior), and Sync closes open portals
   (end of implicit transaction).
 - CancelRequest (own short-lived connection, per spec): flags the
-  live connection via its BackendKeyData; row loops poll the flag and
-  answer SQLSTATE 57014 — psql Ctrl-C interrupts a running result
-  stream without killing the session.
+  live connection via its BackendKeyData and cancels its statement's
+  tagged Spark jobs; the statement answers SQLSTATE 57014, before or
+  after its first row, and the session survives (an abandoned
+  streamed result is closed on a daemon thread).
 - errors → ErrorResponse (+ ReadyForQuery in the simple path;
   extended path waits for Sync — connection survives)
 
@@ -76,6 +80,7 @@ Protocol reference: PostgreSQL docs "Frontend/Backend Protocol"
 
 from __future__ import annotations
 
+import contextlib
 import datetime as _dt
 import itertools
 import logging
@@ -221,8 +226,6 @@ def _pg_text(v) -> bytes | None:
             )
             + "}"
         ).encode()
-    if isinstance(v, dict):
-        return str(v).encode()
     return str(v).encode()
 
 
@@ -330,6 +333,12 @@ def _expand_result_fmts(codes: tuple[int, ...], ncols: int) -> list[int]:
 
 def _msg(tag: bytes, payload: bytes = b"") -> bytes:
     return tag + struct.pack("!I", len(payload) + 4) + payload
+
+
+def _copy_response(tag: bytes, wire_fmt: int, ncols: int) -> bytes:
+    """CopyOutResponse (``H``) / CopyInResponse (``G``): the overall
+    format, then the same format for each column."""
+    return _msg(tag, struct.pack(f"!bh{ncols}h", wire_fmt, ncols, *[wire_fmt] * ncols))
 
 
 def _cstr(s: str) -> bytes:
@@ -915,8 +924,8 @@ _GENERATE_NODE_RE = _re.compile(r"^[\s:|+\-]*Generate\b", _re.M)
 
 
 def _fetch_rows(df) -> tuple[Iterator, str]:
-    """``(row iterator, mode)`` for a result, shared by the simple
-    query, portal and COPY TO loops. Small results (see
+    """``(row iterator, mode)`` for a result, the rows of the one row
+    loop (``_Conn._send_rows``). Small results (see
     :data:`_COLLECT_BUDGET_BYTES`) are ``"collected"`` in one job;
     anything over the budget, without an estimate, or exploding rows
     is ``"streamed"`` through ``toLocalIterator`` so the driver holds
@@ -945,8 +954,88 @@ def _log_statement(kind: str, t0: float, rows: int, mode: str, sql: str) -> None
 
 
 class _Cancelled(Exception):
-    """Raised inside a row loop when a CancelRequest flagged this
+    """Raised inside the row loop when a CancelRequest flagged this
     connection; reported to the client as SQLSTATE 57014."""
+
+
+def _error_text(e: Exception) -> str:
+    """An error's ErrorResponse message: its first line, capped."""
+    return str(e).split("\n")[0][:500]
+
+
+def _encoders(dtypes: list, fmts: list[int], what: str) -> list:
+    """Per-column cell encoders for result format codes ``fmts``:
+    ``_pg_text`` for text (0), the type oid's binary encoder for
+    binary (1). A column requested in binary without an encoder raises
+    ValueError(``what`` + the column names) — never text bytes
+    mislabeled binary."""
+    oids = [_oid_for(dtype)[0] for _, dtype in dtypes]
+    bad = [
+        name
+        for (name, _), o, f in zip(dtypes, oids, fmts)
+        if f == 1 and o not in _BINARY_ENCODERS
+    ]
+    if bad:
+        raise ValueError(f"{what} unsupported for column(s) {', '.join(bad)}")
+    return [_BINARY_ENCODERS[o] if f == 1 else _pg_text for o, f in zip(oids, fmts)]
+
+
+def _fields_frame(tag: bytes, encs: list):
+    """Row framing shared by DataRow (``D``) and binary CopyData
+    (``d``): int16 cell count, then per cell an int32 length (-1 for
+    NULL) and the encoded bytes."""
+    count = struct.pack("!h", len(encs))
+
+    def frame(row) -> bytes:
+        body = bytearray(count)
+        for v, enc in zip(row, encs):
+            if v is None:
+                body += b"\xff\xff\xff\xff"
+            else:
+                b = enc(v)
+                body += struct.pack("!i", len(b)) + b
+        return _msg(tag, body)
+
+    return frame
+
+
+def _line_frame(fmt: str, delim: bytes):
+    """Text or CSV CopyData framing: one ``delim``-joined line per row,
+    cells escaped by :func:`_copy_text_cell` / :func:`_copy_csv_cell`,
+    NULL as ``\\N`` (text) or an unquoted empty cell (CSV)."""
+    esc = _copy_text_cell if fmt == "text" else _copy_csv_cell
+    null = b"\\N" if fmt == "text" else b""
+
+    def frame(row) -> bytes:
+        cells = [null if v is None else esc(_pg_text(v), delim) for v in row]
+        return _msg(b"d", delim.join(cells) + b"\n")
+
+    return frame
+
+
+def _release(portal: dict) -> None:
+    """Drop a portal's row iterator. An unfinished streamed one is
+    closed on a daemon thread: pyspark's ``toLocalIterator`` reads the
+    rest of the current partition when it is dropped, which on the
+    handler thread would stall the connection for as long."""
+    it, portal["it"] = portal["it"], iter(())
+    if hasattr(it, "close"):
+        threading.Thread(target=it.close, daemon=True).start()
+
+
+#: per-statement sequence for the Spark job tag a CancelRequest cancels
+_STMT_SEQ = itertools.count()
+
+
+class _Stmt:
+    """One statement inside :meth:`_Conn._statement`: the log kind,
+    rows sent, fetch mode, the portal whose rows it sends, and the
+    SQLSTATE its ValueErrors report (None: classified like engine
+    errors by :func:`_sqlstate_for`)."""
+
+    def __init__(self, kind: str, value_error: str | None):
+        self.kind, self.value_error = kind, value_error
+        self.rows, self.mode, self.portal = 0, "none", None
 
 
 def _count_params(sql: str) -> int:
@@ -1186,7 +1275,8 @@ class _Conn:
         self.pool_idx = next(_POOL_SEQ) % 16
         self.secret = _secrets.randbits(32)
         self.cancelled = False
-        self.running = False  # a row loop is live (cancel target)
+        self.running = False  # a statement is live (cancel target)
+        self.job_tag = ""  # the running statement's Spark job tag
 
     # --- low-level framing -------------------------------------------------
     def _recv_exact(self, n: int) -> bytes:
@@ -1213,16 +1303,19 @@ class _Conn:
             if code == _CANCEL_REQUEST:
                 # Sent on its own connection: body carries the target's
                 # BackendKeyData. Flag the live connection (its row
-                # loops poll the flag) and close this one silently —
-                # cancel sends no response by protocol. The secret key
-                # must match (spec), and only a RUNNING query is
-                # cancellable — a cancel landing while the session is
-                # idle must not kill its next query.
+                # loop polls the flag), cancel its statement's Spark
+                # jobs (a statement still computing its first rows
+                # fails at once), and close this one silently — cancel
+                # sends no response by protocol. The secret key must
+                # match (spec), and only a RUNNING query is cancellable
+                # — a cancel landing while the session is idle must not
+                # kill its next query.
                 if len(body) >= 12:
                     (pid, secret) = struct.unpack("!II", body[4:12])
                     target = _CONNS.get(pid)
                     if target is not None and secret == target.secret and target.running:
                         target.cancelled = True
+                        self.spark.sparkContext.cancelJobsWithTag(target.job_tag)
                 return False
             if code != 196608:  # protocol 3.0
                 self._send_error("08P01", f"unsupported protocol code {code}")
@@ -1263,276 +1356,240 @@ class _Conn:
             )
         return _msg(b"T", struct.pack("!h", len(df.dtypes)) + fields)
 
-    def _check_cancel(self) -> None:
-        if self.cancelled:
-            raise _Cancelled()
+    @contextlib.contextmanager
+    def _statement(
+        self, kind: str, sql: str, extended: bool = False,
+        value_error: str | None = None,
+    ) -> Iterator[_Stmt]:
+        """The one statement lifecycle of simple query, portal, COPY TO
+        and COPY FROM. Spark jobs carry a per-statement tag that
+        CancelRequest cancels. A failure is one ErrorResponse — 57014
+        if cancelled, the call site's ``value_error`` for a ValueError,
+        else :func:`_sqlstate_for` — and releases an unfinished result;
+        extended mode then discards until Sync, simple mode sends
+        ReadyForQuery either way. Success logs one line."""
+        t0 = time.perf_counter()
+        stmt = _Stmt(kind, value_error)
+        sc = self.spark.sparkContext
+        tag = f"pgwire-{self.backend_pid}-{next(_STMT_SEQ)}"
+        sc.addJobTag(tag)
+        self.job_tag, self.cancelled, self.running = tag, False, True
+        try:
+            yield stmt
+            _log_statement(stmt.kind, t0, stmt.rows, stmt.mode, sql)
+        except ConnectionError:
+            raise
+        except Exception as e:  # noqa: BLE001 — every engine error → client
+            if stmt.portal is not None:
+                _release(stmt.portal)
+            if self.cancelled or isinstance(e, _Cancelled):
+                code, text = "57014", "canceling statement due to user request"
+            else:
+                log.warning("%s failed: %s", stmt.kind, e)
+                code = (
+                    stmt.value_error
+                    if stmt.value_error and isinstance(e, ValueError)
+                    else _sqlstate_for(e)
+                )
+                text = _error_text(e)
+            self._send_error(code, text)
+            if extended:
+                self._skip_to_sync = True
+        finally:
+            self.running = self.cancelled = False
+            sc.removeJobTag(tag)
+        if not extended:
+            self._send(self._ready())
+
+    def _send_rows(
+        self, stmt: _Stmt, portal: dict, out: bytearray,
+        max_rows: int | None = None,
+    ) -> tuple[bytearray, bool]:
+        """The one row loop: appends ``portal["frame"]`` of each row
+        (from :func:`_fetch_rows` on first use) to ``out``, polls
+        cancel, sends every 1 MiB, stops after ``max_rows``; returns
+        the unsent tail, for the caller's completion message, and
+        whether ``max_rows`` paused the portal. A bytearray, because
+        ``bytes +=`` re-copies the chunk per row (5x the encode cost)."""
+        stmt.portal = portal
+        df = portal["df"]
+        if portal["it"] is None:
+            portal["it"], portal["mode"] = (
+                _fetch_rows(df) if df.columns else (iter(()), "none")
+            )
+        stmt.mode, frame = portal["mode"], portal["frame"]
+        suspended = False
+        for row in portal["it"]:
+            if self.cancelled:
+                raise _Cancelled()
+            out += frame(row)
+            stmt.rows += 1
+            if len(out) > 1 << 20:
+                self._send(out)
+                out = bytearray()
+            if stmt.rows == max_rows:
+                suspended = True
+                break
+        else:
+            portal["it"] = iter(())  # exhausted: a re-Execute sends 0 rows
+        portal["sent"] += stmt.rows
+        return out, suspended
+
+    def _run_portal(
+        self, stmt: _Stmt, portal: dict, max_rows: int | None, out: bytearray
+    ) -> None:
+        """Rows then CommandComplete, or PortalSuspended when
+        ``max_rows`` pauses the portal (its iterator is kept, so a
+        later Execute resumes where this one stopped)."""
+        out, suspended = self._send_rows(stmt, portal, out, max_rows)
+        if suspended:
+            stmt.kind += " (suspended)"
+            self._send(out + _msg(b"s"))
+        else:
+            self._send(out + _msg(b"C", _cstr(f"SELECT {portal['sent']}")))
 
     def _run_sql(self, sql: str) -> None:
+        """Simple query: plan, RowDescription, then the rows of an
+        unlimited all-text portal."""
         from csvb_spark.sql import execute_sql
 
-        t0 = time.perf_counter()
         sql = sql.strip().rstrip(";").strip()
         if not sql:
             self._send(_msg(b"I"))  # EmptyQueryResponse
             self._send(self._ready())
             return
-        m = _COPY_RE.match(sql)
-        if m or _COPY_FROM_RE.match(sql):
-            self._run_copy(m, sql)
+        if _COPY_RE.match(sql) or _COPY_FROM_RE.match(sql):
+            self._run_copy(sql)
             return
-        self.cancelled = False
-        self.running = True
-        try:
+        with self._statement("query", sql) as stmt:
             df = execute_sql(self.spark, sql)
-            cols = df.columns
-            # bytearray, NOT bytes: immutable `out += msg` re-copies the
-            # whole accumulated chunk per row — measured 5x the entire
-            # encode cost at 75k rows (the federation bench's
-            # pushdown-OFF wire path is exactly this loop)
-            out = bytearray(self._row_description(df))
-            n = 0
-            it, mode = _fetch_rows(df)
-            for row in it:
-                self._check_cancel()
-                vals = b""
-                for v in tuple(row):
-                    t = _pg_text(v)
-                    if t is None:
-                        vals += struct.pack("!i", -1)
-                    else:
-                        vals += struct.pack("!i", len(t)) + t
-                out += _msg(b"D", struct.pack("!h", len(cols)) + vals)
-                n += 1
-                if len(out) > 1 << 20:
-                    self._send(out)
-                    out = bytearray()
-            out += _msg(b"C", _cstr(f"SELECT {n}"))
-            self._send(out)
-            _log_statement("query", t0, n, mode, sql)
-        except _Cancelled:
-            self._send_error("57014", "canceling statement due to user request")
-        except Exception as e:  # noqa: BLE001 — every engine error → client
-            log.warning("query failed: %s", e)
-            self._send_error(_sqlstate_for(e), str(e).split("\n")[0][:500])
-        self.running = False
-        self.cancelled = False
-        self._send(self._ready())
+            portal = {
+                "df": df, "it": None, "sent": 0,
+                "frame": _fields_frame(b"D", [_pg_text] * len(df.columns)),
+            }
+            self._run_portal(stmt, portal, None, bytearray(self._row_description(df)))
 
-    def _run_copy(
-        self, m: "_re.Match[str] | None", sql: str, extended: bool = False
-    ) -> None:
-        """COPY ... TO STDOUT: CopyOutResponse, CopyData rows (text,
-        CSV, or BINARY format), CopyDone, ``COPY n``. Rows come from
-        :func:`_fetch_rows`, same as the SELECT path: one collect for a
-        result within the byte budget, otherwise streamed so the driver
-        holds one partition at a time. With ``extended=True`` (COPY
-        arrived through Parse/Bind/Execute — psycopg3's default path)
-        no ReadyForQuery is sent (only Sync answers 'Z') and errors put
+    def _run_copy(self, sql: str, extended: bool = False) -> None:
+        """COPY through the COPY sub-protocol: TO STDOUT
+        (:meth:`_copy_out`) or FROM STDIN (:meth:`_copy_in`); a
+        server-side file is 0A000. With ``extended=True`` (COPY arrived
+        through Parse/Bind/Execute — psycopg3's default path) no
+        ReadyForQuery is sent (only Sync answers 'Z') and errors put
         the flow in discard-until-Sync state."""
+        m_out, m_in = _COPY_RE.match(sql), _COPY_IN_RE.match(sql)
+        kind = "copy from" if m_in else "copy"
+        with self._statement(kind, sql, extended, "0A000") as stmt:
+            if m_out is not None:
+                self._copy_out(stmt, m_out)
+            elif m_in is not None:
+                self._copy_in(stmt, m_in)
+            else:
+                raise ValueError(
+                    "COPY FROM supports STDIN only (server-side files are "
+                    "not readable)"
+                )
+
+    def _copy_out(self, stmt: _Stmt, m: "_re.Match[str]") -> None:
+        """COPY ... TO STDOUT: CopyOutResponse, CopyData rows (text,
+        CSV, or BINARY format), CopyDone, ``COPY n``."""
         from csvb_spark.sql import execute_sql
 
-        def _err(code: str, msg: str) -> None:
-            self._send_error(code, msg)
-            if extended:
-                self._skip_to_sync = True
-
-        if m is None:
-            m_in = _COPY_IN_RE.match(sql)
-            if m_in is not None:
-                self._run_copy_in(m_in, extended=extended)
-                return
-            _err(
-                "0A000",
-                "COPY FROM supports STDIN only (server-side files are "
-                "not readable)",
+        fmt, header, delim = _parse_copy_options(m.group("opts"))
+        if header and fmt == "text":
+            raise ValueError("COPY HEADER requires FORMAT CSV")
+        if header == "match":
+            raise ValueError("COPY HEADER MATCH applies to COPY FROM only")
+        df = execute_sql(self.spark, m.group("q") or f"SELECT * FROM {m.group('tbl')}")
+        cols = df.columns
+        wire_fmt = 1 if fmt == "binary" else 0
+        out = bytearray()
+        if fmt == "binary":
+            frame = _fields_frame(
+                b"d", _encoders(df.dtypes, [1] * len(cols), "binary COPY")
             )
-            if not extended:
-                self._send(self._ready())
-            return
-        t0 = time.perf_counter()
-        self.cancelled = False
-        self.running = True
-        try:
-            fmt, header, delim = _parse_copy_options(m.group("opts"))
-            if header and fmt == "text":
-                raise ValueError("COPY HEADER requires FORMAT CSV")
-            if header == "match":
-                raise ValueError(
-                    "COPY HEADER MATCH applies to COPY FROM only"
-                )
-            inner = m.group("q") or f"SELECT * FROM {m.group('tbl')}"
-            df = execute_sql(self.spark, inner)
-            cols = df.columns
-            wire_fmt = 1 if fmt == "binary" else 0
-            if fmt == "binary":
-                oids = [_oid_for(dt)[0] for _, dt in df.dtypes]
-                bad = [
-                    name
-                    for (name, _), o in zip(df.dtypes, oids)
-                    if o not in _BINARY_ENCODERS
-                ]
-                if bad:
-                    raise ValueError(
-                        "binary COPY unsupported for column(s) "
-                        + ", ".join(bad)
-                    )
-                encs = [_BINARY_ENCODERS[o] for o in oids]
-            esc = _copy_text_cell if fmt == "text" else _copy_csv_cell
-            null_cell = b"\\N" if fmt == "text" else b""
-            # CopyOutResponse: overall format + per-column formats
-            self._send(
-                _msg(
-                    b"H",
-                    struct.pack("!bh", wire_fmt, len(cols))
-                    + struct.pack(
-                        f"!{len(cols)}h", *([wire_fmt] * len(cols))
-                    ),
-                )
-            )
-            out = bytearray()  # same 5x append-cost rule as _run_sql
-            if fmt == "binary":
-                # signature + flags + header-extension length
-                out += _msg(
-                    b"d", _COPY_BIN_SIG + struct.pack("!ii", 0, 0)
-                )
-            elif fmt == "csv" and header:
+            # signature + flags + header-extension length
+            out += _msg(b"d", _COPY_BIN_SIG + struct.pack("!ii", 0, 0))
+        else:
+            frame = _line_frame(fmt, delim)
+            if header:
                 out += _msg(
                     b"d",
-                    delim.join(
-                        _copy_csv_cell(c.encode(), delim) for c in cols
-                    )
+                    delim.join(_copy_csv_cell(c.encode(), delim) for c in cols)
                     + b"\n",
                 )
-            n = 0
-            it, mode = _fetch_rows(df)
-            for row in it:
-                self._check_cancel()
-                if fmt == "binary":
-                    body = struct.pack("!h", len(cols))
-                    for v, enc in zip(tuple(row), encs):
-                        if v is None:
-                            body += struct.pack("!i", -1)
-                        else:
-                            eb = enc(v)
-                            body += struct.pack("!i", len(eb)) + eb
-                    out += _msg(b"d", body)
-                else:
-                    cells = []
-                    for v in tuple(row):
-                        t = _pg_text(v)
-                        cells.append(
-                            null_cell if t is None else esc(t, delim)
-                        )
-                    out += _msg(b"d", delim.join(cells) + b"\n")
-                n += 1
-                if len(out) > 1 << 20:
-                    self._send(out)
-                    out = bytearray()
-            if fmt == "binary":
-                out += _msg(b"d", struct.pack("!h", -1))  # trailer
-            out += _msg(b"c") + _msg(b"C", _cstr(f"COPY {n}"))
-            self._send(out)
-            _log_statement("copy", t0, n, mode, sql)
-        except _Cancelled:
-            _err("57014", "canceling statement due to user request")
-        except ValueError as e:
-            _err("0A000", str(e))
-        except Exception as e:  # noqa: BLE001
-            log.warning("copy failed: %s", e)
-            _err(_sqlstate_for(e), str(e).split("\n")[0][:500])
-        self.running = False
-        self.cancelled = False
-        if not extended:
-            self._send(self._ready())
+        self._send(_copy_response(b"H", wire_fmt, len(cols)))
+        portal = {"df": df, "it": None, "sent": 0, "frame": frame}
+        out, _ = self._send_rows(stmt, portal, out)
+        if fmt == "binary":
+            out += _msg(b"d", struct.pack("!h", -1))  # trailer
+        self._send(out + _msg(b"c") + _msg(b"C", _cstr(f"COPY {stmt.rows}")))
 
-    def _run_copy_in(
-        self, m: "_re.Match[str]", extended: bool = False
-    ) -> None:
+    def _copy_in(self, stmt: _Stmt, m: "_re.Match[str]") -> None:
         """COPY table [(cols)] FROM STDIN: CopyInResponse, stream the
         CopyData messages, parse text/CSV/BINARY rows, cast to the
         target table's schema, and INSERT — the bulk-ingest half of
         the protocol. Unlisted columns load as NULL (postgres
         semantics); the target must be a writable catalog table
         (CREATE TABLE / CTAS), not a read-only registered view —
-        that's a clean error AFTER the stream drains, so the
-        connection stays in sync. ``extended=True`` suppresses
-        ReadyForQuery (Sync owns 'Z') and errors discard-until-Sync."""
+        refused before CopyInResponse. After the stream drains, a
+        ValueError reports 22P04; the connection stays in sync."""
         from pyspark.sql import functions as F
 
-        def _err(code: str, msg: str) -> None:
-            self._send_error(code, msg)
-            if extended:
-                self._skip_to_sync = True
+        from csvb_spark.sql import rows_frame, rows_table
 
-        self.cancelled = False
-        self.running = True
+        fmt, header, delim = _parse_copy_options(m.group("opts"))
+        if header and fmt == "text":
+            raise ValueError("COPY HEADER requires FORMAT CSV")
+        tbl = m.group("tbl")
+        schema = self.spark.table(tbl).schema  # resolve BEFORE 'G'
+        # registered views (the exec/serve file tables) are
+        # read-only — refuse BEFORE CopyInResponse so the client
+        # never enters copy mode for a doomed statement
         try:
-            fmt, header, delim = _parse_copy_options(m.group("opts"))
-            if header and fmt == "text":
-                raise ValueError("COPY HEADER requires FORMAT CSV")
-            tbl = m.group("tbl")
-            schema = self.spark.table(tbl).schema  # resolve BEFORE 'G'
-            # registered views (the exec/serve file tables) are
-            # read-only — refuse BEFORE CopyInResponse so the client
-            # never enters copy mode for a doomed statement
-            try:
-                ttype = self.spark.catalog.getTable(tbl).tableType
-            except Exception:  # noqa: BLE001 — catalog quirk: fall through
-                ttype = None
-            if ttype in ("TEMPORARY", "VIEW"):
-                raise ValueError(
-                    f"COPY: {tbl} is a read-only view — target a catalog "
-                    "table (CREATE TABLE ... USING parquet)"
-                )
-            cols = (
-                [c.strip() for c in m.group("cols").split(",")]
-                if m.group("cols")
-                else [f.name for f in schema.fields]
+            ttype = self.spark.catalog.getTable(tbl).tableType
+        except Exception:  # noqa: BLE001 — catalog quirk: fall through
+            ttype = None
+        if ttype in ("TEMPORARY", "VIEW"):
+            raise ValueError(
+                f"COPY: {tbl} is a read-only view — target a catalog "
+                "table (CREATE TABLE ... USING parquet)"
             )
-            known = {f.name for f in schema.fields}
-            bad = [c for c in cols if c not in known]
-            if bad:
-                raise ValueError(
-                    f"COPY: column(s) {', '.join(bad)} not in {tbl}"
-                )
-            decs = None
-            if fmt == "binary":
-                by_name = {f.name: f for f in schema.fields}
-                col_oids = [
-                    _oid_for(by_name[c].dataType.simpleString())[0]
-                    for c in cols
-                ]
-                nodec = [
-                    c
-                    for c, o in zip(cols, col_oids)
-                    if o not in _BINARY_DECODERS
-                ]
-                if nodec:
-                    raise ValueError(
-                        "binary COPY unsupported for column(s) "
-                        + ", ".join(nodec)
-                    )
-                decs = [_BINARY_DECODERS[o] for o in col_oids]
-            # resolve the staging base BEFORE CopyInResponse — a missing
-            # warehouse dir must refuse the COPY up front, not after
-            # acknowledging data
-            staging_base = _copy_staging_base(self.spark)
-        except Exception as e:  # noqa: BLE001 — pre-stream failure: no 'G' sent
-            self.running = False
-            code = "0A000" if isinstance(e, ValueError) else _sqlstate_for(e)
-            _err(code, str(e).split("\n")[0][:500])
-            if not extended:
-                self._send(self._ready())
-            return
-        # enter copy-in mode
-        wire_fmt = 1 if fmt == "binary" else 0
-        self._send(
-            _msg(
-                b"G",
-                struct.pack("!bh", wire_fmt, len(cols))
-                + struct.pack(f"!{len(cols)}h", *([wire_fmt] * len(cols))),
-            )
+        cols = (
+            [c.strip() for c in m.group("cols").split(",")]
+            if m.group("cols")
+            else [f.name for f in schema.fields]
         )
+        known = {f.name for f in schema.fields}
+        bad = [c for c in cols if c not in known]
+        if bad:
+            raise ValueError(
+                f"COPY: column(s) {', '.join(bad)} not in {tbl}"
+            )
+        decs = None
+        if fmt == "binary":
+            by_name = {f.name: f for f in schema.fields}
+            col_oids = [
+                _oid_for(by_name[c].dataType.simpleString())[0]
+                for c in cols
+            ]
+            nodec = [
+                c
+                for c, o in zip(cols, col_oids)
+                if o not in _BINARY_DECODERS
+            ]
+            if nodec:
+                raise ValueError(
+                    "binary COPY unsupported for column(s) "
+                    + ", ".join(nodec)
+                )
+            decs = [_BINARY_DECODERS[o] for o in col_oids]
+        # resolve the staging base BEFORE CopyInResponse — a missing
+        # warehouse dir must refuse the COPY up front, not after
+        # acknowledging data
+        staging_base = _copy_staging_base(self.spark)
+        # enter copy-in mode
+        self._send(_copy_response(b"G", 1 if fmt == "binary" else 0, len(cols)))
+        stmt.value_error = "22P04"  # the client's data is in flight now
         # Incremental, bounded-memory ingest: complete rows are parsed
         # out of each CopyData chunk as it arrives; once the parsed
         # batch crosses _COPY_IN_CHUNK_BYTES it is SPOOLED to a
@@ -1566,22 +1623,14 @@ class _Conn:
         def _stage() -> None:
             if not st["pending"]:
                 return
-            import pyarrow as pa
             import pyarrow.parquet as pq
 
             if st["spool"] is None:
                 st["spool"] = tempfile.mkdtemp(prefix="csvb_copy_in_")
             # every decoder yields text form (str | None), so the
             # spool schema is all-string regardless of COPY format
-            tbl = pa.Table.from_arrays(
-                [
-                    pa.array(col, type=pa.string())
-                    for col in zip(*st["pending"])
-                ],
-                names=cols,
-            )
             pq.write_table(
-                tbl,
+                rows_table(st["pending"], str_schema),
                 os.path.join(
                     st["spool"], f"part-{st['spool_parts']:05d}.parquet"
                 ),
@@ -1775,27 +1824,25 @@ class _Conn:
 
         failed: str | None = None
         parse_err: Exception | None = None
-        while True:
-            tag = self._recv_exact(1)
-            (length,) = struct.unpack("!I", self._recv_exact(4))
-            body = self._recv_exact(length - 4)
-            if tag == b"d":
-                if parse_err is None:
-                    try:
-                        _ingest(body)
-                    except Exception as e:  # noqa: BLE001 — drain to 'c' first
-                        parse_err = e
-            elif tag == b"c":  # CopyDone
-                break
-            elif tag == b"f":  # CopyFail
-                failed = body.rstrip(b"\x00").decode(errors="replace")
-                break
-            elif tag == b"X":
-                if st["spool"]:
-                    shutil.rmtree(st["spool"], ignore_errors=True)
-                raise ConnectionResetError("client terminated during COPY")
-            # anything else (Flush/Sync) is ignored inside copy-in
         try:
+            while True:
+                tag = self._recv_exact(1)
+                (length,) = struct.unpack("!I", self._recv_exact(4))
+                body = self._recv_exact(length - 4)
+                if tag == b"d":
+                    if parse_err is None:
+                        try:
+                            _ingest(body)
+                        except Exception as e:  # noqa: BLE001 — drain to 'c' first
+                            parse_err = e
+                elif tag == b"c":  # CopyDone
+                    break
+                elif tag == b"f":  # CopyFail
+                    failed = body.rstrip(b"\x00").decode(errors="replace")
+                    break
+                elif tag == b"X":
+                    raise ConnectionResetError("client terminated during COPY")
+                # anything else (Flush/Sync) is ignored inside copy-in
             if failed is not None:
                 raise ValueError(f"COPY from stdin failed: {failed}")
             if parse_err is not None:
@@ -1807,8 +1854,10 @@ class _Conn:
                 src = self.spark.read.schema(str_schema).parquet(
                     st["staging"]
                 )
+                stmt.mode = "staged"
             else:
-                src = self.spark.createDataFrame(st["pending"], str_schema)
+                src = rows_frame(self.spark, st["pending"], str_schema)
+                stmt.mode = "local"
             full = src.select(
                 *[
                     (
@@ -1820,19 +1869,12 @@ class _Conn:
                 ]
             )
             full.write.insertInto(tbl)
+            stmt.rows = st["rows"]
             self._send(_msg(b"C", _cstr(f"COPY {st['rows']}")))
-        except ValueError as e:
-            _err("22P04", str(e).split("\n")[0][:500])
-        except Exception as e:  # noqa: BLE001
-            log.warning("copy-in failed: %s", e)
-            _err(_sqlstate_for(e), str(e).split("\n")[0][:500])
         finally:
             if st["spool"]:
                 shutil.rmtree(st["spool"], ignore_errors=True)
             self._drop_staging(st["staging"])
-        self.running = False
-        if not extended:
-            self._send(self._ready())
 
     def _drop_staging(self, staging: str | None) -> None:
         """Remove a COPY staging directory through the Hadoop
@@ -1877,8 +1919,8 @@ class _Conn:
         self._send_error(code, message)
         self._skip_to_sync = True
 
-    def _describe_df(self, df) -> bytes:
-        return self._row_description(df) if df is not None and df.columns else _msg(b"n")
+    def _describe_df(self, df, fmts: list[int] | None = None) -> bytes:
+        return self._row_description(df, fmts) if df is not None and df.columns else _msg(b"n")
 
     # --- main loop ------------------------------------------------------------
     def serve(self) -> None:
@@ -1995,31 +2037,25 @@ class _Conn:
                     self._ext_error("22P02", str(e))
                     continue
                 except Exception as e:  # noqa: BLE001
-                    self._ext_error(_sqlstate_for(e), str(e).split("\n")[0][:500])
+                    self._ext_error(_sqlstate_for(e), _error_text(e))
                     continue
                 # result formats: expand to per-column and refuse (clean
                 # 0A000, at Bind time) binary for any column type we
-                # have no wire encoder for — never mislabel text bytes
+                # have no wire encoder for
                 cols = df.dtypes if df is not None else []
                 try:
                     fmts = _expand_result_fmts(res_codes, len(cols))
                 except ValueError as e:
                     self._ext_error("08P01", f"malformed Bind: {e}")
                     continue
-                bad = [
-                    name
-                    for (name, dtype), f in zip(cols, fmts)
-                    if f == 1 and _oid_for(dtype)[0] not in _BINARY_ENCODERS
-                ]
-                if bad:
-                    self._ext_error(
-                        "0A000",
-                        f"binary result format unsupported for column(s) "
-                        f"{', '.join(bad)}",
-                    )
+                try:
+                    encs = _encoders(cols, fmts, "binary result format")
+                except ValueError as e:
+                    self._ext_error("0A000", str(e))
                     continue
                 portals[portal] = {
-                    "df": df, "it": None, "sent": 0, "fmts": fmts, "sql": sql
+                    "df": df, "it": None, "sent": 0, "fmts": fmts, "sql": sql,
+                    "frame": _fields_frame(b"D", encs),
                 }
                 self._send(_msg(b"2"))  # BindComplete
             elif tag == b"D":  # Describe: 'S'+name or 'P'+name
@@ -2063,7 +2099,7 @@ class _Conn:
                             try:
                                 df = self._plan(sql)
                             except Exception as e:  # noqa: BLE001
-                                self._ext_error(_sqlstate_for(e), str(e).split("\n")[0][:500])
+                                self._ext_error(_sqlstate_for(e), _error_text(e))
                                 continue
                             stmts[name] = (sql, df, oids)
                     self._send(self._describe_df(df))
@@ -2072,11 +2108,7 @@ class _Conn:
                         self._ext_error("34000", f"unknown portal {name!r}")
                         continue
                     p = portals[name]
-                    self._send(
-                        self._row_description(p["df"], p.get("fmts"))
-                        if p["df"] is not None and p["df"].columns
-                        else _msg(b"n")
-                    )
+                    self._send(self._describe_df(p["df"], p.get("fmts")))
                 else:
                     self._ext_error("08P01", f"bad describe kind {kind!r}")
             elif tag == b"E":  # Execute: portal, max rows
@@ -2089,79 +2121,35 @@ class _Conn:
                 self._execute_portal(st, max_rows or None)
             elif tag == b"C":  # Close: 'S'+name or 'P'+name
                 kind, name = body[:1], body[1:].split(b"\x00", 1)[0].decode()
-                (stmts if kind == b"S" else portals).pop(name, None)
+                if kind == b"S":
+                    stmts.pop(name, None)
+                elif name in portals:
+                    _release(portals.pop(name))
                 self._send(_msg(b"3"))  # CloseComplete
             elif tag == b"S":  # Sync — end of implicit transaction
+                for p in portals.values():
+                    _release(p)
                 portals.clear()
                 self._skip_to_sync = False
-                self.cancelled = False
                 self._send(self._ready())
             elif tag == b"H":  # Flush — output is sent eagerly already
                 pass
             else:
                 self._ext_error("0A000", f"unsupported message {tag!r}")
 
-    def _execute_portal(self, st: dict, max_rows: int | None) -> None:
-        """Stream a bound portal: DataRow* then CommandComplete, or
-        PortalSuspended when max_rows pauses it (iterator kept so a
-        later Execute resumes where this one stopped). A copy-portal
+    def _execute_portal(self, portal: dict, max_rows: int | None) -> None:
+        """Execute a bound portal (:meth:`_run_portal`). A copy-portal
         runs the COPY sub-protocol instead (postgres ignores the row
         limit for COPY)."""
-        copy_sql = st.get("copy_sql")
+        copy_sql = portal.get("copy_sql")
         if copy_sql is not None:
-            self._run_copy(_COPY_RE.match(copy_sql), copy_sql, extended=True)
+            self._run_copy(copy_sql, extended=True)
             return
-        df = st["df"]
-        if df is None:  # empty statement
+        if portal["df"] is None:  # empty statement
             self._send(_msg(b"I"))
             return
-        t0 = time.perf_counter()
-        self.cancelled = False
-        self.running = True
-        try:
-            if st["it"] is None:
-                st["it"], st["mode"] = (
-                    _fetch_rows(df) if df.columns else (iter(()), "none")
-                )
-            ncols = len(df.columns)
-            fmts = st.get("fmts") or [0] * ncols
-            encs = [
-                _BINARY_ENCODERS[_oid_for(dtype)[0]] if f == 1 else _pg_text
-                for (_, dtype), f in zip(df.dtypes, fmts)
-            ]
-            out = bytearray()  # same 5x append-cost rule as _run_sql
-            sent_this_call = 0
-            for row in st["it"]:
-                self._check_cancel()
-                vals = b""
-                for v, enc in zip(tuple(row), encs):
-                    t = None if v is None else enc(v)
-                    if t is None:
-                        vals += struct.pack("!i", -1)
-                    else:
-                        vals += struct.pack("!i", len(t)) + t
-                out += _msg(b"D", struct.pack("!h", ncols) + vals)
-                st["sent"] += 1
-                sent_this_call += 1
-                if len(out) > 1 << 20:
-                    self._send(out)
-                    out = bytearray()
-                if max_rows and sent_this_call >= max_rows:
-                    self._send(out + _msg(b"s"))  # PortalSuspended
-                    _log_statement(
-                        "portal (suspended)", t0, sent_this_call, st["mode"], st["sql"]
-                    )
-                    return
-            self._send(out + _msg(b"C", _cstr(f"SELECT {st['sent']}")))
-            st["it"] = iter(())  # exhausted: a re-Execute completes with 0 rows
-            _log_statement("portal", t0, sent_this_call, st["mode"], st["sql"])
-        except _Cancelled:
-            self._ext_error("57014", "canceling statement due to user request")
-        except Exception as e:  # noqa: BLE001
-            log.warning("execute failed: %s", e)
-            self._ext_error(_sqlstate_for(e), str(e).split("\n")[0][:500])
-        finally:
-            self.running = False
+        with self._statement("portal", portal["sql"], extended=True) as stmt:
+            self._run_portal(stmt, portal, max_rows, bytearray())
 
 
 class PgWireServer:

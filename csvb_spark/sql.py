@@ -359,7 +359,7 @@ def locked_catalog_refresh(build: Callable[[], None]) -> None:
             build()
 
 
-@functools.lru_cache(maxsize=None)
+@functools.lru_cache(maxsize=256)  # COPY FROM adds one DDL per column list
 def _ddl_schemas(ddl: str):
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
@@ -368,20 +368,28 @@ def _ddl_schemas(ddl: str):
     return struct, to_arrow_schema(struct)
 
 
-def local_view(spark: SparkSession, rows: list, ddl: str, name: str) -> None:
-    """Register ``rows`` (tuples in ``ddl`` column order) as temp view
-    ``name`` over an Arrow-built LocalRelation: queries over it plan to
-    ``LocalTableScan`` — no RDD, no Python worker — and an empty
-    ``rows`` is simply an empty table."""
+def rows_table(rows: list, ddl: str):
+    """``rows`` (sequences in ``ddl`` column order) as a pyarrow Table
+    of the ``ddl`` schema; no rows is simply an empty table."""
     import pyarrow as pa
 
-    struct, schema = _ddl_schemas(ddl)
+    _, schema = _ddl_schemas(ddl)
     cols = list(zip(*rows)) if rows else [()] * len(schema)
-    table = pa.Table.from_arrays(
+    return pa.Table.from_arrays(
         [pa.array(list(c), type=f.type) for c, f in zip(cols, schema)],
         schema=schema,
     )
-    spark.createDataFrame(table, struct).createOrReplaceTempView(name)
+
+
+def rows_frame(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
+    """:func:`rows_table` as a DataFrame over a LocalRelation: it plans
+    to ``LocalTableScan`` — no RDD, no Python worker."""
+    return spark.createDataFrame(rows_table(rows, ddl), _ddl_schemas(ddl)[0])
+
+
+def local_view(spark: SparkSession, rows: list, ddl: str, name: str) -> None:
+    """Register :func:`rows_frame` of ``rows`` as temp view ``name``."""
+    rows_frame(spark, rows, ddl).createOrReplaceTempView(name)
 
 
 def refresh_information_schema(

@@ -434,7 +434,7 @@ def test_copy_text_codec_round_trips(rows, delim) -> None:
         + b"\n"
         for row in rows
     )
-    # parse the way _run_copy_in's text branch does
+    # parse the way _copy_in's text branch does
     lines = payload.split(b"\n")
     assert lines[-1] == b""
     got = [

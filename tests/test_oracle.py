@@ -129,7 +129,9 @@ def test_gate_aliases_share_source_plan_and_oracle():
 # oracles for the two gate rows whose primary oracle shares the Spark
 # side's derivation idea. x75's primary oracle is a global window
 # cumsum (vs Spark's range-partitioned prefix sum) — the alt here is a
-# correlated-subquery cumsum, no window function at all. x90's primary
+# self-join cumsum grouped per row over a MATERIALIZED CTE, no window
+# function at all (not a correlated subquery: DuckDB runs that form of
+# this cumsum in ~100 s at sf0.001, this one in 0.2 s). x90's primary
 # replays key → ORDER BY → LIMIT — the alt selects by a COUNT-based
 # rank predicate (rows with fewer than k smaller keys), no sort/limit
 # machinery. Both must hash-match the Spark side like the primary.
@@ -243,17 +245,17 @@ SELECT 256 AS k, n_a, n_b, n_u, n_both,
 FROM st
 """,
     "x75_budget_select": f"""
-WITH q AS ({_X75_Q_CTE})
+WITH q AS MATERIALIZED ({_X75_Q_CTE}), c AS (
+  SELECT q.doc_id, q.quality_score, q.n_tokens,
+         SUM(q2.n_tokens) AS cum
+  FROM q JOIN q q2
+    ON q2.quality_score > q.quality_score
+       OR (q2.quality_score = q.quality_score AND q2.doc_id <= q.doc_id)
+  GROUP BY q.doc_id, q.quality_score, q.n_tokens
+)
 SELECT doc_id, quality_score, n_tokens,
-       CAST((SELECT SUM(q2.n_tokens) FROM q q2
-             WHERE q2.quality_score > q.quality_score
-                OR (q2.quality_score = q.quality_score
-                    AND q2.doc_id <= q.doc_id)) AS BIGINT) AS cum_tokens,
-       (SELECT SUM(q2.n_tokens) FROM q q2
-        WHERE q2.quality_score > q.quality_score
-           OR (q2.quality_score = q.quality_score
-               AND q2.doc_id <= q.doc_id)) <= 12000 AS keep
-FROM q
+       CAST(cum AS BIGINT) AS cum_tokens, cum <= 12000 AS keep
+FROM c
 """,
     "x90_weighted_sample": r"""
 WITH base AS (

@@ -4,6 +4,7 @@ talking to PgWireServer over TCP."""
 
 from __future__ import annotations
 
+import hashlib
 import socket
 import struct
 
@@ -370,12 +371,17 @@ def test_describe_does_not_execute_parameterized_dml(conn, spark):
         spark.sql("DROP TABLE IF EXISTS pg_ins_t")
 
 
-def test_cancel_request_interrupts_running_query(pg_server):
-    """CancelRequest (own connection, carrying BackendKeyData) flags
-    the live session while its row loop is streaming; the query stops
-    with SQLSTATE 57014 and the connection survives. (Cancel targets
-    only a RUNNING query — Postgres semantics; an idle session is
-    covered by test_cancel_requires_secret_and_running_query.)"""
+def _cancel_running(pg_server, spark, path: str, when: str) -> None:
+    """Start a long statement on ``path`` (simple, portal or copy),
+    send a CancelRequest ``when`` its rows already stream ("after" the
+    first row) or while Spark still computes the first partition
+    ("before"), and check the 57014, the prompt next statement and
+    that no Spark job is left running."""
+    import time
+
+    import csvb_spark.server.pgwire as pgwire
+
+    tracker = spark.sparkContext.statusTracker()
     sock = socket.create_connection(("127.0.0.1", pg_server.port), timeout=60)
     buf = bytearray()
     _startup(sock)
@@ -383,13 +389,31 @@ def test_cancel_request_interrupts_running_query(pg_server):
     (key_payload,) = [p for t, p in msgs if t == b"K"]
     pid, secret = struct.unpack("!II", key_payload)
     try:
-        # a result stream big enough that cancel lands mid-loop
-        body = b"SELECT id FROM range(50000000)\x00"
-        sock.sendall(b"Q" + struct.pack("!I", len(body) + 4) + body)
+        # a result stream big enough that cancel lands mid-statement
+        q = "SELECT id FROM range(50000000)"
+        if path == "simple":
+            _send(sock, b"Q", q.encode() + b"\x00")
+        elif path == "portal":
+            _send(sock, b"P", b"\x00" + q.encode() + b"\x00" + struct.pack("!h", 0))
+            _send(sock, b"B", b"\x00\x00" + struct.pack("!hhh", 0, 0, 0))
+            _send(sock, b"E", b"\x00" + struct.pack("!I", 0))
+            _send(sock, b"S", b"")
+        else:
+            _send(sock, b"Q", f"COPY ({q}) TO STDOUT".encode() + b"\x00")
         got = []
-        while len(_data_rows(got)) < 1:  # stream has started
-            got.append(_read_msg(sock, buf))
+        if when == "after":
+            while len(_data_rows(got)) < 1:  # stream has started
+                got.append(_read_msg(sock, buf))
+        else:  # the statement runs and its first job is still active
+            deadline = time.monotonic() + 60
+            while not (
+                getattr(pgwire._CONNS.get(pid), "running", False)
+                and tracker.getActiveJobsIds()
+            ):
+                assert time.monotonic() < deadline
+                time.sleep(0.05)
         # CancelRequest on its own connection (no tag byte, no reply)
+        t0 = time.monotonic()
         csock = socket.create_connection(("127.0.0.1", pg_server.port), timeout=10)
         csock.sendall(struct.pack("!IIII", 16, 80877102, pid, secret))
         csock.close()
@@ -398,11 +422,34 @@ def test_cancel_request_interrupts_running_query(pg_server):
             got.append(_read_msg(sock, buf))
         errs = [p for t, p in got if t == b"E"]
         assert errs and b"57014" in errs[0]
-        # connection recovers
+        # the connection recovers without waiting out the abandoned
+        # result, and no Spark job is left running
         msgs = _simple_query(sock, buf, "SELECT 9 AS nine")
         assert _data_rows(msgs) == [[b"9"]]
+        assert time.monotonic() - t0 < 10, time.monotonic() - t0
+        deadline = time.monotonic() + 10
+        while tracker.getActiveJobsIds():
+            assert time.monotonic() < deadline, tracker.getActiveJobsIds()
+            time.sleep(0.1)
     finally:
         sock.close()
+
+
+def test_cancel_request_interrupts_running_query(pg_server, spark):
+    """CancelRequest (own connection, carrying BackendKeyData) stops a
+    running simple query with SQLSTATE 57014 and cancels its Spark
+    job, both mid-stream and before the first row, and the connection
+    survives. (Cancel targets only a RUNNING query — Postgres
+    semantics; an idle session is covered by
+    test_cancel_requires_secret_and_running_query.)"""
+    _cancel_running(pg_server, spark, "simple", "after")
+    _cancel_running(pg_server, spark, "simple", "before")
+
+
+def test_cancel_request_stops_portal_and_copy(pg_server, spark):
+    """The same cancel through an extended-protocol portal and COPY TO."""
+    _cancel_running(pg_server, spark, "portal", "before")
+    _cancel_running(pg_server, spark, "copy", "before")
 
 
 def test_param_substitution_unit():
@@ -599,19 +646,125 @@ def test_cancel_requires_secret_and_running_query(pg_server):
         sock.close()
 
 
+def _error_code(msgs) -> str | None:
+    """SQLSTATE (the 'C' field) of the first ErrorResponse, if any."""
+    for tag, payload in msgs:
+        if tag == b"E":
+            for field in payload.split(b"\x00"):
+                if field[:1] == b"C":
+                    return field[1:].decode()
+    return None
+
+
+def _portal_msgs(sock, buf, sql: str, oids=(), params=(), res_fmts=()):
+    """Parse (declared ``oids``), Bind (text ``params``, result
+    ``res_fmts``), Execute, Sync on the unnamed statement and portal;
+    every message up to ReadyForQuery."""
+    _send(
+        sock, b"P",
+        b"\x00" + sql.encode() + b"\x00"
+        + struct.pack(f"!h{len(oids)}I", len(oids), *oids),
+    )
+    bind = b"\x00\x00" + struct.pack("!hh", 0, len(params))
+    for v in params:
+        bind += struct.pack("!i", len(v)) + v.encode()
+    bind += struct.pack(f"!h{len(res_fmts)}h", len(res_fmts), *res_fmts)
+    _send(sock, b"B", bind)
+    _send(sock, b"E", b"\x00" + struct.pack("!I", 0))
+    _send(sock, b"S", b"")
+    return _read_until_ready(sock, buf)
+
+
+def _copy_in_ext(sock, buf, sql: str, payload: bytes):
+    """COPY FROM STDIN through Parse/Bind/Execute, then Sync."""
+    _send(sock, b"P", b"\x00" + sql.encode() + b"\x00" + struct.pack("!h", 0))
+    _send(sock, b"B", b"\x00\x00" + struct.pack("!hhh", 0, 0, 0))
+    _send(sock, b"E", b"\x00" + struct.pack("!I", 0))
+    msgs = []
+    while True:
+        tag, p = _read_msg(sock, buf)
+        msgs.append((tag, p))
+        if tag in (b"G", b"E"):
+            break
+    if tag == b"G":
+        _send(sock, b"d", payload)
+        _send(sock, b"c", b"")
+    _send(sock, b"S", b"")
+    return msgs + _read_until_ready(sock, buf)
+
+
+#: (path, statement, SQLSTATE) for every code the simple-query, portal,
+#: COPY TO and COPY FROM paths send, except 57014, which the cancel
+#: test covers. Portal statements are (sql, declared oids, text params,
+#: result format codes); COPY FROM statements are (sql, payload, fail).
+_SQLSTATE_TABLE = (
+    ("simple", "SELECT * FROM no_such_tbl_q", "42P01"),
+    ("simple", "CREATE TEMPORARY VIEW region AS SELECT 1 AS x", "42P07"),
+    ("simple", "SELECT no_such_col FROM range(3)", "42703"),
+    ("simple", "SELECT no_such_fn_q(1)", "42883"),
+    ("simple", "SELEC 1", "42601"),
+    ("simple", "SELECT id FROM range(2) a, range(2) b", "42702"),
+    ("simple", "SELECT 1 / (id - id) FROM range(1)", "22012"),
+    ("simple", "SELECT CAST(concat('x', id) AS INT) FROM range(1)", "22P02"),
+    ("simple", "SELECT CAST(12345.6 + id AS DECIMAL(3, 1)) FROM range(1)", "22003"),
+    ("simple", "SELECT 1 + array(1)", "42804"),
+    ("portal", ("SELECT * FROM no_such_tbl_q", (), (), ()), "42P01"),
+    ("portal", ("SELECT 1 / (id - id) FROM range(1)", (), (), ()), "22012"),
+    ("portal", ("SELECT $1 + 1 AS v", (23,), ("abc",), ()), "22P02"),
+    ("portal", ("SELECT 1 AS a", (), (), (1, 1)), "08P01"),
+    ("portal", ("SELEC $1", (), ("1",), ()), "42601"),
+    ("copy_to", "COPY (SELECT * FROM no_such_tbl_q) TO STDOUT", "42P01"),
+    ("copy_to", "COPY (SELECT 1 / (id - id) FROM range(1)) TO STDOUT", "22012"),
+    ("copy_to", "COPY region TO STDOUT WITH (FORMAT XML)", "0A000"),
+    ("copy_to", "COPY region TO STDOUT WITH (HEADER)", "0A000"),
+    ("copy_to", "COPY region FROM '/tmp/f.csv'", "0A000"),
+    ("copy_to_ext", "COPY (SELECT * FROM no_such_tbl_q) TO STDOUT", "42P01"),
+    ("copy_to_ext", "COPY region TO STDOUT WITH (HEADER)", "0A000"),
+    ("copy_from", ("COPY no_such_tbl_q FROM STDIN", b"", None), "42P01"),
+    ("copy_from", ("COPY region FROM STDIN", b"", None), "0A000"),
+    ("copy_from", ("COPY sqlstate_t (nope) FROM STDIN", b"", None), "0A000"),
+    ("copy_from", ("COPY sqlstate_t FROM STDIN WITH (FORMAT XML)", b"", None), "0A000"),
+    ("copy_from", ("COPY sqlstate_t FROM STDIN", b"1\n", "client abort"), "22P04"),
+    ("copy_from", ("COPY sqlstate_t FROM STDIN", b"1\t2\n", None), "22P04"),
+    ("copy_from", ("COPY sqlstate_t FROM STDIN WITH (FORMAT BINARY)", b"nope", None), "22P04"),
+    ("copy_from", ("COPY sqlstate_t FROM STDIN", b"abc\n", None), "22P02"),
+    ("copy_from_ext", ("COPY sqlstate_t FROM STDIN", b"1\t2\n", None), "22P04"),
+    ("copy_from_ext", ("COPY region FROM STDIN", b"", None), "0A000"),
+)
+
+
 def test_sqlstate_classification(conn):
-    """Engine errors map to the specific SQLSTATE a pg client branches
-    on: unknown table → 42P01, unknown column → 42703, generic
-    syntax → 42601."""
+    """Every error path maps to the SQLSTATE a pg client branches on,
+    pinned per (path, statement); after each error the connection
+    answers the next statement."""
     sock, buf = conn
-    for sql, code in (
-        ("SELECT * FROM no_such_tbl_q", b"42P01"),
-        ("SELECT no_such_col FROM range(3)", b"42703"),
-        ("SELEC 1", b"42601"),
-    ):
-        msgs = _simple_query(sock, buf, sql)
-        errs = [p for t, p in msgs if t == b"E"]
-        assert errs and code in errs[0], (sql, errs)
+    _simple_query(sock, buf, "DROP TABLE IF EXISTS sqlstate_t")
+    _simple_query(sock, buf, "CREATE TABLE sqlstate_t (k BIGINT) USING parquet")
+    got = []
+    try:
+        for path, stmt, _ in _SQLSTATE_TABLE:
+            if path in ("simple", "copy_to"):
+                msgs = _simple_query(sock, buf, stmt)
+            elif path == "portal":
+                msgs = _portal_msgs(sock, buf, *stmt)
+            elif path == "copy_to_ext":
+                msgs = _portal_msgs(sock, buf, stmt)
+            elif path == "copy_from":
+                msgs = _copy_in(sock, buf, *stmt)
+            else:
+                msgs = _copy_in_ext(sock, buf, *stmt[:2])
+            got.append((path, stmt, _error_code(msgs)))
+            assert _data_rows(_simple_query(sock, buf, "SELECT 1 AS v")) == [[b"1"]]
+    finally:
+        _simple_query(sock, buf, "DROP TABLE IF EXISTS sqlstate_t")
+    assert got == list(_SQLSTATE_TABLE)
+    # protocol-level codes of the extended flow
+    _send(sock, b"B", b"\x00no_such_stmt\x00" + struct.pack("!hhh", 0, 0, 0))
+    _send(sock, b"S", b"")
+    assert _error_code(_read_until_ready(sock, buf)) == "26000"
+    _send(sock, b"E", b"no_such_portal\x00" + struct.pack("!I", 0))
+    _send(sock, b"S", b"")
+    assert _error_code(_read_until_ready(sock, buf)) == "34000"
 
 
 def test_concurrent_clients_are_isolated(pg_server):
@@ -1846,6 +1999,9 @@ def test_copy_from_stdin_text_and_csv(conn):
         sock, buf, "COPY copy_in_t (a) FROM STDIN", b"9\n"
     )
     assert (b"C", b"COPY 1\x00") in msgs
+
+    msgs = _copy_in(sock, buf, "COPY copy_in_t FROM STDIN", b"")  # zero rows
+    assert (b"C", b"COPY 0\x00") in msgs
 
     rows = _data_rows(
         _simple_query(sock, buf, "SELECT * FROM copy_in_t ORDER BY a")
@@ -3376,7 +3532,8 @@ _MIXED_VIEW_SQL = (
 
 def _wire_transcript(port: int) -> list:
     """Every message of: a simple query, an extended-protocol portal
-    suspended by max_rows, and COPY TO in text and CSV."""
+    suspended by max_rows, the same portal with every result column in
+    binary, and COPY TO in text, CSV and binary."""
     sock = socket.create_connection(("127.0.0.1", port), timeout=120)
     buf = bytearray()
     _startup(sock)
@@ -3389,14 +3546,39 @@ def _wire_transcript(port: int) -> list:
         _send(sock, b"E", b"\x00" + struct.pack("!I", 7))
     _send(sock, b"S", b"")
     out.append(_read_until_ready(sock, buf))
-    out.append(_simple_query(sock, buf, "COPY fetch_mixed TO STDOUT"))
-    out.append(
-        _simple_query(
-            sock, buf, "COPY fetch_mixed TO STDOUT WITH (FORMAT CSV, HEADER)"
-        )
-    )
+    _send(sock, b"P", b"\x00" + q + b"\x00" + struct.pack("!h", 0))
+    _send(sock, b"B", b"\x00\x00" + struct.pack("!hhhh", 0, 0, 1, 1))
+    _send(sock, b"D", b"P\x00")
+    _send(sock, b"E", b"\x00" + struct.pack("!I", 0))
+    _send(sock, b"S", b"")
+    out.append(_read_until_ready(sock, buf))
+    for opts in ("", " WITH (FORMAT CSV, HEADER)", " WITH (FORMAT BINARY)"):
+        out.append(_simple_query(sock, buf, f"COPY fetch_mixed TO STDOUT{opts}"))
     sock.close()
     return out
+
+
+#: sha256 of each ``_wire_transcript`` section (messages re-framed as
+#: sent), recorded before the row loops were merged into one: the
+#: simple query, the suspended portal, the binary portal, and COPY TO
+#: text, CSV and binary.
+_WIRE_TRANSCRIPT_SHA256 = [
+    "b74f4a36e2184efea7e6f4d5b368fd9c0b55fff61efb87c6e481974235eb4af8",  # simple
+    "bfc141ca6c99e219159852b5e0ef6bf1d0e5a4092d63937bfe026d88c4b41340",  # portal
+    "9449ab9eaa0b2a5d0e39f42296d899eec3c4e42c0b53e860c46e25aed75e62dd",  # binary portal
+    "f99d4a086fd5fa7822b3b5ffa6c0be8d720c3a22076e432727d47233bc1c9b91",  # copy text
+    "57d57374f8085a1e5f8f2e46b198617584f557f8a93cc126f989c033c5a0b92f",  # copy csv
+    "65b8fb87d1924a689d856afe0f1175655dde95fe0877e6f97a6aa90641e973e6",  # copy binary
+]
+
+
+def _transcript_digests(transcript: list) -> list[str]:
+    return [
+        hashlib.sha256(
+            b"".join(t + struct.pack("!I", len(p) + 4) + p for t, p in msgs)
+        ).hexdigest()
+        for msgs in transcript
+    ]
 
 
 def test_fetch_helper_wire_bytes_identical_collect_vs_stream(
@@ -3404,8 +3586,9 @@ def test_fetch_helper_wire_bytes_identical_collect_vs_stream(
 ):
     """The collect and stream fetch paths put identical bytes on the
     wire for a mixed-type result (nulls, decimal, date, timestamp,
-    array, struct) over a simple query, a max_rows-suspended portal
-    and COPY TO text/CSV; each statement logs its fetch mode."""
+    array, struct) over a simple query, a max_rows-suspended portal, a
+    binary portal and COPY TO text/CSV/binary; each statement logs its
+    fetch mode, and the bytes match the pinned digests."""
     import logging
 
     import csvb_spark.server.pgwire as pgwire
@@ -3421,19 +3604,23 @@ def test_fetch_helper_wire_bytes_identical_collect_vs_stream(
             lines = [
                 r.getMessage() for r in caplog.records if r.name == "csvb.pgwire"
             ]
-            # query + 5 suspended Executes + the completing one + 2 COPYs
-            assert len(lines) == 9, lines
+            # query + 5 suspended Executes + the completing one + the
+            # binary portal + 3 COPYs
+            assert len(lines) == 11, lines
             assert all(f", {mode}: " in ln for ln in lines), lines
             assert lines[0].startswith("query ") and " 40 rows, " in lines[0]
     finally:
         spark.catalog.dropTempView("fetch_mixed")
-    simple, portal, copy_text, copy_csv = transcripts["collected"]
+    simple, portal, binary, copy_text, copy_csv, copy_bin = transcripts["collected"]
     assert len(_data_rows(simple)) == 40
     assert [t for t, _ in portal].count(b"s") == 5
     assert (b"C", b"SELECT 40\x00") in portal
+    assert len(_data_rows(binary)) == 40
     assert len([t for t, _ in copy_text if t == b"d"]) == 40
     assert len([t for t, _ in copy_csv if t == b"d"]) == 41  # + header
+    assert len([t for t, _ in copy_bin if t == b"d"]) == 42  # + header, trailer
     assert transcripts["collected"] == transcripts["streamed"]
+    assert _transcript_digests(transcripts["collected"]) == _WIRE_TRANSCRIPT_SHA256
 
 
 def test_fetch_helper_one_job_under_budget(spark, monkeypatch):
