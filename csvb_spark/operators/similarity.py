@@ -995,35 +995,37 @@ def _ivfpq_books(codebooks, cents: dict) -> list[dict]:
 
 
 def _ivfpq_coded(
-    embs: DataFrame, books: list[dict], cents: dict, vec_col: str, id_col: str
+    embs: DataFrame, books: list[dict], cents: dict, vec_col: str, id_col: str,
+    keep: Column,
 ) -> DataFrame:
     """(id, cid, code_0..m-1): the coarse cell (squared L2) and the PQ
     codes of the RESIDUAL vector − centroid — the map-only encode that
     ivfpq_topk and the persisted index share. Cells are the dense
-    0..K-1 of :func:`seed_centroids`."""
+    0..K-1 of :func:`seed_centroids`. Rows failing ``keep`` are dropped
+    before coding (Catalyst cannot push it past the kernel itself)."""
     table = F.array(*[F.array(*[F.lit(x) for x in cents[c]]) for c in sorted(cents)])
     resid = F.zip_with(
         F.col(vec_col),
         F.element_at(table, F.col("cid").cast("int") + 1),
         lambda a, b: a.cast("double") - b,
     )
-    cells = _assign(embs, cents, "l2", vec_col).select(id_col, "cid", resid.alias("_r"))
+    cells = _assign(embs, cents, "l2", vec_col).filter(keep)
+    cells = cells.select(id_col, "cid", resid.alias("_r"))
     return _pq_codes(cells, books, F.col("_r"), [id_col, "cid"])
 
 
-def _ivfpq_search(
-    coded: DataFrame,
+def _ivfpq_probe(
     probe: DataFrame,
     books: list[dict],
     cents: dict,
-    k: int,
     nprobe: int,
     vec_col: str,
     id_col: str,
-) -> DataFrame:
-    """The probe side ivfpq_topk and ivfpq_index_topk share: the probe's
-    ``nprobe`` nearest cells (squared L2), one residual ADC table set
-    per probed cell chosen by a CASE on ``cid``, and the top-k."""
+) -> tuple[object, Column, Column]:
+    """The probe side ivfpq_topk and ivfpq_index_topk share: the probe
+    id, a filter keeping its ``nprobe`` nearest cells (squared L2), and
+    the ADC distance — one residual table set per probed cell, chosen
+    by a CASE on ``cid``."""
     pid, pv = _probe(probe, id_col, vec_col, _pq_dim(books), "ivfpq")
     probed = _nearest(pv, cents, "l2", nprobe)[0]
     dist = None
@@ -1031,7 +1033,7 @@ def _ivfpq_search(
         cd = _adc_sum(pv - np.array(cents[c]), books)
         hit = F.col("cid") == c
         dist = F.when(hit, cd) if dist is None else dist.when(hit, cd)
-    return _adc_topk(coded.filter(F.col("cid").isin(probed)), dist, pid, k, id_col)
+    return pid, F.col("cid").isin(probed), dist
 
 
 def ivfpq_topk(
@@ -1060,19 +1062,19 @@ def ivfpq_topk(
     per-cell ADC tables are driver constants from the same fold.
 
     Plan: assignment + residual + codes are map-only against
-    centroid/codebook literals; the scored scan filters to probed
-    cells (at scale: the codes table is PERSISTED partitioned by cid,
-    so this prunes at the file level), per-row cost is m lookups
-    chosen by a CASE over nprobe cells, and the top-k is
-    TakeOrderedAndProject. Output: (id, adc_dist) ascending, id
+    centroid/codebook literals; only rows of probed cells are coded
+    (the persisted index, partitioned by cid, prunes at the file level
+    instead), per-row cost is m lookups chosen by a CASE over nprobe
+    cells, and the top-k is TakeOrderedAndProject. Output: (id, adc_dist) ascending, id
     tiebreak, probe row excluded.
     """
     cents = _codebook(
         seed_centroids(embs, n_centroids, vec_col, id_col, seed_ids), nprobe
     )
     books = _ivfpq_books(codebooks, cents)
-    coded = _ivfpq_coded(embs, books, cents, vec_col, id_col)
-    return _ivfpq_search(coded, probe, books, cents, k, nprobe, vec_col, id_col)
+    pid, keep, dist = _ivfpq_probe(probe, books, cents, nprobe, vec_col, id_col)
+    coded = _ivfpq_coded(embs, books, cents, vec_col, id_col, keep)
+    return _adc_topk(coded, dist, pid, k, id_col)
 
 
 def rp_signs(out_dim: int, in_dim: int, seed: int = 11) -> list[list[int]]:
@@ -1257,7 +1259,8 @@ def write_ivfpq_index(
     One shuffle (repartition by cid → one file per cell per write)."""
     cents = seed_centroids(embs, n_centroids, vec_col, id_col, seed_ids)
     books = _ivfpq_books(codebooks, cents)
-    _write_cells(_ivfpq_coded(embs, books, cents, vec_col, id_col), path, mode)
+    coded = _ivfpq_coded(embs, books, cents, vec_col, id_col, F.lit(True))
+    _write_cells(coded, path, mode)
 
 
 def ivfpq_index_topk(
@@ -1279,9 +1282,8 @@ def ivfpq_index_topk(
     buys cold storage + pruned I/O."""
     cents = _codebook(centroids, nprobe)
     books = _ivfpq_books(codebooks, cents)
-    return _ivfpq_search(
-        spark.read.parquet(path), probe, books, cents, k, nprobe, vec_col, id_col
-    )
+    pid, keep, dist = _ivfpq_probe(probe, books, cents, nprobe, vec_col, id_col)
+    return _adc_topk(spark.read.parquet(path).filter(keep), dist, pid, k, id_col)
 
 
 def centroid_drift(

@@ -68,6 +68,7 @@ the subset that real clients use):
   streamed result is closed on a daemon thread).
 - errors → ErrorResponse (+ ReadyForQuery in the simple path;
   extended path waits for Sync — connection survives)
+- output: buffered, flushed before each blocking read; TCP_NODELAY set
 
 Each connection runs on its own thread; ``spark.sql`` is thread-safe
 and queries from concurrent connections share the session the same
@@ -335,10 +336,7 @@ def _msg(tag: bytes, payload: bytes = b"") -> bytes:
     return tag + struct.pack("!I", len(payload) + 4) + payload
 
 
-def _copy_response(tag: bytes, wire_fmt: int, ncols: int) -> bytes:
-    """CopyOutResponse (``H``) / CopyInResponse (``G``): the overall
-    format, then the same format for each column."""
-    return _msg(tag, struct.pack(f"!bh{ncols}h", wire_fmt, ncols, *[wire_fmt] * ncols))
+_READY = _msg(b"Z", b"I")  # ReadyForQuery, idle
 
 
 def _cstr(s: str) -> bytes:
@@ -1270,7 +1268,9 @@ class _Conn:
 
         self.sock = sock
         self.spark = spark
-        self.buf = b""
+        self.buf, self.pos = b"", 0  # bytes received, consumed prefix
+        self.wbuf = bytearray()  # output not yet sent (_put, _flush)
+        self.wmark = 0  # where a failing statement cuts wbuf back to
         self.backend_pid = threading.get_ident() & 0x7FFFFFFF
         self.pool_idx = next(_POOL_SEQ) % 16
         self.secret = _secrets.randbits(32)
@@ -1278,18 +1278,35 @@ class _Conn:
         self.running = False  # a statement is live (cancel target)
         self.job_tag = ""  # the running statement's Spark job tag
 
-    # --- low-level framing -------------------------------------------------
+    # --- low-level framing: one buffered writer, one message reader ------
     def _recv_exact(self, n: int) -> bytes:
-        while len(self.buf) < n:
+        """Flushes pending output before it blocks; consumes by offset,
+        not by re-slicing the unread tail per read."""
+        while len(self.buf) - self.pos < n:
+            self._flush()
             chunk = self.sock.recv(65536)
             if not chunk:
                 raise ConnectionError("client closed")
-            self.buf += chunk
-        out, self.buf = self.buf[:n], self.buf[n:]
+            self.buf, self.pos = self.buf[self.pos :] + chunk, 0
+        out = self.buf[self.pos : self.pos + n]
+        self.pos += n
         return out
 
-    def _send(self, data: bytes) -> None:
-        self.sock.sendall(data)
+    def _read_message(self) -> tuple[bytes, bytes]:
+        tag = self._recv_exact(1)
+        (length,) = struct.unpack("!I", self._recv_exact(4))
+        return tag, self._recv_exact(length - 4)
+
+    def _put(self, *msgs: bytes) -> None:
+        self.wbuf += b"".join(msgs)
+        if len(self.wbuf) > 1 << 20:
+            self._flush()
+
+    def _flush(self) -> None:
+        if self.wbuf:
+            self.sock.sendall(self.wbuf)
+            self.wbuf.clear()
+        self.wmark = 0
 
     # --- startup -----------------------------------------------------------
     def handshake(self) -> bool:
@@ -1298,7 +1315,7 @@ class _Conn:
             body = self._recv_exact(length - 4)
             (code,) = struct.unpack("!I", body[:4])
             if code == _SSL_REQUEST or code == _GSSENC_REQUEST:
-                self._send(b"N")  # no TLS; client retries plaintext
+                self._put(b"N")  # no TLS; client retries plaintext
                 continue
             if code == _CANCEL_REQUEST:
                 # Sent on its own connection: body carries the target's
@@ -1318,10 +1335,10 @@ class _Conn:
                         self.spark.sparkContext.cancelJobsWithTag(target.job_tag)
                 return False
             if code != 196608:  # protocol 3.0
-                self._send_error("08P01", f"unsupported protocol code {code}")
+                self._put_error("08P01", f"unsupported protocol code {code}")
                 return False
             break
-        out = _msg(b"R", struct.pack("!I", 0))  # AuthenticationOk (trust)
+        self._put(_msg(b"R", struct.pack("!I", 0)))  # AuthenticationOk (trust)
         for k, v in (
             ("server_version", "15.0 (csvb_spark)"),
             ("server_encoding", "UTF8"),
@@ -1329,20 +1346,16 @@ class _Conn:
             ("DateStyle", "ISO, MDY"),
             ("integer_datetimes", "on"),
         ):
-            out += _msg(b"S", _cstr(k) + _cstr(v))
-        out += _msg(b"K", struct.pack("!II", self.backend_pid, self.secret))
-        out += self._ready()
-        self._send(out)
+            self._put(_msg(b"S", _cstr(k) + _cstr(v)))
+        self._put(_msg(b"K", struct.pack("!II", self.backend_pid, self.secret)))
+        self._put(_READY)
         return True
 
-    def _ready(self) -> bytes:
-        return _msg(b"Z", b"I")
-
-    def _send_error(self, code: str, message: str) -> None:
+    def _put_error(self, code: str, message: str) -> None:
         payload = (
             b"S" + _cstr("ERROR") + b"C" + _cstr(code) + b"M" + _cstr(message) + b"\x00"
         )
-        self._send(_msg(b"E", payload))
+        self._put(_msg(b"E", payload))
 
     # --- query execution ----------------------------------------------------
     def _row_description(self, df, fmts: list[int] | None = None) -> bytes:
@@ -1367,13 +1380,15 @@ class _Conn:
         if cancelled, the call site's ``value_error`` for a ValueError,
         else :func:`_sqlstate_for` — and releases an unfinished result;
         extended mode then discards until Sync, simple mode sends
-        ReadyForQuery either way. Success logs one line."""
+        ReadyForQuery either way; the statement's unsent output (from
+        ``wmark`` on) is dropped first. Success logs one line."""
         t0 = time.perf_counter()
         stmt = _Stmt(kind, value_error)
         sc = self.spark.sparkContext
         tag = f"pgwire-{self.backend_pid}-{next(_STMT_SEQ)}"
         sc.addJobTag(tag)
         self.job_tag, self.cancelled, self.running = tag, False, True
+        self.wmark = len(self.wbuf)
         try:
             yield stmt
             _log_statement(stmt.kind, t0, stmt.rows, stmt.mode, sql)
@@ -1392,25 +1407,22 @@ class _Conn:
                     else _sqlstate_for(e)
                 )
                 text = _error_text(e)
-            self._send_error(code, text)
+            del self.wbuf[self.wmark :]
+            self._put_error(code, text)
             if extended:
                 self._skip_to_sync = True
         finally:
             self.running = self.cancelled = False
             sc.removeJobTag(tag)
         if not extended:
-            self._send(self._ready())
+            self._put(_READY)
 
     def _send_rows(
-        self, stmt: _Stmt, portal: dict, out: bytearray,
-        max_rows: int | None = None,
-    ) -> tuple[bytearray, bool]:
-        """The one row loop: appends ``portal["frame"]`` of each row
-        (from :func:`_fetch_rows` on first use) to ``out``, polls
-        cancel, sends every 1 MiB, stops after ``max_rows``; returns
-        the unsent tail, for the caller's completion message, and
-        whether ``max_rows`` paused the portal. A bytearray, because
-        ``bytes +=`` re-copies the chunk per row (5x the encode cost)."""
+        self, stmt: _Stmt, portal: dict, max_rows: int | None = None
+    ) -> bool:
+        """The one row loop: puts ``portal["frame"]`` of each row (from
+        :func:`_fetch_rows` on first use), polls cancel, stops after
+        ``max_rows``; returns whether ``max_rows`` paused the portal."""
         stmt.portal = portal
         df = portal["df"]
         if portal["it"] is None:
@@ -1422,31 +1434,25 @@ class _Conn:
         for row in portal["it"]:
             if self.cancelled:
                 raise _Cancelled()
-            out += frame(row)
+            self._put(frame(row))
             stmt.rows += 1
-            if len(out) > 1 << 20:
-                self._send(out)
-                out = bytearray()
             if stmt.rows == max_rows:
                 suspended = True
                 break
         else:
             portal["it"] = iter(())  # exhausted: a re-Execute sends 0 rows
         portal["sent"] += stmt.rows
-        return out, suspended
+        return suspended
 
-    def _run_portal(
-        self, stmt: _Stmt, portal: dict, max_rows: int | None, out: bytearray
-    ) -> None:
+    def _run_portal(self, stmt: _Stmt, portal: dict, max_rows: int | None) -> None:
         """Rows then CommandComplete, or PortalSuspended when
         ``max_rows`` pauses the portal (its iterator is kept, so a
         later Execute resumes where this one stopped)."""
-        out, suspended = self._send_rows(stmt, portal, out, max_rows)
-        if suspended:
+        if self._send_rows(stmt, portal, max_rows):
             stmt.kind += " (suspended)"
-            self._send(out + _msg(b"s"))
+            self._put(_msg(b"s"))
         else:
-            self._send(out + _msg(b"C", _cstr(f"SELECT {portal['sent']}")))
+            self._put(_msg(b"C", _cstr(f"SELECT {portal['sent']}")))
 
     def _run_sql(self, sql: str) -> None:
         """Simple query: plan, RowDescription, then the rows of an
@@ -1455,8 +1461,7 @@ class _Conn:
 
         sql = sql.strip().rstrip(";").strip()
         if not sql:
-            self._send(_msg(b"I"))  # EmptyQueryResponse
-            self._send(self._ready())
+            self._put(_msg(b"I"), _READY)  # EmptyQueryResponse
             return
         if _COPY_RE.match(sql) or _COPY_FROM_RE.match(sql):
             self._run_copy(sql)
@@ -1467,7 +1472,8 @@ class _Conn:
                 "df": df, "it": None, "sent": 0,
                 "frame": _fields_frame(b"D", [_pg_text] * len(df.columns)),
             }
-            self._run_portal(stmt, portal, None, bytearray(self._row_description(df)))
+            self._put(self._row_description(df))
+            self._run_portal(stmt, portal, None)
 
     def _run_copy(self, sql: str, extended: bool = False) -> None:
         """COPY through the COPY sub-protocol: TO STDOUT
@@ -1501,28 +1507,32 @@ class _Conn:
             raise ValueError("COPY HEADER MATCH applies to COPY FROM only")
         df = execute_sql(self.spark, m.group("q") or f"SELECT * FROM {m.group('tbl')}")
         cols = df.columns
-        wire_fmt = 1 if fmt == "binary" else 0
-        out = bytearray()
         if fmt == "binary":
             frame = _fields_frame(
                 b"d", _encoders(df.dtypes, [1] * len(cols), "binary COPY")
             )
-            # signature + flags + header-extension length
-            out += _msg(b"d", _COPY_BIN_SIG + struct.pack("!ii", 0, 0))
         else:
             frame = _line_frame(fmt, delim)
-            if header:
-                out += _msg(
-                    b"d",
-                    delim.join(_copy_csv_cell(c.encode(), delim) for c in cols)
-                    + b"\n",
-                )
-        self._send(_copy_response(b"H", wire_fmt, len(cols)))
-        portal = {"df": df, "it": None, "sent": 0, "frame": frame}
-        out, _ = self._send_rows(stmt, portal, out)
+        self._copy_response(b"H", fmt, len(cols))
         if fmt == "binary":
-            out += _msg(b"d", struct.pack("!h", -1))  # trailer
-        self._send(out + _msg(b"c") + _msg(b"C", _cstr(f"COPY {stmt.rows}")))
+            # signature + flags + header-extension length
+            self._put(_msg(b"d", _COPY_BIN_SIG + struct.pack("!ii", 0, 0)))
+        elif header:
+            names = delim.join(_copy_csv_cell(c.encode(), delim) for c in cols)
+            self._put(_msg(b"d", names + b"\n"))
+        portal = {"df": df, "it": None, "sent": 0, "frame": frame}
+        self._send_rows(stmt, portal)
+        if fmt == "binary":
+            self._put(_msg(b"d", struct.pack("!h", -1)))  # trailer
+        self._put(_msg(b"c"), _msg(b"C", _cstr(f"COPY {stmt.rows}")))
+
+    def _copy_response(self, tag: bytes, fmt: str, ncols: int) -> None:
+        """CopyOutResponse (``H``) / CopyInResponse (``G``): the overall
+        format, then the same format for each column; a later failure
+        keeps it, and its ErrorResponse follows."""
+        w = 1 if fmt == "binary" else 0  # the wire format code
+        self._put(_msg(tag, struct.pack(f"!bh{ncols}h", w, ncols, *[w] * ncols)))
+        self.wmark = len(self.wbuf)
 
     def _copy_in(self, stmt: _Stmt, m: "_re.Match[str]") -> None:
         """COPY table [(cols)] FROM STDIN: CopyInResponse, stream the
@@ -1587,8 +1597,7 @@ class _Conn:
         # warehouse dir must refuse the COPY up front, not after
         # acknowledging data
         staging_base = _copy_staging_base(self.spark)
-        # enter copy-in mode
-        self._send(_copy_response(b"G", 1 if fmt == "binary" else 0, len(cols)))
+        self._copy_response(b"G", fmt, len(cols))
         stmt.value_error = "22P04"  # the client's data is in flight now
         # Incremental, bounded-memory ingest: complete rows are parsed
         # out of each CopyData chunk as it arrives; once the parsed
@@ -1599,13 +1608,8 @@ class _Conn:
         # Hadoop FileSystem API (a raw byte copy, executor-visible on
         # any FS), and the final INSERT is ONE insertInto reading the
         # staging dir — a failed COPY never leaves a partial insert,
-        # and the driver never holds the whole payload (the COPY TO
-        # side has the same 1 MiB flush discipline). Payloads under
-        # the bound skip staging entirely. (The previous per-chunk
-        # createDataFrame().write.parquet() ran a full Spark job per
-        # chunk, so a many-chunk COPY on a contended host could stall
-        # the client past its recv deadline with zero bytes of
-        # protocol progress.)
+        # and the driver never holds the whole payload. Payloads under
+        # the bound skip staging entirely.
         str_schema = ", ".join(f"`{c}` string" for c in cols)
         buf = bytearray()
         st = {
@@ -1826,9 +1830,7 @@ class _Conn:
         parse_err: Exception | None = None
         try:
             while True:
-                tag = self._recv_exact(1)
-                (length,) = struct.unpack("!I", self._recv_exact(4))
-                body = self._recv_exact(length - 4)
+                tag, body = self._read_message()
                 if tag == b"d":
                     if parse_err is None:
                         try:
@@ -1870,7 +1872,7 @@ class _Conn:
             )
             full.write.insertInto(tbl)
             stmt.rows = st["rows"]
-            self._send(_msg(b"C", _cstr(f"COPY {st['rows']}")))
+            self._put(_msg(b"C", _cstr(f"COPY {st['rows']}")))
         finally:
             if st["spool"]:
                 shutil.rmtree(st["spool"], ignore_errors=True)
@@ -1916,7 +1918,7 @@ class _Conn:
         """Error inside the extended flow: report, then discard
         messages until Sync (no ReadyForQuery here — 'Z' only ever
         follows Sync)."""
-        self._send_error(code, message)
+        self._put_error(code, message)
         self._skip_to_sync = True
 
     def _describe_df(self, df, fmts: list[int] | None = None) -> bytes:
@@ -1924,39 +1926,34 @@ class _Conn:
 
     # --- main loop ------------------------------------------------------------
     def serve(self) -> None:
-        if not self.handshake():
-            return
-        _CONNS[self.backend_pid] = self
-        # each connection runs on its own handler thread (ThreadingTCP-
-        # Server) and PySpark local properties are thread-local, so this
-        # tags every job the connection triggers with its own scheduler
-        # pool — under spark.scheduler.mode=FAIR (the serve CLI paths
-        # opt in; session.py defaults batch work to FIFO) concurrent
-        # clients share the cluster instead of queueing FIFO behind one
-        # long query. The pool index is a connection-sequence counter
-        # into a FIXED set of 16 pools (NOT the pid — see _POOL_SEQ):
-        # Spark's root pool retains every pool name it ever sees, so
-        # per-pid names would accumulate without bound on a long-lived
-        # server with connection churn; 16 pools still give concurrent
-        # clients fair shares (collisions just share one fair slot),
-        # and the local property is cleared on close.
-        self.spark.sparkContext.setLocalProperty(
-            "spark.scheduler.pool", f"pgwire-{self.pool_idx}"
-        )
+        """Startup, then the message loop; pending output (a startup
+        error such as 08P01 too) is flushed on every exit."""
         try:
+            if not self.handshake():
+                return
+            _CONNS[self.backend_pid] = self
+            # local properties are per thread, and each connection has
+            # its own: every job it runs goes to its scheduler pool, so
+            # under spark.scheduler.mode=FAIR (the serve CLI paths opt
+            # in) concurrent clients share the cluster instead of
+            # queueing behind one long query. The pool is one of a FIXED
+            # 16 (see _POOL_SEQ): Spark's root pool keeps every name it
+            # sees, so per-pid names would grow without bound.
+            self.spark.sparkContext.setLocalProperty(
+                "spark.scheduler.pool", f"pgwire-{self.pool_idx}"
+            )
             self._serve_loop()
         finally:
             _CONNS.pop(self.backend_pid, None)
             self.spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
+            self._flush()
 
     def _serve_loop(self) -> None:
         stmts: dict[str, tuple] = {}  # name -> (sql, planned df | None, param oids)
         portals: dict[str, dict] = {}  # name -> {df, it, sent}
         self._skip_to_sync = False
         while True:
-            tag = self._recv_exact(1)
-            (length,) = struct.unpack("!I", self._recv_exact(4))
-            body = self._recv_exact(length - 4)
+            tag, body = self._read_message()
             if tag == b"X":
                 return
             if self._skip_to_sync and tag in (b"P", b"B", b"D", b"E", b"C", b"H"):
@@ -1967,13 +1964,9 @@ class _Conn:
                 name, rest = body.split(b"\x00", 1)
                 query, rest = rest.split(b"\x00", 1)
                 (ntypes,) = struct.unpack("!h", rest[:2])
-                oids = (
-                    list(struct.unpack(f"!{ntypes}I", rest[2 : 2 + 4 * ntypes]))
-                    if ntypes
-                    else []
-                )
+                oids = list(struct.unpack(f"!{ntypes}I", rest[2 : 2 + 4 * ntypes]))
                 stmts[name.decode()] = (query.decode(), None, oids)
-                self._send(_msg(b"1"))  # ParseComplete
+                self._put(_msg(b"1"))  # ParseComplete
             elif tag == b"B":  # Bind: portal, stmt, param fmts, params
                 try:
                     portal, rest = body.split(b"\x00", 1)
@@ -2016,7 +2009,7 @@ class _Conn:
                     portals[portal] = {
                         "df": None, "it": None, "sent": 0, "copy_sql": csql
                     }
-                    self._send(_msg(b"2"))  # BindComplete
+                    self._put(_msg(b"2"))  # BindComplete
                     continue
                 try:
                     if params:
@@ -2057,7 +2050,7 @@ class _Conn:
                     "df": df, "it": None, "sent": 0, "fmts": fmts, "sql": sql,
                     "frame": _fields_frame(b"D", encs),
                 }
-                self._send(_msg(b"2"))  # BindComplete
+                self._put(_msg(b"2"))  # BindComplete
             elif tag == b"D":  # Describe: 'S'+name or 'P'+name
                 kind, name = body[:1], body[1:].split(b"\x00", 1)[0].decode()
                 if kind == b"S":
@@ -2070,12 +2063,8 @@ class _Conn:
                     n_params = max(len(oids), _count_params(sql))
                     # declared oids, 0 (unknown) for undeclared positions
                     described = (oids + [0] * n_params)[:n_params]
-                    self._send(
-                        _msg(
-                            b"t",
-                            struct.pack(f"!h{n_params}I", n_params, *described),
-                        )
-                    )
+                    types = struct.pack(f"!h{n_params}I", n_params, *described)
+                    self._put(_msg(b"t", types))  # ParameterDescription
                     # Command-shaped statements are NEVER planned here —
                     # Spark executes commands eagerly at plan time and
                     # Describe must not run the statement — they answer
@@ -2102,13 +2091,13 @@ class _Conn:
                                 self._ext_error(_sqlstate_for(e), _error_text(e))
                                 continue
                             stmts[name] = (sql, df, oids)
-                    self._send(self._describe_df(df))
+                    self._put(self._describe_df(df))
                 elif kind == b"P":
                     if name not in portals:
                         self._ext_error("34000", f"unknown portal {name!r}")
                         continue
                     p = portals[name]
-                    self._send(self._describe_df(p["df"], p.get("fmts")))
+                    self._put(self._describe_df(p["df"], p.get("fmts")))
                 else:
                     self._ext_error("08P01", f"bad describe kind {kind!r}")
             elif tag == b"E":  # Execute: portal, max rows
@@ -2125,14 +2114,14 @@ class _Conn:
                     stmts.pop(name, None)
                 elif name in portals:
                     _release(portals.pop(name))
-                self._send(_msg(b"3"))  # CloseComplete
+                self._put(_msg(b"3"))  # CloseComplete
             elif tag == b"S":  # Sync — end of implicit transaction
                 for p in portals.values():
                     _release(p)
                 portals.clear()
                 self._skip_to_sync = False
-                self._send(self._ready())
-            elif tag == b"H":  # Flush — output is sent eagerly already
+                self._put(_READY)
+            elif tag == b"H":  # Flush: output goes out at the next blocking read
                 pass
             else:
                 self._ext_error("0A000", f"unsupported message {tag!r}")
@@ -2146,10 +2135,10 @@ class _Conn:
             self._run_copy(copy_sql, extended=True)
             return
         if portal["df"] is None:  # empty statement
-            self._send(_msg(b"I"))
+            self._put(_msg(b"I"))
             return
         with self._statement("portal", portal["sql"], extended=True) as stmt:
-            self._run_portal(stmt, portal, max_rows, bytearray())
+            self._run_portal(stmt, portal, max_rows)
 
 
 class PgWireServer:
@@ -2183,6 +2172,8 @@ class PgWireServer:
         class Handler(socketserver.BaseRequestHandler):
             def handle(self) -> None:  # noqa: D401
                 try:
+                    # each flush is a whole response: Nagle could only delay it
+                    self.request.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
                     _Conn(self.request, spark_ref).serve()
                 except ConnectionError:
                     pass

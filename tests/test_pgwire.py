@@ -130,6 +130,9 @@ def test_extended_protocol(conn):
     # Parse (unnamed stmt), Bind, Execute, Sync
     parse = b"\x00" + sql + b"\x00" + struct.pack("!h", 0)
     sock.sendall(b"P" + struct.pack("!I", len(parse) + 4) + parse)
+    # Flush without Sync: ParseComplete arrives before anything else is sent
+    sock.sendall(b"H" + struct.pack("!I", 4))
+    assert _read_msg(sock, buf) == (b"1", b"")
     bind = b"\x00\x00" + struct.pack("!hhh", 0, 0, 0)
     sock.sendall(b"B" + struct.pack("!I", len(bind) + 4) + bind)
     execute = b"\x00" + struct.pack("!I", 0)
@@ -3658,3 +3661,134 @@ def test_fetch_helper_one_job_under_budget(spark, monkeypatch):
         assert (mode, rows) == ("streamed", 10000)
     finally:
         spark.catalog.dropTempView("fetch_parts")
+
+
+class _CountingSock:
+    """The server end of a socket pair, recording every ``sendall``."""
+
+    def __init__(self, sock: socket.socket):
+        self.sock, self.writes = sock, []
+
+    def sendall(self, data) -> None:
+        self.writes.append(bytes(data))  # before the bytes can arrive
+        self.sock.sendall(data)
+
+    def recv(self, n: int) -> bytes:
+        return self.sock.recv(n)
+
+
+def test_each_response_leaves_in_one_write(spark, pg_server):
+    """A connection buffers its output and flushes before it waits for
+    the client: startup, a simple SELECT, an empty query, a failing
+    query, a Parse/Bind/Describe/Execute/Sync batch and COPY TO each
+    go out in ONE write ending in ReadyForQuery; COPY FROM's
+    CopyInResponse goes out alone before the client sends data; a
+    result over 1 MiB takes ceil(bytes / 1 MiB) writes. The server's
+    accepted sockets set TCP_NODELAY."""
+    import threading
+
+    import csvb_spark.server.pgwire as pgwire
+
+    ready = b"Z\x00\x00\x00\x05I"  # ReadyForQuery, idle
+    a, sock = socket.socketpair()
+    sock.settimeout(120)
+    srv = _CountingSock(a)
+    # built on its serving thread: the backend pid is that thread's id
+    t = threading.Thread(target=lambda: pgwire._Conn(srv, spark).serve(), daemon=True)
+    t.start()
+    buf = bytearray()
+
+    def exchange(request: bytes, until: bytes = b"Z") -> tuple[list, list]:
+        n = len(srv.writes)
+        sock.sendall(request)
+        msgs = [_read_msg(sock, buf)]
+        while msgs[-1][0] != until:
+            msgs.append(_read_msg(sock, buf))
+        assert not buf  # nothing past the response arrived
+        return msgs, srv.writes[n:]
+
+    def msg(tag: bytes, body: bytes = b"") -> bytes:
+        return tag + struct.pack("!I", len(body) + 4) + body
+
+    def query(sql: str) -> bytes:
+        return msg(b"Q", sql.encode() + b"\x00")
+
+    params = b"user\x00test\x00database\x00tbl\x00\x00"
+    startup = struct.pack("!II", len(params) + 8, 196608) + params
+    q = b"SELECT id, 'x' AS s FROM range(3)"
+    batch = (
+        msg(b"P", b"\x00" + q + b"\x00" + struct.pack("!h", 0))
+        + msg(b"B", b"\x00\x00" + struct.pack("!hhh", 0, 0, 0))
+        + msg(b"D", b"P\x00")
+        + msg(b"E", b"\x00" + struct.pack("!I", 0))
+        + msg(b"S")
+    )
+    try:
+        for request in (
+            startup,
+            query("SELECT 1 AS one"),
+            query(" ; "),  # EmptyQueryResponse
+            query("SELECT * FROM no_such_tbl_w"),
+            batch,
+            query("COPY (SELECT id FROM range(5)) TO STDOUT"),
+            query("DROP TABLE IF EXISTS write_count_t"),
+            query("CREATE TABLE write_count_t (a INT) USING parquet"),
+        ):
+            msgs, writes = exchange(request)
+            assert len(writes) == 1, (request[:40], len(writes))
+            assert writes[0].endswith(ready)
+            assert b"".join(writes) == b"".join(
+                tg + struct.pack("!I", len(p) + 4) + p for tg, p in msgs
+            )
+        # COPY FROM: CopyInResponse leaves before any data is sent
+        msgs, writes = exchange(query("COPY write_count_t FROM STDIN"), b"G")
+        assert [tg for tg, _ in msgs] == [b"G"] and len(writes) == 1
+        msgs, writes = exchange(msg(b"d", b"1\n2\n") + msg(b"c"))
+        assert (b"C", b"COPY 2\x00") in msgs and len(writes) == 1
+        exchange(query("DROP TABLE write_count_t"))
+        # 2500 DataRows of 1011 bytes: flushed each time 1 MiB is pending
+        msgs, writes = exchange(query("SELECT repeat('x', 1000) FROM range(2500)"))
+        total = sum(len(w) for w in writes)
+        assert len(_data_rows(msgs)) == 2500 and total > 2 << 20
+        assert len(writes) == -(-total // (1 << 20))
+        assert all(len(w) > 1 << 20 for w in writes[:-1])
+        assert writes[-1].endswith(ready)
+    finally:
+        sock.sendall(msg(b"X"))  # Terminate
+        sock.close()
+        t.join(60)
+    assert not t.is_alive()
+    # the TCP server's accepted socket: TCP_NODELAY
+    tcp = socket.create_connection(("127.0.0.1", pg_server.port), timeout=60)
+    try:
+        _startup(tcp)
+        (key,) = [p for tg, p in _read_until_ready(tcp, bytearray()) if tg == b"K"]
+        (pid, _) = struct.unpack("!II", key)
+        assert pgwire._CONNS[pid].sock.getsockopt(
+            socket.IPPROTO_TCP, socket.TCP_NODELAY
+        )
+    finally:
+        tcp.close()
+
+
+def test_startup_refusals_reach_the_client(pg_server):
+    """SSLRequest is answered 'N' and the startup goes on in plaintext;
+    an unsupported protocol version gets its 08P01 ErrorResponse
+    before the server closes the connection."""
+    sock = socket.create_connection(("127.0.0.1", pg_server.port), timeout=60)
+    try:
+        sock.sendall(struct.pack("!II", 8, 80877103))  # SSLRequest
+        assert sock.recv(1) == b"N"
+        _startup(sock)
+        assert _read_until_ready(sock, bytearray())[-1] == (b"Z", b"I")
+    finally:
+        sock.close()
+    sock = socket.create_connection(("127.0.0.1", pg_server.port), timeout=60)
+    try:
+        sock.sendall(struct.pack("!II", 8, 131072))  # protocol 2.0
+        buf = bytearray()
+        tag, payload = _read_msg(sock, buf)
+        assert tag == b"E" and _error_code([(tag, payload)]) == "08P01"
+        assert sock.recv(1) == b""  # then closed
+    finally:
+        sock.close()
