@@ -701,7 +701,9 @@ def build_parser() -> argparse.ArgumentParser:
 def _register_direct(spark, args) -> None:
     """Register the --csv/--parquet/--json sources as ONE table (the
     reference's single-table semantic, csvb.rs:44-46); exactly one
-    format may be given per invocation."""
+    format may be given per invocation. ``serve`` persists a small
+    table at registration, so its files are parsed once, by the first
+    statement that reads them."""
     from csvb_spark.sources.csv_source import add_direct_table
 
     given = [
@@ -718,7 +720,9 @@ def _register_direct(spark, args) -> None:
             "give at most one of --csv/--parquet/--json (one table, one format)"
         )
     for fmt, paths in given:
-        add_direct_table(spark, args.table_name, paths, fmt=fmt)
+        add_direct_table(
+            spark, args.table_name, paths, fmt=fmt, persist=args.command == "serve"
+        )
 
 
 def _session(args):

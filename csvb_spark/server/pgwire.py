@@ -101,6 +101,8 @@ from py4j.protocol import Py4JError
 from pyspark.sql import Row as _PgRow
 from pyspark.sql import SparkSession
 
+from csvb_spark.sources.pgclient import MessageReader
+
 log = logging.getLogger("csvb.pgwire")
 
 _SSL_REQUEST = 80877103
@@ -1268,7 +1270,7 @@ class _Conn:
 
         self.sock = sock
         self.spark = spark
-        self.buf, self.pos = b"", 0  # bytes received, consumed prefix
+        self.reader = MessageReader(sock, before_block=self._flush)
         self.wbuf = bytearray()  # output not yet sent (_put, _flush)
         self.wmark = 0  # where a failing statement cuts wbuf back to
         self.backend_pid = threading.get_ident() & 0x7FFFFFFF
@@ -1278,25 +1280,7 @@ class _Conn:
         self.running = False  # a statement is live (cancel target)
         self.job_tag = ""  # the running statement's Spark job tag
 
-    # --- low-level framing: one buffered writer, one message reader ------
-    def _recv_exact(self, n: int) -> bytes:
-        """Flushes pending output before it blocks; consumes by offset,
-        not by re-slicing the unread tail per read."""
-        while len(self.buf) - self.pos < n:
-            self._flush()
-            chunk = self.sock.recv(65536)
-            if not chunk:
-                raise ConnectionError("client closed")
-            self.buf, self.pos = self.buf[self.pos :] + chunk, 0
-        out = self.buf[self.pos : self.pos + n]
-        self.pos += n
-        return out
-
-    def _read_message(self) -> tuple[bytes, bytes]:
-        tag = self._recv_exact(1)
-        (length,) = struct.unpack("!I", self._recv_exact(4))
-        return tag, self._recv_exact(length - 4)
-
+    # --- low-level framing: one buffered writer (reads: self.reader) ------
     def _put(self, *msgs: bytes) -> None:
         self.wbuf += b"".join(msgs)
         if len(self.wbuf) > 1 << 20:
@@ -1311,8 +1295,8 @@ class _Conn:
     # --- startup -----------------------------------------------------------
     def handshake(self) -> bool:
         while True:
-            (length,) = struct.unpack("!I", self._recv_exact(4))
-            body = self._recv_exact(length - 4)
+            (length,) = struct.unpack("!I", self.reader.read_exact(4))
+            body = self.reader.read_exact(length - 4)
             (code,) = struct.unpack("!I", body[:4])
             if code == _SSL_REQUEST or code == _GSSENC_REQUEST:
                 self._put(b"N")  # no TLS; client retries plaintext
@@ -1830,7 +1814,7 @@ class _Conn:
         parse_err: Exception | None = None
         try:
             while True:
-                tag, body = self._read_message()
+                tag, body = self.reader.read_message()
                 if tag == b"d":
                     if parse_err is None:
                         try:
@@ -1953,7 +1937,7 @@ class _Conn:
         portals: dict[str, dict] = {}  # name -> {df, it, sent}
         self._skip_to_sync = False
         while True:
-            tag, body = self._read_message()
+            tag, body = self.reader.read_message()
             if tag == b"X":
                 return
             if self._skip_to_sync and tag in (b"P", b"B", b"D", b"E", b"C", b"H"):

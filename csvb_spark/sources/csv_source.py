@@ -16,21 +16,38 @@
 Repeat registrations are cheap. Each session keeps one registry entry
 per table name: the format and resolved paths, the files' identity
 (``st_ino``, ``st_size``, ``st_mtime_ns`` per path) and the DataFrame,
-which carries the inferred schema. Registering the same name over the same unchanged files
-again skips inference and returns the same relation, now persisted at
-Spark's default DataFrame level (``MEMORY_AND_DISK``), so later
-statements scan a columnar copy instead of re-parsing the files. A
-first registration stays a plain scan (a one-shot ``csvb exec`` never
-pays for caching), and a registration over changed files or another
-path set unpersists the name's old relation and infers again.
+which carries the inferred schema. Registering the same name over the
+same unchanged files again skips inference and returns the same
+relation, now persisted at Spark's default DataFrame level
+(``MEMORY_AND_DISK``), so later statements scan a columnar copy
+instead of re-parsing the files. A first registration stays a plain
+scan (a one-shot ``csvb exec`` never pays for caching), unless the
+caller asks for ``persist`` and the files total fewer than
+:data:`SMALL_TABLE_BYTES`: ``csvb serve`` does, so a small served
+table is parsed once, by its first statement (``cache()`` is lazy, so
+start-up does not wait for it). A registration over changed files or
+another path set unpersists the name's old relation and infers again.
+
+A table persisted at its first registration is one partition: it is
+``coalesce(1)`` of its scan, so its cached copy reports
+``SinglePartition`` and a GROUP BY, a QUALIFY or DISTINCT ON window or
+a sort-merge join over it plans no shuffle; a statement is one stage,
+one job and one task. (A CSV scan reports ``UnknownPartitioning`` even
+when it is one file, one split, so the planner shuffles it.) The
+one-task parse is paid once, when the cache fills. Every other
+registration keeps its scan's partitioning: a plain one, whose every
+statement re-parses the files, a repeat registration, which returns
+the same relation, and a large table or one whose files cannot be
+stat-ed locally, which ``persist`` leaves plain.
 
 Spark matches cached data by plan, and its file index compares only
 root paths, so a cached copy would outlive an in-place rewrite of its
 files — for its own name and for any other name registered over the
 same paths. :func:`drop_changed_caches`, which ``sql.execute_sql``
 calls before planning every statement, re-stats the files of every
-persisted relation and unpersists the ones whose identity moved: a
-changed file is re-read on the next statement.
+persisted relation and, for each whose identity moved, drops the
+cached copy and persists the relation afresh: the next statement
+re-reads the changed files, once.
 
 Known divergence from arrow's CSV reader: CRLF sequences INSIDE a
 quoted field are normalized to LF by Spark's parser (line-ending
@@ -41,6 +58,7 @@ switchable); all other bytes round-trip exactly
 
 from __future__ import annotations
 
+import logging
 import os
 import tempfile
 import threading
@@ -53,12 +71,26 @@ from pyspark.sql import DataFrame, SparkSession
 
 from csvb_spark.sql import bump_catalog_epoch
 
+log = logging.getLogger("csvb.csv_source")
+
+#: ``persist`` persists a first registration whose files total fewer
+#: bytes than this, as one partition (module docstring). Measured with
+#: a 2-core local session on a 4-core host, over a cached table of
+#: four CSV files: at 16 MiB a GROUP BY took 184 ms as one partition
+#: and 224 ms as four, at 64 MiB 409 ms and 288 ms. Filling the cache
+#: parses the files in one task, about twice as long as in four
+#: (1.7 s and 0.9 s at 16 MiB). The perfbench tables are at most
+#: 7.2 MB.
+SMALL_TABLE_BYTES = 16 * 1024 * 1024
+
 _CSV_OPTIONS = {
     # DataFusion 44 CsvFormat::default(): header expected, comma
     # delimiter, RFC-4180 quoting incl. newlines inside quoted fields
     # (reference csvb_engine/src/lib.rs:42). multiLine makes a file
     # non-splittable, which is the price of RFC-4180 anywhere — a CSV
     # with quoted newlines can't be split at arbitrary byte offsets.
+    # Every file is one task either way; a small persisted table's
+    # files are further merged into one partition (SMALL_TABLE_BYTES).
     "header": "true",
     "quote": '"',
     "escape": '"',
@@ -132,6 +164,7 @@ class _Registration(NamedTuple):
     paths: tuple[str, ...]  # resolved: files, never directories or URLs
     identity: tuple | None  # per path (st_ino, st_size, st_mtime_ns)
     df: DataFrame
+    one_partition: bool  # df is coalesce(1) of the scan
 
 
 #: guards the session registries and the cached sets; pgwire handler
@@ -161,6 +194,14 @@ def _identity(paths: tuple[str, ...]) -> tuple | None:
     return tuple(out)
 
 
+def _persist(cached: dict[int, _Registration], reg: _Registration) -> None:
+    """Persist ``reg`` (lazily) unless it is cached. Call under
+    :data:`_LOCK`."""
+    if id(reg) not in cached:
+        reg.df.cache()  # Spark's default level, MEMORY_AND_DISK
+        cached[id(reg)] = reg
+
+
 def _uncache(cached: dict[int, _Registration], reg: _Registration) -> None:
     """Unpersist ``reg`` if it is cached. Call under :data:`_LOCK`."""
     if cached.pop(id(reg), None) is not None:
@@ -168,17 +209,23 @@ def _uncache(cached: dict[int, _Registration], reg: _Registration) -> None:
 
 
 def drop_changed_caches(spark: SparkSession) -> None:
-    """Unpersist every registered relation whose files changed since
-    it was registered, so no statement reads a cached copy of a file
-    that was rewritten. ``sql.execute_sql`` calls this before planning;
-    with nothing persisted it returns without taking the lock."""
+    """Drop the cached copy of every persisted relation whose files
+    changed since it was cached, and persist it afresh, so no statement
+    reads a cached copy of a file that was rewritten and the next one
+    re-reads it once. The registry keeps the registration's own
+    identity, so registering the name again still infers again.
+    ``sql.execute_sql`` calls this before planning; with nothing
+    persisted it returns without taking the lock."""
     cached = _cached(spark.sparkContext)
     if not cached:
         return
     with _LOCK:
-        for reg in list(cached.values()):
-            if _identity(reg.paths) != reg.identity:
-                _uncache(cached, reg)
+        for key, reg in list(cached.items()):
+            identity = _identity(reg.paths)
+            if identity != reg.identity:
+                reg.df.unpersist()
+                reg.df.cache()  # lazy: filled by the next statement
+                cached[key] = reg._replace(identity=identity)
 
 
 def add_direct_table(
@@ -187,6 +234,7 @@ def add_direct_table(
     sources: list[str],
     cache_dir: str | None = None,
     fmt: str = "csv",
+    persist: bool = False,
 ) -> DataFrame:
     """Register ``sources`` as one ``fmt``-backed temp view ``name``.
 
@@ -199,17 +247,25 @@ def add_direct_table(
     the multi-path read, so the bulk scan is single-pass; parquet
     carries its own schema.
 
-    The first registration of ``name`` returns a lazy scan. Registering
+    The first registration of ``name`` returns a lazy scan. If
+    ``persist`` is set (the ``csvb serve`` path) and the files total
+    fewer than :data:`SMALL_TABLE_BYTES`, it is ``coalesce(1)`` of the
+    scan, one partition, persisted at ``MEMORY_AND_DISK``. Registering
     ``name`` again over the same resolved paths, with every file
     unchanged (same inode, size and mtime), reuses the schema with no
-    inference and returns the same relation persisted at
-    ``MEMORY_AND_DISK``, so later statements scan the cached columnar
-    copy. Other paths, or a changed file, unpersist the old relation
-    and infer again. A file that changes while cached is re-read on
-    the next statement (:func:`drop_changed_caches`).
+    inference and returns the same relation persisted, so later
+    statements scan the cached columnar copy. Other paths, or a
+    changed file, unpersist the old relation and infer again. A file
+    that changes while cached is re-read, once, by the next statement
+    (:func:`drop_changed_caches`).
+
+    Logs one INFO line on ``csvb.csv_source`` per call: the name, file
+    count, bytes, partitions, whether the schema was inferred or
+    reused, and whether the relation is now persisted or plain.
     """
     paths = tuple(resolve_sources(sources, cache_dir, ext=f".{fmt}"))
     identity = _identity(paths)
+    nbytes = None if identity is None else sum(size for _, size, _ in identity)
     cached = _cached(spark.sparkContext)
     with _LOCK:
         # one registry per session, like its temp views
@@ -220,21 +276,33 @@ def add_direct_table(
             and identity is not None
             and (reg.fmt, reg.paths, reg.identity) == (fmt, paths, identity)
         )
-        if reuse and id(reg) not in cached:
-            reg.df.cache()  # Spark's default level, MEMORY_AND_DISK
-            cached[id(reg)] = reg
+        if reuse:
+            _persist(cached, reg)
     if not reuse:
         # infer outside the lock: it runs a Spark job, and every
         # statement's identity check would wait on it
-        reg = _Registration(fmt, paths, identity, _scan(spark, fmt, list(paths)))
+        df = _scan(spark, fmt, list(paths))
+        one = persist and nbytes is not None and nbytes < SMALL_TABLE_BYTES
+        reg = _Registration(fmt, paths, identity, df.coalesce(1) if one else df, one)
         with _LOCK:
             old = registry.get(name)
             if old is not None:
                 _uncache(cached, old)
             registry[name] = reg
+            if one:
+                _persist(cached, reg)
     reg.df.createOrReplaceTempView(name)
     # a same-name re-registration may change the columns
     bump_catalog_epoch(spark)
+    log.info(
+        "registered %s: %d files, %s bytes, %s partitions, schema %s, %s",
+        name,
+        len(paths),
+        "unknown" if nbytes is None else nbytes,
+        "1" if reg.one_partition else "scan",
+        "reused" if reuse else "inferred",
+        "persisted" if id(reg) in cached else "plain",
+    )
     return reg.df
 
 

@@ -51,6 +51,49 @@ OID_SPARK = {
 }
 
 
+class MessageReader:
+    """Reads protocol messages off ``sock``; shared by this client and
+    the pgwire server. A message that spans many ``recv`` calls is
+    collected as a list of chunks and joined once, so reading it takes
+    time linear in its size (growing the unread buffer by one chunk per
+    ``recv`` made a 32 MiB CopyData quadratic: seconds). Short messages
+    are sliced out of the last chunk by offset. ``before_block`` runs
+    before each ``recv`` (the server flushes its pending output
+    there)."""
+
+    def __init__(self, sock: socket.socket, before_block=None):
+        self.sock = sock
+        self.before_block = before_block
+        self.buf, self.pos = b"", 0  # last chunk received, consumed prefix
+
+    def read_exact(self, n: int) -> bytes:
+        end = self.pos + n
+        if end <= len(self.buf):
+            out = self.buf[self.pos : end]
+            self.pos = end
+            return out
+        parts = [self.buf[self.pos :]]
+        need = end - len(self.buf)
+        while need > 0:
+            if self.before_block is not None:
+                self.before_block()
+            chunk = self.sock.recv(65536)
+            if not chunk:
+                raise ConnectionError("peer closed the connection")
+            parts.append(chunk)
+            need -= len(chunk)
+        # the last chunk's surplus (-need bytes) starts the next message
+        self.buf, self.pos = parts[-1], len(parts[-1]) + need
+        parts[-1] = parts[-1][: self.pos]
+        return b"".join(parts)
+
+    def read_message(self) -> tuple[bytes, bytes]:
+        """One tagged message: (tag, body)."""
+        tag = self.read_exact(1)
+        (length,) = struct.unpack("!I", self.read_exact(4))
+        return tag, self.read_exact(length - 4)
+
+
 class ShardUnreachable(RuntimeError):
     """DNS/TCP/probe precheck failed — raised before any scan work."""
 
@@ -68,41 +111,18 @@ class _PgConn:
                 f"shard {host}:{port} unreachable ({e.__class__.__name__}: {e})"
             ) from e
         self.sock.settimeout(timeout)
-        self.buf = b""
-        self.pos = 0  # consumed prefix of buf — see _recv_exact
+        self.reader = MessageReader(self.sock)
         params = (
             b"user\x00" + user.encode() + b"\x00"
             b"database\x00" + database.encode() + b"\x00\x00"
         )
         self.sock.sendall(struct.pack("!II", 8 + len(params), 196608) + params)
         while True:  # drain startup: R/S/K then Z
-            tag, body = self._read_msg()
+            tag, body = self.reader.read_message()
             if tag == b"E":
                 raise RuntimeError(_error_text(body))
             if tag == b"Z":
                 break
-
-    def _recv_exact(self, n: int) -> bytes:
-        # consume via an offset instead of re-slicing the tail: a
-        # DataRow is three reads, and `buf = buf[n:]` re-copies the
-        # whole unread buffer on each — O(buffer) per MESSAGE. The
-        # offset makes it O(buffer) per RECV (one compaction when the
-        # buffer runs dry), the same fix as the server's bytearray
-        # accumulators.
-        while len(self.buf) - self.pos < n:
-            chunk = self.sock.recv(65536)
-            if not chunk:
-                raise ConnectionError("server closed")
-            self.buf = self.buf[self.pos :] + chunk
-            self.pos = 0
-        out = self.buf[self.pos : self.pos + n]
-        self.pos += n
-        return out
-
-    def _read_msg(self) -> tuple[bytes, bytes]:
-        tag = self._recv_exact(1)
-        (length,) = struct.unpack("!I", self._recv_exact(4))
-        return tag, self._recv_exact(length - 4)
 
     def query(self, sql: str) -> tuple[list[tuple[str, int]], list[list[str | None]]]:
         q = sql.encode() + b"\x00"
@@ -111,7 +131,7 @@ class _PgConn:
         rows: list[list[str | None]] = []
         err: str | None = None
         while True:
-            tag, body = self._read_msg()
+            tag, body = self.reader.read_message()
             if tag == b"T":
                 (n,) = struct.unpack("!h", body[:2])
                 off = 2

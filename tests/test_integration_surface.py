@@ -619,6 +619,152 @@ def test_csv_second_name_over_cached_path_sees_rewritten_file(spark, tmp_path):
         spark.catalog.dropTempView(name)
 
 
+def _small_tables(tmp_path):
+    """A three-file table ``a`` (k, g, v) and a one-file table ``b``
+    (k, name): a plain scan of ``a`` has three partitions."""
+    d = tmp_path / "a"
+    d.mkdir()
+    for f in range(3):
+        rows = "".join(f"{k},{k % 5},{k * 1.5}\n" for k in range(f * 100, f * 100 + 100))
+        (d / f"part{f}.csv").write_text("k,g,v\n" + rows)
+    b = tmp_path / "b.csv"
+    b.write_text("k,name\n" + "".join(f"{k},n{k}\n" for k in range(0, 400, 3)))
+    return str(d), str(b)
+
+
+_SMALL_STMTS = {
+    "group_by": "SELECT g, count(*) AS n, sum(v) AS s FROM {a} GROUP BY g",
+    "qualify": "SELECT g, k FROM {a} "
+    "QUALIFY row_number() OVER (PARTITION BY g ORDER BY v DESC, k) = 1",
+    "distinct_on": "SELECT DISTINCT ON (g) g, k FROM {a} ORDER BY g, v DESC, k",
+    "full_join": "SELECT {a}.k, {b}.name FROM {a} FULL OUTER JOIN {b} ON {a}.k = {b}.k",
+}
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_csv_small_table_plans_no_exchange(spark, tmp_path):
+    """A table persisted at registration under SMALL_TABLE_BYTES is one
+    partition, whatever the core count: a GROUP BY, a QUALIFY or
+    DISTINCT ON window and a sort-merge join over it plan no Exchange
+    and run one job. An inner equi-join still broadcasts its build side
+    (one broadcast job), but the aggregate above it plans no shuffle."""
+    import re
+
+    from csvb_spark.sources.csv_source import add_direct_table
+    from csvb_spark.sql import execute_sql
+
+    a, b = _small_tables(tmp_path)
+    names = {"a": "small_a", "b": "small_b"}
+    for key, path in (("a", a), ("b", b)):
+        df = add_direct_table(spark, names[key], [path], persist=True)
+        assert df.rdd.getNumPartitions() == 1
+    for kind, sql in _SMALL_STMTS.items():
+        df = execute_sql(spark, sql.format(**names))
+        df.collect()  # the first statement materializes the cache
+        assert "Exchange" not in _executed_plan(df), kind
+        jobs = _jobs_in_group(spark, f"small-{kind}", df.collect)
+        assert jobs == 1, kind
+    df = execute_sql(
+        spark,
+        "SELECT {a}.g, count(*) AS n FROM {a} JOIN {b} ON {a}.k = {b}.k GROUP BY {a}.g"
+        .format(**names),
+    )
+    plan = _executed_plan(df)
+    assert "BroadcastExchange" in plan
+    assert not re.search(r"(?<!Broadcast)Exchange", plan)
+    assert sorted(df.collect()) == [(g, 20) for g in range(5)]
+    for name in names.values():
+        spark.catalog.dropTempView(name)
+
+
+@pytest.mark.parametrize("large", [False, True], ids=["plain", "large"])
+def test_csv_large_table_keeps_scan_partitioning(
+    spark, tmp_path, monkeypatch, caplog, large
+):
+    """A registration that is not persisted, or is over
+    SMALL_TABLE_BYTES, keeps its scan's partitions, and a GROUP BY
+    over it plans the same shuffle as over the bare scan."""
+    import logging
+    import os
+    import re
+
+    from pyspark import StorageLevel
+
+    from csvb_spark.sources import csv_source
+    from csvb_spark.sql import execute_sql
+
+    if large:
+        monkeypatch.setattr(csv_source, "SMALL_TABLE_BYTES", 100)
+    a, _ = _small_tables(tmp_path)
+    with caplog.at_level(logging.INFO, logger="csvb.csv_source"):
+        df = csv_source.add_direct_table(spark, "large_a", [a], persist=large)
+    assert df.rdd.getNumPartitions() == 3
+    assert df.storageLevel == StorageLevel.NONE
+    assert any(
+        "large_a: 3 files" in r.getMessage()
+        and "scan partitions, schema inferred, plain" in r.getMessage()
+        for r in caplog.records
+    )
+    csv_source._scan(spark, "csv", sorted(
+        os.path.join(a, f) for f in os.listdir(a)
+    )).createOrReplaceTempView("large_a_scan")
+    plans = [
+        re.sub(r"#\d+|plan_id=\d+", "", _executed_plan(execute_sql(
+            spark, f"SELECT g, count(*) AS n FROM {name} GROUP BY g"
+        )))
+        for name in ("large_a", "large_a_scan")
+    ]
+    assert "Exchange hashpartitioning" in plans[0]
+    assert plans[0] == plans[1]
+    for name in ("large_a", "large_a_scan"):
+        spark.catalog.dropTempView(name)
+
+
+def test_serve_registration_persists_small_table(spark, tmp_path, caplog):
+    """``csvb serve`` registers a small table persisted: its first
+    statement fills the cache, and the registration logs its path.
+    After an in-place rewrite the next statement reads the new rows
+    and fills the cache again, still one partition."""
+    import argparse
+    import logging
+
+    from pyspark import StorageLevel
+
+    from csvb_spark.cli import _register_direct
+    from csvb_spark.sql import execute_sql
+
+    a, _ = _small_tables(tmp_path)
+    args = argparse.Namespace(
+        command="serve", table_name="served_a", csv=[a], parquet=None, json=None
+    )
+    with caplog.at_level(logging.INFO, logger="csvb.csv_source"):
+        _register_direct(spark, args)
+    assert any(
+        "served_a: 3 files" in r.getMessage()
+        and "1 partitions, schema inferred, persisted" in r.getMessage()
+        for r in caplog.records
+    )
+    df = spark.table("served_a")
+    assert df.storageLevel == StorageLevel.MEMORY_AND_DISK_DESER
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+
+    def loaded() -> bool:
+        cached = cache_manager.lookupCachedData(df._jdf)
+        return cached.get().cachedRepresentation().cacheBuilder().isCachedColumnBuffersLoaded()
+
+    assert execute_sql(spark, "SELECT count(*) FROM served_a").collect() == [(300,)]
+    assert loaded()
+    with open(f"{a}/part0.csv", "a") as f:  # same inode, one more row
+        f.write("1000,0,1.5\n")
+    assert execute_sql(spark, "SELECT count(*) FROM served_a").collect() == [(301,)]
+    assert loaded()
+    assert df.rdd.getNumPartitions() == 1
+    spark.catalog.dropTempView("served_a")
+
+
 @pytest.fixture()
 def http_csv_server(tmp_path):
     """stdlib HTTP server hosting CSVs — exercises the reference's

@@ -1093,6 +1093,97 @@ def test_pgclient_pool_survives_by_value_unpickling(pg_server):
     assert pgclient.pool_stats().get(key) == 1
 
 
+def test_served_csv_sees_in_place_rewrite(conn, spark, tmp_path):
+    """A table registered the way ``csvb serve`` does (small, so
+    persisted at once) answers from its cache, and the first wire
+    statement after an in-place rewrite of its file returns the new
+    rows."""
+    from csvb_spark.sources.csv_source import add_direct_table
+
+    f = tmp_path / "served.csv"
+    f.write_text("id,val\n1,10\n2,20\n")
+    add_direct_table(spark, "served_csv", [str(f)], persist=True)
+    sql = "SELECT count(*), sum(val) FROM served_csv"
+    try:
+        assert _data_rows(_simple_query(*conn, sql)) == [[b"2", b"30"]]
+        with open(f, "w") as out:  # same inode, other size
+            out.write("id,val\n7,700\n8,800\n9,900\n")
+        assert _data_rows(_simple_query(*conn, sql)) == [[b"3", b"2400"]]
+    finally:
+        spark.catalog.dropTempView("served_csv")
+
+
+def _bulk_messages() -> list[bytes]:
+    """One 32 MiB CopyData, then 200k DataRow messages of 100 bytes."""
+    import os
+
+    big = os.urandom(32 << 20)
+    msgs = [b"d" + struct.pack("!I", len(big) + 4) + big]
+    for i in range(200_000):
+        body = i.to_bytes(4, "big") * 23 + b"\x00\x01\x02"  # 95 bytes
+        msgs.append(b"D" + struct.pack("!I", len(body) + 4) + body)
+    return msgs
+
+
+def _read_back(read_message, n: int) -> bytes:
+    out = []
+    for _ in range(n):
+        tag, body = read_message()
+        out.append(tag + struct.pack("!I", len(body) + 4) + body)
+    return b"".join(out)
+
+
+def test_message_reader_reads_large_and_many_messages_exactly(monkeypatch):
+    """The server's and the client's message reader return every byte
+    of one 32 MiB message and of 200k short ones, in order, over a
+    socket pair. Both share one reader, which joins a message's chunks
+    once, so the big one takes time linear in its size."""
+    import threading
+
+    from csvb_spark.server.pgwire import _Conn
+    from csvb_spark.sources import pgclient
+
+    msgs = _bulk_messages()
+    wire = b"".join(msgs)
+
+    def send_all(sock, data):
+        sock.sendall(data)
+        sock.shutdown(socket.SHUT_WR)  # a misframing reader meets EOF, not a hang
+
+    # server side: the client sends, _Conn reads
+    a, b = socket.socketpair()
+    b.settimeout(60)
+    sender = threading.Thread(target=send_all, args=(a, wire))
+    sender.start()
+    try:
+        assert _read_back(_Conn(b, None).reader.read_message, len(msgs)) == wire
+    finally:
+        sender.join(timeout=60)
+        a.close()
+        b.close()
+    assert not sender.is_alive()
+
+    # client side: a fake server answers the startup, then sends
+    a, b = socket.socketpair()
+
+    def fake_server():
+        (length,) = struct.unpack("!I", a.recv(4, socket.MSG_WAITALL))
+        a.recv(length - 4, socket.MSG_WAITALL)
+        send_all(a, b"Z" + struct.pack("!I", 5) + b"I" + wire)
+
+    monkeypatch.setattr(pgclient.socket, "create_connection", lambda *a, **k: b)
+    server = threading.Thread(target=fake_server)
+    server.start()
+    try:
+        conn = pgclient._PgConn("pair", 0, "u", "db", timeout=60)
+        assert _read_back(conn.reader.read_message, len(msgs)) == wire
+    finally:
+        server.join(timeout=60)
+        a.close()
+        b.close()
+    assert not server.is_alive()
+
+
 def test_pgclient_recovers_from_stale_pooled_conn(pg_server):
     from csvb_spark.sources import pgclient
 
