@@ -105,6 +105,30 @@ from csvb_spark.sources.pgclient import MessageReader
 
 log = logging.getLogger("csvb.pgwire")
 
+#: (bound ip, port) of every PgWireServer started in this process. A
+#: statement these serve runs on this process's Spark slots, so a
+#: federated read of one must leave a slot free for it
+#: (sources/federation._fetch_frame).
+_SERVED: set[tuple[str, int]] = set()
+_SERVED_LOCK = threading.Lock()
+
+
+def served_here(host: str, port: int) -> bool:
+    """True when ``host:port`` reaches a :class:`PgWireServer` started
+    in this process. A wildcard bind matches on the port alone; else
+    ``host`` must be the bound ip or resolve to it (resolved only when
+    the port matches, so a remote shard costs no lookup here)."""
+    with _SERVED_LOCK:
+        ips = {ip for ip, p in _SERVED if p == port}
+    if not ips:
+        return False
+    if ips & {"0.0.0.0", "::", host}:
+        return True
+    try:
+        return bool(ips & {ai[4][0] for ai in socket.getaddrinfo(host, port)})
+    except OSError:
+        return False
+
 _SSL_REQUEST = 80877103
 _CANCEL_REQUEST = 80877102
 _GSSENC_REQUEST = 80877104
@@ -2173,6 +2197,8 @@ class PgWireServer:
 
     def start_background(self) -> threading.Thread:
         t = threading.Thread(target=self._server.serve_forever, daemon=True)
+        with _SERVED_LOCK:
+            _SERVED.add(self._server.server_address[:2])
         t.start()
         log.info("pgwire listening on %s:%d", self.host, self.port)
         return t
@@ -2180,6 +2206,8 @@ class PgWireServer:
     def shutdown(self) -> None:
         self._server.shutdown()
         self._server.server_close()
+        with _SERVED_LOCK:
+            _SERVED.discard(self._server.server_address[:2])
 
 
 def serve_forever(spark: SparkSession, address: str = "127.0.0.1:5432") -> None:

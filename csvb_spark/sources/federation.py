@@ -29,6 +29,7 @@ against in-memory frames.
 
 from __future__ import annotations
 
+import logging
 import urllib.parse
 from dataclasses import dataclass, field
 from functools import reduce
@@ -36,6 +37,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 
 from csvb_spark.sql import bump_catalog_epoch
+
+log = logging.getLogger("csvb.federation")
 
 
 @dataclass
@@ -374,6 +377,14 @@ def probe_shard_schema(shard_addr: str, table: str) -> list[tuple[str, int]]:
     return cols
 
 
+def _schema_ddl(probe_cols: list[tuple[str, int]]) -> str:
+    """Spark DDL of a probed ``(column, oid)`` list: the fetch frame's
+    schema, and what two shards of one virtual table must agree on."""
+    from csvb_spark.sources.pgclient import OID_SPARK
+
+    return ", ".join(f"{c} {OID_SPARK.get(oid, 'string')}" for c, oid in probe_cols)
+
+
 def _fetch_frame(
     spark: SparkSession,
     probe_cols: list[tuple[str, int]],
@@ -382,11 +393,31 @@ def _fetch_frame(
     """One executor task per ``(host, port, user, db, sql)`` target,
     each running its SQL over raw pgwire and yielding the rows as
     pandas frames typed by the probed ``(column, oid)`` list — the
-    fetch half shared by :func:`read_shard_pg` and
-    :func:`read_shards_sql`."""
-    from csvb_spark.sources.pgclient import OID_SPARK
+    fetch half shared by :func:`read_shard_pg`,
+    :func:`add_federated_tables` and :func:`read_shards_sql`. The work
+    frame is ``parallelize(targets, n)``: one target per partition, no
+    shuffle.
 
-    schema = ", ".join(f"{c} {OID_SPARK.get(oid, 'string')}" for c, oid in probe_cols)
+    A target served by a :class:`~csvb_spark.server.pgwire.PgWireServer`
+    of this process runs its statement on this process's Spark slots,
+    which fetch tasks blocked on it would otherwise all hold. When any
+    target is, the frame runs on at most ``max(1, defaultParallelism -
+    1)`` tasks, each pulling its targets in turn, so one slot stays
+    free for the shard's statements."""
+    from csvb_spark.server.pgwire import served_here
+
+    sc = spark.sparkContext
+    n = len(targets)
+    if any(served_here(host, port) for host, port, *_ in targets):
+        slots = sc.defaultParallelism
+        if slots <= 1:
+            log.warning(
+                "federated read of a shard served by this process on %d "
+                "Spark slot: its statements wait for the slot the fetch "
+                "holds until the socket times out",
+                slots,
+            )
+        n = min(n, max(1, slots - 1))
     oids = [oid for _, oid in probe_cols]
     names = [c for c, _ in probe_cols]
 
@@ -417,9 +448,57 @@ def _fetch_frame(
                     yield out
 
     work = spark.createDataFrame(
-        targets, "host string, port int, user string, db string, sql string"
-    ).repartition(len(targets))
-    return work.mapInPandas(fetch, schema=schema)
+        sc.parallelize(targets, n),
+        "host string, port int, user string, db string, sql string",
+    )
+    return work.mapInPandas(fetch, schema=_schema_ddl(probe_cols))
+
+
+def _shard_targets(
+    shard_addr: str,
+    table: str,
+    probe_cols: list[tuple[str, int]],
+    columns: list[str] | None = None,
+    predicate: str | None = None,
+    limit: int | None = None,
+    partition_column: str | None = None,
+    num_partitions: int = 1,
+) -> tuple[list[tuple[str, int]], list[tuple[str, int, str, str, str]]]:
+    """The fetched ``(column, oid)`` list and the :func:`_fetch_frame`
+    targets of one shard scan: one per slice (see
+    :func:`read_shard_pg`)."""
+    params = parse_postgres_conn_str(shard_addr)
+    host = params["host"]
+    port = int(params.get("port", "5432"))
+    user = params.get("user", "csvb")
+    db = params.get("db", "csvb")
+
+    if partition_column is None and int(num_partitions) > 1:
+        # derive from the FULL probed schema — the slice predicate may
+        # reference a column outside the projection
+        partition_column = auto_partition_column(probe_cols)
+    if columns is not None:
+        keep = set(columns)
+        probe_cols = [c for c in probe_cols if c[0] in keep]
+    if not probe_cols:
+        raise ValueError(f"shard {shard_addr!r} table {table!r} has no columns")
+
+    sel = ", ".join(c for c, _ in probe_cols) if columns is not None else "*"
+    base = f"SELECT {sel} FROM {table}"
+    n_parts = max(1, int(num_partitions)) if partition_column else 1
+    slices = mod_predicates(partition_column, n_parts) if n_parts > 1 else []
+    targets = []
+    for i in range(n_parts):
+        preds = []
+        if predicate:
+            preds.append(f"({predicate})")
+        if n_parts > 1:
+            preds.append(slices[i])
+        sql = base + (" WHERE " + " AND ".join(preds) if preds else "")
+        if limit is not None:
+            sql += f" LIMIT {limit}"
+        targets.append((host, port, user, db, sql))
+    return probe_cols, targets
 
 
 def read_shard_pg(
@@ -443,60 +522,34 @@ def read_shard_pg(
     shard, so only the needed columns/rows cross the network. The
     schema is probed with ``SELECT * FROM t LIMIT 1`` (reference
     postgres_connection.rs:120); the fetch itself runs INSIDE an
-    executor task via ``mapInPandas``, so N shards pull in parallel
-    exactly like the JDBC path.
+    executor task via ``mapInPandas`` (:func:`_fetch_frame`).
 
     ``partition_column`` + ``num_partitions`` split ONE shard into N
-    parallel pulls, each shipping a disjoint
-    ``MOD(ABS(col), N) = i`` slice (NULL keys ride with slice 0, like
-    Spark's JDBC partitioner). Without it a 1 TB shard would
-    serialize through a single executor task; plain ``col % N`` is
-    portable across Spark-SQL-speaking shards and real Postgres,
-    unlike engine hash functions. When a LIMIT is pushed down with
-    N > 1, each slice carries the limit as a safe upper bound and the
-    exact global limit is re-applied Spark-side.
+    pulls, each shipping a disjoint ``MOD(ABS(col), N) = i`` slice
+    (NULL keys ride with slice 0, like Spark's JDBC partitioner), each
+    in its own task. Without it a 1 TB shard would serialize through a
+    single executor task; plain ``col % N`` is portable across
+    Spark-SQL-speaking shards and real Postgres, unlike engine hash
+    functions. A shard served by this process gets at most
+    ``max(1, defaultParallelism - 1)`` tasks, which then pull the
+    slices in turn (see :func:`_fetch_frame`). When a LIMIT is pushed
+    down with N > 1, each slice carries the limit as a safe upper
+    bound and the exact global limit is re-applied Spark-side.
     """
-    params = parse_postgres_conn_str(shard_addr)
-    host = params["host"]
-    port = int(params.get("port", "5432"))
-    user = params.get("user", "csvb")
-    db = params.get("db", "csvb")
-
-    probe_cols = (
+    probe_cols, targets = _shard_targets(
+        shard_addr,
+        table,
         list(probed_cols)
         if probed_cols is not None
-        else probe_shard_schema(shard_addr, table)
+        else probe_shard_schema(shard_addr, table),
+        columns,
+        predicate,
+        limit,
+        partition_column,
+        num_partitions,
     )
-    if partition_column is None and int(num_partitions) > 1:
-        # derive from the FULL probed schema — the slice predicate may
-        # reference a column outside the projection
-        partition_column = auto_partition_column(probe_cols)
-    if columns is not None:
-        keep = set(columns)
-        probe_cols = [c for c in probe_cols if c[0] in keep]
-    if not probe_cols:
-        raise ValueError(f"shard {shard_addr!r} table {table!r} has no columns")
-
-    sel = ", ".join(c for c, _ in probe_cols) if columns is not None else "*"
-    base = f"SELECT {sel} FROM {table}"
-    n_parts = max(1, int(num_partitions)) if partition_column else 1
-    slices = mod_predicates(partition_column, n_parts) if n_parts > 1 else []
-    part_sqls: list[str] = []
-    for i in range(n_parts):
-        preds = []
-        if predicate:
-            preds.append(f"({predicate})")
-        if n_parts > 1:
-            preds.append(slices[i])
-        sql = base + (" WHERE " + " AND ".join(preds) if preds else "")
-        if limit is not None:
-            sql += f" LIMIT {limit}"
-        part_sqls.append(sql)
-
-    out = _fetch_frame(
-        spark, probe_cols, [(host, port, user, db, s) for s in part_sqls]
-    )
-    if limit is not None and n_parts > 1:
+    out = _fetch_frame(spark, probe_cols, targets)
+    if limit is not None and len(targets) > 1:
         out = out.limit(limit)  # per-slice LIMIT is only an upper bound
     return out
 
@@ -565,6 +618,12 @@ def add_federated_tables(
     no integer column can carry N slices — see
     ``choose_partition_strategy``. Explicit ``reader_options`` still
     win on the JDBC path.
+
+    On pgwire a virtual table is ONE fetch frame over every (shard,
+    slice) target, one task per target — at most
+    ``max(1, defaultParallelism - 1)`` tasks when a shard is served by
+    this process (see :func:`_fetch_frame`); shards whose probed
+    schemas differ raise :class:`ShardSchemaMismatch`.
     """
     if transport == "auto":
         transport = "jdbc" if jdbc_driver_available(spark) else "pgwire"
@@ -610,19 +669,28 @@ def add_federated_tables(
                         vt.shard_addrs,
                     )
                 )
+            df = union_shards(vt.name, shards)
         else:
-            shards = [
-                read_shard_pg(
-                    spark,
+            if not vt.shard_addrs:
+                raise ValueError(f"federated table {vt.name!r} has no shards")
+            scans = [
+                _shard_targets(
                     addr,
                     vt.name,
+                    probed[(vt.name, addr)],
                     partition_column=partition_column,
                     num_partitions=num_partitions,
-                    probed_cols=probed[(vt.name, addr)],
                 )
                 for addr in vt.shard_addrs
             ]
-        df = union_shards(vt.name, shards)
+            first = _schema_ddl(scans[0][0])
+            for i, (cols, _) in enumerate(scans[1:], start=1):
+                if _schema_ddl(cols) != first:
+                    raise ShardSchemaMismatch(
+                        f"federated table {vt.name!r}: shard {i} schema "
+                        f"{_schema_ddl(cols)} != shard 0 schema {first}"
+                    )
+            df = _fetch_frame(spark, scans[0][0], [t for _, ts in scans for t in ts])
         df.createOrReplaceTempView(vt.name)
         out[vt.name] = df
     bump_catalog_epoch(spark)
