@@ -12,7 +12,8 @@ the subset that real clients use):
   run as an unlimited all-text portal. Simple query, portal, COPY TO
   and COPY FROM share one lifecycle (``_Conn._statement``: cancel
   state, Spark job tag, SQLSTATE, one INFO line per statement with
-  duration, rows and fetch mode); the first three share one row loop
+  duration, rows, evaluation mode (interpreted or codegen) and fetch
+  mode); the first three share one row loop
   (``_Conn._send_rows``) fed by ``_fetch_rows`` — one ``collect()``
   job within ``_COLLECT_BUDGET_BYTES`` of plan estimate, else
   ``toLocalIterator`` streaming — and framed by ``_fields_frame``
@@ -102,6 +103,7 @@ from pyspark.sql import Row as _PgRow
 from pyspark.sql import SparkSession
 
 from csvb_spark.sources.pgclient import MessageReader
+from csvb_spark.sql import evaluation_mode
 
 log = logging.getLogger("csvb.pgwire")
 
@@ -965,13 +967,17 @@ def _fetch_rows(df) -> tuple[Iterator, str]:
     return iter(df.toLocalIterator()), "streamed"
 
 
-def _log_statement(kind: str, t0: float, rows: int, mode: str, sql: str) -> None:
-    """The per-statement INFO line: duration, rows, fetch mode."""
+def _log_statement(
+    kind: str, t0: float, rows: int, evaluation: str, mode: str, sql: str
+) -> None:
+    """The per-statement INFO line: duration, rows, evaluation mode
+    (``sql.evaluation_mode``) and fetch mode."""
     log.info(
-        "%s %.1f ms, %d rows, %s: %s",
+        "%s %.1f ms, %d rows, %s, %s: %s",
         kind,
         (time.perf_counter() - t0) * 1e3,
         rows,
+        evaluation,
         mode,
         " ".join(sql.split())[:200],
     )
@@ -1399,7 +1405,9 @@ class _Conn:
         self.wmark = len(self.wbuf)
         try:
             yield stmt
-            _log_statement(stmt.kind, t0, stmt.rows, stmt.mode, sql)
+            _log_statement(
+                stmt.kind, t0, stmt.rows, evaluation_mode(self.spark), stmt.mode, sql
+            )
         except ConnectionError:
             raise
         except Exception as e:  # noqa: BLE001 — every engine error → client

@@ -306,6 +306,14 @@ def add_direct_table(
     return reg.df
 
 
+def is_one_partition(spark: SparkSession, name: str) -> bool:
+    """True when ``name`` is registered in ``spark`` as one persisted
+    partition (a first ``persist`` registration under
+    :data:`SMALL_TABLE_BYTES`)."""
+    reg = spark.__dict__.get("_csvb_registrations", {}).get(name)
+    return reg is not None and reg.one_partition
+
+
 def _scan(spark: SparkSession, fmt: str, paths: list[str]) -> DataFrame:
     if fmt == "csv":
         schema = (

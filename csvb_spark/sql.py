@@ -37,6 +37,10 @@ re-registered CSV table may be cached, and Spark matches cached data
 by plan, not by file content, so every persisted relation whose files
 changed (inode, size or mtime) is unpersisted first and the statement
 re-reads them.
+
+``csvb serve`` over one small cached table evaluates interpreted
+(:func:`run_interpreted`); ``execute_sql`` restores code generation at
+the first DDL.
 """
 
 from __future__ import annotations
@@ -180,6 +184,46 @@ def bump_catalog_epoch(spark: SparkSession) -> None:
     spark._csvb_catalog_epoch = next(_EPOCHS)  # noqa: SLF001 — session-scoped
 
 
+#: The session confs of interpreted evaluation (:func:`run_interpreted`).
+#: ``factoryMode`` is an internal Spark conf; NO_CODEGEN is the
+#: interpreted expression path Spark's own test suites run. It is
+#: needed: with whole-stage codegen off alone, predicates and
+#: projections are still compiled, literal included, and serve_short
+#: statements/s rose only 25% on a 4-core host, against 76% with both.
+_INTERPRETED_CONFS = {
+    "spark.sql.codegen.wholeStage": "false",
+    "spark.sql.codegen.factoryMode": "NO_CODEGEN",
+}
+
+
+def run_interpreted(spark: SparkSession) -> None:
+    """Evaluate the session's statements interpreted: no whole-stage
+    stages and no generated expression classes, so a statement with a
+    new literal compiles nothing. Over one small cached partition that
+    is faster than compiling. The first DDL through :func:`execute_sql`
+    restores code generation for the rest of the session's life."""
+    for k, v in _INTERPRETED_CONFS.items():
+        spark.conf.set(k, v)
+    spark._csvb_interpreted = True  # noqa: SLF001 — session-scoped
+
+
+def evaluation_mode(spark: SparkSession) -> str:
+    """``interpreted`` or ``codegen``, from a Python-side flag: no
+    Spark call, so the per-statement log line can afford it."""
+    return "interpreted" if getattr(spark, "_csvb_interpreted", False) else "codegen"
+
+
+def _restore_codegen(spark: SparkSession) -> None:
+    """Back to Spark's code generation defaults: after a DDL the
+    catalog may hold tables that are not small. Physical planning
+    reads the confs, so a flip that races a statement planned on
+    another connection changes only that statement's speed, never its
+    rows; two DDLs racing here unset the same confs twice."""
+    spark._csvb_interpreted = False  # noqa: SLF001
+    for k in _INTERPRETED_CONFS:
+        spark.conf.unset(k)
+
+
 def _flag(spark: SparkSession, conf: str) -> bool:
     return str(spark.conf.get(conf, "false")).lower() == "true"
 
@@ -194,7 +238,7 @@ class TableInfo(NamedTuple):
     catalog: str
     schema: str
     name: str
-    table_type: str  # listTables' tableType: TEMPORARY, VIEW, MANAGED, ...
+    table_type: str  # getTable's tableType: TEMPORARY, VIEW, MANAGED, ...
     columns: tuple[ColumnInfo, ...]
 
 
@@ -205,22 +249,27 @@ class CatalogSnapshot(NamedTuple):
 
     current_catalog: str
     databases: tuple[tuple[str, str], ...]  # (catalog, name)
-    tables: tuple[TableInfo, ...]  # listTables order
+    tables: tuple[TableInfo, ...]  # SHOW TABLES (listTables) order
     udfs: tuple[str, ...]  # session-registered UDF names, sorted
     builtins: tuple[str, ...]  # builtin names when the flag is on
     arrow_types: bool
 
 
-def _catalog_key(spark: SparkSession) -> tuple:
-    """The cheap rebuild key: three SHOW commands (~25-45 ms each,
-    executed locally, no per-table or per-function round trips)
-    ignoring the engine's own views and ``pg_*`` helper UDFs, plus the
-    DDL epoch and the two session flags."""
-    tables = (
+def _show_tables(spark: SparkSession) -> list[tuple[str, str, bool]]:
+    """``SHOW TABLES`` as (namespace, name, isTemporary), in its listing
+    order (listTables' order), without the engine's own views."""
+    return [
         (r[0], r[1], bool(r[2]))
         for r in spark.sql("SHOW TABLES").collect()
         if not r[1].startswith(_ENGINE_VIEW_PREFIXES)
-    )
+    ]
+
+
+def _catalog_key(spark: SparkSession, tables: list[tuple[str, str, bool]]) -> tuple:
+    """The cheap rebuild key: ``tables`` (:func:`_show_tables`) and two
+    more SHOW commands (~25-45 ms each, executed locally, no per-table
+    or per-function round trips) ignoring the ``pg_*`` helper UDFs,
+    plus the DDL epoch and the two session flags."""
     fns = (
         r[0]
         for r in spark.sql("SHOW USER FUNCTIONS").collect()
@@ -237,19 +286,30 @@ def _catalog_key(spark: SparkSession) -> tuple:
 
 
 def _read_catalog(
-    spark: SparkSession, arrow_types: bool, show_builtins: bool
+    spark: SparkSession,
+    tables: list[tuple[str, str, bool]],
+    arrow_types: bool,
+    show_builtins: bool,
 ) -> tuple[CatalogSnapshot, bool]:
-    """The expensive pass: databases, tables with their schemas, and
-    the function registry. Also returns whether the catalog held still:
-    a table listed by listTables but dropped before its schema read is
-    left out, and the pass reports False so the caller does not cache
-    it under a key that still names the table."""
-    tables, settled = [], True
-    for t in spark.catalog.listTables():
-        if t.name.startswith(_ENGINE_VIEW_PREFIXES):
-            continue
+    """The expensive pass: databases, ``tables`` (:func:`_show_tables`)
+    with their schemas, and the function registry. Also returns whether
+    the catalog held still: a table listed but dropped before its
+    schema read is left out, and the pass reports False so the caller
+    does not cache it under a key that still names the table.
+
+    Each table is read by ``getTable``, not ``listTables``: decoding
+    listTables' ``Dataset[Table]`` fails under interpreted evaluation
+    (EXPRESSION_DECODING_FAILED, :func:`run_interpreted`). A catalog
+    table is named with its namespace, so a temp view of the same name
+    does not shadow it."""
+    infos, settled = [], True
+    for namespace, name, temporary in tables:
+        ref = _quote_ident(name)
+        if not temporary:
+            ref = f"{_quote_ident(namespace)}.{ref}"
         try:
-            fields = spark.table(t.name).schema.fields
+            t = spark.catalog.getTable(ref)
+            fields = spark.table(ref).schema.fields
         except AnalysisException as ex:
             if "TABLE_OR_VIEW_NOT_FOUND" not in str(ex):
                 raise
@@ -269,7 +329,7 @@ def _read_catalog(
             )
             for f in fields
         )
-        tables.append(
+        infos.append(
             TableInfo(
                 t.catalog or "spark_catalog",
                 t.namespace[0] if t.namespace else "default",
@@ -302,7 +362,7 @@ def _read_catalog(
                 for d in spark.catalog.listDatabases()
             )
         ),
-        tuple(tables),
+        tuple(infos),
         tuple(udfs),
         tuple(builtins),
         arrow_types,
@@ -316,11 +376,14 @@ def catalog_snapshot(spark: SparkSession) -> CatalogSnapshot:
     :func:`locked_catalog_refresh`). Same-name swaps made through the
     raw Python API without :func:`bump_catalog_epoch` stay invisible
     until the next key change; every product path bumps it."""
-    key = _catalog_key(spark)
+    tables = _show_tables(spark)
+    key = _catalog_key(spark, tables)
     cached = getattr(spark, "_csvb_catalog_snap", None)
     if cached is not None and getattr(spark, "_csvb_catalog_key", None) == key:
         return cached
-    snap, settled = _read_catalog(spark, arrow_types=key[-2], show_builtins=key[-1])
+    snap, settled = _read_catalog(
+        spark, tables, arrow_types=key[-2], show_builtins=key[-1]
+    )
     if snap == cached:
         snap = cached  # epoch moved, content did not: keep the views
     spark._csvb_catalog_snap = snap  # noqa: SLF001 — session-scoped cache
@@ -347,7 +410,7 @@ def _is_transient_catalog_race(ex: Exception) -> bool:
 
 def locked_catalog_refresh(build: Callable[[], None]) -> None:
     """Run one emulation's ``build`` under :data:`_REFRESH_LOCK`. A
-    catalog mutated mid-snapshot (DDL racing the listTables) gets ONE
+    catalog mutated mid-snapshot (DDL racing the listing) gets ONE
     retry — the second pass sees a settled catalog — but only for the
     known transient race signatures."""
     with _REFRESH_LOCK:
@@ -774,8 +837,11 @@ def execute_sql(spark: SparkSession, sql: str) -> DataFrame:
     masked = _rewrite_star_replace(spark, masked, lits)
     masked = _rewrite_columns_selector(spark, masked, lits)
     sql = _restore_literals(masked, lits)
+    ddl = _DDL_RE.match(sql)
+    if ddl and evaluation_mode(spark) == "interpreted":
+        _restore_codegen(spark)  # before the DDL: a CTAS runs its query
     df = spark.sql(translate_sql(sql))
-    if _DDL_RE.match(sql):
+    if ddl:
         # DDL through this surface — including CREATE OR REPLACE under
         # the SAME name, which changes no table list — marks the
         # catalog dirty so the next introspection re-reads column
@@ -785,6 +851,7 @@ def execute_sql(spark: SparkSession, sql: str) -> DataFrame:
     return df
 
 
-#: statements that can mutate the catalog (the epoch trigger above);
-#: INSERT/CTAS arrive as CREATE, view swaps as CREATE OR REPLACE
+#: statements that can mutate the catalog (the epoch trigger and the
+#: code generation restore above); INSERT/CTAS arrive as CREATE, view
+#: swaps as CREATE OR REPLACE
 _DDL_RE = re.compile(r"^\s*(CREATE|DROP|ALTER)\b", re.IGNORECASE)

@@ -4,6 +4,7 @@ talking to PgWireServer over TCP."""
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import socket
 import struct
@@ -990,34 +991,6 @@ def test_federate_pgwire_empty_slice_with_timestamp(spark):
         assert none.count() == 0
     finally:
         srv.shutdown()
-
-
-def test_federate_pgwire_partitioned_read(spark, two_shards):
-    """num_partitions splits one shard into disjoint MOD(ABS(col),N)
-    slices pulled by separate tasks; the union of slices is row-for-row
-    the single-task pull."""
-    from csvb_spark.sources.federation import read_shard_pg
-
-    single = read_shard_pg(spark, two_shards[0], "tbl")
-    split = read_shard_pg(
-        spark, two_shards[0], "tbl", partition_column="id", num_partitions=3
-    )
-    assert split.rdd.getNumPartitions() == 3
-    a = sorted(tuple(r) for r in single.collect())
-    b = sorted(tuple(r) for r in split.collect())
-    assert a == b and len(a) == 100
-    # predicate composes with the slice predicate; limit stays exact
-    lim = read_shard_pg(
-        spark,
-        two_shards[0],
-        "tbl",
-        predicate="id >= 10",
-        limit=7,
-        partition_column="id",
-        num_partitions=2,
-    )
-    rows = lim.collect()
-    assert len(rows) == 7 and all(r.id >= 10 for r in rows)
 
 
 def test_federate_pgwire_pushdown(spark, two_shards):
@@ -2855,14 +2828,15 @@ def test_federate_auto_partition_column_and_jdbc_options():
     assert jdbc_partition_options("id", 0, 9, 1) == {}
 
 
-@pytest.fixture()
-def two_shard_processes(tmp_path):
-    """The ``two_shards`` rows, each shard a ``csvb serve --csv`` child
-    process with its own JVM and Spark slots — the reference's
-    federation topology (csvb serve instances federating each other).
-    Each port is read from the ``pgwire listening on host:port`` line
-    ``serve_forever`` prints; each child's process group is stopped
-    when the test ends, pass or fail."""
+@contextlib.contextmanager
+def _serve_processes(tables, cwd):
+    """One ``csvb serve --csv DIR --table-name NAME 127.0.0.1:0`` child
+    process per ``(DIR, NAME)`` of ``tables``, each with its own JVM and
+    Spark slots, started in ``cwd`` (where its warehouse and its
+    ``serveN.err`` log go). Yields each child's ``(host, port)``, read
+    from the ``pgwire listening on host:port`` line ``serve_forever``
+    prints; each child's process group is stopped on exit, pass or
+    fail."""
     import os
     import re
     import signal
@@ -2871,9 +2845,11 @@ def two_shard_processes(tmp_path):
     import threading
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(filter(None, [repo, env.get("PYTHONPATH")]))
     procs = []
 
-    def announced_addr(proc) -> str:
+    def announced_addr(proc) -> tuple[str, int]:
         got, done = [], threading.Event()
 
         def read() -> None:
@@ -2882,7 +2858,7 @@ def two_shard_processes(tmp_path):
             for line in proc.stdout:
                 m = re.search(r"pgwire listening on ([\d.]+):(\d+)", line)
                 if m and not got:
-                    got.append(f"postgresql://u@{m.group(1)}:{m.group(2)}/db")
+                    got.append((m.group(1), int(m.group(2))))
                     done.set()
             done.set()
 
@@ -2892,28 +2868,25 @@ def two_shard_processes(tmp_path):
         return got[0]
 
     try:
-        for i, (lo, hi) in enumerate([(0, 100), (100, 250)]):
-            d = tmp_path / f"shard{i}"
-            d.mkdir()
-            (d / "tbl.csv").write_text(
-                "id,v,s\n" + "".join(f"{k},{2 * k},{k}\n" for k in range(lo, hi))
-            )
-            procs.append(
-                subprocess.Popen(
-                    [
-                        sys.executable, "-m", "csvb_spark.cli",
-                        "--memory-pool-bytes", str(1024**3),
-                        "serve", "--csv", str(d), "--table-name", "tbl",
-                        "127.0.0.1:0",
-                    ],
-                    cwd=repo,
-                    stdout=subprocess.PIPE,
-                    stderr=subprocess.DEVNULL,
-                    text=True,
-                    start_new_session=True,  # its own group: python, JVM, workers
+        for i, (d, name) in enumerate(tables):
+            with open(os.path.join(cwd, f"serve{i}.err"), "w") as err:
+                procs.append(
+                    subprocess.Popen(
+                        [
+                            sys.executable, "-m", "csvb_spark.cli",
+                            "--memory-pool-bytes", str(1024**3),
+                            "serve", "--csv", str(d), "--table-name", name,
+                            "127.0.0.1:0",
+                        ],
+                        cwd=cwd,
+                        env=env,
+                        stdout=subprocess.PIPE,
+                        stderr=err,
+                        text=True,
+                        start_new_session=True,  # its own group: python, JVM, workers
+                    )
                 )
-            )
-        yield [announced_addr(p) for p in procs]  # both JVMs boot in parallel
+        yield [announced_addr(p) for p in procs]  # the JVMs boot in parallel
     finally:
         for p in procs:
             try:
@@ -2924,6 +2897,23 @@ def two_shard_processes(tmp_path):
                 p.wait()
             except ProcessLookupError:
                 p.wait()
+
+
+@pytest.fixture()
+def two_shard_processes(tmp_path):
+    """The ``two_shards`` rows, each shard a ``csvb serve --csv`` child
+    process (:func:`_serve_processes`) — the reference's federation
+    topology (csvb serve instances federating each other)."""
+    shards = []
+    for i, (lo, hi) in enumerate([(0, 100), (100, 250)]):
+        d = tmp_path / f"shard{i}"
+        d.mkdir()
+        (d / "tbl.csv").write_text(
+            "id,v,s\n" + "".join(f"{k},{2 * k},{k}\n" for k in range(lo, hi))
+        )
+        shards.append((d, "tbl"))
+    with _serve_processes(shards, tmp_path) as addrs:
+        yield [f"postgresql://u@{host}:{port}/db" for host, port in addrs]
 
 
 def test_federate_pgwire_auto_partitioned_read(spark, two_shard_processes):
@@ -2952,6 +2942,36 @@ def test_federate_pgwire_auto_partitioned_read(spark, two_shard_processes):
         "FROM tbl"
     ).collect()[0]
     assert (agg.n, agg.sv, agg.mn, agg.mx) == (250, 62250, 0, 249)
+
+
+def test_federate_pgwire_partitioned_read(spark, two_shard_processes):
+    """num_partitions splits one shard into disjoint MOD(ABS(col),N)
+    slices pulled by separate tasks; the union of slices is row-for-row
+    the single-task pull. The shard is a ``serve`` process: at two
+    slots, a shard served by this process gets a single fetch task
+    (see the self-served test below)."""
+    from csvb_spark.sources.federation import read_shard_pg
+
+    single = read_shard_pg(spark, two_shard_processes[0], "tbl")
+    split = read_shard_pg(
+        spark, two_shard_processes[0], "tbl", partition_column="id", num_partitions=3
+    )
+    assert split.rdd.getNumPartitions() == 3
+    a = sorted(tuple(r) for r in single.collect())
+    b = sorted(tuple(r) for r in split.collect())
+    assert a == b and len(a) == 100
+    # predicate composes with the slice predicate; limit stays exact
+    lim = read_shard_pg(
+        spark,
+        two_shard_processes[0],
+        "tbl",
+        predicate="id >= 10",
+        limit=7,
+        partition_column="id",
+        num_partitions=2,
+    )
+    rows = lim.collect()
+    assert len(rows) == 7 and all(r.id >= 10 for r in rows)
 
 
 def test_federate_pgwire_one_slice_per_task(spark, two_shard_processes):
@@ -3001,6 +3021,214 @@ def test_federate_pgwire_self_served_slices_leave_a_slot(spark, two_shards):
     ).collect()[0]
     assert (agg.n, agg.sv, agg.mn, agg.mx) == (250, 62250, 0, 249)
     assert time.monotonic() - t0 < 120
+
+
+# --- interpreted evaluation of a small served table --------------------------
+
+
+def _small_table_dir(tmp_path):
+    """A 2000-row CSV table far under SMALL_TABLE_BYTES."""
+    d = tmp_path / "small"
+    d.mkdir()
+    (d / "part.csv").write_text(
+        "id,grp,v,x,s\n"
+        + "".join(
+            f"{k},{k % 7},{k * 31 % 101},{k * 0.37:.2f},name{k % 13}\n"
+            for k in range(2000)
+        )
+    )
+    return d
+
+
+def _open_conn(host: str, port: int):
+    sock = socket.create_connection((host, port), timeout=120)
+    buf = bytearray()
+    _startup(sock)
+    _read_until_ready(sock, buf)
+    return sock, buf
+
+
+_SERVED = "served_small"
+_SERVED_STATEMENTS = [
+    f"SELECT * FROM {_SERVED} WHERE id = 1234",
+    f"SELECT grp, COUNT(*) AS n, SUM(v) AS sv, SUM(x) AS sx, MAX(s) AS ms "
+    f"FROM {_SERVED} WHERE id > 100 GROUP BY grp ORDER BY grp",
+    f"SELECT DISTINCT ON (grp) grp, id, v FROM {_SERVED} ORDER BY grp, v DESC, id",
+    f"SELECT grp, id, x FROM {_SERVED} WHERE id < 500 QUALIFY row_number() "
+    "OVER (PARTITION BY grp ORDER BY x DESC, id) = 1 ORDER BY grp",
+    f"SELECT * EXCLUDE (s) FROM {_SERVED} WHERE id < 8 ORDER BY id",
+    "SELECT table_catalog, table_schema, table_name, table_type "
+    f"FROM information_schema.tables WHERE table_name = '{_SERVED}'",
+    f"COPY (SELECT * FROM {_SERVED} WHERE grp = 3 ORDER BY id) TO STDOUT",
+]
+
+
+def test_serve_small_table_runs_interpreted_with_the_same_rows(
+    spark, pg_server, tmp_path
+):
+    """``csvb serve`` over a table under SMALL_TABLE_BYTES evaluates
+    interpreted: EXPLAIN shows no whole-stage ``*(n)`` stage, and each
+    statement shape of the serve surface answers byte for byte what
+    this process's code-generating session answers over the same
+    files. The first DDL brings whole-stage code generation back, and
+    each statement's log line names its mode."""
+    from csvb_spark.sources.csv_source import add_direct_table
+
+    d = _small_table_dir(tmp_path)
+    add_direct_table(spark, _SERVED, [str(d)])
+    explain = f"EXPLAIN SELECT * FROM {_SERVED} WHERE id = 42"
+
+    def plan(c) -> str:
+        return _data_rows(_simple_query(*c, explain))[0][0].decode()
+
+    def dt_rows(c) -> list:
+        rows = _data_rows(_simple_query(*c, _PSQL_DT_SQL))
+        return [r for r in rows if r[1] == _SERVED.encode()]
+
+    try:
+        with contextlib.ExitStack() as stack:
+            [(host, port)] = stack.enter_context(
+                _serve_processes([(d, _SERVED)], tmp_path)
+            )
+            child = _open_conn(host, port)
+            stack.callback(child[0].close)
+            here = _open_conn("127.0.0.1", pg_server.port)
+            stack.callback(here[0].close)
+            assert "*(" in plan(here)
+            assert "*(" not in plan(child)
+            for sql in _SERVED_STATEMENTS:
+                got = _simple_query(*child, sql)
+                assert _error_code(got) is None, (sql, got)
+                assert got == _simple_query(*here, sql), sql
+            assert dt_rows(child) == dt_rows(here) != []
+            bound = f"SELECT id, grp, x, s FROM {_SERVED} WHERE id = $1"
+            got = _portal_msgs(*child, bound, oids=(20,), params=("77",), res_fmts=(1,))
+            assert _data_rows(got)
+            assert got == _portal_msgs(
+                *here, bound, oids=(20,), params=("77",), res_fmts=(1,)
+            )
+            ddl = _simple_query(*child, "CREATE TABLE served_ddl (k BIGINT) USING parquet")
+            assert _error_code(ddl) is None, ddl
+            assert "*(" in plan(child)
+    finally:
+        spark.catalog.dropTempView(_SERVED)
+    log = (tmp_path / "serve0.err").read_text()
+    assert f"serve: interpreted evaluation, {_SERVED} is one small" in log
+    assert f"interpreted, collected: SELECT * FROM {_SERVED} WHERE id = 1234" in log
+    assert "codegen, none: CREATE TABLE served_ddl" in log
+    assert f"codegen, collected: {explain}" in log
+
+
+def test_serve_decides_evaluation_by_table_size(spark, tmp_path, monkeypatch, capsys):
+    """Only ``csvb serve`` over a table under SMALL_TABLE_BYTES runs
+    interpreted. A served table at the bound, ``csvb federate`` and
+    ``csvb exec`` keep whole-stage code generation."""
+    import csvb_spark.cli as cli
+    import csvb_spark.server.pgwire as pgwire
+    import csvb_spark.sources.federation as federation
+    from csvb_spark.sources import csv_source
+    from csvb_spark.sql import evaluation_mode
+
+    d = _small_table_dir(tmp_path)
+    served = []
+    monkeypatch.setattr(cli, "_session", lambda args: spark.newSession())
+    monkeypatch.setattr(pgwire, "serve_forever", lambda s, address: served.append(s))
+    monkeypatch.setattr(federation, "add_federated_tables", lambda s, vts: None)
+
+    def mode(argv: list[str]) -> tuple:
+        assert cli.main(argv) == 0
+        s = served.pop()
+        return (
+            evaluation_mode(s),
+            s.conf.get("spark.sql.codegen.wholeStage"),
+            s.conf.get("spark.sql.codegen.factoryMode"),
+        )
+
+    codegen = ("codegen", "true", "FALLBACK")
+    serve = ["serve", "--csv", str(d), "127.0.0.1:0"]
+    assert mode(serve) == ("interpreted", "false", "NO_CODEGEN")
+    monkeypatch.setattr(
+        csv_source, "SMALL_TABLE_BYTES", sum(f.stat().st_size for f in d.iterdir())
+    )
+    assert mode(serve) == codegen
+    assert mode(
+        ["federate", "--table-name", "t", "--shard-addresses",
+         "postgresql://u@127.0.0.1:1/db", "127.0.0.1:0"]
+    ) == codegen
+    capsys.readouterr()
+    assert cli.main(["exec", "--csv", str(d), "EXPLAIN SELECT * FROM tbl WHERE id = 1"]) == 0
+    assert "*(" in capsys.readouterr().out
+
+
+def test_catalog_snapshot_same_under_interpreted_evaluation(spark):
+    """The catalog snapshot and the pg_catalog views read the same
+    under interpreted evaluation as under code generation (listTables'
+    Dataset decode fails under NO_CODEGEN; the snapshot lists tables by
+    SHOW TABLES and getTable). A temp view, a managed table, a view,
+    and a temp view shadowing a same-name ``default.`` table each keep
+    their own type and columns."""
+    from csvb_spark.server.pg_catalog import refresh_pg_catalog
+    from csvb_spark.sql import (
+        _restore_codegen,
+        bump_catalog_epoch,
+        catalog_snapshot,
+        evaluation_mode,
+        locked_catalog_refresh,
+        run_interpreted,
+    )
+
+    def snapshot():
+        bump_catalog_epoch(spark)  # force a full read
+        got = []
+        locked_catalog_refresh(lambda: got.append(catalog_snapshot(spark)))
+        return got[0]
+
+    def pg_class() -> list:
+        bump_catalog_epoch(spark)
+        refresh_pg_catalog(spark)
+        return sorted(
+            tuple(r)
+            for r in spark.sql(
+                "SELECT c.oid, relname, relkind, relpersistence, attname, atttypid "
+                "FROM pg_catalog_pg_class c JOIN pg_catalog_pg_attribute a "
+                "ON a.attrelid = c.oid WHERE relname LIKE 'cgm_%'"
+            ).collect()
+        )
+
+    spark.range(3).createOrReplaceTempView("cgm_temp")
+    spark.sql("CREATE TABLE cgm_managed (a INT, b STRING) USING parquet")
+    spark.sql("CREATE VIEW cgm_view AS SELECT 1 AS one")
+    spark.sql("CREATE TABLE cgm_shadow (m DOUBLE) USING parquet")
+    spark.range(2).selectExpr("id AS t1", "id AS t2").createOrReplaceTempView("cgm_shadow")
+    try:
+        want, want_pg = snapshot(), pg_class()
+        mine = {
+            (t.schema, t.name, t.table_type): [c.name for c in t.columns]
+            for t in want.tables
+            if t.name.startswith("cgm_")
+        }
+        assert mine == {
+            ("default", "cgm_temp", "TEMPORARY"): ["id"],
+            ("default", "cgm_managed", "MANAGED"): ["a", "b"],
+            ("default", "cgm_view", "VIEW"): ["one"],
+            ("default", "cgm_shadow", "MANAGED"): ["m"],
+            ("default", "cgm_shadow", "TEMPORARY"): ["t1", "t2"],
+        }
+        run_interpreted(spark)
+        try:
+            assert evaluation_mode(spark) == "interpreted"
+            assert snapshot() == want
+            assert pg_class() == want_pg
+        finally:
+            _restore_codegen(spark)
+        assert spark.conf.get("spark.sql.codegen.factoryMode") == "FALLBACK"
+    finally:
+        spark.catalog.dropTempView("cgm_temp")
+        spark.catalog.dropTempView("cgm_shadow")
+        spark.sql("DROP VIEW IF EXISTS cgm_view")
+        spark.sql("DROP TABLE IF EXISTS cgm_managed")
+        spark.sql("DROP TABLE IF EXISTS cgm_shadow")
+        bump_catalog_epoch(spark)
 
 
 def test_pg_catalog_rewrite_only_on_qualified_references(spark):
