@@ -17,28 +17,30 @@ Repeat registrations are cheap. Each session keeps one registry entry
 per table name: the format and resolved paths, the files' identity
 (``st_ino``, ``st_size``, ``st_mtime_ns`` per path) and the DataFrame,
 which carries the inferred schema. Registering the same name over the
-same unchanged files again skips inference and returns the same
-relation, now persisted at Spark's default DataFrame level
-(``MEMORY_AND_DISK``), so later statements scan a columnar copy
-instead of re-parsing the files. A first registration stays a plain
-scan (a one-shot ``csvb exec`` never pays for caching), unless the
-caller asks for ``persist`` and the files total fewer than
-:data:`SMALL_TABLE_BYTES`: ``csvb serve`` does, so a small served
-table is parsed once, by its first statement (``cache()`` is lazy, so
-start-up does not wait for it). A registration over changed files or
-another path set unpersists the name's old relation and infers again.
+same unchanged files again skips inference and returns the relation
+persisted at Spark's default DataFrame level (``MEMORY_AND_DISK``), so
+later statements scan a columnar copy instead of re-parsing the files.
+A first registration stays a plain scan (a one-shot ``csvb exec``
+never pays for caching), unless the caller asks for ``persist`` and
+the files total fewer than :data:`SMALL_TABLE_BYTES`: ``csvb serve``
+does, so a small served table is parsed once, by its first statement
+(``cache()`` is lazy, so start-up does not wait for it). A
+registration over changed files or another path set unpersists the
+name's old relation and infers again.
 
-A table persisted at its first registration is one partition: it is
+Every persisted registration whose files total fewer than
+:data:`SMALL_TABLE_BYTES` is one partition, whichever call persisted
+it: a first ``persist`` registration or a repeat one. It is
 ``coalesce(1)`` of its scan, so its cached copy reports
 ``SinglePartition`` and a GROUP BY, a QUALIFY or DISTINCT ON window or
 a sort-merge join over it plans no shuffle; a statement is one stage,
 one job and one task. (A CSV scan reports ``UnknownPartitioning`` even
 when it is one file, one split, so the planner shuffles it.) The
 one-task parse is paid once, when the cache fills. Every other
-registration keeps its scan's partitioning: a plain one, whose every
-statement re-parses the files, a repeat registration, which returns
-the same relation, and a large table or one whose files cannot be
-stat-ed locally, which ``persist`` leaves plain.
+registration keeps its scan's partitioning: a plain first one, whose
+every statement re-parses the files; a large table, which ``persist``
+leaves plain and a repeat registration persists as its scan; and one
+whose files cannot be stat-ed locally, which is never persisted.
 
 Spark matches cached data by plan, and its file index compares only
 root paths, so a cached copy would outlive an in-place rewrite of its
@@ -73,8 +75,10 @@ from csvb_spark.sql import bump_catalog_epoch
 
 log = logging.getLogger("csvb.csv_source")
 
-#: ``persist`` persists a first registration whose files total fewer
-#: bytes than this, as one partition (module docstring). Measured with
+#: A persisted registration whose files total fewer bytes than this
+#: is one partition, whether a first ``persist`` registration or a
+#: repeat registration persisted it (module docstring); at or over it,
+#: ``persist`` leaves a first registration plain. Measured with
 #: a 2-core local session on a 4-core host, over a cached table of
 #: four CSV files: at 16 MiB a GROUP BY took 184 ms as one partition
 #: and 224 ms as four, at 64 MiB 409 ms and 288 ms. Filling the cache
@@ -253,8 +257,10 @@ def add_direct_table(
     scan, one partition, persisted at ``MEMORY_AND_DISK``. Registering
     ``name`` again over the same resolved paths, with every file
     unchanged (same inode, size and mtime), reuses the schema with no
-    inference and returns the same relation persisted, so later
-    statements scan the cached columnar copy. Other paths, or a
+    inference and returns the relation persisted, so later statements
+    scan the cached columnar copy; under :data:`SMALL_TABLE_BYTES` that
+    relation is ``coalesce(1)`` of the scan, like a first ``persist``
+    registration's, and a later repeat returns it again. Other paths, or a
     changed file, unpersist the old relation and infer again. A file
     that changes while cached is re-read, once, by the next statement
     (:func:`drop_changed_caches`).
@@ -276,7 +282,13 @@ def add_direct_table(
             and identity is not None
             and (reg.fmt, reg.paths, reg.identity) == (fmt, paths, identity)
         )
-        if reuse:
+        if reuse and id(reg) not in cached:
+            # first persisted here; the plain relation was never cached,
+            # so there is nothing to unpersist
+            if nbytes < SMALL_TABLE_BYTES:
+                reg = registry[name] = reg._replace(
+                    df=reg.df.coalesce(1), one_partition=True
+                )
             _persist(cached, reg)
     if not reuse:
         # infer outside the lock: it runs a Spark job, and every
@@ -308,8 +320,8 @@ def add_direct_table(
 
 def is_one_partition(spark: SparkSession, name: str) -> bool:
     """True when ``name`` is registered in ``spark`` as one persisted
-    partition (a first ``persist`` registration under
-    :data:`SMALL_TABLE_BYTES`)."""
+    partition (a persisted registration under
+    :data:`SMALL_TABLE_BYTES`: a first ``persist`` one or a repeat)."""
     reg = spark.__dict__.get("_csvb_registrations", {}).get(name)
     return reg is not None and reg.one_partition
 

@@ -477,8 +477,9 @@ def _jobs_in_group(spark, group: str, fn) -> int:
 def test_csv_repeat_registration_caches_without_inference(spark, tmp_path):
     """The first registration is a plain scan; the same name over the
     same unchanged file again starts no inference job and returns the
-    same relation, persisted at the JVM's default MEMORY_AND_DISK
-    (deserialized — pyspark calls that level MEMORY_AND_DISK_DESER)."""
+    relation as one partition, persisted at the JVM's default
+    MEMORY_AND_DISK (deserialized — pyspark calls that level
+    MEMORY_AND_DISK_DESER). A third registration returns it again."""
     from pyspark import StorageLevel
 
     from csvb_spark.sources.csv_source import add_direct_table
@@ -498,8 +499,10 @@ def test_csv_repeat_registration_caches_without_inference(spark, tmp_path):
         lambda: out.update(df=add_direct_table(spark, "csv_rep", [str(f)])),
     )
     assert repeat == 0
-    assert out["df"] is df
-    assert df.storageLevel == StorageLevel.MEMORY_AND_DISK_DESER
+    cached = out["df"]
+    assert cached.storageLevel == StorageLevel.MEMORY_AND_DISK_DESER
+    assert cached.rdd.getNumPartitions() == 1
+    assert add_direct_table(spark, "csv_rep", [str(f)]) is cached
     assert spark.sql("SELECT sum(val) AS s FROM csv_rep").collect()[0].s == 30
     spark.catalog.dropTempView("csv_rep")
 
@@ -602,20 +605,26 @@ def test_csv_cached_name_sees_rewritten_file(spark, tmp_path):
 
 
 def test_csv_second_name_over_cached_path_sees_rewritten_file(spark, tmp_path):
-    """Spark substitutes the first name's cached copy into any plan over
-    the same paths; after a rewrite, the second name reads new rows."""
+    """Spark substitutes the first name's cached copy, ``coalesce(1)``
+    of the scan, into a second persisted name over the same paths;
+    after a rewrite, both the second name and a plain third one read
+    the new rows."""
     from csvb_spark.sources.csv_source import add_direct_table
     from csvb_spark.sql import execute_sql
 
     f = tmp_path / "shared.csv"
     _cached_csv(spark, "csv_shared1", f)
     add_direct_table(spark, "csv_shared2", [str(f)])
+    add_direct_table(spark, "csv_shared2", [str(f)])
     plan = execute_sql(spark, "SELECT * FROM csv_shared2")._jdf.queryExecution()
     assert "InMemoryRelation" in plan.withCachedData().toString()
     _rewrite(f)
     got = execute_sql(spark, "SELECT count(*) AS n, sum(val) AS s FROM csv_shared2")
     assert got.collect() == [(3, 2400)]
-    for name in ("csv_shared1", "csv_shared2"):
+    add_direct_table(spark, "csv_shared3", [str(f)])
+    got = execute_sql(spark, "SELECT count(*) AS n, sum(val) AS s FROM csv_shared3")
+    assert got.collect() == [(3, 2400)]
+    for name in ("csv_shared1", "csv_shared2", "csv_shared3"):
         spark.catalog.dropTempView(name)
 
 
@@ -676,6 +685,55 @@ def test_csv_small_table_plans_no_exchange(spark, tmp_path):
     assert "BroadcastExchange" in plan
     assert not re.search(r"(?<!Broadcast)Exchange", plan)
     assert sorted(df.collect()) == [(g, 20) for g in range(5)]
+    for name in names.values():
+        spark.catalog.dropTempView(name)
+
+
+@pytest.mark.parametrize("large", [False, True], ids=["small", "large"])
+def test_csv_repeat_registration_is_one_partition(
+    spark, tmp_path, monkeypatch, caplog, large
+):
+    """A repeat registration persists a table under SMALL_TABLE_BYTES
+    as one partition, as ``persist`` does a first one: a GROUP BY, a
+    QUALIFY or DISTINCT ON window and a sort-merge join over it plan no
+    Exchange, run one job and return the plain scan's rows. Over the
+    bound, the repeat is persisted with its scan's partitions."""
+    import logging
+    from collections import Counter
+
+    from csvb_spark.sources import csv_source
+    from csvb_spark.sql import execute_sql
+
+    if large:
+        monkeypatch.setattr(csv_source, "SMALL_TABLE_BYTES", 100)
+    a, b = _small_tables(tmp_path)
+    names = {"a": "again_a", "b": "again_b"}
+    for key, path in (("a", a), ("b", b)):
+        csv_source.add_direct_table(spark, names[key], [path])
+    plain = {
+        kind: Counter(execute_sql(spark, sql.format(**names)).collect())
+        for kind, sql in _SMALL_STMTS.items()
+    }
+    with caplog.at_level(logging.INFO, logger="csvb.csv_source"):
+        df = csv_source.add_direct_table(spark, "again_a", [a])
+    if large:
+        assert df.rdd.getNumPartitions() == 3
+        assert "Exchange hashpartitioning" in _executed_plan(execute_sql(
+            spark, "SELECT g, count(*) AS n FROM again_a GROUP BY g"
+        ))
+    else:
+        assert df.rdd.getNumPartitions() == 1
+        assert any(
+            "again_a: 3 files" in r.getMessage()
+            and "1 partitions, schema reused, persisted" in r.getMessage()
+            for r in caplog.records
+        )
+        csv_source.add_direct_table(spark, "again_b", [b])
+        for kind, sql in _SMALL_STMTS.items():
+            df = execute_sql(spark, sql.format(**names))
+            assert Counter(df.collect()) == plain[kind], kind  # fills the cache
+            assert "Exchange" not in _executed_plan(df), kind
+            assert _jobs_in_group(spark, f"again-{kind}", df.collect) == 1, kind
     for name in names.values():
         spark.catalog.dropTempView(name)
 
