@@ -43,8 +43,6 @@ import argparse
 import logging
 import sys
 
-log = logging.getLogger("csvb.cli")
-
 DEFAULT_MEMORY_POOL_BYTES = 10 * 1024**3  # reference csvb.rs:16-18
 DEFAULT_TABLE_NAME = "tbl"  # reference csvb.rs:44-46
 DEFAULT_SERVE_ADDRESS = "127.0.0.1:5432"  # reference csvb.rs:77-79
@@ -115,9 +113,10 @@ def build_parser() -> argparse.ArgumentParser:
         help="serve the Postgres wire protocol",
         description=(
             "Serve the table over the Postgres wire protocol. A table "
-            "under 16 MiB is parsed once into one cached partition, and "
-            "statements over it run interpreted, compiling no code; the "
-            "first CREATE, DROP or ALTER turns code generation back on."
+            "under 16 MiB is parsed once into one cached partition. A "
+            "session whose registered tables are all such partitions "
+            "runs interpreted, compiling no code; the first CREATE, "
+            "DROP or ALTER turns code generation back on for good."
         ),
     )
     ps.add_argument("--csv", action="append", default=[], metavar="PATH_OR_URL")
@@ -736,28 +735,6 @@ def _register_direct(spark, args) -> None:
         )
 
 
-def _choose_evaluation(spark, table_name: str) -> None:
-    """Decide once per ``serve`` process how statements evaluate. A
-    served table under SMALL_TABLE_BYTES is one cached partition, so
-    every statement over it is one task over a few thousand rows: Spark
-    evaluates that interpreted faster than it compiles code for each
-    new literal, which ``execute_sql`` inlines (sql.run_interpreted).
-    Other servers keep code generation; an interpreted one gets it back
-    at its first DDL. Logs the decision once."""
-    from csvb_spark.sources.csv_source import is_one_partition
-    from csvb_spark.sql import evaluation_mode, run_interpreted
-
-    small = is_one_partition(spark, table_name)
-    if small:
-        run_interpreted(spark)
-    log.info(
-        "serve: %s evaluation, %s is %sone small cached partition",
-        evaluation_mode(spark),
-        table_name,
-        "" if small else "not ",
-    )
-
-
 def _session(args):
     from csvb_spark.session import get_session
 
@@ -819,7 +796,6 @@ def main(argv: list[str] | None = None) -> int:
 
         spark = _session(args)
         _register_direct(spark, args)
-        _choose_evaluation(spark, args.table_name)
         serve_forever(spark, args.address)
         return 0
 

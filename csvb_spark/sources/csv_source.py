@@ -42,6 +42,12 @@ every statement re-parses the files; a large table, which ``persist``
 leaves plain and a repeat registration persists as its scan; and one
 whose files cannot be stat-ed locally, which is never persisted.
 
+The registry also sets the session's evaluation mode at every
+registration (:func:`choose_evaluation`): interpreted, so a new literal
+compiles no code, while every registered table is one partition and no
+DDL has run; code generation otherwise, and for good after the first
+CREATE, DROP or ALTER.
+
 Spark matches cached data by plan, and its file index compares only
 root paths, so a cached copy would outlive an in-place rewrite of its
 files — for its own name and for any other name registered over the
@@ -267,7 +273,8 @@ def add_direct_table(
 
     Logs one INFO line on ``csvb.csv_source`` per call: the name, file
     count, bytes, partitions, whether the schema was inferred or
-    reused, and whether the relation is now persisted or plain.
+    reused, and whether the relation is now persisted or plain. Then
+    applies the evaluation rule (:func:`choose_evaluation`).
     """
     paths = tuple(resolve_sources(sources, cache_dir, ext=f".{fmt}"))
     identity = _identity(paths)
@@ -315,15 +322,33 @@ def add_direct_table(
         "reused" if reuse else "inferred",
         "persisted" if id(reg) in cached else "plain",
     )
+    choose_evaluation(spark)
     return reg.df
 
 
-def is_one_partition(spark: SparkSession, name: str) -> bool:
-    """True when ``name`` is registered in ``spark`` as one persisted
-    partition (a persisted registration under
-    :data:`SMALL_TABLE_BYTES`: a first ``persist`` one or a repeat)."""
-    reg = spark.__dict__.get("_csvb_registrations", {}).get(name)
-    return reg is not None and reg.one_partition
+def choose_evaluation(spark: SparkSession, ddl: bool = False) -> None:
+    """The session's one evaluation rule: interpreted while its registry
+    is non-empty, every entry is one partition and no DDL has run
+    (``execute_sql`` passes ``ddl`` before each); code generation
+    otherwise, for good after the first DDL, since a CTAS table may be
+    large. Changes the confs and logs only when the mode changes."""
+    from csvb_spark.sql import evaluation_mode, restore_codegen, run_interpreted
+
+    registry = spark.__dict__.get("_csvb_registrations", {})
+    with _LOCK:
+        ddl = spark._csvb_ddl_ran = ddl or getattr(spark, "_csvb_ddl_ran", False)
+        plain = [n for n, r in registry.items() if not r.one_partition]
+        small = bool(registry) and not plain and not ddl
+        if small == (evaluation_mode(spark) == "interpreted"):
+            return
+        (run_interpreted if small else restore_codegen)(spark)
+    log.info(
+        "%s evaluation: %s",
+        evaluation_mode(spark),
+        "every registered table is one small cached partition" if small
+        else "a CREATE, DROP or ALTER ran" if ddl
+        else f"{plain[0]} is not one small cached partition",
+    )
 
 
 def _scan(spark: SparkSession, fmt: str, paths: list[str]) -> DataFrame:

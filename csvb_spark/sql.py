@@ -38,9 +38,9 @@ by plan, not by file content, so every persisted relation whose files
 changed (inode, size or mtime) is unpersisted first and the statement
 re-reads them.
 
-``csvb serve`` over one small cached table evaluates interpreted
-(:func:`run_interpreted`); ``execute_sql`` restores code generation at
-the first DDL.
+A session whose registered tables are all one small cached partition
+evaluates interpreted (:func:`run_interpreted`) until its first DDL;
+``csv_source.choose_evaluation`` holds the rule.
 """
 
 from __future__ import annotations
@@ -199,9 +199,9 @@ _INTERPRETED_CONFS = {
 def run_interpreted(spark: SparkSession) -> None:
     """Evaluate the session's statements interpreted: no whole-stage
     stages and no generated expression classes, so a statement with a
-    new literal compiles nothing. Over one small cached partition that
-    is faster than compiling. The first DDL through :func:`execute_sql`
-    restores code generation for the rest of the session's life."""
+    new literal compiles nothing. Over small cached partitions that is
+    faster than compiling; ``csv_source.choose_evaluation`` decides
+    when."""
     for k, v in _INTERPRETED_CONFS.items():
         spark.conf.set(k, v)
     spark._csvb_interpreted = True  # noqa: SLF001 — session-scoped
@@ -213,12 +213,11 @@ def evaluation_mode(spark: SparkSession) -> str:
     return "interpreted" if getattr(spark, "_csvb_interpreted", False) else "codegen"
 
 
-def _restore_codegen(spark: SparkSession) -> None:
-    """Back to Spark's code generation defaults: after a DDL the
-    catalog may hold tables that are not small. Physical planning
+def restore_codegen(spark: SparkSession) -> None:
+    """Back to Spark's code generation defaults. Physical planning
     reads the confs, so a flip that races a statement planned on
     another connection changes only that statement's speed, never its
-    rows; two DDLs racing here unset the same confs twice."""
+    rows."""
     spark._csvb_interpreted = False  # noqa: SLF001
     for k in _INTERPRETED_CONFS:
         spark.conf.unset(k)
@@ -798,7 +797,7 @@ def execute_sql(spark: SparkSession, sql: str) -> DataFrame:
     """Translate reference-dialect SQL and run it, emulating
     information_schema on demand."""
     from csvb_spark.functions.translate import translate_sql
-    from csvb_spark.sources.csv_source import drop_changed_caches
+    from csvb_spark.sources.csv_source import choose_evaluation, drop_changed_caches
 
     # before planning: Spark would otherwise substitute a cached copy
     # of a CSV table whose files were rewritten since it was cached
@@ -838,8 +837,8 @@ def execute_sql(spark: SparkSession, sql: str) -> DataFrame:
     masked = _rewrite_columns_selector(spark, masked, lits)
     sql = _restore_literals(masked, lits)
     ddl = _DDL_RE.match(sql)
-    if ddl and evaluation_mode(spark) == "interpreted":
-        _restore_codegen(spark)  # before the DDL: a CTAS runs its query
+    if ddl:
+        choose_evaluation(spark, ddl=True)  # before it: a CTAS runs a query
     df = spark.sql(translate_sql(sql))
     if ddl:
         # DDL through this surface — including CREATE OR REPLACE under

@@ -146,7 +146,7 @@ def test_translate_never_crashes_and_preserves_literals(s: str) -> None:
 # --- RFC-4180 CSV round-trip --------------------------------------------------
 
 
-def test_csv_nasty_cells_round_trip(spark, tmp_path) -> None:
+def test_csv_nasty_cells_round_trip(fresh_spark, tmp_path) -> None:
     """Quoted commas, embedded newlines (CRLF and LF), doubled quotes,
     unicode, and empties all survive write→scan intact (the RFC-4180
     multiline path, csv_source._CSV_OPTIONS). One documented
@@ -176,14 +176,14 @@ def test_csv_nasty_cells_round_trip(spark, tmp_path) -> None:
         for i, cell in enumerate(nasty):
             w.writerow([i, cell])
 
-    df = add_direct_table(spark, "t_nasty", [str(path)])
+    df = add_direct_table(fresh_spark, "t_nasty", [str(path)])
     rows = sorted(df.collect())
     got = {r["id"]: r["cell"] for r in rows}
     for i, cell in enumerate(nasty):
         want = cell.replace("\r\n", "\n") if cell else None  # see docstring
         assert got[i] == want, f"row {i}: {got[i]!r}"
     # the same file through a second registration, now a cached copy
-    cached = add_direct_table(spark, "t_nasty", [str(path)])
+    cached = add_direct_table(fresh_spark, "t_nasty", [str(path)])
     assert cached.storageLevel.useMemory
     assert sorted(cached.collect()) == rows
 

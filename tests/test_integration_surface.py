@@ -474,7 +474,7 @@ def _jobs_in_group(spark, group: str, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_csv_repeat_registration_caches_without_inference(spark, tmp_path):
+def test_csv_repeat_registration_caches_without_inference(fresh_spark, tmp_path):
     """The first registration is a plain scan; the same name over the
     same unchanged file again starts no inference job and returns the
     relation as one partition, persisted at the JVM's default
@@ -488,26 +488,26 @@ def test_csv_repeat_registration_caches_without_inference(spark, tmp_path):
     f.write_text("id,val\n1,10\n2,20\n")
     out = {}
     first = _jobs_in_group(
-        spark, "csv-first",
-        lambda: out.update(df=add_direct_table(spark, "csv_rep", [str(f)])),
+        fresh_spark, "csv-first",
+        lambda: out.update(df=add_direct_table(fresh_spark, "csv_rep", [str(f)])),
     )
     df = out["df"]
     assert first > 0  # inference ran, and the counting sees it
     assert df.storageLevel == StorageLevel.NONE
     repeat = _jobs_in_group(
-        spark, "csv-repeat",
-        lambda: out.update(df=add_direct_table(spark, "csv_rep", [str(f)])),
+        fresh_spark, "csv-repeat",
+        lambda: out.update(df=add_direct_table(fresh_spark, "csv_rep", [str(f)])),
     )
     assert repeat == 0
     cached = out["df"]
     assert cached.storageLevel == StorageLevel.MEMORY_AND_DISK_DESER
     assert cached.rdd.getNumPartitions() == 1
-    assert add_direct_table(spark, "csv_rep", [str(f)]) is cached
-    assert spark.sql("SELECT sum(val) AS s FROM csv_rep").collect()[0].s == 30
-    spark.catalog.dropTempView("csv_rep")
+    assert add_direct_table(fresh_spark, "csv_rep", [str(f)]) is cached
+    assert fresh_spark.sql("SELECT sum(val) AS s FROM csv_rep").collect()[0].s == 30
+    fresh_spark.catalog.dropTempView("csv_rep")
 
 
-def test_csv_repointed_name_unpersists_old_relation(spark, tmp_path):
+def test_csv_repointed_name_unpersists_old_relation(fresh_spark, tmp_path):
     from pyspark import StorageLevel
 
     from csvb_spark.sources.csv_source import add_direct_table
@@ -515,17 +515,17 @@ def test_csv_repointed_name_unpersists_old_relation(spark, tmp_path):
     f1, f2 = tmp_path / "a.csv", tmp_path / "b.csv"
     f1.write_text("id,val\n1,10\n")
     f2.write_text("id,val\n2,20\n3,30\n")
-    add_direct_table(spark, "csv_move", [str(f1)])
-    old = add_direct_table(spark, "csv_move", [str(f1)])
+    add_direct_table(fresh_spark, "csv_move", [str(f1)])
+    old = add_direct_table(fresh_spark, "csv_move", [str(f1)])
     assert old.storageLevel != StorageLevel.NONE
-    new = add_direct_table(spark, "csv_move", [str(f2)])
+    new = add_direct_table(fresh_spark, "csv_move", [str(f2)])
     assert old.storageLevel == StorageLevel.NONE
     assert new.storageLevel == StorageLevel.NONE  # a first registration
-    assert spark.sql("SELECT sum(val) AS s FROM csv_move").collect()[0].s == 50
-    spark.catalog.dropTempView("csv_move")
+    assert fresh_spark.sql("SELECT sum(val) AS s FROM csv_move").collect()[0].s == 50
+    fresh_spark.catalog.dropTempView("csv_move")
 
 
-def test_csv_concurrent_registrations_leave_no_orphaned_cache(spark, tmp_path):
+def test_csv_concurrent_registrations_leave_no_orphaned_cache(fresh_spark, tmp_path):
     """Threads re-register one name over two files and run the
     per-statement check. Once the name is re-pointed at the second
     file, no copy of the first may stay cached: a lost update would
@@ -546,9 +546,9 @@ def test_csv_concurrent_registrations_leave_no_orphaned_cache(spark, tmp_path):
     def register(order):
         try:
             for f in order:
-                df = csv_source.add_direct_table(spark, "csv_race", [str(f)])
+                df = csv_source.add_direct_table(fresh_spark, "csv_race", [str(f)])
                 returned.append((f, df))
-                csv_source.drop_changed_caches(spark)
+                csv_source.drop_changed_caches(fresh_spark)
         except Exception as e:  # noqa: BLE001 — reported by the assert below
             errors.append(e)
 
@@ -568,9 +568,9 @@ def test_csv_concurrent_registrations_leave_no_orphaned_cache(spark, tmp_path):
         sys.setswitchinterval(old)
     assert not any(t.is_alive() for t in threads)
     assert not errors
-    csv_source.add_direct_table(spark, "csv_race", [str(f2)])
+    csv_source.add_direct_table(fresh_spark, "csv_race", [str(f2)])
     assert all(df.storageLevel == StorageLevel.NONE for f, df in returned if f == f1)
-    spark.catalog.dropTempView("csv_race")
+    fresh_spark.catalog.dropTempView("csv_race")
 
 
 def _cached_csv(spark, name: str, path) -> None:
@@ -591,20 +591,20 @@ def _rewrite(path) -> None:
         f.write("id,val\n7,700\n8,800\n9,900\n")
 
 
-def test_csv_cached_name_sees_rewritten_file(spark, tmp_path):
+def test_csv_cached_name_sees_rewritten_file(fresh_spark, tmp_path):
     """A cached registration never serves rows of a file that changed:
     the next statement re-reads it."""
     from csvb_spark.sql import execute_sql
 
     f = tmp_path / "stale.csv"
-    _cached_csv(spark, "csv_stale", f)
+    _cached_csv(fresh_spark, "csv_stale", f)
     _rewrite(f)
-    got = execute_sql(spark, "SELECT count(*) AS n, sum(val) AS s FROM csv_stale")
+    got = execute_sql(fresh_spark, "SELECT count(*) AS n, sum(val) AS s FROM csv_stale")
     assert got.collect() == [(3, 2400)]
-    spark.catalog.dropTempView("csv_stale")
+    fresh_spark.catalog.dropTempView("csv_stale")
 
 
-def test_csv_second_name_over_cached_path_sees_rewritten_file(spark, tmp_path):
+def test_csv_second_name_over_cached_path_sees_rewritten_file(fresh_spark, tmp_path):
     """Spark substitutes the first name's cached copy, ``coalesce(1)``
     of the scan, into a second persisted name over the same paths;
     after a rewrite, both the second name and a plain third one read
@@ -613,19 +613,23 @@ def test_csv_second_name_over_cached_path_sees_rewritten_file(spark, tmp_path):
     from csvb_spark.sql import execute_sql
 
     f = tmp_path / "shared.csv"
-    _cached_csv(spark, "csv_shared1", f)
-    add_direct_table(spark, "csv_shared2", [str(f)])
-    add_direct_table(spark, "csv_shared2", [str(f)])
-    plan = execute_sql(spark, "SELECT * FROM csv_shared2")._jdf.queryExecution()
+    _cached_csv(fresh_spark, "csv_shared1", f)
+    add_direct_table(fresh_spark, "csv_shared2", [str(f)])
+    add_direct_table(fresh_spark, "csv_shared2", [str(f)])
+    plan = execute_sql(fresh_spark, "SELECT * FROM csv_shared2")._jdf.queryExecution()
     assert "InMemoryRelation" in plan.withCachedData().toString()
     _rewrite(f)
-    got = execute_sql(spark, "SELECT count(*) AS n, sum(val) AS s FROM csv_shared2")
+    got = execute_sql(
+        fresh_spark, "SELECT count(*) AS n, sum(val) AS s FROM csv_shared2"
+    )
     assert got.collect() == [(3, 2400)]
-    add_direct_table(spark, "csv_shared3", [str(f)])
-    got = execute_sql(spark, "SELECT count(*) AS n, sum(val) AS s FROM csv_shared3")
+    add_direct_table(fresh_spark, "csv_shared3", [str(f)])
+    got = execute_sql(
+        fresh_spark, "SELECT count(*) AS n, sum(val) AS s FROM csv_shared3"
+    )
     assert got.collect() == [(3, 2400)]
     for name in ("csv_shared1", "csv_shared2", "csv_shared3"):
-        spark.catalog.dropTempView(name)
+        fresh_spark.catalog.dropTempView(name)
 
 
 def _small_tables(tmp_path):
@@ -654,7 +658,7 @@ def _executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_csv_small_table_plans_no_exchange(spark, tmp_path):
+def test_csv_small_table_plans_no_exchange(fresh_spark, tmp_path):
     """A table persisted at registration under SMALL_TABLE_BYTES is one
     partition, whatever the core count: a GROUP BY, a QUALIFY or
     DISTINCT ON window and a sort-merge join over it plan no Exchange
@@ -668,16 +672,16 @@ def test_csv_small_table_plans_no_exchange(spark, tmp_path):
     a, b = _small_tables(tmp_path)
     names = {"a": "small_a", "b": "small_b"}
     for key, path in (("a", a), ("b", b)):
-        df = add_direct_table(spark, names[key], [path], persist=True)
+        df = add_direct_table(fresh_spark, names[key], [path], persist=True)
         assert df.rdd.getNumPartitions() == 1
     for kind, sql in _SMALL_STMTS.items():
-        df = execute_sql(spark, sql.format(**names))
+        df = execute_sql(fresh_spark, sql.format(**names))
         df.collect()  # the first statement materializes the cache
         assert "Exchange" not in _executed_plan(df), kind
-        jobs = _jobs_in_group(spark, f"small-{kind}", df.collect)
+        jobs = _jobs_in_group(fresh_spark, f"small-{kind}", df.collect)
         assert jobs == 1, kind
     df = execute_sql(
-        spark,
+        fresh_spark,
         "SELECT {a}.g, count(*) AS n FROM {a} JOIN {b} ON {a}.k = {b}.k GROUP BY {a}.g"
         .format(**names),
     )
@@ -686,12 +690,12 @@ def test_csv_small_table_plans_no_exchange(spark, tmp_path):
     assert not re.search(r"(?<!Broadcast)Exchange", plan)
     assert sorted(df.collect()) == [(g, 20) for g in range(5)]
     for name in names.values():
-        spark.catalog.dropTempView(name)
+        fresh_spark.catalog.dropTempView(name)
 
 
 @pytest.mark.parametrize("large", [False, True], ids=["small", "large"])
 def test_csv_repeat_registration_is_one_partition(
-    spark, tmp_path, monkeypatch, caplog, large
+    fresh_spark, tmp_path, monkeypatch, caplog, large
 ):
     """A repeat registration persists a table under SMALL_TABLE_BYTES
     as one partition, as ``persist`` does a first one: a GROUP BY, a
@@ -709,17 +713,17 @@ def test_csv_repeat_registration_is_one_partition(
     a, b = _small_tables(tmp_path)
     names = {"a": "again_a", "b": "again_b"}
     for key, path in (("a", a), ("b", b)):
-        csv_source.add_direct_table(spark, names[key], [path])
+        csv_source.add_direct_table(fresh_spark, names[key], [path])
     plain = {
-        kind: Counter(execute_sql(spark, sql.format(**names)).collect())
+        kind: Counter(execute_sql(fresh_spark, sql.format(**names)).collect())
         for kind, sql in _SMALL_STMTS.items()
     }
     with caplog.at_level(logging.INFO, logger="csvb.csv_source"):
-        df = csv_source.add_direct_table(spark, "again_a", [a])
+        df = csv_source.add_direct_table(fresh_spark, "again_a", [a])
     if large:
         assert df.rdd.getNumPartitions() == 3
         assert "Exchange hashpartitioning" in _executed_plan(execute_sql(
-            spark, "SELECT g, count(*) AS n FROM again_a GROUP BY g"
+            fresh_spark, "SELECT g, count(*) AS n FROM again_a GROUP BY g"
         ))
     else:
         assert df.rdd.getNumPartitions() == 1
@@ -728,14 +732,14 @@ def test_csv_repeat_registration_is_one_partition(
             and "1 partitions, schema reused, persisted" in r.getMessage()
             for r in caplog.records
         )
-        csv_source.add_direct_table(spark, "again_b", [b])
+        csv_source.add_direct_table(fresh_spark, "again_b", [b])
         for kind, sql in _SMALL_STMTS.items():
-            df = execute_sql(spark, sql.format(**names))
+            df = execute_sql(fresh_spark, sql.format(**names))
             assert Counter(df.collect()) == plain[kind], kind  # fills the cache
             assert "Exchange" not in _executed_plan(df), kind
-            assert _jobs_in_group(spark, f"again-{kind}", df.collect) == 1, kind
+            assert _jobs_in_group(fresh_spark, f"again-{kind}", df.collect) == 1, kind
     for name in names.values():
-        spark.catalog.dropTempView(name)
+        fresh_spark.catalog.dropTempView(name)
 
 
 @pytest.mark.parametrize("large", [False, True], ids=["plain", "large"])
@@ -781,7 +785,7 @@ def test_csv_large_table_keeps_scan_partitioning(
         spark.catalog.dropTempView(name)
 
 
-def test_serve_registration_persists_small_table(spark, tmp_path, caplog):
+def test_serve_registration_persists_small_table(fresh_spark, tmp_path, caplog):
     """``csvb serve`` registers a small table persisted: its first
     statement fills the cache, and the registration logs its path.
     After an in-place rewrite the next statement reads the new rows
@@ -799,28 +803,250 @@ def test_serve_registration_persists_small_table(spark, tmp_path, caplog):
         command="serve", table_name="served_a", csv=[a], parquet=None, json=None
     )
     with caplog.at_level(logging.INFO, logger="csvb.csv_source"):
-        _register_direct(spark, args)
+        _register_direct(fresh_spark, args)
     assert any(
         "served_a: 3 files" in r.getMessage()
         and "1 partitions, schema inferred, persisted" in r.getMessage()
         for r in caplog.records
     )
-    df = spark.table("served_a")
+    df = fresh_spark.table("served_a")
     assert df.storageLevel == StorageLevel.MEMORY_AND_DISK_DESER
-    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    cache_manager = fresh_spark._jsparkSession.sharedState().cacheManager()
 
     def loaded() -> bool:
         cached = cache_manager.lookupCachedData(df._jdf)
         return cached.get().cachedRepresentation().cacheBuilder().isCachedColumnBuffersLoaded()
 
-    assert execute_sql(spark, "SELECT count(*) FROM served_a").collect() == [(300,)]
+    count = "SELECT count(*) FROM served_a"
+    assert execute_sql(fresh_spark, count).collect() == [(300,)]
     assert loaded()
     with open(f"{a}/part0.csv", "a") as f:  # same inode, one more row
         f.write("1000,0,1.5\n")
-    assert execute_sql(spark, "SELECT count(*) FROM served_a").collect() == [(301,)]
+    assert execute_sql(fresh_spark, count).collect() == [(301,)]
     assert loaded()
     assert df.rdd.getNumPartitions() == 1
-    spark.catalog.dropTempView("served_a")
+    fresh_spark.catalog.dropTempView("served_a")
+
+
+def _evaluation(spark, table: str) -> tuple:
+    """(mode flag, whole-stage stages planned, expression factory mode)."""
+    from csvb_spark.sql import evaluation_mode, execute_sql
+
+    df = execute_sql(spark, f"SELECT k, v * 2 AS w FROM {table} WHERE k = 42")
+    return (
+        evaluation_mode(spark),
+        "*(" in _executed_plan(df),
+        spark.conf.get("spark.sql.codegen.factoryMode"),
+    )
+
+
+_CODEGEN = ("codegen", True, "FALLBACK")
+_INTERPRETED = ("interpreted", False, "NO_CODEGEN")
+
+
+def _mode_changes(caplog) -> list[str]:
+    return [
+        r.getMessage() for r in caplog.records
+        if r.name == "csvb.csv_source" and " evaluation: " in r.getMessage()
+    ]
+
+
+def test_evaluation_mode_follows_the_registry(
+    fresh_spark, tmp_path, monkeypatch, caplog
+):
+    """A session evaluates interpreted exactly while every table it has
+    registered is one small cached partition: a plain first
+    registration keeps code generation, the repeat of every registered
+    table turns it off, and a new plain registration or a repeat over
+    SMALL_TABLE_BYTES turns it back on. Each change logs once with its
+    reason; a registration that keeps the mode sets no conf."""
+    import logging
+
+    import csvb_spark.sql as sql
+    from csvb_spark.sources import csv_source
+
+    s = fresh_spark
+    a, b = _small_tables(tmp_path)
+    switches = []
+    for fn in ("run_interpreted", "restore_codegen"):
+        real = getattr(sql, fn)
+        monkeypatch.setattr(
+            sql, fn, lambda sp, fn=fn, real=real: (switches.append(fn), real(sp))
+        )
+    with caplog.at_level(logging.INFO, logger="csvb.csv_source"):
+        csv_source.add_direct_table(s, "ev_a", [a])
+        csv_source.add_direct_table(s, "ev_b", [b])
+        assert _evaluation(s, "ev_a") == _CODEGEN
+        csv_source.add_direct_table(s, "ev_a", [a])  # ev_b is still plain
+        assert _evaluation(s, "ev_a") == _CODEGEN
+        assert switches == []
+        csv_source.add_direct_table(s, "ev_b", [b])
+        assert _evaluation(s, "ev_a") == _INTERPRETED
+        csv_source.add_direct_table(s, "ev_a", [a])
+        csv_source.add_direct_table(s, "ev_b", [b])
+        assert switches == ["run_interpreted"]
+        csv_source.add_direct_table(s, "ev_c", [b])
+        assert _evaluation(s, "ev_a") == _CODEGEN
+        csv_source.add_direct_table(s, "ev_c", [b])
+        assert _evaluation(s, "ev_a") == _INTERPRETED
+        monkeypatch.setattr(csv_source, "SMALL_TABLE_BYTES", 100)
+        csv_source.add_direct_table(s, "ev_d", [a])
+        csv_source.add_direct_table(s, "ev_d", [a])  # persisted, 3 partitions
+        assert _evaluation(s, "ev_a") == _CODEGEN
+    assert switches == ["run_interpreted", "restore_codegen"] * 2
+    assert _mode_changes(caplog) == [
+        "interpreted evaluation: every registered table is one small cached partition",
+        "codegen evaluation: ev_c is not one small cached partition",
+        "interpreted evaluation: every registered table is one small cached partition",
+        "codegen evaluation: ev_d is not one small cached partition",
+    ]
+
+
+def test_evaluation_mode_keeps_codegen_after_ddl(fresh_spark, tmp_path, caplog):
+    """The first CREATE, DROP or ALTER through ``execute_sql`` restores
+    code generation for the rest of the session's life: neither a later
+    repeat registration nor a new all-small registry turns it off, and
+    a DDL before any registration keeps the session on it too."""
+    import logging
+
+    from csvb_spark.sources.csv_source import add_direct_table
+    from csvb_spark.sql import execute_sql
+
+    s = fresh_spark
+    a, b = _small_tables(tmp_path)
+    with caplog.at_level(logging.INFO, logger="csvb.csv_source"):
+        add_direct_table(s, "ddl_a", [a])
+        add_direct_table(s, "ddl_a", [a])
+        assert _evaluation(s, "ddl_a") == _INTERPRETED
+        execute_sql(s, "CREATE TEMPORARY VIEW ddl_v AS SELECT 1 AS one")
+        assert _evaluation(s, "ddl_a") == _CODEGEN
+        add_direct_table(s, "ddl_a", [a])
+        add_direct_table(s, "ddl_b", [b])
+        add_direct_table(s, "ddl_b", [b])
+        assert _evaluation(s, "ddl_a") == _CODEGEN
+    assert _mode_changes(caplog) == [
+        "interpreted evaluation: every registered table is one small cached partition",
+        "codegen evaluation: a CREATE, DROP or ALTER ran",
+    ]
+    early = s.newSession()
+    execute_sql(early, "DROP VIEW IF EXISTS no_such_view")
+    add_direct_table(early, "ddl_a", [a])
+    add_direct_table(early, "ddl_a", [a])
+    assert _evaluation(early, "ddl_a") == _CODEGEN
+
+
+def _exec_csv_tables(tmp_path) -> dict[str, list[str]]:
+    """Small TPC-H-shaped CSV tables with the columns the exec_csv
+    statements read; ``orders`` is a two-file directory."""
+    import random
+
+    rng = random.Random(13)
+    day0 = datetime.date(1992, 1, 1)
+    segments = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
+    nation = ["n_nationkey,n_name,n_regionkey"] + [
+        f"{k},NATION{k},{k % 5}" for k in range(25)
+    ]
+    customer = ["c_custkey,c_nationkey,c_acctbal,c_mktsegment"] + [
+        f"{k},{rng.randrange(25)},{rng.uniform(-999.99, 9999.99):.2f},"
+        f"{rng.choice(segments)}"
+        for k in range(1, 61)
+    ]
+    orders = [[], []]
+    lineitem = [
+        "l_orderkey,l_quantity,l_extendedprice,l_discount,"
+        "l_returnflag,l_linestatus,l_shipdate"
+    ]
+    for k in range(1, 301):
+        date = day0 + datetime.timedelta(days=rng.randrange(2500))
+        orders[k % 2].append(
+            f"{k},{rng.randrange(1, 61)},{rng.uniform(900, 400000):.2f},{date},0"
+        )
+        for _ in range(rng.randrange(1, 8)):
+            ship = date + datetime.timedelta(days=rng.randrange(1, 122))
+            lineitem.append(
+                f"{k},{rng.randrange(1, 51)},{rng.uniform(900, 100000):.2f},"
+                f"{rng.randrange(11) / 100},{rng.choice('ANR')},{rng.choice('FO')},"
+                f"{ship}"
+            )
+    (tmp_path / "orders").mkdir()
+    for i, rows in enumerate(orders):
+        (tmp_path / "orders" / f"part{i}.csv").write_text(
+            "o_orderkey,o_custkey,o_totalprice,o_orderdate,o_shippriority\n"
+            + "\n".join(rows) + "\n"
+        )
+    for name, rows in (
+        ("nation", nation), ("customer", customer), ("lineitem", lineitem)
+    ):
+        (tmp_path / f"{name}.csv").write_text("\n".join(rows) + "\n")
+    return {
+        name: [str(tmp_path / (name if name == "orders" else f"{name}.csv"))]
+        for name in ("lineitem", "orders", "customer", "nation")
+    }
+
+
+#: one statement of each exec_csv kind (perfbench/workloads.py)
+_EXEC_CSV_STMTS = {
+    "q1": "SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sum_qty, "
+    "sum(l_extendedprice) AS sum_base_price, "
+    "sum(l_extendedprice * (1 - l_discount)) AS sum_disc_price, "
+    "avg(l_discount) AS avg_disc, count(*) AS count_order FROM lineitem "
+    "WHERE l_shipdate <= DATE '1998-03-01' GROUP BY l_returnflag, l_linestatus "
+    "ORDER BY l_returnflag, l_linestatus",
+    "q6": "SELECT sum(l_extendedprice * l_discount) AS revenue FROM lineitem "
+    "WHERE l_shipdate >= DATE '1994-01-01' AND l_shipdate < DATE '1995-01-01' "
+    "AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24",
+    "q3": "SELECT l_orderkey, sum(l_extendedprice * (1 - l_discount)) AS revenue, "
+    "o_orderdate, o_shippriority FROM customer, orders, lineitem "
+    "WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey "
+    "AND l_orderkey = o_orderkey AND o_orderdate < DATE '1995-03-15' "
+    "AND l_shipdate > DATE '1995-03-15' "
+    "GROUP BY l_orderkey, o_orderdate, o_shippriority "
+    "ORDER BY revenue DESC, o_orderdate, l_orderkey LIMIT 10",
+    "lookup": "SELECT * FROM orders WHERE o_orderkey = 77",
+    "distinct_on": "SELECT DISTINCT ON (c_nationkey) c_nationkey, c_custkey, "
+    "c_acctbal FROM customer WHERE c_nationkey < 15 "
+    "ORDER BY c_nationkey, c_acctbal DESC, c_custkey",
+    "qualify": "SELECT o_custkey, o_orderkey, o_totalprice FROM orders "
+    "WHERE o_custkey <= 40 QUALIFY row_number() OVER "
+    "(PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) = 1",
+    "exclude": "SELECT * EXCLUDE (n_regionkey) FROM nation WHERE n_nationkey < 15",
+    "chrono": "SELECT to_char(o_orderdate, '%Y/%m') AS ym, count(*) AS n "
+    "FROM orders WHERE o_orderdate >= DATE '1995-01-01' "
+    "AND o_orderdate < DATE '1996-01-01' GROUP BY to_char(o_orderdate, '%Y/%m')",
+}
+
+
+def test_exec_csv_statements_same_rows_interpreted(fresh_spark, tmp_path):
+    """Over tables registered twice (one small cached partition each),
+    every exec_csv statement kind returns the same rows interpreted as
+    with code generation, which a DDL restores in the same session."""
+    from collections import Counter
+
+    from csvb_spark.sources.csv_source import add_direct_table
+    from csvb_spark.sql import evaluation_mode, execute_sql
+
+    s = fresh_spark
+    tables = _exec_csv_tables(tmp_path)
+    for _ in range(2):
+        for name, paths in tables.items():
+            add_direct_table(s, name, paths)
+
+    def run() -> dict[str, Counter]:
+        return {
+            kind: Counter(execute_sql(s, sql).collect())
+            for kind, sql in _EXEC_CSV_STMTS.items()
+        }
+
+    assert evaluation_mode(s) == "interpreted"
+    assert "*(" not in _executed_plan(execute_sql(s, _EXEC_CSV_STMTS["lookup"]))
+    interpreted = run()
+    execute_sql(s, "CREATE TEMPORARY VIEW parity_ddl AS SELECT 1 AS one")
+    assert evaluation_mode(s) == "codegen"
+    assert "*(" in _executed_plan(execute_sql(s, _EXEC_CSV_STMTS["lookup"]))
+    codegen = run()
+    for kind in _EXEC_CSV_STMTS:
+        assert interpreted[kind] == codegen[kind], kind
+        assert codegen[kind], kind  # every shape returns rows
 
 
 @pytest.fixture()

@@ -1066,24 +1066,28 @@ def test_pgclient_pool_survives_by_value_unpickling(pg_server):
     assert pgclient.pool_stats().get(key) == 1
 
 
-def test_served_csv_sees_in_place_rewrite(conn, spark, tmp_path):
+def test_served_csv_sees_in_place_rewrite(fresh_spark, tmp_path):
     """A table registered the way ``csvb serve`` does (small, so
     persisted at once) answers from its cache, and the first wire
     statement after an in-place rewrite of its file returns the new
     rows."""
+    from csvb_spark.server.pgwire import PgWireServer
     from csvb_spark.sources.csv_source import add_direct_table
 
     f = tmp_path / "served.csv"
     f.write_text("id,val\n1,10\n2,20\n")
-    add_direct_table(spark, "served_csv", [str(f)], persist=True)
+    add_direct_table(fresh_spark, "served_csv", [str(f)], persist=True)
     sql = "SELECT count(*), sum(val) FROM served_csv"
-    try:
+    server = PgWireServer(fresh_spark, "127.0.0.1:0")
+    with contextlib.ExitStack() as stack:
+        server.start_background()
+        stack.callback(server.shutdown)
+        conn = _open_conn("127.0.0.1", server.port)
+        stack.callback(conn[0].close)
         assert _data_rows(_simple_query(*conn, sql)) == [[b"2", b"30"]]
         with open(f, "w") as out:  # same inode, other size
             out.write("id,val\n7,700\n8,800\n9,900\n")
         assert _data_rows(_simple_query(*conn, sql)) == [[b"3", b"2400"]]
-    finally:
-        spark.catalog.dropTempView("served_csv")
 
 
 def _bulk_messages() -> list[bytes]:
@@ -3113,7 +3117,8 @@ def test_serve_small_table_runs_interpreted_with_the_same_rows(
     finally:
         spark.catalog.dropTempView(_SERVED)
     log = (tmp_path / "serve0.err").read_text()
-    assert f"serve: interpreted evaluation, {_SERVED} is one small" in log
+    assert "interpreted evaluation: every registered table is one small" in log
+    assert "codegen evaluation: a CREATE, DROP or ALTER ran" in log
     assert f"interpreted, collected: SELECT * FROM {_SERVED} WHERE id = 1234" in log
     assert "codegen, none: CREATE TABLE served_ddl" in log
     assert f"codegen, collected: {explain}" in log
@@ -3169,11 +3174,11 @@ def test_catalog_snapshot_same_under_interpreted_evaluation(spark):
     their own type and columns."""
     from csvb_spark.server.pg_catalog import refresh_pg_catalog
     from csvb_spark.sql import (
-        _restore_codegen,
         bump_catalog_epoch,
         catalog_snapshot,
         evaluation_mode,
         locked_catalog_refresh,
+        restore_codegen,
         run_interpreted,
     )
 
@@ -3220,7 +3225,7 @@ def test_catalog_snapshot_same_under_interpreted_evaluation(spark):
             assert snapshot() == want
             assert pg_class() == want_pg
         finally:
-            _restore_codegen(spark)
+            restore_codegen(spark)
         assert spark.conf.get("spark.sql.codegen.factoryMode") == "FALLBACK"
     finally:
         spark.catalog.dropTempView("cgm_temp")
